@@ -90,9 +90,8 @@ object BenchPcap {
     graft.TempCleanup.rmrf(new java.io.File(s"$dir/warmup.parquet"))
     val (tParse, total) = time(PcapSource.read(spark, s"$dir/*.pcap").count())
     // Round 14: the two STREAMING rows run FIRST (one discarded warmup,
-    // then best-of-2), ahead of the twelve batch convert arms — the
-    // batch arms keep their own discarded warmups, so the swap costs
-    // them nothing. CAVEAT (measured, round 14): the order swap did NOT
+    // then best-of-2), ahead of the batch converts — those keep their
+    // own discarded warmups, so the order costs them nothing. CAVEAT (measured, round 14): the order swap did NOT
     // close the gap to the dedicated instrument — the full streaming
     // pipeline (pcap scan + state store + zstd sink) swings 26–137 s
     // for IDENTICAL code across sessions on this box, so the
@@ -173,47 +172,15 @@ object BenchPcap {
     val streamDefragRate = (total / tStreamDefrag).toLong
     graft.TempCleanup.rmrf(new java.io.File(s"$dir/sdefrag-out.parquet"))
     graft.TempCleanup.rmrf(new java.io.File(s"$dir/sdefrag-ckpt"))
-    // the production path (PcapConvert.run with auto cache: at bench sizes
-    // the parsed table fits, so defrag's extra passes hit the cache);
-    // best-of-2 — this machine's run-to-run variance is ±2×
-    def timeFull(cache: Option[Boolean]): Double = (1 to 2).map { _ =>
+    // the production convert; best-of-2 — this machine's run-to-run
+    // variance is ±2×
+    def timeConvert(glob: String, out: String): Double = (1 to 2).map { _ =>
       time(graft.spark.PcapConvert.run(spark, graft.spark.PcapConvert.Args(
-        file = s"$dir/*.pcap", out = s"$dir/out.parquet", singleFile = false,
-        cache = cache)))._1
+        file = glob, out = out, singleFile = false)))._1
     }.min
-    val tFull = timeFull(cache = None)
-    // pass-strategy A/B (VERDICT r6 #6): the auto-cache heuristic picks
-    // between these two, so MEASURE both each round — cached (1 parse +
-    // cheap cached defrag passes; the small-capture win) vs plan-driven
-    // re-parse (the 100 TB-safe path a big capture must take)
-    val tCached = timeFull(cache = Some(true))
-    val tReplan = timeFull(cache = Some(false))
-    // read-path A/B (round-9 verdict #5): the columnar DSv2 scan with
-    // stride-sharded encode (the new default, timed above) vs the legacy
-    // RDD row reader — keeps the columnar win (or a regression) visible
-    // round over round
-    val tRowPath = (1 to 2).map { _ =>
-      time(graft.spark.PcapConvert.run(spark, graft.spark.PcapConvert.Args(
-        file = s"$dir/*.pcap", out = s"$dir/out.parquet", singleFile = false,
-        cache = Some(false), rowPath = true)))._1
-    }.min
-    // write-path A/B on the DEFRAG-JOIN shape (round-11 verdict #2): the
-    // DDoS mix is ~30% fragmented, so the full convert above runs the
-    // defrag join, whose row-shaped output now re-batches through
-    // RowToColumnarExec into the vector-direct parquet writer. This arm
-    // forces the standard FileFormatWriter on the same input — keeps the
-    // rebatch+vector win (or a regression) visible round over round.
-    val tFullRowWrite = (1 to 2).map { _ =>
-      time(graft.spark.PcapConvert.run(spark, graft.spark.PcapConvert.Args(
-        file = s"$dir/*.pcap", out = s"$dir/out.parquet", singleFile = false,
-        cache = None, rowWrite = true)))._1
-    }.min
+    val tFull = timeConvert(s"$dir/*.pcap", s"$dir/out.parquet")
     val parseRate = (total / tParse).toLong
     val fullRate = (total / tFull).toLong
-    val cachedRate = (total / tCached).toLong
-    val replanRate = (total / tReplan).toLong
-    val rowPathRate = (total / tRowPath).toLong
-    val fullRowWriteRate = (total / tFullRowWrite).toLong
     // TCP-dominant corpus (round-7 outlook: the DDoS mix is DNS/NTP
     // heavy): ~80% TCP across the full flag cycle, <1% fragmented so the
     // adaptive defrag takes its skip branch — this number isolates
@@ -232,41 +199,13 @@ object BenchPcap {
           mix = "tcp")
     }
     Files.write(tcpManifest, wantTcp.getBytes("UTF-8"))
-    val tTcpFull = (1 to 2).map { _ =>
-      time(graft.spark.PcapConvert.run(spark, graft.spark.PcapConvert.Args(
-        file = s"$tcpDir/cap*.pcap", out = s"$tcpDir/out.parquet",
-        singleFile = false, cache = None)))._1
-    }.min
+    val tTcpFull = timeConvert(s"$tcpDir/cap*.pcap", s"$tcpDir/out.parquet")
     val tcpRate = (nTcp / tTcpFull).toLong
-    // write-path A/B (round-10 verdict #4): the tcp-mix convert takes the
-    // adaptive defrag-skip branch, so its plan stays columnar end-to-end
-    // and the vector-direct parquet writer engages (the arm above). This
-    // arm forces the standard FileFormatWriter on the same input —
-    // keeps the vector-write win (or a regression) visible per round.
-    val tTcpRowWrite = (1 to 2).map { _ =>
-      time(graft.spark.PcapConvert.run(spark, graft.spark.PcapConvert.Args(
-        file = s"$tcpDir/cap*.pcap", out = s"$tcpDir/out.parquet",
-        singleFile = false, cache = None, rowWrite = true)))._1
-    }.min
-    val tcpRowWriteRate = (nTcp / tTcpRowWrite).toLong
-    // filtered-slice A/B (round 9): a pushed protocol filter used to
-    // force the row reader; it now evaluates inside the columnar reader.
-    // Measures the common "slice a capture" shape — full corpus scanned,
-    // predicate vetoes pre-vector-write — columnar vs legacy row path.
     import org.apache.spark.sql.functions.col
-    def slice(columnar: Boolean): Double = (1 to 2).map { _ =>
-      time(spark.read.format("pcap")
-        .option("columnar", columnar.toString).load(s"$dir/*.pcap")
-        .filter(col("col_protocol") === "DNS").count())._1
-    }.min
-    val tSliceCol = slice(columnar = true)
-    val tSliceRow = slice(columnar = false)
-    val sliceColRate = (total / tSliceCol).toLong
-    val sliceRowRate = (total / tSliceRow).toLong
     // convert-manifest readback A/B (round 15, verdict #6): the
     // reference's consumer runs SQL over the emitted parquet — index
-    // $dir/out.parquet (the defrag convert's output, still on disk from
-    // the arms above) with ConvertManifest and time the canonical
+    // $dir/out.parquet (the headline convert's output, still on disk)
+    // with ConvertManifest and time the canonical
     // "attack window + one source" slice, full scan vs pruned read.
     // The 0.6 s window early in the capture lands in few part files
     // (the range-sharded write keeps each part time-contiguous).
@@ -296,54 +235,16 @@ object BenchPcap {
     }
     val tReadbackPruned = rbP.result().min
     val tReadbackFull = rbF.result().min
-    // stats+spill pass A/B (round-13 verdicts #1/#2): the observe +
-    // ff-spill job alone, on the dissectGate=first-fragment scan (the
-    // convert CLI's production shape since round 13) vs the ungated
-    // scan — INTERLEAVED arms (the only trustworthy instrument at these
-    // sizes, CLAUDE.md), best per arm. Also the pinned steady-state
-    // mark for the stats machinery the r12 verdict flagged as unpinned.
-    val statsShards = math.max(1, math.min(1024,
-      math.ceil(cpus.toDouble / files).toInt))
-    def statsScan(gated: Boolean) = {
-      val r = spark.read.format("pcap").option("decodePartitions", statsShards)
-      (if (gated) r.option("_internal.dissectGate", "first-fragment") else r)
-        .load(s"$dir/*.pcap")
-    }
-    val statsProbe = statsScan(gated = false)
-    def statsOnce(gated: Boolean): Double = {
-      val spill = s"$dir/statspill"
-      graft.TempCleanup.rmrf(new java.io.File(spill))
-      val t = time(graft.spark.Defrag.applyWithSpill(
-        statsProbe, statsScan(gated), spill, 1.0))._1
-      graft.TempCleanup.rmrf(new java.io.File(spill))
-      t
-    }
-    statsOnce(gated = true) // discarded warmup (first-arm JIT ramp)
-    val statsArms = (1 to 2).flatMap(_ =>
-      Seq(true -> statsOnce(gated = true), false -> statsOnce(gated = false)))
-    val tStatsGated = statsArms.collect { case (true, t) => t }.min
-    val tStatsFull = statsArms.collect { case (false, t) => t }.min
-    val statsGatedRate = (total / tStatsGated).toLong
-    val statsFullRate = (total / tStatsFull).toLong
     System.err.println(
       f"[bench-pcap] $total packets: parse $tParse%.2f s ($parseRate pkt/s), " +
-        f"full convert $tFull%.2f s ($fullRate pkt/s), " +
-        f"cached $tCached%.2f s ($cachedRate pkt/s), " +
-        f"replan $tReplan%.2f s ($replanRate pkt/s), " +
-        f"rowpath $tRowPath%.2f s ($rowPathRate pkt/s), " +
-        f"row-write $tFullRowWrite%.2f s ($fullRowWriteRate pkt/s); " +
-        f"tcp-mix $nTcp packets: $tTcpFull%.2f s ($tcpRate pkt/s) " +
-        f"vs row-write $tTcpRowWrite%.2f s ($tcpRowWriteRate pkt/s); " +
-        f"DNS slice columnar $tSliceCol%.2f s ($sliceColRate pkt/s) " +
-        f"vs rowpath $tSliceRow%.2f s ($sliceRowRate pkt/s); " +
+        f"full convert $tFull%.2f s ($fullRate pkt/s); " +
+        f"tcp-mix $nTcp packets: $tTcpFull%.2f s ($tcpRate pkt/s); " +
         f"stream convert $tStream%.2f s ($streamRate pkt/s); " +
         f"stream defrag $tStreamDefrag%.2f s ($streamDefragRate pkt/s); " +
-        f"stats pass gated $tStatsGated%.2f s ($statsGatedRate pkt/s) " +
-        f"vs full $tStatsFull%.2f s ($statsFullRate pkt/s); " +
         f"manifest readback pruned $tReadbackPruned%.3f s " +
         f"vs full $tReadbackFull%.3f s ($keptFiles files kept, " +
         f"build $tManifestBuild%.2f s)")
-    println(s"""{"metric":"pcap_convert_pkt_per_s","value":$fullRate,"unit":"pkt/s","parse_pkt_per_s":$parseRate,"full_cached_pkt_per_s":$cachedRate,"full_replan_pkt_per_s":$replanRate,"full_rowpath_pkt_per_s":$rowPathRate,"full_rowwrite_pkt_per_s":$fullRowWriteRate,"packets":$total,"tcp_mix_pkt_per_s":$tcpRate,"tcp_mix_rowwrite_pkt_per_s":$tcpRowWriteRate,"tcp_mix_packets":$nTcp,"slice_columnar_pkt_per_s":$sliceColRate,"slice_rowpath_pkt_per_s":$sliceRowRate,"stream_convert_pkt_per_s":$streamRate,"stream_defrag_pkt_per_s":$streamDefragRate,"stats_pass_gated_pkt_per_s":$statsGatedRate,"stats_pass_full_pkt_per_s":$statsFullRate,"readback_pruned_s":$tReadbackPruned,"readback_full_s":$tReadbackFull,"readback_files_kept":$keptFiles,"manifest_build_s":$tManifestBuild}""")
+    println(s"""{"metric":"pcap_convert_pkt_per_s","value":$fullRate,"unit":"pkt/s","parse_pkt_per_s":$parseRate,"packets":$total,"tcp_mix_pkt_per_s":$tcpRate,"tcp_mix_packets":$nTcp,"stream_convert_pkt_per_s":$streamRate,"stream_defrag_pkt_per_s":$streamDefragRate,"readback_pruned_s":$tReadbackPruned,"readback_full_s":$tReadbackFull,"readback_files_kept":$keptFiles,"manifest_build_s":$tManifestBuild}""")
     spark.stop()
   }
 }

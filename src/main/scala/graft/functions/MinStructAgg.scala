@@ -15,13 +15,15 @@ import org.apache.spark.sql.types._
   * declarative agg buffer; structs are not UnsafeRow-mutable, so the
   * whole aggregate falls out of HashAggregate into SortAggregate — a
   * full sort of the input by the grouping keys on BOTH sides of the
-  * exchange. Every argmin-by-struct in this engine paid that: the defrag
-  * first-fragment pick (`Defrag.firstFragments`, the stats pass of every
-  * convert), the k-means assignment (`KMeansIvf.assign`, once per
-  * learning round), and the PQ encoder's per-subvector argmin
-  * (`PqAnn`). This class keeps the exact `min(struct(...))` semantics —
-  * the comparator IS Spark's interpreted struct ordering, the same total
-  * order the declarative Min resolves to — but holds the current min as
+  * exchange. The embedding argmins pay that on a wide sort row (the
+  * struct carries the embedding array): the k-means assignment
+  * (`KMeansIvf.assign`, once per learning round) and the PQ encoder's
+  * per-subvector argmin (`PqAnn`). (The defrag first-fragment pick keeps
+  * the declarative form: its narrow rows sort cheaper than this class
+  * allocates — see `Defrag.firstFragments`.) This class keeps the exact
+  * `min(struct(...))` semantics — the comparator IS Spark's interpreted
+  * struct ordering, the same total order the declarative Min resolves
+  * to — but holds the current min as
   * a single UnsafeRow per group in an ObjectHashAggregate hash map: no
   * sort on either side, map-side partial merge unchanged
   * (MinStructProps pins agg ≡ min(struct) over fuzzed groups, including
@@ -137,15 +139,11 @@ object MinStructAgg {
     *
     * Size derivation (target ≤ ~256 MB per task, per the r16 verdict):
     * per-group cost is one hash-map entry = grouping-key UnsafeRow +
-    * the kept min UnsafeRow + object headers. Defrag's ff argmin:
-    * ~80 B keys (two addresses + ip_id) + ~150 B struct ≈ ~300 B/group
-    * → 2^19 × 300 B ≈ 157 MB. KMeansIvf/PqAnn carry the embedding
-    * array in the struct (~8·dim B ≈ 512 B at dim 64) ≈ ~700 B/group
-    * → 2^19 × 700 B ≈ 367 MB worst-case before the framework's
-    * sort-based fallback takes over — the fallback is the guard, the
-    * threshold just decides where it engages. Groups per task stay far
-    * below the cap on every measured corpus (100M-packet bench: 1.12M
-    * keys ÷ 32 final-agg partitions ≈ 35k groups/task). */
+    * the kept min UnsafeRow + object headers. KMeansIvf/PqAnn carry the
+    * embedding array in the struct (~8·dim B ≈ 512 B at dim 64) ≈
+    * ~700 B/group → 2^19 × 700 B ≈ 367 MB worst-case before the
+    * framework's sort-based fallback takes over — the fallback is the
+    * guard, the threshold just decides where it engages. */
   val FallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
   val FallbackThreshold: Int = 1 << 19
 
@@ -166,18 +164,16 @@ object MinStructAgg {
     * framework's sort-based fallback, the pre-round-16 cost).
     *
     * Call sites place this so every production action over an argmin
-    * lands on a clone-rooted tree: `Defrag.firstFragments` output (the
-    * fused-stats collect, the ff spill write), and the KMeansIvf/PqAnn
-    * corpus frames at operator entry (all downstream frames derive from
-    * them, so the returned results execute scoped too). The clone
-    * shares the SparkContext and CacheManager — cached frames and
-    * accumulators behave identically.
+    * lands on a clone-rooted tree: the KMeansIvf/PqAnn corpus frames at
+    * operator entry (all downstream frames derive from them, so the
+    * returned results execute scoped too). The clone shares the
+    * SparkContext and CacheManager — cached frames and accumulators
+    * behave identically.
     *
     * CAVEAT (listener registration is per-session): anything that must
     * observe the executed query from the ORIGINAL session — an
     * `Observation`, a QueryExecutionListener — must be attached AFTER
-    * re-rooting (see `Defrag.statsAndSpill`: scoped first, observe on
-    * the scoped frame), or its listener never fires.
+    * re-rooting (observe the scoped frame), or its listener never fires.
     */
   def scoped(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val parent = df.sparkSession
@@ -208,27 +204,4 @@ object MinStructAgg {
     if (sys.props.contains("graft.agg.noMinStruct"))
       org.apache.spark.sql.functions.min(c)
     else min_struct(c)
-
-  /** The production argmin at the DEFRAG first-fragment site:
-    * DECLARATIVE `min(struct)` (SortAggregate), re-flipped in round 17
-    * by measurement. Round 16 moved this site to MinStructAgg on a
-    * plan-shape argument (two Sort nodes removed) but never got a clean
-    * 100M read of the pair; round 17's order-alternating
-    * `tools.BenchFfArgminAB` read declarative 3.0–4.3 s vs MinStructAgg
-    * 4.5–15.3 s over 8 consecutive both-order rounds at 100M packets —
-    * the per-task sorts (~35k–300k rows) are cheaper than the typed
-    * aggregate's per-row struct allocation (`child.eval` builds a
-    * GenericInternalRow per input row, outside whole-stage codegen),
-    * and the allocation churn also drove MinStructAgg's 3× run-to-run
-    * GC variance. The embedding sites keep MinStructAgg: their structs
-    * carry the embedding array (a far wider sort row) and measure
-    * parity-or-better (BenchArgminAB).
-    *
-    * `graft.agg.ffMinStruct` forces MinStructAgg here — the A/B
-    * instrument's arm; `graft.agg.noMinStruct` still wins if both are
-    * set. */
-  def ffArgmin(c: Column): Column =
-    if (sys.props.contains("graft.agg.ffMinStruct") &&
-        !sys.props.contains("graft.agg.noMinStruct")) min_struct(c)
-    else org.apache.spark.sql.functions.min(c)
 }

@@ -108,7 +108,7 @@ object AdaptiveScrub {
 
   /** [[coveredWith]] against a CALLER-SUPPLIED frequent-hash frame —
     * either the lazy aggregate subtree or a re-read of the spill
-    * ([[applyWithSpill]]); must be shaped like [[freqHashes]]' output
+    * ([[applySpilled]]); must be shaped like [[freqHashes]]' output
     * (an `h` column). */
   def coveredWithFreq(docs: DataFrame, freq: DataFrame,
       choice: Choice): DataFrame = {
@@ -132,7 +132,7 @@ object AdaptiveScrub {
     * (doc_id, n_kept, kept_md5) frame plus the branch taken.
     *
     * Three shingle passes total (count pass, then the chosen branch's
-    * freq subtree + probe side). [[applyWithSpill]] drops one by
+    * freq subtree + probe side). [[applySpilled]] drops one by
     * spilling the frequent set from the count job — prefer it when a
     * scratch directory is available; this entry stays for callers
     * without one.
@@ -144,11 +144,10 @@ object AdaptiveScrub {
     (withChoice(docs, minDf, choice), choice)
   }
 
-  /** [[apply]] with a frequent-set SPILL (round 13, verdict #5 — the
-    * [[graft.spark.Defrag.applyWithSpill]] pattern): ONE job aggregates
-    * the frequent hashes AND materializes them to `spillDir` (zstd
-    * parquet, 8 B/hash — ≤16 MB at the default ceiling; on sketch-branch
-    * corpora the spill is whatever the frequent set is, still df≥minDf-
+  /** [[apply]] with a frequent-set SPILL (round 13, verdict #5): ONE
+    * job aggregates the frequent hashes AND materializes them to
+    * `spillDir` (zstd parquet, 8 B/hash — ≤16 MB at the default
+    * ceiling; on sketch-branch corpora the spill is whatever the frequent set is, still df≥minDf-
     * bounded, never corpus-sized), the gate decides on the spill's exact
     * footer row count, and the chosen branch reads the set back instead
     * of re-aggregating every shingle — 3 shingle passes become 2.
@@ -157,7 +156,7 @@ object AdaptiveScrub {
     * action on the returned frame); on a cluster pass a shared-FS path,
     * since executors read it back.
     */
-  def applyWithSpill(docs: DataFrame, spillDir: String,
+  def applySpilled(docs: DataFrame, spillDir: String,
       minDf: Int = DefaultMinDf,
       maxBroadcast: Long = MaxBroadcastShingles): (DataFrame, Choice) = {
     freqHashes(shingles(docs), minDf).write.mode("overwrite")

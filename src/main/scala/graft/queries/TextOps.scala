@@ -410,7 +410,7 @@ object TextOps {
         graft.TempCleanup.registerDir(spillDir.toString)
         val spill = spillDir.toString + "/freq"
         val (out, choice) = graft.operators.AdaptiveScrub
-          .applyWithSpill(t(s, dir, "documents"), spill)
+          .applySpilled(t(s, dir, "documents"), spill)
         require(choice == graft.operators.AdaptiveScrub.BroadcastSet,
           s"d52 planned $choice at gate scale — the aux oracle replays the " +
             "exact-set arm; a corpus this boilerplate-heavy needs its own entry")

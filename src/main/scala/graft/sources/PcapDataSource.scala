@@ -132,15 +132,14 @@ final class PcapScanBuilder(options: CaseInsensitiveStringMap)
     // ONLY on UDP first-fragment rows (ip_proto 17, MF, offset 0); every
     // other row keeps its L3 columns exact and NULLs the rest. Sound
     // only for consumers that read transport/L7 columns exclusively
-    // under that predicate — the defrag stats+spill pass is the intended
-    // (and only) user: its ff aggregate filters exactly this condition
-    // and its observed counts read no transport column, so the whole
-    // corpus stops paying the DNS/NTP parse for the 90%+ non-ff rows.
-    // The shape cannot be verified from inside the scan (the round-16
-    // FUSED stats pass pushes the ff filter down, but the legacy
-    // observe flow plans its barrier below the filter and pushes
-    // nothing — the gate must be sound either way), hence the
-    // `_internal.` prefix: a general caller setting it would get
+    // under that predicate — the convert's first-fragment aggregate
+    // (Defrag.firstFragments in the fused stats pass and the shuffle
+    // fallback's ff spill) is the intended (and only) user: it filters
+    // exactly this condition and the reader-side counts read no
+    // transport column, so the whole corpus stops paying the DNS/NTP
+    // parse for the 90%+ non-ff rows. The shape cannot be verified from
+    // inside the scan (the gate must be sound whether or not the ff
+    // filter is pushed down), hence the `_internal.` prefix: a general caller setting it would get
     // silently-NULL transport/L7 columns on most rows. The old public
     // name refuses loudly (round-13 verdict hardening nit).
     require(!options.containsKey("dissectGate"),

@@ -94,32 +94,21 @@ object Defrag {
     * hash-partitioned by the join keys, so the shuffle branch of
     * [[defrag]] reuses it for the build side.
     *
-    * Round 16 moved the argmin to MinStructAgg (ObjectHashAggregate,
-    * no sorts); round 17 REVERTED this site to the declarative
-    * `min(struct)` (SortAggregate) on an order-alternating 100M A/B —
-    * the per-task sorts are cheaper than the typed aggregate's
-    * per-row struct allocation here (see
-    * [[graft.functions.MinStructAgg.ffArgmin]] for the numbers;
-    * `graft.agg.ffMinStruct` forces the ObjectHashAggregate form for
-    * the A/B). Same total order, same row choice either way
-    * (DefragProps pins agg ≡ min(struct)).
+    * Round 16 moved the argmin to MinStructAgg (ObjectHashAggregate);
+    * round 17 reverted it to this declarative form on an
+    * order-alternating 100M A/B (3.0–4.3 s vs 4.5–15.3 s): the per-task
+    * sorts are cheaper than the typed aggregate's per-row struct
+    * allocation. Same total order, same row choice either way
+    * (DefragProps pins MinStructAgg ≡ min(struct)). Plans in the
+    * caller's session (no conf to scope for a SortAggregate).
     */
   def firstFragments(pcap: DataFrame): DataFrame = {
     val ffStruct = struct((col("frame_time") +: Patched.map(col)): _*)
-    val ffMin = graft.functions.MinStructAgg.ffArgmin(ffStruct)
-    // scoped (round 17): the raised ObjectHashAggregate fallback
-    // threshold rides a session clone rooted HERE instead of the
-    // round-16 session-wide config — every production action on the
-    // argmin (the fused-stats collect, the ff spill write) runs on this
-    // frame or a unary descendant, so it executes under the clone. A
-    // caller that embeds this frame under a parent-session root (the
-    // test-only Defrag.defrag convenience) just plans with the default
-    // threshold and degrades to the framework's sort-based fallback.
-    graft.functions.MinStructAgg.scoped(pcap
+    pcap
       .filter(col("ip_proto") === 17 && col("ip_mf") && col("ip_frag_offset") === 0)
       .groupBy(JoinKeys.map(col): _*)
-      .agg(ffMin.as("__ff"))
-      .select((JoinKeys.map(col) ++ Patched.map(c => col(s"__ff.$c").as(c))): _*))
+      .agg(min(ffStruct).as("__ff"))
+      .select((JoinKeys.map(col) ++ Patched.map(c => col(s"__ff.$c").as(c))): _*)
   }
 
   /** Max first-fragment rows we force into a broadcast. Above this (a
@@ -152,10 +141,11 @@ object Defrag {
     defragWith(pcap, firstFragments(pcap), broadcastFF)
 
   /** [[defrag]] with a CALLER-SUPPLIED first-fragment frame — the same
-    * enrichment join, but `ff0` may be a re-read of the spilled ff
-    * parquet ([[applyWithSpill]]) instead of the lazy aggregate subtree
-    * (which re-parses the whole capture). `ff0` must be shaped exactly
-    * like [[firstFragments]]' output (join keys + patched columns).
+    * enrichment join, but `ff0` may be a re-read of a spilled ff parquet
+    * (the convert's shuffle fallback) instead of the lazy aggregate
+    * subtree (which re-parses the whole capture). `ff0` must be shaped
+    * exactly like [[firstFragments]]' output (join keys + patched
+    * columns).
     */
   def defragWith(pcap: DataFrame, ff0: DataFrame,
       broadcastFF: Boolean): DataFrame = {
@@ -195,13 +185,8 @@ object Defrag {
     }
   }
 
-  /** Which plan the adaptive pipeline chose — exposed for bench
-    * instrumentation (`tools.BenchDefragWrite` forces the writer per
-    * branch) and any caller that wants to log or assert the branch.
-    * Round-11 note: the convert CLI briefly gated the vector write on
-    * this choice after a sequential 100M A/B mis-read as a rebatch
-    * regression; the interleaved re-measurement showed rebatch ahead on
-    * BOTH branches, so the CLI takes the vector write unconditionally.
+  /** Which plan the adaptive pipeline chose — for any caller that
+    * wants to log or assert the branch.
     */
   sealed trait Choice
   case object NoDefrag extends Choice
@@ -244,88 +229,6 @@ object Defrag {
     else (defrag(pcap, broadcastFF = false), ShuffleBypass)
   }
 
-  /** [[applyWithChoice]] with an ff SPILL (round 12): ONE job computes
-    * the adaptive stats AND materializes the first-fragment aggregate to
-    * `spillDir` (zstd parquet), so the chosen join reads ff back from
-    * the tiny spill instead of re-parsing the whole capture — the
-    * convert drops from three full dissect passes (stats, ff subtree,
-    * probe side) to two. The spill is bounded by DISTINCT datagram keys
-    * (the post-aggregate row count — ~50 MB at 100M packets on the bench
-    * corpus), NEVER the corpus, and is a different artifact from the
-    * reference's full-table temp parquet this engine eliminated (SURVEY
-    * §2.1): a 31-column 100 TB re-spill costs ~2.6× a parse; an
-    * 11-column keys-only spill costs ~nothing and SAVES a parse.
-    *
-    * Stats ride the same job via `Dataset.observe` on the pre-filter
-    * frame — CollectMetrics is a predicate-pushdown BARRIER, so the ff
-    * filter cannot slide below it and the observed counts cover every
-    * row (PcapPipelineSpec pins equality with [[fragStats]]). The
-    * broadcast decision then uses the spill's EXACT row count (parquet
-    * footer metadata — it IS the distinct-key count), not the HLL
-    * estimate the no-spill path needs.
-    *
-    * The caller owns `spillDir`'s lifecycle: it must outlive every
-    * action on the returned frame (delete after the final write —
-    * PcapConvert does). Local paths work in local mode; on a real
-    * cluster pass a shared-FS path, since executors read it back.
-    */
-  def applyWithSpill(pcap: DataFrame, spillDir: String,
-      thresholdPct: Double = 1.0): (DataFrame, Choice) =
-    applyWithSpill(pcap, pcap, spillDir, thresholdPct)
-
-  /** [[applyWithSpill]] with a SEPARATE stats-side frame (round 13):
-    * the observe + ff-spill job runs on `statsPcap` while the
-    * probe/enrichment side stays `pcap`. The intended `statsPcap` is
-    * the same scan with `option("_internal.dissectGate", "first-fragment")` —
-    * transport/L7 columns dissected only on UDP first-fragment rows.
-    * That is exactly sound here by construction: the observed counts
-    * (total, fragmented) read only L3 columns, and [[firstFragments]]
-    * reads the six patched columns only under the same
-    * `ip_proto=17 AND ip_mf AND offset=0` predicate the gate keys on —
-    * so the stats pass stops paying the DNS/NTP parse for every
-    * non-first-fragment packet (the measured top convert lever,
-    * round-12 verdict #1).
-    */
-  def applyWithSpill(pcap: DataFrame, statsPcap: DataFrame, spillDir: String,
-      thresholdPct: Double): (DataFrame, Choice) = {
-    val (pct, ffRows) = statsAndSpill(statsPcap, spillDir)
-    if (pct < thresholdPct) (pcap, NoDefrag)
-    else {
-      val ff = pcap.sparkSession.read.parquet(spillDir)
-      if (ffRows <= MaxBroadcastFirstFragments)
-        (defragWith(pcap, ff, broadcastFF = true), BroadcastJoin)
-      else (defragWith(pcap, ff, broadcastFF = false), ShuffleBypass)
-    }
-  }
-
-  /** The ONE stats+spill job (split out in round 13 so PcapConvert's
-    * columnar broadcast-patch path can drive the branch decision
-    * itself): observes (total, fragmented) on the pre-filter frame
-    * while materializing the ff aggregate to `spillDir`; returns the
-    * fragmented percentage and the spill's EXACT row count (parquet
-    * footer metadata — it IS the distinct datagram key count).
-    */
-  def statsAndSpill(statsPcap: DataFrame, spillDir: String): (Double, Long) = {
-    val obs = org.apache.spark.sql.Observation(
-      "defrag_stats_" + java.util.UUID.randomUUID().toString)
-    // scope BEFORE observe: the Observation registers its listener on
-    // the session of the frame observe() is called on, and the write
-    // below executes under firstFragments' scoped clone — observing the
-    // parent-session frame would register on a bus the clone-run query
-    // never posts to, and obs.get would hang (MinStructAgg.scoped doc)
-    val observed = graft.functions.MinStructAgg.scoped(statsPcap).observe(obs,
-      count(lit(1)).as("total"),
-      sum(when(fragmentedCond, 1L).otherwise(0L)).as("frag"))
-    firstFragments(observed).write.mode("overwrite")
-      .option("compression", "zstd").parquet(spillDir)
-    val row = obs.get
-    val total = row("total").asInstanceOf[Long]
-    val frag = Option(row("frag")).map(_.asInstanceOf[Long]).getOrElse(0L)
-    val pct =
-      if (total == 0) 0.0 else math.round(100.0 * frag / total).toDouble
-    (pct, statsPcap.sparkSession.read.parquet(spillDir).count())
-  }
-
   /** The defragged OUTPUT column order (reference src/main.rs:296:
     * EXCLUDE + re-append — the six patched columns move to the end).
     */
@@ -340,31 +243,25 @@ object Defrag {
   final case class FusedStats(pct: Double, total: Long, ffKeys: Long,
       map: Option[graft.sources.DefragPatch.PatchMap])
 
-  /** The round-16 fused stats pass (verdict #1): ONE job replaces
-    * [[statsAndSpill]] + spill re-read + [[graft.sources.DefragPatch.build]]
-    * on the convert's broadcast-patch path. Three structural savings over
-    * the spill flow, all on the same gated scan:
+  /** The round-16 fused stats pass (verdict #1): ONE job over the
+    * first-fragment-gated scan yields the convert's whole decision —
+    * the fragmented percentage and, on the broadcast branch, the patch
+    * map — with no observe node and no ff parquet round-trip:
     *
     *   - (total, fragmented) are counted IN THE READERS (`statsPcap`'s
     *     metrics must carry the `fragmented` accumulator —
-    *     [[PcapSource.statsMetrics]]), not by an observe node — so there
-    *     is no CollectMetrics pushdown barrier, and the first-fragment
-    *     filter lands in the scan: the ~90% non-ff rows are vetoed at L3
-    *     BEFORE any column vector fills, instead of being materialized
-    *     and dropped by a filter above the scan;
+    *     [[PcapSource.statsMetrics]]), for every frame, so the
+    *     first-fragment filter pushes into the scan: the ~90% non-ff
+    *     rows are vetoed at L3 BEFORE any column vector fills;
     *   - the aggregate ends at the collected dictionary-encoded patch
-    *     fragments (the broadcast payload) — no ff parquet round-trip;
+    *     fragments (the broadcast payload);
     *   - the broadcast decision uses the exact collected row count, with
     *     [[graft.sources.DefragPatch.buildCapped]] bounding driver
-    *     memory at the ceiling (overflow ⇒ None ⇒ the caller spills for
-    *     the shuffle branch — one extra pass, pathological key spaces
-    *     only).
+    *     memory at the ceiling (overflow ⇒ None ⇒ the caller takes the
+    *     shuffle branch — pathological key spaces only).
     *
-    * Count semantics are the observe flow's exactly: every frame in the
-    * corpus is classified once, on the same post-resume values the
-    * barrier-below-filter plan counted (PcapPipelineSpec pins equality
-    * with [[fragStats]]). Accumulator caveat: like CollectMetrics
-    * (itself accumulator-based), re-executed stages on a real cluster
+    * Counts equal [[fragStats]] over the ungated scan (PcapPipelineSpec
+    * pins it). Accumulator caveat: re-executed stages on a real cluster
     * could over-count; the 1% threshold is robust to that class of
     * drift and the decision is a plan choice, never a correctness
     * dependency.

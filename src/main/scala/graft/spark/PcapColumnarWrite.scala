@@ -35,20 +35,15 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   *
   * Plan shapes (round 11): when the plan below the write is still
   * columnar (the nodefrag / defrag-skip convert shapes) the vectors
-  * feed straight through. A row-shaped plan (the defrag join's output —
-  * the reference's own 90%-fragmented headline workload) REFUSES by
+  * feed straight through. A row-shaped plan (the shuffle-fallback
+  * defrag join's output) REFUSES by
   * default, but with `rebatch = true` it is wrapped in Spark's
   * [[org.apache.spark.sql.execution.RowToColumnarExec]]: rows transpose
   * into fresh ColumnVectors once (cheap primitive-array appends), and
   * the write still skips ColumnarToRow + per-row record assembly
-  * (ParquetWriteSupport's RecordConsumer walk). Honest magnitude —
-  * INTERLEAVED A/B only (`tools.BenchDefragWrite`, same stride-sharded
-  * read both arms): rebatch+vector ~15% ahead of the row writer on the
-  * 10M broadcast branch (3.21 vs 3.70 s median) and ahead on the 100M
-  * shuffle-bypass branch too. Sequential BenchPcap arms are NOT a
-  * writer A/B at these sizes: they read 2.1× one session and 0.8× the
-  * next on identical code (ordering/JIT/GC drift), and mis-read
-  * rebatch both ways this round before the interleaved tool settled it.
+  * (ParquetWriteSupport's RecordConsumer walk) — measured ~15% ahead of
+  * the row writer on the 10M broadcast branch and ahead on the 100M
+  * shuffle-bypass branch (round 11, interleaved).
   *
   * Commit protocol: each task writes a dot-prefixed temp file (readers
   * and `*.parquet` globs skip dot-files) and renames it into place only

@@ -23,7 +23,7 @@ object BenchScrubSpill {
       val t0 = System.nanoTime()
       val (df, choice) =
         if (spill) graft.operators.AdaptiveScrub
-          .applyWithSpill(docs, scratch.toString + "/freq")
+          .applySpilled(docs, scratch.toString + "/freq")
         else graft.operators.AdaptiveScrub(docs)
       require(choice == graft.operators.AdaptiveScrub.BroadcastSet,
         s"planned $choice — the rehearsal corpus should take the exact arm")

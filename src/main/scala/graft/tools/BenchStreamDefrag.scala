@@ -5,8 +5,9 @@ package graft.tools
   * same stride-sharded read. Rounds MUST interleave (this box drifts
   * ±2× sequentially).
   *
-  * Default arms (round 14): SENTINEL-coded state row (the shipped path)
-  * vs the round-13 Option-boxed sortless reference.
+  * Default arms (round 14): the opt-in SENTINEL-coded state row
+  * (`sentinel = true`) vs the Option-boxed sortless default — the
+  * shipped path.
   * `--sorted` restores the round-13 A/B: boxed sortless vs boxed
   * group-sort.
   * `--bypass` flips to bypass-split vs plain (both on the shipped
@@ -24,8 +25,8 @@ package graft.tools
   * boxed question, and the streaming arms remain the end-to-end
   * smoke/throughput row.
   *
-  * `--rocksdb` (round 15, verdict #5): both arms the SHIPPED transform
-  * (sentinel + sortless); arm A swaps the state store for the RocksDB
+  * `--rocksdb` (round 15, verdict #5): both arms the sentinel +
+  * sortless transform; arm A swaps the state store for the RocksDB
   * provider with changelog checkpointing — the intended production
   * store for exactly this groupByKey-heavy shape — vs the default
   * HDFS-backed provider. Needs zero query changes; the provider conf is
@@ -80,7 +81,7 @@ object BenchStreamDefrag {
           else D.defragStateful(projected)
         else if (sortedAb) // round-13 A/B: boxed sortless vs boxed sorted
           D.defragStateful(projected, sortless = armA, sentinel = false)
-        else if (rocksAb) // round-15 A/B: state store, shipped transform
+        else if (rocksAb) // round-15 A/B: state store, sentinel transform
           D.defragStateful(projected, sortless = true, sentinel = true)
         else // round-14 A/B: sentinel vs boxed sortless
           D.defragStateful(projected, sortless = true, sentinel = armA)

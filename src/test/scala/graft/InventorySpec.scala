@@ -62,6 +62,23 @@ class InventorySpec extends AnyFunSuite {
     assert(missing.isEmpty, s"PLANS.md missing sections: ${missing.mkString(", ")}")
   }
 
+  test("every tool or main class the docs name resolves to a class") {
+    // a deleted instrument must not linger in the run instructions
+    val docs = Seq("README.md", "CLAUDE.md", ".claude/skills/verify/SKILL.md")
+    val named = docs.flatMap { d =>
+      val text = read(d)
+      ("\\btools\\.([A-Z]\\w*)".r.findAllMatchIn(text)
+        .map(m => "graft.tools." + m.group(1)) ++
+        "runMain (graft(?:\\.\\w+)+)".r.findAllMatchIn(text).map(_.group(1)))
+        .map(d -> _)
+    }.distinct
+    assert(named.exists(_._2 == "graft.spark.PcapConvert"), named)
+    val missing = named.filterNot { case (_, c) =>
+      scala.util.Try(Class.forName(c, false, getClass.getClassLoader)).isSuccess
+    }
+    assert(missing.isEmpty, s"docs name classes that do not exist: ${missing.mkString(", ")}")
+  }
+
   test("SURVEY.md gate-status counts match SparkEntry.all") {
     val ms = "(\\d+) declared / (\\d+) oracled".r
       .findAllMatchIn(read("SURVEY.md")).toSeq

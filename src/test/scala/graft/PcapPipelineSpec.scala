@@ -12,6 +12,12 @@ import PcapFixtures._
   */
 class PcapPipelineSpec extends SparkFunSuite {
 
+  /** Rows as sorted strings over name-sorted columns: equality that
+    * ignores row order and column order. */
+  private def canon(d: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    d.selectExpr(d.columns.sorted.map(c => s"`$c`"): _*)
+      .collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString("|"))
+
   private def writeTemp(name: String, bytes: Array[Byte]): Path = {
     val dir = Files.createTempDirectory("graft-pcap")
     val p = dir.resolve(name)
@@ -126,96 +132,13 @@ class PcapPipelineSpec extends SparkFunSuite {
     df.unpersist()
   }
 
-  test("applyWithSpill: one stats+spill job, same rows/branch as the lazy path") {
-    // round 12: the stats ride the ff-spill job via Dataset.observe on
-    // the PRE-FILTER frame. The load-bearing property is that Catalyst
-    // must not push the ff filter below CollectMetrics (the counts must
-    // cover every row) — pinned here by branch agreement with fragStats
-    // on a mixed corpus — and that the enrichment from the spilled ff is
-    // row-identical to the lazy aggregate subtree's.
-    val p = writeTemp("cap_spill.pcap", fragmentedCapture)
-    val df = PcapSource.read(spark, p.toString).cache()
-    val spill = java.nio.file.Files.createTempDirectory("ffspill").toString + "/ff"
-    val (out, choice) = Defrag.applyWithSpill(df, spill)
-    assert(choice == Defrag.BroadcastJoin) // 86% fragmented, tiny ff
-    // spilled ff row count = distinct datagram keys, exactly
-    val st = Defrag.fragStats(df)
-    assert(spark.read.parquet(spill).count() == st.distinctKeysEst)
-    def canon(d: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
-      d.collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString(""))
-    assert(canon(out) == canon(Defrag.defrag(df)))
-    // below-threshold corpus WITH one fragmented datagram among 500 TCP
-    // rows (round(100·2/502) = 0 < 1): the DISCRIMINATING case — had
-    // Catalyst pushed the ff filter below CollectMetrics, the observed
-    // total would count only the 2 fragment rows (100%) and wrongly
-    // defrag. (300 rows first tripped this assert legitimately:
-    // round(100·2/302) = 1 IS the threshold — the reference's integer-%
-    // rounding, main.rs:274.)
-    val frames = (1 to 500).map { i =>
-      (i * 1000L, -1, ethernet(0x0800,
-        ipv4("9.9.9.9", "8.8.8.8", 6, tcp(80, 2000 + i, 0x10))))
-    } ++ Seq(
-      (400000L, -1, ethernet(0x0800, ipv4("9.9.9.9", "8.8.8.8", 17,
-        udp(53, 41000, dnsQuery("x.example.org", 1)), id = 9, mf = true))),
-      (400001L, -1, ethernet(0x0800, ipv4("9.9.9.9", "8.8.8.8", 17,
-        Array.fill[Byte](16)(0x42), id = 9, fragOffset = 5))))
-    val p2 = writeTemp("cap_spill2.pcap", legacyPcap(frames))
-    val df2 = PcapSource.read(spark, p2.toString)
-    val spill2 = java.nio.file.Files.createTempDirectory("ffspill2").toString + "/ff"
-    val (out2, choice2) = Defrag.applyWithSpill(df2, spill2)
-    assert(choice2 == Defrag.NoDefrag,
-      s"got $choice2 — the ff filter reached below the observe node")
-    assert(out2.columns.toSeq == df2.columns.toSeq)
-    df.unpersist()
-  }
-
-  test("applyWithSpill with the ff-gated stats scan: identical rows, branch, and spill (round 13)") {
-    // the convert CLI's shape: the observe + ff-spill job reads the
-    // dissectGate=first-fragment scan (only actual first fragments pay
-    // transport/L7 dissection), the probe side reads the plain scan —
-    // output must be row-identical to the ungated spill path
-    val p = writeTemp("cap_gated.pcap", fragmentedCapture)
-    val plain = spark.read.format("pcap").load(p.toString)
-    val gated = spark.read.format("pcap")
-      .option("_internal.dissectGate", "first-fragment").load(p.toString)
-    val dir = java.nio.file.Files.createTempDirectory("ffspill_gate")
-    val (outGated, choiceGated) =
-      Defrag.applyWithSpill(plain, gated, dir.toString + "/g", 1.0)
-    val (outPlain, choicePlain) =
-      Defrag.applyWithSpill(plain, dir.toString + "/p")
-    assert(choiceGated == choicePlain)
-    def canon(d: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
-      d.collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString(""))
-    assert(canon(outGated) == canon(outPlain))
-    // the two spills agree row-for-row (same ff aggregate)
-    assert(canon(spark.read.parquet(dir.toString + "/g")) ==
-      canon(spark.read.parquet(dir.toString + "/p")))
-    // below-threshold corpus through the gated path: observed counts
-    // still cover every row (the gate must not disturb the observe
-    // barrier), so the skip decision is unchanged
-    val frames = (1 to 500).map { i =>
-      (i * 1000L, -1, ethernet(0x0800,
-        ipv4("9.9.9.9", "8.8.8.8", 6, tcp(80, 2000 + i, 0x10))))
-    } ++ Seq(
-      (400000L, -1, ethernet(0x0800, ipv4("9.9.9.9", "8.8.8.8", 17,
-        udp(53, 41000, dnsQuery("x.example.org", 1)), id = 9, mf = true))),
-      (400001L, -1, ethernet(0x0800, ipv4("9.9.9.9", "8.8.8.8", 17,
-        Array.fill[Byte](16)(0x42), id = 9, fragOffset = 5))))
-    val p2 = writeTemp("cap_gated2.pcap", legacyPcap(frames))
-    val plain2 = spark.read.format("pcap").load(p2.toString)
-    val gated2 = spark.read.format("pcap")
-      .option("_internal.dissectGate", "first-fragment").load(p2.toString)
-    val (out2, choice2) = Defrag.applyWithSpill(plain2, gated2,
-      java.nio.file.Files.createTempDirectory("ffspill_gate2").toString + "/ff", 1.0)
-    assert(choice2 == Defrag.NoDefrag)
-    assert(out2.columns.toSeq == plain2.columns.toSeq)
-  }
-
-  test("fused stats pass ≡ observe stats + spill-built patch map (round 16)") {
+  test("fused stats on the gated scan ≡ fragStats + patch map of the ungated scan") {
     import graft.sources.DefragPatch
     // the fused job counts (total, fragmented) in the READERS and pushes
-    // the ff filter into the scan — it must reproduce the observe flow's
-    // stats exactly and build the identical patch map
+    // the ff filter into the first-fragment-gated scan — it must
+    // reproduce the ungated scan's stats exactly and build the identical
+    // patch map (the gate changes which rows pay transport/L7 dissection,
+    // never a result)
     val p = writeTemp("cap_fused.pcap", fragmentedCapture)
     def gatedStats(path: String): (PcapSource.Metrics, org.apache.spark.sql.DataFrame) = {
       val sm = PcapSource.statsMetrics(spark)
@@ -237,10 +160,9 @@ class PcapPipelineSpec extends SparkFunSuite {
     val plain = spark.read.format("pcap").load(p.toString)
     val st = Defrag.fragStats(plain)
     assert(fused.total == st.total && fused.pct == st.pct,
-      s"fused (${fused.total}, ${fused.pct}) != observe (${st.total}, ${st.pct})")
-    val spill = java.nio.file.Files.createTempDirectory("fusedspill").toString + "/ff"
-    val (pctSpill, keysSpill) = Defrag.statsAndSpill(plain, spill)
-    assert(fused.pct == pctSpill && fused.ffKeys == keysSpill)
+      s"fused (${fused.total}, ${fused.pct}) != ungated (${st.total}, ${st.pct})")
+    val ungatedMap = DefragPatch.build(Defrag.firstFragments(plain))
+    assert(fused.ffKeys == ungatedMap.ids.length)
     def entries(m: DefragPatch.PatchMap): Set[(String, String, Int, Int, Int, Int, Int, String, Int)] =
       m.ids.indices.map { i =>
         (m.strings(m.srcIdx(i)), m.strings(m.dstIdx(i)), m.ids(i),
@@ -249,14 +171,13 @@ class PcapPipelineSpec extends SparkFunSuite {
           if (m.dnsNameIdx(i) < 0) null else m.strings(m.dnsNameIdx(i)),
           m.protoIdx(i))
       }.toSet
-    assert(entries(fused.map.get) ==
-      entries(DefragPatch.build(spark.read.parquet(spill))),
-      "fused patch map diverged from the spill-built one")
+    assert(entries(fused.map.get) == entries(ungatedMap),
+      "fused patch map diverged from the ungated scan's")
 
-    // the DISCRIMINATING corpus (round-12's observe-barrier case, now
-    // the reader-counting case): 500 TCP rows + one 2-fragment datagram.
-    // The pushed ff filter vetoes the 500 TCP rows at the scan — the
-    // reader counters must still have counted them (pct 0, not 100)
+    // the DISCRIMINATING corpus (reader counting): 500 TCP rows + one
+    // 2-fragment datagram. The pushed ff filter vetoes the 500 TCP rows
+    // at the scan — the reader counters must still have counted them
+    // (pct 0, not 100)
     val frames = (1 to 500).map { i =>
       (i * 1000L, -1, ethernet(0x0800,
         ipv4("9.9.9.9", "8.8.8.8", 6, tcp(80, 2000 + i, 0x10))))
@@ -271,6 +192,8 @@ class PcapPipelineSpec extends SparkFunSuite {
     assert(fused2.total == 502L,
       s"reader total ${fused2.total} — vetoed rows went uncounted")
     assert(fused2.pct == 0.0, s"pct ${fused2.pct} — the skip decision flipped")
+    val st2 = Defrag.fragStats(spark.read.format("pcap").load(p2.toString))
+    assert(fused2.total == st2.total && fused2.pct == st2.pct)
     assert(fused2.ffKeys == 1L && fused2.map.get.ids.length == 1)
 
     // buildCapped refuses past the ceiling but still reports the exact
@@ -295,9 +218,6 @@ class PcapPipelineSpec extends SparkFunSuite {
     assert(got.columns.toSeq ==
       Defrag.defraggedOrder(graft.core.PacketSchema.schema.fieldNames.toSeq))
     val want = Defrag.defrag(PcapSource.read(spark, p.toString))
-    def canon(d: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
-      d.selectExpr(d.columns.sorted.map(c => s"`$c`"): _*)
-        .collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString("|"))
     assert(canon(got) == canon(want))
     // singleFile default shape too (coalesced RDD, same permutation)
     PcapConvert.run(spark, PcapConvert.Args(
@@ -305,6 +225,28 @@ class PcapPipelineSpec extends SparkFunSuite {
     val one = spark.read.parquet(outDir.toString + "/one.parquet")
     assert(one.columns.toSeq == got.columns.toSeq)
     assert(canon(one) == canon(want))
+  }
+
+  test("shuffle-fallback convert ≡ join defrag; its ff spill never lands inside -o") {
+    // more distinct keys than the broadcast ceiling (forced to 0 here):
+    // buildCapped refuses, the ff aggregate spills and the shuffle-bypass
+    // join feeds the writer. The writer clears the output directory
+    // before it runs the join that reads the spill, so a trailing-slash
+    // -o must still put the spill beside the output, not inside it.
+    val p = writeTemp("cap_shuffle.pcap", fragmentedCapture)
+    val want = canon(Defrag.defrag(PcapSource.read(spark, p.toString)))
+    sys.props("graft.defrag.maxBroadcastFF") = "0"
+    try Seq("out.parquet", "out.parquet/").foreach { o =>
+      val dir = Files.createTempDirectory("shuffleconv")
+      PcapConvert.run(spark, PcapConvert.Args(
+        file = p.toString, out = s"$dir/$o", singleFile = false))
+      val got = spark.read.parquet(s"$dir/$o")
+      assert(got.columns.toSeq ==
+        Defrag.defraggedOrder(graft.core.PacketSchema.schema.fieldNames.toSeq), o)
+      assert(canon(got) == want, o)
+      val spills = Files.walk(dir).toArray.map(_.toString).filter(_.contains(".ffspill"))
+      assert(spills.isEmpty, s"-o $o left ${spills.mkString(", ")}")
+    } finally sys.props.remove("graft.defrag.maxBroadcastFF")
   }
 
   test("speculative single-pass convert: unfragmented corpus, and the mispredict fallback (round 13)") {
@@ -420,7 +362,7 @@ class PcapPipelineSpec extends SparkFunSuite {
     df.unpersist()
   }
 
-  test("full CLI pipeline writes snappy parquet with defrag applied") {
+  test("full CLI pipeline writes parquet with defrag applied (verbose)") {
     val p = writeTemp("cap5.pcap", fragmentedCapture)
     val outDir = Files.createTempDirectory("graft-out").resolve("out.parquet")
     PcapConvert.run(spark,

@@ -53,6 +53,12 @@ class PlanQualitySpec extends SparkFunSuite {
     val pcap = graft.spark.PcapSource.read(spark, f.toString)
     val p = plan(graft.spark.Defrag.defrag(pcap))
     assert(p.contains("BroadcastHashJoin"), p)
+    // the ff argmin is the declarative min(struct) SortAggregate (round
+    // 17's measured pick), planned in the caller's session — no clone
+    val ff = graft.spark.Defrag.firstFragments(pcap)
+    assert(ff.sparkSession eq pcap.sparkSession)
+    val pf = plan(ff)
+    assert(pf.contains("SortAggregate") && !pf.contains("ObjectHashAggregate"), pf)
     // round-10 shuffle branch: the bypass split must keep the
     // non-joinable slice OUT of any exchange — the only shuffles are
     // the joinable slice and the pre-aggregated ff side (plus AQE

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Round-17 scoping of the ObjectHashAggregate fallback threshold
   * (r16 verdict #3): the raised threshold must ride a session CLONE
   * attached to argmin-bearing frames, never the caller's session.
@@ -30,35 +28,6 @@ class ScopedArgminSpec extends SparkFunSuite {
     // re-scoping a frame already in the clone is a no-op
     val again = MinStructAgg.scoped(a)
     assert(again eq a)
-  }
-
-  test("firstFragments output executes under the clone (fused-stats collect path)") {
-    import PcapFixtures._
-    val first = ethernet(0x0800, ipv4("198.51.100.7", "192.0.2.9", 17,
-      udp(53, 41000, dnsQuery("s.example.org", 1)), id = 77, mf = true))
-    val tail = ethernet(0x0800, ipv4("198.51.100.7", "192.0.2.9", 17,
-      Array.fill[Byte](16)(0x42), id = 77, mf = false, fragOffset = 5))
-    val dir = java.nio.file.Files.createTempDirectory("scopedargmin")
-    val f = dir.resolve("p.pcap")
-    java.nio.file.Files.write(f, legacyPcap(Seq((1L, -1, first), (2L, -1, tail))))
-    val pcap = graft.spark.PcapSource.read(spark, f.toString)
-    // round 17: the ff site ships the declarative argmin (SortAggregate)
-    // — the scoping must still hold for the forced-MinStructAgg A/B arm
-    sys.props("graft.agg.ffMinStruct") = "1"
-    try {
-      val ff = graft.spark.Defrag.firstFragments(pcap)
-      assert(ff.sparkSession ne pcap.sparkSession)
-      assert(ff.sparkSession.conf.get(MinStructAgg.FallbackKey) ===
-        MinStructAgg.FallbackThreshold.toString)
-      // the forced argmin PLANS as ObjectHashAggregate under the clone
-      val plan = ff.queryExecution.executedPlan.toString
-      assert(plan.contains("ObjectHashAggregate"), plan.take(500))
-      assert(!plan.contains("SortAggregate"), plan.take(500))
-    } finally { sys.props.remove("graft.agg.ffMinStruct"); () }
-    // the shipped default plans the declarative SortAggregate form
-    val dplan = graft.spark.Defrag.firstFragments(pcap)
-      .queryExecution.executedPlan.toString
-    assert(dplan.contains("SortAggregate"), dplan.take(500))
   }
 
   test("KMeansIvf results execute under the clone, caller session untouched") {

@@ -93,7 +93,7 @@ object ScrubProps extends Properties("adaptive-scrub") {
         val spill = java.nio.file.Files.createTempDirectory("scrubspill")
         val (lazyOut, lazyChoice) = AdaptiveScrub(docs, 3, maxBroadcast = ceil)
         val (spillOut, spillChoice) =
-          AdaptiveScrub.applyWithSpill(docs, spill.toString + "/freq", 3, ceil)
+          AdaptiveScrub.applySpilled(docs, spill.toString + "/freq", 3, ceil)
         val ok = lazyChoice == spillChoice && canon(lazyOut) == canon(spillOut)
         graft.TempCleanup.rmrf(spill.toFile)
         ok
