@@ -4,17 +4,24 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.dissect.DissectAcc
 
 /** Columnar broadcast-patch for the defrag convert (round 13, verdict
   * #4): the measured bound showed the row-shaped broadcast join +
   * RowToColumnarExec rebatch costing ~50% of the defrag-convert write
   * (`tools.BenchRebatchBound`, interleaved: join 17.3 s vs no-join
   * 8.4–9.8 s median at 100M packets) — so on the broadcast branch the
-  * enrichment moves INTO the scan: the first-fragment aggregate
+  * enrichment moves INTO the scan: the per-key first-fragment argmin
   * (bounded by distinct datagram keys — the same rows a broadcast hash
-  * join would ship) is collected into one compact map, broadcast once,
-  * and each reader patches its dissection accumulator before the column
-  * vectors are filled. The convert plan is then scan → vector write,
+  * join would ship) is built map-side into dictionary-encoded fragments,
+  * merged on the driver into one compact map ([[buildArgmin]]),
+  * broadcast once, and each reader patches its dissection accumulator
+  * before the column vectors are filled. The convert plan is then scan → vector write,
   * columnar end to end: no join node, no ColumnarToRow, no rebatch.
   *
   * Semantics are exactly [[graft.spark.Defrag.defragWith]]'s coalesce:
@@ -43,10 +50,10 @@ import org.apache.spark.sql.DataFrame
   *     lazy val` rebuilt once per executor JVM from the arrays
   *     (~100 ms at 1M keys), never serialized.
   *
-  * The driver-side collect mirrors what a broadcast hash join does
+  * The driver-side merge mirrors what a broadcast hash join does
   * internally (Spark collects the build side to the driver before
-  * broadcasting); the adaptive guard's ceiling bounds it identically.
-  * The shuffle branch (wide key spaces) keeps the join path.
+  * broadcasting); the key cap bounds it the same way. The shuffle
+  * branch (wide key spaces) keeps the join path.
   */
 object DefragPatch {
 
@@ -90,7 +97,7 @@ object DefragPatch {
         var slot = hashOf(strings(srcIdx(i)), strings(dstIdx(i)), ids(i)) &
           (cap - 1)
         // stop on an EQUAL key too, not just an empty slot (round-16
-        // ADVICE): entries are unique post-aggregate, but if that
+        // ADVICE): the argmin build keeps one entry per key, but if that
         // invariant ever slips, overwriting preserves the last-wins
         // semantics the pre-round-15 HashMap index had — duplicate keys
         // must not shadow each other from separate slots
@@ -131,154 +138,257 @@ object DefragPatch {
     * and cached after first use on interned instances, so the per-row
     * cost is two field reads plus mixing.
     */
-  @inline private def hashOf(src: String, dst: String, id: Int): Int = {
-    var h = src.hashCode * 0x9e3779b1 ^ dst.hashCode * 0x85ebca77 ^ id
+  @inline private def hashOf(src: String, dst: String, id: Int): Int =
+    mix(src.hashCode, dst.hashCode, id)
+
+  @inline private def mix(src: Int, dst: Int, id: Int): Int = {
+    var h = src * 0x9e3779b1 ^ dst * 0x85ebca77 ^ id
     h ^= h >>> 15
     h * 0x27d4eb2f
   }
 
-  /** Mutable dictionary used by both the per-partition fragment build
-    * and the driver-side merge. */
-  private final class Dict {
-    val map = new java.util.HashMap[String, Integer]()
-    val list = new scala.collection.mutable.ArrayBuffer[String]()
-    def intern(s: String): Int = {
-      val got = map.get(s)
-      if (got != null) got.intValue()
-      else {
-        val idx = list.length
-        map.put(s, Integer.valueOf(idx))
-        list += s
-        idx
-      }
-    }
-  }
-
-  private final class Cols(n: Int) {
-    val ids = new Array[Int](n)
-    val srcIdx = new Array[Int](n)
-    val dstIdx = new Array[Int](n)
-    val udpSrc = new Array[Int](n)
-    val udpDst = new Array[Int](n)
-    val ntp = new Array[Int](n)
-    val dnsType = new Array[Int](n)
-    val dnsName = new Array[Int](n)
-    val proto = new Array[Int](n)
-    def toMap(dict: Dict): PatchMap =
-      new PatchMap(ids, srcIdx, dstIdx, dict.list.toArray, udpSrc, udpDst,
-        ntp, dnsType, dnsName, proto)
-  }
+  /** Columns [[buildArgmin]] reads, in this ordinal order. */
+  private val ArgminCols = Seq("ip_src", "ip_dst", "ip_id", "frame_time",
+    "udp_srcport", "udp_dstport", "ntp_priv_reqcode", "dns_qry_type",
+    "dns_qry_name", "col_protocol")
 
   /** Build the patch table from a frame shaped like
     * [[graft.spark.Defrag.firstFragments]]' output (join keys + the six
-    * patched columns). Caller enforces the broadcast ceiling first.
-    *
-    * DISTRIBUTED build (round 15, verdict #1): executors turn their
-    * partitions into dictionary-encoded column fragments (unsafe-row
-    * field reads, no boxed external Rows), the driver merges compact
-    * int arrays with one dictionary remap per fragment. The old
-    * `collect()`-then-intern loop materialized ~9 boxed cells per key
-    * on the driver — ~0.7 s of the ~1.4 s patch-vs-floor gap at 100M
-    * packets / 1.12M keys.
+    * patched columns, one row per key). Caller enforces the broadcast
+    * ceiling first. Same fragment build and merge as [[buildArgmin]],
+    * with no frame_time to order by.
     */
-  def build(ff: DataFrame): PatchMap = merge(fragmentsRdd(ff).collect())
+  def build(ff: DataFrame): PatchMap =
+    buildArgmin(ff.withColumn("frame_time", lit(null).cast(TimestampType)),
+      Long.MaxValue)._1.get
 
-  /** [[build]] with a ROW CAP (round 16, the fused stats pass): the
-    * caller cannot know the distinct-key count before the aggregate
-    * runs, so the collect itself enforces the broadcast ceiling —
-    * fragments are merged as they arrive and DISCARDED wholesale the moment the
-    * cumulative row count exceeds `maxRows` (driver memory stays
-    * bounded by the cap plus one in-flight fragment). Returns the map
-    * (None = overflowed — take the shuffle branch) and the EXACT total
-    * row count across all fragments, which is the distinct datagram key
-    * count whether or not the map was kept.
+  /** The fused stats pass's patch-map build: the per-key argmin of
+    * [[graft.spark.Defrag.firstFragments]] as ONE map-only job over
+    * `ffRows` (first-fragment rows; columns beyond [[ArgminCols]] are
+    * pruned). Each task reduces its rows to one dictionary-encoded
+    * [[Fragment]] holding its per-key argmin; the driver merges
+    * fragments as they arrive under the same order. No exchange, no
+    * sort, no AQE re-plan: duplicate keys scattered across files meet
+    * in the driver merge instead of a shuffle.
+    *
+    * The order is `min(struct(frame_time, udp_srcport, udp_dstport,
+    * ntp_priv_reqcode, dns_qry_type, dns_qry_name, col_protocol))`'s:
+    * field by field, NULLs first, strings (col_protocol included) in
+    * UTF-8 byte order.
+    *
+    * Memory guard: a task whose local map passes `maxKeys` ships an
+    * overflow marker (its local count lower-bounds the global one), and
+    * the driver drops its merge once the merged keys pass `maxKeys`, so
+    * driver memory stays bounded by the cap plus one in-flight fragment.
+    * Returns the map and the exact distinct key count, or `None` and a
+    * lower bound above `maxKeys`. Every task drains its rows either way
+    * and the job is never cancelled: callers count (total, fragmented)
+    * in the readers of this same scan and need the counts whole.
     */
-  def buildCapped(ff: DataFrame, maxRows: Long): (Option[PatchMap], Long) = {
-    val frags = scala.collection.mutable.ArrayBuffer.empty[PatchMap]
-    var seen = 0L
-    var over = false
+  def buildArgmin(ffRows: DataFrame, maxKeys: Long): (Option[PatchMap], Long) = {
+    val rows = ffRows.select(ArgminCols.map(col): _*).queryExecution.toRdd
+    var merged = new Fragment
+    var keys = 0L
     // runJob's result handler runs serially (JobWaiter synchronizes), so
-    // plain vars are safe; collect() would instead hold every fragment
-    ff.sparkSession.sparkContext.runJob[PatchMap, Array[PatchMap]](
-      fragmentsRdd(ff),
-      (it: Iterator[PatchMap]) => it.toArray,
-      (_: Int, fs: Array[PatchMap]) => fs.foreach { f =>
-        seen += f.ids.length
-        if (seen > maxRows && !over) { over = true; frags.clear() }
-        if (!over) frags += f
+    // plain vars are safe
+    ffRows.sparkSession.sparkContext.runJob(rows,
+      (it: Iterator[InternalRow]) => Fragment.of(it, maxKeys),
+      (_: Int, f: Fragment) => {
+        val fits = merged != null && !f.overflow
+        if (fits) merged.mergeFrom(f)
+        keys = math.max(keys, if (fits) merged.size.toLong else f.size.toLong)
+        if (!fits || keys > maxKeys) merged = null
       })
-    if (over) (None, seen) else (Some(merge(frags.toArray)), seen)
+    if (merged == null) (None, keys) else (Some(merged.toPatchMap), keys)
   }
 
-  /** Executor side of the distributed build: dictionary-encoded column
-    * fragments from unsafe-row reads, one per non-empty partition.
+  /** One task's (or the driver's merged) per-key argmin, dictionary-
+    * encoded. Entry e occupies `cols(e * W until (e + 1) * W)`: source,
+    * destination, ip_id, then the order columns udp_srcport,
+    * udp_dstport, ntp_priv_reqcode, dns_qry_type, dns_qry_name,
+    * col_protocol, with `time(e)` its frame_time. Strings are dictionary
+    * indices. NULL is −1 in `cols` (every value is non-negative, so int
+    * order IS nulls-first) and Long.MinValue in `time`.
+    *
+    * `overflow` = the task passed its key cap: no entries ride along and
+    * `size` is a lower bound on the global distinct-key count. The
+    * lookup state is transient — a shipped fragment is only read.
     */
-  private def fragmentsRdd(ff: DataFrame)
-      : org.apache.spark.rdd.RDD[PatchMap] = {
-    val protoIdxOf = graft.dissect.DissectAcc.ProtoStr.zipWithIndex.toMap
-    val proj = ff.select("ip_src", "ip_dst", "ip_id", "udp_srcport",
-      "udp_dstport", "ntp_priv_reqcode", "dns_qry_type", "dns_qry_name",
-      "col_protocol")
-    proj.queryExecution.toRdd.mapPartitions { it =>
-      val dict = new Dict
-      val buf = new scala.collection.mutable.ArrayBuffer[Array[Int]]()
-      it.foreach { r =>
-        // groupBy keys are non-null by construction (ip_proto=17 rows
-        // always carry parsed addresses) — but a NULL key could never
-        // match a row (join semantics), so drop any defensively
-        if (!r.isNullAt(0) && !r.isNullAt(1)) {
-          buf += Array(
-            dict.intern(r.getUTF8String(0).toString),
-            dict.intern(r.getUTF8String(1).toString),
-            r.getInt(2) & 0xffff,
-            if (r.isNullAt(3)) -1 else r.getInt(3),
-            if (r.isNullAt(4)) -1 else r.getInt(4),
-            if (r.isNullAt(5)) -1 else r.getShort(5).toInt,
-            if (r.isNullAt(6)) -1 else r.getInt(6),
-            if (r.isNullAt(7)) -1 else dict.intern(r.getUTF8String(7).toString),
-            if (r.isNullAt(8)) -1
-            else protoIdxOf.getOrElse(r.getUTF8String(8).toString, -1))
+  private final class Fragment extends Serializable {
+    import Fragment.W
+    var size = 0
+    var overflow = false
+    var cols = new Array[Int](64 * W)
+    var time = new Array[Long](64)
+    var strings = new Array[UTF8String](64)
+    var nStrings = 0
+    @transient private var dict = new java.util.HashMap[UTF8String, Integer]()
+    /** Open-addressing slot → entry index, −1 empty, load ≤ 0.5. */
+    @transient private var table = Array.fill(256)(-1)
+
+    private def intern(s: UTF8String): Int = {
+      val got = dict.get(s)
+      if (got != null) got.intValue()
+      else {
+        if (nStrings == strings.length)
+          strings = java.util.Arrays.copyOf(strings, nStrings * 2)
+        val c = s.clone() // reader rows reuse their buffers
+        strings(nStrings) = c
+        dict.put(c, Integer.valueOf(nStrings))
+        nStrings += 1
+        nStrings - 1
+      }
+    }
+
+    private def slotOf(t: Array[Int], src: Int, dst: Int, id: Int): Int = {
+      val mask = t.length - 1
+      var slot = mix(src, dst, id) & mask
+      var e = t(slot)
+      while (e >= 0 && !(cols(e * W) == src && cols(e * W + 1) == dst &&
+          cols(e * W + 2) == id)) {
+        slot = (slot + 1) & mask
+        e = t(slot)
+      }
+      slot
+    }
+
+    /** Candidate `c` (W ints, this fragment's dictionary) with frame
+      * time `t` before entry `e` in the argmin order? */
+    private def before(c: Array[Int], t: Long, e: Int): Boolean =
+      if (t != time(e)) t < time(e)
+      else {
+        var k = 3
+        while (k < W && c(k) == cols(e * W + k)) k += 1
+        k < W && {
+          val a = c(k)
+          val b = cols(e * W + k)
+          // distinct dictionary indices are distinct strings
+          if (k < 7 || a < 0 || b < 0) a < b
+          else strings(a).binaryCompare(strings(b)) < 0
         }
       }
-      val n = buf.length
-      val c = new Cols(n)
-      var i = 0
-      while (i < n) {
-        val e = buf(i)
-        c.srcIdx(i) = e(0); c.dstIdx(i) = e(1); c.ids(i) = e(2)
-        c.udpSrc(i) = e(3); c.udpDst(i) = e(4); c.ntp(i) = e(5)
-        c.dnsType(i) = e(6); c.dnsName(i) = e(7); c.proto(i) = e(8)
-        i += 1
+
+    /** Keep candidate `c`/`t` if its key is new or it precedes the key's
+      * current entry. */
+    def offer(c: Array[Int], t: Long): Unit = {
+      val slot = slotOf(table, c(0), c(1), c(2))
+      val e = table(slot)
+      if (e < 0) {
+        if (size * W == cols.length) {
+          cols = java.util.Arrays.copyOf(cols, cols.length * 2)
+          time = java.util.Arrays.copyOf(time, time.length * 2)
+        }
+        System.arraycopy(c, 0, cols, size * W, W)
+        time(size) = t
+        table(slot) = size
+        size += 1
+        if (size * 2 > table.length) rehash()
+      } else if (before(c, t, e)) {
+        System.arraycopy(c, 3, cols, e * W + 3, W - 3)
+        time(e) = t
       }
-      if (n == 0) Iterator.empty else Iterator.single(c.toMap(dict))
+    }
+
+    private def rehash(): Unit = {
+      val t = Array.fill(table.length * 2)(-1)
+      var e = 0
+      while (e < size) {
+        t(slotOf(t, cols(e * W), cols(e * W + 1), cols(e * W + 2))) = e
+        e += 1
+      }
+      table = t
+    }
+
+    /** Offer one `ArgminCols`-shaped row; NULL-keyed rows never match a
+      * packet (join semantics) and are dropped. */
+    def add(r: InternalRow, c: Array[Int]): Unit =
+      if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2)) {
+        def int(i: Int): Int = if (r.isNullAt(i)) -1 else r.getInt(i)
+        def str(i: Int): Int = if (r.isNullAt(i)) -1 else intern(r.getUTF8String(i))
+        c(0) = str(0); c(1) = str(1); c(2) = r.getInt(2) & 0xffff
+        c(3) = int(4); c(4) = int(5)
+        c(5) = if (r.isNullAt(6)) -1 else r.getShort(6).toInt
+        c(6) = int(7); c(7) = str(8); c(8) = str(9)
+        offer(c, if (r.isNullAt(3)) Long.MinValue else r.getLong(3))
+      }
+
+    /** Driver merge: remap `f`'s dictionary once, then offer its
+      * entries — keys seen in earlier fragments keep the argmin. */
+    def mergeFrom(f: Fragment): Unit = {
+      val remap = Array.tabulate(f.nStrings)(i => intern(f.strings(i)))
+      def re(i: Int): Int = if (i < 0) -1 else remap(i)
+      val c = new Array[Int](W)
+      var e = 0
+      while (e < f.size) {
+        val b = e * W
+        System.arraycopy(f.cols, b, c, 0, W)
+        c(0) = remap(c(0)); c(1) = remap(c(1)); c(7) = re(c(7)); c(8) = re(c(8))
+        offer(c, f.time(e))
+        e += 1
+      }
+    }
+
+    /** Trim to what the driver reads and drop the lookup state; an
+      * overflowed fragment keeps only its count. No offers after this. */
+    def shipped: Fragment = {
+      if (overflow) nStrings = 0
+      val keep = if (overflow) 0 else size
+      cols = java.util.Arrays.copyOf(cols, keep * W)
+      time = java.util.Arrays.copyOf(time, keep)
+      strings = java.util.Arrays.copyOf(strings, nStrings)
+      dict = null
+      table = null
+      this
+    }
+
+    /** The broadcast form: only referenced strings stay in the
+      * dictionary; col_protocol becomes its [[DissectAcc.ProtoStr]]
+      * index (−1 when it names none). */
+    def toPatchMap: PatchMap = {
+      val pos = Array.fill(nStrings)(-1)
+      val out = new scala.collection.mutable.ArrayBuffer[String]()
+      def ref(i: Int): Int =
+        if (i < 0) -1
+        else {
+          if (pos(i) < 0) { pos(i) = out.length; out += strings(i).toString }
+          pos(i)
+        }
+      val n = size
+      val ids, srcIdx, dstIdx, udpSrc, udpDst, ntp, dnsType, dnsName, proto =
+        new Array[Int](n)
+      var e = 0
+      while (e < n) {
+        val b = e * W
+        srcIdx(e) = ref(cols(b)); dstIdx(e) = ref(cols(b + 1)); ids(e) = cols(b + 2)
+        udpSrc(e) = cols(b + 3); udpDst(e) = cols(b + 4); ntp(e) = cols(b + 5)
+        dnsType(e) = cols(b + 6); dnsName(e) = ref(cols(b + 7))
+        proto(e) =
+          if (cols(b + 8) < 0) -1 else DissectAcc.ProtoU8.indexOf(strings(cols(b + 8)))
+        e += 1
+      }
+      new PatchMap(ids, srcIdx, dstIdx, out.toArray, udpSrc, udpDst, ntp,
+        dnsType, dnsName, proto)
     }
   }
 
-  /** Driver merge: remap each fragment's dictionary once, then copy. */
-  private def merge(fragments: Array[PatchMap]): PatchMap = {
-    val total = fragments.iterator.map(_.ids.length).sum
-    val dict = new Dict
-    val out = new Cols(total)
-    var o = 0
-    fragments.foreach { f =>
-      val remap = f.strings.map(dict.intern)
-      val n = f.ids.length
-      var i = 0
-      while (i < n) {
-        out.ids(o) = f.ids(i)
-        out.srcIdx(o) = remap(f.srcIdx(i))
-        out.dstIdx(o) = remap(f.dstIdx(i))
-        out.udpSrc(o) = f.udpSrcport(i)
-        out.udpDst(o) = f.udpDstport(i)
-        out.ntp(o) = f.ntpPrivReqcode(i)
-        out.dnsType(o) = f.dnsQryType(i)
-        out.dnsName(o) = if (f.dnsNameIdx(i) < 0) -1 else remap(f.dnsNameIdx(i))
-        out.proto(o) = f.protoIdx(i)
-        i += 1
-        o += 1
+  private object Fragment {
+    /** Ints per entry in [[Fragment.cols]]. */
+    val W = 9
+
+    /** Task side: one fragment from a partition's rows. The iterator is
+      * drained past an overflow so the readers' counters see every row. */
+    def of(it: Iterator[InternalRow], maxKeys: Long): Fragment = {
+      val f = new Fragment
+      val c = new Array[Int](W)
+      while (it.hasNext) {
+        val r = it.next()
+        if (!f.overflow) {
+          f.add(r, c)
+          if (f.size > maxKeys) { f.overflow = true; f.shipped }
+        }
       }
+      if (f.overflow) f else f.shipped
     }
-    out.toMap(dict)
   }
 
   /** Apply one row's patch to the dissection accumulator (post-dissect,

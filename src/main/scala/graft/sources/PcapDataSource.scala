@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -132,9 +133,9 @@ final class PcapScanBuilder(options: CaseInsensitiveStringMap)
     // ONLY on UDP first-fragment rows (ip_proto 17, MF, offset 0); every
     // other row keeps its L3 columns exact and NULLs the rest. Sound
     // only for consumers that read transport/L7 columns exclusively
-    // under that predicate — the convert's first-fragment aggregate
-    // (Defrag.firstFragments in the fused stats pass and the shuffle
-    // fallback's ff spill) is the intended (and only) user: it filters
+    // under that predicate — the convert's first-fragment argmin
+    // (Defrag.statsAndBuild's stats pass, Defrag.firstFragments in the
+    // shuffle fallback's ff spill) is the intended (and only) user: it filters
     // exactly this condition and the reader-side counts read no
     // transport column, so the whole corpus stops paying the DNS/NTP
     // parse for the 90%+ non-ff rows. The shape cannot be verified from
@@ -231,7 +232,8 @@ final class PcapScan(
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+    val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
     // the metrics registry is consulted on the DRIVER (here), then the
     // accumulators themselves serialize into the task closures; same
     // for the defrag patch map (the broadcast rides the closures)
@@ -322,8 +324,10 @@ private[sources] object PcapShardPlan {
   }
 }
 
+/** `conf` is a broadcast, as in Spark's own file scans: the ~1k-entry
+  * Hadoop configuration ships once per executor, not inside every task. */
 final case class PcapReaderFactory(
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     required: StructType,
     refCompat: Boolean,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
@@ -338,7 +342,7 @@ final case class PcapReaderFactory(
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
     val pp = p.asInstanceOf[PcapInputPartition]
     new PcapPartitionReader(pp.file,
-      conf.value, required, refCompat, filters, withBytes, pp.shard, pp.nShards,
+      conf.value.value, required, refCompat, filters, withBytes, pp.shard, pp.nShards,
       metrics, ffGate, patch, pp.rangeStart, pp.rangeEnd, buildIndex,
       pp.ngState)
   }
@@ -360,7 +364,7 @@ final case class PcapReaderFactory(
   override def createColumnarReader(
       p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val pp = p.asInstanceOf[PcapInputPartition]
-    new PcapColumnarReader(pp.file, conf.value, required, refCompat,
+    new PcapColumnarReader(pp.file, conf.value.value, required, refCompat,
       filters, pp.shard, pp.nShards, metrics, ffGate, patch,
       pp.rangeStart, pp.rangeEnd, buildIndex, pp.ngState)
   }

@@ -94,7 +94,9 @@ final class PcapMicroBatchStream(
 
   private val spark = org.apache.spark.sql.SparkSession.active
   private val hconf = spark.sessionState.newHadoopConf()
-  private val serConf = new SerializableConfiguration(hconf)
+  // broadcast once per stream: every batch's tasks share it
+  private lazy val confB =
+    spark.sparkContext.broadcast(new SerializableConfiguration(hconf))
 
   /** AvailableNow fence per root: files sorting after a root's fence
     * (they arrived after the query started) are left for the NEXT run.
@@ -310,7 +312,7 @@ final class PcapMicroBatchStream(
   override def createReaderFactory(): PartitionReaderFactory =
     // buildIndex: stride shard 0 of a sidecar-less file writes one, so a
     // replay (or a later batch job over the same landing) range-shards
-    PcapReaderFactory(serConf, required, refCompat, filters, withBytes,
+    PcapReaderFactory(confB, required, refCompat, filters, withBytes,
       buildIndex = frameIndex)
 
   override def stop(): Unit = ()

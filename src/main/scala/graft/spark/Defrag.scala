@@ -38,6 +38,11 @@ object Defrag {
   val fragmentedCond =
     (col("ip_frag_offset") === 0 && col("ip_mf")) || col("ip_frag_offset") > 0
 
+  /** A UDP first fragment: the rows the reference's `ff` groups
+    * (reference src/main.rs:292). */
+  val firstFragmentCond =
+    col("ip_proto") === 17 && col("ip_mf") && col("ip_frag_offset") === 0
+
   /** One pass over the packet table collects everything the adaptive plan
     * needs: total count, fragmented count (the reference's % scan,
     * src/main.rs:274), the UDP first-fragment count, and an HLL estimate
@@ -57,16 +62,14 @@ object Defrag {
   }
 
   def fragStats(pcap: DataFrame): FragStats = {
-    val ffCond =
-      col("ip_proto") === 17 && col("ip_mf") && col("ip_frag_offset") === 0
     val row = pcap
       .agg(
         count(lit(1)).as("total"),
         sum(when(fragmentedCond, 1L).otherwise(0L)).as("frag"),
-        sum(when(ffCond, 1L).otherwise(0L)).as("ffs"),
+        sum(when(firstFragmentCond, 1L).otherwise(0L)).as("ffs"),
         // NULL for non-ff rows → ignored by the HLL sketch; stays one
         // HashAggregate pass (fixed-width HLL buffer), default rsd 5%
-        approx_count_distinct(when(ffCond, struct(JoinKeys.map(col): _*)))
+        approx_count_distinct(when(firstFragmentCond, struct(JoinKeys.map(col): _*)))
           .as("ffk"))
       .head()
     FragStats(row.getLong(0),
@@ -101,11 +104,17 @@ object Defrag {
     * allocation. Same total order, same row choice either way
     * (DefragProps pins MinStructAgg ≡ min(struct)). Plans in the
     * caller's session (no conf to scope for a SortAggregate).
+    *
+    * The convert's fused stats pass does not run this aggregate: it
+    * computes the same argmin in one map-only job ([[statsAndBuild]]).
+    * This form stays as the declarative reference that pass is
+    * property-checked against (DefragProps, PcapPipelineSpec), and as
+    * the shuffle fallback's ff spill.
     */
   def firstFragments(pcap: DataFrame): DataFrame = {
     val ffStruct = struct((col("frame_time") +: Patched.map(col)): _*)
     pcap
-      .filter(col("ip_proto") === 17 && col("ip_mf") && col("ip_frag_offset") === 0)
+      .filter(firstFragmentCond)
       .groupBy(JoinKeys.map(col): _*)
       .agg(min(ffStruct).as("__ff"))
       .select((JoinKeys.map(col) ++ Patched.map(c => col(s"__ff.$c").as(c))): _*)
@@ -235,35 +244,37 @@ object Defrag {
   def defraggedOrder(columns: Seq[String]): Seq[String] =
     columns.filterNot(Patched.contains) ++ Patched
 
-  /** Result of the FUSED stats pass (round 16): the adaptive decision
-    * inputs plus, on the broadcast branch, the already-built patch map.
-    * `ffKeys` is the exact distinct datagram key count (the aggregate's
-    * row count) whether or not the map fit the ceiling.
+  /** Result of the FUSED stats pass: the adaptive decision inputs plus,
+    * on the broadcast branch, the already-built patch map. `ffKeys` is
+    * the exact distinct datagram key count whenever the map fit the
+    * ceiling; on overflow (`map = None`) it is a lower bound above it.
     */
   final case class FusedStats(pct: Double, total: Long, ffKeys: Long,
       map: Option[graft.sources.DefragPatch.PatchMap])
 
-  /** The round-16 fused stats pass (verdict #1): ONE job over the
-    * first-fragment-gated scan yields the convert's whole decision —
-    * the fragmented percentage and, on the broadcast branch, the patch
-    * map — with no observe node and no ff parquet round-trip:
+  /** The fused stats pass: ONE map-only job over the
+    * first-fragment-gated scan yields the convert's whole decision — the
+    * fragmented percentage and, on the broadcast branch, the patch map:
     *
     *   - (total, fragmented) are counted IN THE READERS (`statsPcap`'s
     *     metrics must carry the `fragmented` accumulator —
     *     [[PcapSource.statsMetrics]]), for every frame, so the
     *     first-fragment filter pushes into the scan: the ~90% non-ff
     *     rows are vetoed at L3 BEFORE any column vector fills;
-    *   - the aggregate ends at the collected dictionary-encoded patch
-    *     fragments (the broadcast payload);
-    *   - the broadcast decision uses the exact collected row count, with
-    *     [[graft.sources.DefragPatch.buildCapped]] bounding driver
-    *     memory at the ceiling (overflow ⇒ None ⇒ the caller takes the
-    *     shuffle branch — pathological key spaces only).
+    *   - each task reduces its first fragments to a per-key argmin under
+    *     [[firstFragments]]' order, and the driver merges those
+    *     fragments into the patch map as they arrive
+    *     ([[graft.sources.DefragPatch.buildArgmin]]) — no exchange, no
+    *     sort, no single-task final stage;
+    *   - past `maxKeys` distinct keys the build gives up (None ⇒ the
+    *     caller takes the shuffle branch — pathological key spaces
+    *     only), with driver memory bounded by the cap plus one fragment.
     *
-    * Counts equal [[fragStats]] over the ungated scan (PcapPipelineSpec
-    * pins it). Accumulator caveat: re-executed stages on a real cluster
-    * could over-count; the 1% threshold is robust to that class of
-    * drift and the decision is a plan choice, never a correctness
+    * Counts equal [[fragStats]] over the ungated scan, and the map equals
+    * `DefragPatch.build(firstFragments(ungated))` (PcapPipelineSpec,
+    * DefragProps). Accumulator caveat: re-executed tasks on a real
+    * cluster could over-count; the 1% threshold is robust to that class
+    * of drift and the decision is a plan choice, never a correctness
     * dependency.
     */
   def statsAndBuild(statsPcap: DataFrame,
@@ -271,8 +282,8 @@ object Defrag {
     require(sm.fragmented != null,
       "statsAndBuild needs stats metrics with the fragmented counter " +
         "armed (PcapSource.statsMetrics), registered on the statsPcap scan")
-    val (map, keys) =
-      graft.sources.DefragPatch.buildCapped(firstFragments(statsPcap), maxKeys)
+    val (map, keys) = graft.sources.DefragPatch.buildArgmin(
+      statsPcap.filter(firstFragmentCond), maxKeys)
     val total: Long = sm.packets.value
     val frag: Long = sm.fragmented.value
     val pct =

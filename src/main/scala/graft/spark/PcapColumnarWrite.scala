@@ -159,10 +159,12 @@ object PcapColumnarWrite {
         s"PcapColumnarWrite: unsupported codec $other")
     }
     val spark = df.sparkSession
-    val serConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
+    val hconf = spark.sessionState.newHadoopConf()
+    // broadcast, not captured: a closure copy would ride every task
+    val confB = spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(hconf))
     val outDir = new Path(out)
-    val fs = outDir.getFileSystem(serConf.value)
+    val fs = outDir.getFileSystem(hconf)
     if (fs.exists(outDir)) fs.delete(outDir, true) // overwrite semantics
     fs.mkdirs(outDir)
     val schemaB = spark.sparkContext.broadcast(schema.json)
@@ -198,7 +200,7 @@ object PcapColumnarWrite {
         }
         case _ => _ => ()
       }
-      writePartition(it, sc, perm, file, serConf.value, codec, rowGroupBytes,
+      writePartition(it, sc, perm, file, confB.value.value, codec, rowGroupBytes,
         observer)
     }
     // SUCCESS marker for parity with the standard committer's layout

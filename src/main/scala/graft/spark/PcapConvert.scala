@@ -119,9 +119,11 @@ object PcapConvert {
     *      (total, fragmented) counts ride the output write as
     *      accumulators; a mispredict (≥ 1% exact) drops the output,
     *      rolls the progress counters back and takes step 2;
-    *   2. the FUSED stats pass ([[Defrag.statsAndBuild]]): one job over
-    *      the first-fragment-gated scan counts (total, fragmented) in
-    *      the readers and collects the broadcast patch map;
+    *   2. the FUSED stats pass ([[Defrag.statsAndBuild]]): one
+    *      map-only job over the first-fragment-gated scan counts
+    *      (total, fragmented) in the readers, reduces each task's first
+    *      fragments to a per-key argmin, and merges those on the driver
+    *      into the broadcast patch map;
     *   3. below 1% fragmented the plain scan is written as is (defrag
     *      skip, main.rs:277); otherwise the COLUMNAR BROADCAST PATCH —
     *      readers back-fill each row from the broadcast map before the

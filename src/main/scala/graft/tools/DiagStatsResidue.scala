@@ -1,22 +1,21 @@
 package graft.tools
 
-/** Round-17 decomposition of the fused stats job (verdict item 4: the
-  * job sits ~0.7–1 s over the gated-scan floor — prove where). Three
-  * measured shapes over the SAME gated, filter-pushed scan, each with
-  * task-summed work counters (tasks / records / shuffle bytes):
+/** Decomposition of the fused stats job against the gated-scan floor.
+  * Three measured shapes over the SAME gated, filter-pushed scan, each
+  * with task-summed work counters (tasks / records / shuffle bytes):
   *
   *   - `floor`: the gated scan alone (ff filter pushed, L3 veto) to a
   *     noop sink — the semantic floor of any stats pass;
-  *   - `agg`:   floor + the ff argmin aggregate (sort + exchange +
-  *     final agg) to a noop sink;
-  *   - `fused`: the shipped statsAndBuild (agg + collect + driver
-  *     merge into the patch map).
+  *   - `agg`:   floor + the declarative ff argmin aggregate
+  *     (`Defrag.firstFragments`: sort + exchange + final agg) to a noop
+  *     sink. Not the shipped path any more: it is the reference the
+  *     stats job is checked against, and the shuffle fallback's spill;
+  *   - `fused`: the shipped statsAndBuild — one map-only job (per-task
+  *     argmin fragments + the driver merge into the patch map).
   *
-  * The deltas floor→agg→fused attribute the residue between the
-  * aggregate machinery and the collect/merge. Shuffle bytes answer
-  * whether map-side partial aggregation compresses the ~10M ff rows
-  * (same-key retransmits/id-wraps are range-co-located only when the
-  * frame-index sidecars plan contiguous ranges).
+  * floor→fused is what the stats pass costs over reading its rows;
+  * agg→fused is what dropping the exchange saved. `fused` must show
+  * zero shuffle bytes.
   *
   * Usage: `runMain graft.tools.DiagStatsResidue [fileGlob] [rounds]`.
   */

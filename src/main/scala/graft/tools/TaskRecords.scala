@@ -2,7 +2,7 @@ package graft.tools
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Records-read measurement for a Spark action — THE one task-metrics
@@ -23,9 +23,15 @@ object TaskRecords {
     * measured actions, as all call sites do.
     */
   def measureWith[T](spark: SparkSession)(
-      onTask: org.apache.spark.executor.TaskMetrics => Unit)(body: => T): T = {
+      onTask: org.apache.spark.executor.TaskMetrics => Unit)(body: => T): T =
+    listen(spark, onTask, () => ())(body)
+
+  private def listen[T](spark: SparkSession,
+      onTask: org.apache.spark.executor.TaskMetrics => Unit,
+      onJob: () => Unit)(body: => T): T = {
     val seen = new AtomicLong
     val lsn = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = onJob()
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
         seen.incrementAndGet()
         if (te.taskMetrics != null) onTask(te.taskMetrics)
@@ -57,9 +63,10 @@ object TaskRecords {
   /** Load-independent WORK counters for one measured action (round-17
     * verdict #4: at bench SF, wall-clock deltas drown in host load —
     * these are what stays comparable round over round, like the
-    * existing `_recs` rows proved). All task-summed. */
+    * existing `_recs` rows proved). All task-summed, plus the jobs
+    * started. */
   final case class Work(tasks: Long, records: Long,
-      shuffleReadB: Long, shuffleWriteB: Long)
+      shuffleReadB: Long, shuffleWriteB: Long, jobs: Long)
 
   /** (result, work counters of the tasks `body` triggered). */
   def measureWork[T](spark: SparkSession)(body: => T): (T, Work) = {
@@ -67,13 +74,14 @@ object TaskRecords {
     val recs = new AtomicLong
     val shR = new AtomicLong
     val shW = new AtomicLong
-    val r = measureWith(spark) { m =>
+    val jobs = new AtomicLong
+    val r = listen(spark, m => {
       tasks.incrementAndGet()
       recs.addAndGet(m.inputMetrics.recordsRead)
       shR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
       shW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
       ()
-    }(body)
-    (r, Work(tasks.get(), recs.get(), shR.get(), shW.get()))
+    }, () => { jobs.incrementAndGet(); () })(body)
+    (r, Work(tasks.get(), recs.get(), shR.get(), shW.get(), jobs.get()))
   }
 }

@@ -227,6 +227,131 @@ object DefragProps extends Properties("defrag") {
     }
   }
 
+  /** A patch map's entries with every index decoded, sorted. */
+  private def entries(m: graft.sources.DefragPatch.PatchMap): Seq[String] = {
+    def str(i: Int): String = if (i < 0) null else m.strings(i)
+    m.ids.indices.map { i =>
+      Seq(str(m.srcIdx(i)), str(m.dstIdx(i)), m.ids(i), m.udpSrcport(i),
+        m.udpDstport(i), m.ntpPrivReqcode(i), m.dnsQryType(i),
+        str(m.dnsNameIdx(i)), m.protoIdx(i)).mkString("|")
+    }.sorted
+  }
+
+  /** Defrag.statsAndBuild's map over `df`; the counters are unread here. */
+  private def fusedMap(df: org.apache.spark.sql.DataFrame) =
+    Defrag.statsAndBuild(df, PcapSource.statsMetrics(spark), Long.MaxValue)
+
+  property("fused stats map ≡ build(firstFragments) across files, tasks and ties") = {
+    // the map-only argmin must pick firstFragments' row for every key
+    // when a key's candidates sit in several files and, at
+    // decodePartitions 3, in several stride tasks of one file. A narrow
+    // key and second space makes keys collide and frame_time tie, so
+    // the patched columns break ties, NULLs included (raw UDP: no
+    // DNS/NTP; a sub-8-byte payload: no UDP header at all)
+    import graft.sources.DefragPatch
+    val genPayload: Gen[Array[Byte]] = Gen.oneOf(
+      for {
+        q <- Gen.oneOf("a.example.org", "b.example.org")
+        t <- Gen.oneOf(1, 28)
+        dp <- Gen.oneOf(1000, 2000)
+      } yield udp(53, dp, dnsQuery(q, t)),
+      for {
+        rc <- Gen.oneOf(7, 42)
+        dp <- Gen.oneOf(1000, 2000)
+      } yield udp(123, dp, Array[Byte](0x10, 0, 0, rc.toByte)),
+      Gen.oneOf(1000, 2000).map(dp => udp(40000, dp, Array.fill[Byte](8)(0x55))),
+      Gen.const(Array.fill[Byte](4)(0x66)))
+    val genFf = for {
+      src <- Gen.oneOf("198.51.100.1", "198.51.100.2")
+      id <- Gen.chooseNum(1, 3)
+      sec <- Gen.chooseNum(1, 3)
+      p <- genPayload
+    } yield (sec * 1000000L, -1,
+      ethernet(0x0800, ipv4(src, "192.0.2.9", 17, p, id = id, mf = true)))
+    val noise = Seq(
+      (5000000L, -1, ethernet(0x0800, ipv4("198.51.100.1", "192.0.2.9", 17,
+        Array.fill[Byte](16)(0x42), id = 1, fragOffset = 5))),
+      (5000001L, -1, ethernet(0x0800,
+        ipv4("203.0.113.5", "192.0.2.9", 6, tcp(443, 9999, 0x02)))))
+    val genFiles = Gen.chooseNum(1, 3).flatMap(n =>
+      Gen.listOfN(n, Gen.chooseNum(1, 12).flatMap(k => Gen.listOfN(k, genFf))))
+    // no shrinking: each try is three Spark jobs, and shrinking a failing
+    // file list took minutes before the report
+    Prop.forAllNoShrink(genFiles) { files =>
+      val dir = java.nio.file.Files.createTempDirectory("defragprop5")
+      files.zipWithIndex.foreach { case (ffs, i) =>
+        java.nio.file.Files.write(dir.resolve(s"f$i.pcap"), legacyPcap(ffs ++ noise))
+      }
+      val want = entries(DefragPatch.build(
+        Defrag.firstFragments(spark.read.format("pcap").load(dir.toString))))
+      val got = Seq(1, 3).map { parts =>
+        entries(fusedMap(spark.read.format("pcap")
+          .option("decodePartitions", parts)
+          .option("_internal.dissectGate", "first-fragment")
+          .load(dir.toString)).map.get)
+      }
+      Prop(got.forall(_ == want)) :| s"fused maps $got, want $want"
+    }
+  }
+
+  property("fused stats map orders strings as Spark does: UTF-8 bytes, col_protocol by name") = {
+    // the reader escapes non-ASCII DNS bytes, so rows are fed directly.
+    // UTF-16 order puts U+1F600 (a surrogate pair) before U+FFFD and
+    // U+E000; UTF-8 byte order — Spark's — puts it after both. Protocol
+    // names compare as strings (DNS < UDP), not as DissectAcc.ProtoStr
+    // indices (UDP 2 < DNS 5). Two fixed keys pin both choices in every
+    // case; the fuzzed rows add ties, NULLs and non-first fragments.
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.sources.DefragPatch
+    val schema = StructType(Seq(
+      StructField("frame_time", TimestampType), StructField("ip_src", StringType),
+      StructField("ip_dst", StringType), StructField("ip_proto", ShortType),
+      StructField("ip_id", IntegerType), StructField("ip_mf", BooleanType),
+      StructField("ip_frag_offset", IntegerType),
+      StructField("udp_srcport", IntegerType), StructField("udp_dstport", IntegerType),
+      StructField("ntp_priv_reqcode", ShortType), StructField("dns_qry_type", IntegerType),
+      StructField("dns_qry_name", StringType), StructField("col_protocol", StringType)))
+    val names = Seq(null, "a.example", "\u00e9.example", "\uFFFD.example",
+      "\uE000.example", "\uD83D\uDE00.example", "\uD83D\uDE00")
+    val t1 = java.sql.Timestamp.valueOf("2024-01-01 00:00:01")
+    val t2 = java.sql.Timestamp.valueOf("2024-01-01 00:00:02")
+    def row(t: Any, id: Int, first: Boolean, sp: Any, ntp: Any, qt: Any,
+        name: String, proto: String) =
+      Row(t, "10.0.0.1", "10.0.0.2", 17.toShort, id, first, if (first) 0 else 5,
+        sp, sp, ntp, qt, name, proto)
+    val fixed = Seq(
+      row(t1, 100, true, 53, null, 1, "\uD83D\uDE00.example", "DNS"),
+      row(t1, 100, true, 53, null, 1, "\uFFFD.example", "DNS"),
+      row(t1, 101, true, null, null, null, null, "UDP"),
+      row(t1, 101, true, null, null, null, null, "DNS"))
+    val genRow = for {
+      t <- Gen.oneOf[Any](null, t1, t2)
+      id <- Gen.chooseNum(0, 2)
+      first <- Gen.frequency(4 -> true, 1 -> false)
+      sp <- Gen.oneOf[Any](null, Int.box(53))
+      ntp <- Gen.oneOf[Any](null, Short.box(7))
+      qt <- Gen.oneOf[Any](null, Int.box(1))
+      name <- Gen.oneOf(names)
+      proto <- Gen.oneOf(null, "UDP", "DNS", "NTP", "IPv4", "DHDiscover")
+    } yield row(t, id, first, sp, ntp, qt, name, proto)
+    Prop.forAllNoShrink(Gen.chooseNum(1, 60).flatMap(n => Gen.listOfN(n, genRow))) { rows0 =>
+      val rows = rows0 ++ fixed
+      val results = Seq(1, 3).map { parts =>
+        val df = spark.createDataFrame(
+          spark.sparkContext.parallelize(rows, parts), schema)
+        (entries(fusedMap(df).map.get),
+          entries(DefragPatch.build(Defrag.firstFragments(df))))
+      }
+      val pinned = results.head._2.filter(e => e.contains("|100|") || e.contains("|101|"))
+      Prop(results.forall { case (got, want) => got == want }) :|
+        s"fused ≠ min(struct): $results" &&
+        Prop(pinned == Seq(
+          "10.0.0.1|10.0.0.2|100|53|53|-1|1|\uFFFD.example|5",
+          "10.0.0.1|10.0.0.2|101|-1|-1|-1|-1|null|5")) :| s"reference picked $pinned"
+    }
+  }
+
   property("MinStructAgg ≡ declarative min(struct) over fuzzed groups") = {
     // round 16: firstFragments' argmin moved from the declarative
     // min(struct) (which plans as SortAggregate — structs aren't

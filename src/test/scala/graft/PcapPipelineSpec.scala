@@ -156,7 +156,11 @@ class PcapPipelineSpec extends SparkFunSuite {
       .queryExecution.executedPlan.toString
     assert(planStr.contains("pushed=") && planStr.contains("ip_frag_offset"),
       s"ff filter not pushed into the fused stats scan:\n$planStr")
-    val fused = Defrag.statsAndBuild(gated, sm, 4000000L)
+    // one map-only job: no exchange, so no shuffle bytes either way
+    val (fused, work) = graft.tools.TaskRecords.measureWork(spark)(
+      Defrag.statsAndBuild(gated, sm, 4000000L))
+    assert(work.jobs == 1L && work.shuffleWriteB == 0L && work.shuffleReadB == 0L,
+      s"stats pass ran as $work")
     val plain = spark.read.format("pcap").load(p.toString)
     val st = Defrag.fragStats(plain)
     assert(fused.total == st.total && fused.pct == st.pct,
@@ -196,12 +200,46 @@ class PcapPipelineSpec extends SparkFunSuite {
     assert(fused2.total == st2.total && fused2.pct == st2.pct)
     assert(fused2.ffKeys == 1L && fused2.map.get.ids.length == 1)
 
-    // buildCapped refuses past the ceiling but still reports the exact
-    // key count (the shuffle-branch decision input)
+    // past the ceiling the build refuses; the key count is then a lower
+    // bound above it, and the reader counts stay exact
     val (sm3, gated3) = gatedStats(p.toString)
     val over = Defrag.statsAndBuild(gated3, sm3, maxKeys = 1L)
-    assert(over.map.isEmpty && over.ffKeys == fused.ffKeys)
+    assert(over.map.isEmpty && over.ffKeys > 1L)
     assert(over.pct == fused.pct)
+  }
+
+  test("fused stats overflow: a task's own keys or only the merged keys past the cap refuse the map") {
+    // two files, one task each, three distinct datagram keys per file:
+    // a cap of 2 overflows inside each task, a cap of 4 only in the
+    // driver merge (3 + 3); neither may change the reader counts
+    val dir = Files.createTempDirectory("fusedover")
+    Seq("a" -> 1, "b" -> 4).foreach { case (name, id0) =>
+      val frames = (id0 until id0 + 3).flatMap { id =>
+        Seq(
+          (id * 1000L, -1, ethernet(0x0800, ipv4("198.51.100.1", "203.0.113.9", 17,
+            udp(53, 40000, dnsQuery(s"k$id.example.org", 1)), id = id, mf = true))),
+          (id * 1000L + 1, -1, ethernet(0x0800, ipv4("198.51.100.1", "203.0.113.9", 17,
+            Array.fill[Byte](16)(0x42), id = id, fragOffset = 5))))
+      }
+      Files.write(dir.resolve(s"$name.pcap"), legacyPcap(frames))
+    }
+    def fusedAt(maxKeys: Long): Defrag.FusedStats = {
+      val sm = PcapSource.statsMetrics(spark)
+      val key = java.util.UUID.randomUUID().toString
+      PcapSource.registerMetrics(key, sm)
+      try Defrag.statsAndBuild(spark.read.format("pcap")
+        .option("_internal.dissectGate", "first-fragment")
+        .option("metricsKey", key).load(dir.toString), sm, maxKeys)
+      finally PcapSource.unregisterMetrics(key)
+    }
+    val fits = fusedAt(6L)
+    assert(fits.map.map(_.ids.length).contains(6) && fits.ffKeys == 6L)
+    assert(fits.total == 12L && fits.pct == 100.0)
+    Seq(2L, 4L).foreach { cap =>
+      val over = fusedAt(cap)
+      assert(over.map.isEmpty && over.ffKeys > cap, s"cap $cap: $over")
+      assert(over.total == fits.total && over.pct == fits.pct, s"cap $cap: $over")
+    }
   }
 
   test("columnar broadcast-patch convert ≡ join defrag, defragged column order (round 13)") {
@@ -229,7 +267,7 @@ class PcapPipelineSpec extends SparkFunSuite {
 
   test("shuffle-fallback convert ≡ join defrag; its ff spill never lands inside -o") {
     // more distinct keys than the broadcast ceiling (forced to 0 here):
-    // buildCapped refuses, the ff aggregate spills and the shuffle-bypass
+    // the patch-map build refuses, the ff aggregate spills and the shuffle-bypass
     // join feeds the writer. The writer clears the output directory
     // before it runs the join that reads the spill, so a trailing-slash
     // -o must still put the spill beside the output, not inside it.
