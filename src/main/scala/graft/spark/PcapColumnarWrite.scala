@@ -3,10 +3,8 @@ package graft.spark
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.ParquetProperties
-import org.apache.parquet.column.impl.ColumnWriteStoreV1
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.{CodecFactory, ColumnChunkPageWriteStore, ParquetFileWriter}
-import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
@@ -15,16 +13,16 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
 
-/** Vector-direct parquet writer for the pcap convert path (round 10,
-  * verdict #4's "one measured attempt"): the DSv2 scan already emits
-  * `ColumnarBatch`es, but Spark's FileFormatWriter accepts rows only —
-  * so the default write pays ColumnarToRow + per-row record assembly
-  * (ParquetWriteSupport walks every field of every row through a
-  * RecordConsumer). This sink feeds the batch VECTORS straight into
-  * parquet-mr's column writers (`ColumnWriteStoreV1` over a
-  * `ColumnChunkPageWriteStore`): one virtual call per VALUE on a
-  * type-resolved writer loop per column, no InternalRow, no record
-  * assembly.
+/** Vector-direct parquet writer for the pcap convert path: the DSv2
+  * scan already emits `ColumnarBatch`es, but Spark's FileFormatWriter
+  * accepts rows only — so the default write pays ColumnarToRow + per-row
+  * record assembly (ParquetWriteSupport walks every field of every row
+  * through a RecordConsumer). This sink hands the batch VECTORS to a
+  * [[PageEncoder]], which builds whole V1 data pages per column in one
+  * type-specialised loop (dictionary, levels, page statistics) and
+  * passes them to parquet-mr's `ColumnChunkPageWriteStore` for
+  * compression, CRCs, indexes and the footer — no InternalRow, no record
+  * assembly, no per-value call into parquet-mr.
   *
   * Scope (deliberate): the flat 31-column packet schema, local/Hadoop
   * paths, one file per scan partition, snappy/zstd/gzip/lz4/uncompressed.
@@ -62,7 +60,7 @@ object PcapColumnarWrite {
     * Catalyst types (INT(16) annotation for shorts, STRING for strings)
     * except the timestamp (INT64 micros, above).
     */
-  private[spark] def messageType(schema: StructType): MessageType = {
+  private[graft] def messageType(schema: StructType): MessageType = {
     val b = Types.buildMessage()
     schema.fields.foreach { f =>
       val t = f.dataType match {
@@ -208,7 +206,7 @@ object PcapColumnarWrite {
     true
   }
 
-  private def writePartition(it: Iterator[ColumnarBatch], schema: StructType,
+  private[graft] def writePartition(it: Iterator[ColumnarBatch], schema: StructType,
       perm: Array[Int],
       file: Path, conf: Configuration, codec: CompressionCodecName,
       rowGroupBytes: Long,
@@ -224,6 +222,7 @@ object PcapColumnarWrite {
     val tmp = new Path(file.getParent, s".${file.getName}.a$attempt.inprogress")
     val writer = new ParquetFileWriter(conf, msg, tmp,
       ParquetFileWriter.Mode.OVERWRITE)
+    val enc = new PageEncoder(schema, msg, props)
     var codecFactory: CodecFactory = null
     var ok = false
     try {
@@ -231,102 +230,30 @@ object PcapColumnarWrite {
       codecFactory = new CodecFactory(conf, props.getPageSizeThreshold)
       val compressor = codecFactory.getCompressor(codec)
       var store: ColumnChunkPageWriteStore = null
-      var cws: ColumnWriteStoreV1 = null
-      var groupRows = 0L
       def openGroup(): Unit = {
         store = new ColumnChunkPageWriteStore(compressor, msg,
           props.getAllocator, props.getColumnIndexTruncateLength)
-        cws = new ColumnWriteStoreV1(msg, store, props)
-        groupRows = 0L
+        enc.startGroup(store)
       }
-      def closeGroup(): Unit =
-        if (groupRows > 0) {
-          writer.startBlock(groupRows)
-          cws.flush()
+      def closeGroup(): Unit = {
+        // a rollover that lands exactly on the last batch leaves a
+        // freshly opened EMPTY group: no block to write, but the store's
+        // page buffers still need releasing
+        if (enc.rows > 0) {
+          writer.startBlock(enc.rows)
+          enc.endGroup()
           store.flushToFileWriter(writer)
           writer.endBlock()
-          cws.close()
-          store.close()
-        } else if (cws != null) {
-          // a rollover that lands exactly on the last batch leaves a
-          // freshly opened EMPTY group: no block to write, but the
-          // store's page buffers still need releasing (review finding —
-          // a per-task allocator leak otherwise)
-          cws.close()
-          store.close()
         }
+        store.close()
+      }
       openGroup()
-      val descs = msg.getColumns
       while (it.hasNext) {
         val batch = it.next()
-        val n = batch.numRows()
-        if (n > 0) {
+        if (batch.numRows() > 0) {
           observer(batch)
-          var c = 0
-          while (c < schema.length) {
-            val cw = cws.getColumnWriter(descs.get(c))
-            val v = batch.column(perm(c)) // writer-side column permutation
-            val dt = schema.fields(c).dataType
-            var r = 0
-            dt match {
-              case TimestampType | LongType =>
-                while (r < n) {
-                  if (v.isNullAt(r)) cw.writeNull(0, 0)
-                  else cw.write(v.getLong(r), 0, 1)
-                  r += 1
-                }
-              case IntegerType =>
-                while (r < n) {
-                  if (v.isNullAt(r)) cw.writeNull(0, 0)
-                  else cw.write(v.getInt(r), 0, 1)
-                  r += 1
-                }
-              case ShortType =>
-                while (r < n) {
-                  if (v.isNullAt(r)) cw.writeNull(0, 0)
-                  else cw.write(v.getShort(r).toInt, 0, 1)
-                  r += 1
-                }
-              case BooleanType =>
-                while (r < n) {
-                  if (v.isNullAt(r)) cw.writeNull(0, 0)
-                  else cw.write(v.getBoolean(r), 0, 1)
-                  r += 1
-                }
-              case StringType =>
-                while (r < n) {
-                  if (v.isNullAt(r)) cw.writeNull(0, 0)
-                  else {
-                    // unconditional copy: the dictionary encoder RETAINS
-                    // Binary references across rows, and getBytes may
-                    // alias the vector's shared buffer when the string
-                    // spans it exactly — a reused batch would then
-                    // corrupt retained dictionary entries silently
-                    val u = v.getUTF8String(r)
-                    val len = u.numBytes()
-                    val arr = new Array[Byte](len)
-                    org.apache.spark.unsafe.Platform.copyMemory(
-                      u.getBaseObject, u.getBaseOffset, arr,
-                      org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len)
-                    cw.write(Binary.fromConstantByteArray(arr), 0, 1)
-                  }
-                  r += 1
-                }
-              case BinaryType =>
-                while (r < n) {
-                  if (v.isNullAt(r)) cw.writeNull(0, 0)
-                  else cw.write(Binary.fromConstantByteArray(v.getBinary(r)), 0, 1)
-                  r += 1
-                }
-              case other => throw new IllegalStateException(
-                s"unreachable: $other passed messageType")
-            }
-            c += 1
-          }
-          var k = 0
-          while (k < n) { cws.endRecord(); k += 1 }
-          groupRows += n
-          if (cws.getBufferedSize > rowGroupBytes) {
+          enc.write(batch, perm) // writer-side column permutation
+          if (enc.bufferedSize > rowGroupBytes) {
             closeGroup(); openGroup()
           }
         }
@@ -340,6 +267,7 @@ object PcapColumnarWrite {
       writer.end(new java.util.HashMap[String, String]())
       ok = true
     } finally {
+      enc.close()
       if (codecFactory != null) codecFactory.release()
       if (!ok) {
         // close the underlying output stream (end() never ran), then

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions.col
 
 import graft.spark.{PcapColumnarWrite, PcapSource}
@@ -47,10 +49,20 @@ class PcapColumnarWriteSpec extends SparkFunSuite {
       rowGroupBytes = 256L * 1024))
     val back = spark.read.parquet(s"$dir/vec.parquet")
     assert(back.count() == 60000)
-    // the tiny row-group cap must have produced multiple groups
-    val groups = spark.read.parquet(s"$dir/vec.parquet")
-      .select(org.apache.spark.sql.functions.expr("_metadata.file_name")).distinct().count()
-    assert(groups >= 1)
+    // the tiny row-group cap must have produced several groups in EVERY
+    // part file (read from the footers), and the groups hold every row
+    val conf = spark.sessionState.newHadoopConf()
+    val parts = new java.io.File(s"$dir/vec.parquet").listFiles()
+      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+    val groupRows = parts.toSeq.map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toString), conf))
+      try r.getFooter.getBlocks.asScala.map(_.getRowCount).toSeq finally r.close()
+    }
+    assert(parts.length == 2 && groupRows.forall(_.size > 1),
+      s"row groups per part file: ${groupRows.map(_.size)}")
+    assert(groupRows.flatten.sum == 60000L, groupRows)
     assert(back.filter(col("col_protocol") === "DNS").count() ==
       df.filter(col("col_protocol") === "DNS").count())
   }

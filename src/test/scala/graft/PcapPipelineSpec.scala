@@ -287,6 +287,33 @@ class PcapPipelineSpec extends SparkFunSuite {
     } finally sys.props.remove("graft.defrag.maxBroadcastFF")
   }
 
+  test("shuffle-fallback convert from off-heap rebatched vectors ≡ the on-heap run") {
+    // the join's rows reach the writer through RowToColumnarExec, which
+    // allocates OffHeapColumnVectors under this conf: the page encoder
+    // must read their strings in place just as it reads on-heap ones
+    val p = writeTemp("cap_offheap.pcap", fragmentedCapture)
+    val dir = Files.createTempDirectory("shuffleoffheap")
+    def convert(o: String): Seq[Seq[String]] = {
+      PcapConvert.run(spark, PcapConvert.Args(
+        file = p.toString, out = s"$dir/$o", singleFile = false))
+      val got = spark.read.parquet(s"$dir/$o")
+      assert(got.columns.toSeq ==
+        Defrag.defraggedOrder(graft.core.PacketSchema.schema.fieldNames.toSeq), o)
+      canon(got)
+    }
+    val key = "spark.sql.columnVector.offheap.enabled"
+    sys.props("graft.defrag.maxBroadcastFF") = "0"
+    try {
+      val onHeap = convert("on.parquet")
+      val before = spark.conf.getOption(key)
+      spark.conf.set(key, "true")
+      val offHeap =
+        try convert("off.parquet")
+        finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      assert(onHeap.size == 7 && offHeap == onHeap)
+    } finally sys.props.remove("graft.defrag.maxBroadcastFF")
+  }
+
   test("speculative single-pass convert: unfragmented corpus, and the mispredict fallback (round 13)") {
     val dir = java.nio.file.Files.createTempDirectory("specconv")
     // 1) unfragmented corpus → the sample speculates, stats ride the
