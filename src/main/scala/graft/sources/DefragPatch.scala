@@ -3,10 +3,11 @@ package graft.sources
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.TimestampType
+import org.apache.spark.sql.types.{StructType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.dissect.DissectAcc
@@ -152,6 +153,15 @@ object DefragPatch {
     "udp_srcport", "udp_dstport", "ntp_priv_reqcode", "dns_qry_type",
     "dns_qry_name", "col_protocol")
 
+  /** The packet-schema fields of [[ArgminCols]], in that order: the row
+    * shape [[buildArgmin]] takes. */
+  val ArgminSchema: StructType =
+    StructType(ArgminCols.map(graft.core.PacketSchema.schema(_)))
+
+  /** `ffRows` projected to [[ArgminSchema]] through Catalyst. */
+  def argminRows(ffRows: DataFrame): RDD[InternalRow] =
+    ffRows.select(ArgminCols.map(col): _*).queryExecution.toRdd
+
   /** Build the patch table from a frame shaped like
     * [[graft.spark.Defrag.firstFragments]]' output (join keys + the six
     * patched columns, one row per key). Caller enforces the broadcast
@@ -159,17 +169,18 @@ object DefragPatch {
     * with no frame_time to order by.
     */
   def build(ff: DataFrame): PatchMap =
-    buildArgmin(ff.withColumn("frame_time", lit(null).cast(TimestampType)),
+    buildArgmin(argminRows(ff.withColumn("frame_time", lit(null).cast(TimestampType))),
       Long.MaxValue)._1.get
 
   /** The fused stats pass's patch-map build: the per-key argmin of
     * [[graft.spark.Defrag.firstFragments]] as ONE map-only job over
-    * `ffRows` (first-fragment rows; columns beyond [[ArgminCols]] are
-    * pruned). Each task reduces its rows to one dictionary-encoded
-    * [[Fragment]] holding its per-key argmin; the driver merges
-    * fragments as they arrive under the same order. No exchange, no
-    * sort, no AQE re-plan: duplicate keys scattered across files meet
-    * in the driver merge instead of a shuffle.
+    * `rows` — first-fragment rows shaped like [[ArgminSchema]], from the
+    * convert's gated reader ([[PcapDirectScan.firstFragmentRows]]) or a
+    * DataFrame ([[argminRows]]). Each task reduces its rows to one
+    * dictionary-encoded [[Fragment]] holding its per-key argmin; the
+    * driver merges fragments as they arrive under the same order. No
+    * exchange, no sort: duplicate keys scattered across files meet in the
+    * driver merge instead of a shuffle.
     *
     * The order is `min(struct(frame_time, udp_srcport, udp_dstport,
     * ntp_priv_reqcode, dns_qry_type, dns_qry_name, col_protocol))`'s:
@@ -185,13 +196,12 @@ object DefragPatch {
     * and the job is never cancelled: callers count (total, fragmented)
     * in the readers of this same scan and need the counts whole.
     */
-  def buildArgmin(ffRows: DataFrame, maxKeys: Long): (Option[PatchMap], Long) = {
-    val rows = ffRows.select(ArgminCols.map(col): _*).queryExecution.toRdd
+  def buildArgmin(rows: RDD[InternalRow], maxKeys: Long): (Option[PatchMap], Long) = {
     var merged = new Fragment
     var keys = 0L
     // runJob's result handler runs serially (JobWaiter synchronizes), so
     // plain vars are safe
-    ffRows.sparkSession.sparkContext.runJob(rows,
+    rows.sparkContext.runJob(rows,
       (it: Iterator[InternalRow]) => Fragment.of(it, maxKeys),
       (_: Int, f: Fragment) => {
         val fits = merged != null && !f.overflow

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.util
 
+import scala.annotation.switch
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
@@ -226,8 +227,7 @@ final class PcapScan(
     // sidecar appearing mid-scan and double- or drop-read frames). For
     // many small files leave decodePartitions at 1 — per-file pipelining
     // already saturates.
-    files.sorted.flatMap(f =>
-      PcapShardPlan(f, decodePartitions, frameIndex, hconf)).toArray
+    PcapShardPlan.cut(files, decodePartitions, frameIndex, hconf)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -300,6 +300,13 @@ final case class PcapInputPartition(
   * the file sink commits whole batches, so output stays exactly-once.
   */
 private[sources] object PcapShardPlan {
+  /** Every file's partitions, files in name order: the batch scan's
+    * partition list ([[PcapScan.planInputPartitions]] and the convert's
+    * [[PcapDirectScan]] both cut through here). */
+  def cut(files: Seq[String], decodePartitions: Int, frameIndex: Boolean,
+      hconf: Configuration): Array[InputPartition] =
+    files.sorted.flatMap(f => apply(f, decodePartitions, frameIndex, hconf)).toArray
+
   def apply(file: String, decodePartitions: Int, frameIndex: Boolean,
       hconf: Configuration): Seq[InputPartition] = {
     val ranged =
@@ -487,10 +494,10 @@ private[sources] object DissectPlan {
 }
 
 /** Columnar pcap reader: frames → [[graft.dissect.DissectAcc]] →
-  * column vectors, 4096 packets per batch. Column writers are bound
-  * ONCE per reader from the required schema (column pruning = fewer
-  * writers, not a per-row projection); every string column reuses the
-  * accumulator's interned UTF8Strings' backing bytes.
+  * column vectors, 4096 packets per batch. The required columns' source
+  * ordinals are resolved ONCE per reader and [[fill]] switches on them
+  * per packet; every string column reuses the accumulator's interned
+  * UTF8Strings' backing bytes.
   */
 final class PcapColumnarReader(
     file: String,
@@ -560,67 +567,63 @@ final class PcapColumnarReader(
     ()
   }
 
-  /** One writer per REQUIRED column, bound by source-schema ordinal. */
-  private val writers: Array[(OnHeapColumnVector, Int) => Unit] =
-    required.fieldNames.map(PacketSchema.schema.fieldIndex).map { ord =>
-      import graft.dissect.DissectAcc.{FlagU8, ProtoU8}
-      ord match {
-        case 0 => (v, r) => { v.putLong(r, acc.frameTime); () }
-        case 1 => (v, r) => { v.putLong(r, acc.frameLen); () }
-        case 2 => (v, r) =>
-          if (acc.ethType < 0) v.putNull(r) else { v.putInt(r, acc.ethType); () }
-        case 3 => (v, r) =>
-          if (acc.ipSrcU8 == null) v.putNull(r) else putU8(v, r, acc.ipSrcU8)
-        case 4 => (v, r) =>
-          if (acc.ipDstU8 == null) v.putNull(r) else putU8(v, r, acc.ipDstU8)
-        case 5 => (v, r) => { v.putShort(r, acc.ipProto); () }
-        case 6 => (v, r) =>
-          if (acc.ipTtl < 0) v.putNull(r) else { v.putShort(r, acc.ipTtl.toShort); () }
-        case 7 => (v, r) => { v.putInt(r, acc.ipFragOffset); () }
-        case 8 => (v, r) => { v.putInt(r, acc.ipId); () }
-        case 9 => (v, r) => { v.putBoolean(r, acc.ipMf); () }
-        case 10 => (v, r) =>
-          if (acc.icmpType < 0) v.putNull(r) else { v.putShort(r, acc.icmpType.toShort); () }
-        case 11 => (v, r) =>
-          if (acc.udpLength < 0) v.putNull(r) else { v.putInt(r, acc.udpLength); () }
-        case 12 => (v, r) =>
-          if (acc.udpSrcport < 0) v.putNull(r) else { v.putInt(r, acc.udpSrcport); () }
-        case 13 => (v, r) =>
-          if (acc.udpDstport < 0) v.putNull(r) else { v.putInt(r, acc.udpDstport); () }
-        case 14 => (v, r) =>
-          if (acc.tcpFlagsBits < 0) v.putNull(r)
-          else putU8(v, r, FlagU8(acc.tcpFlagsBits))
-        case 15 => (v, r) =>
-          if (acc.tcpSrcport < 0) v.putNull(r) else { v.putInt(r, acc.tcpSrcport); () }
-        case 16 => (v, r) =>
-          if (acc.tcpDstport < 0) v.putNull(r) else { v.putInt(r, acc.tcpDstport); () }
-        case 17 => (v, r) => v.putNull(r) // col_info: declared, never populated
-        case 18 => (v, r) =>
-          if (acc.ipSrcU8 == null) v.putNull(r) else putU8(v, r, acc.ipSrcU8)
-        case 19 => (v, r) =>
-          if (acc.ipDstU8 == null) v.putNull(r) else putU8(v, r, acc.ipDstU8)
-        case 20 => (v, r) =>
-          if (acc.protoIdx < 0) v.putNull(r) else putU8(v, r, ProtoU8(acc.protoIdx))
-        case 21 => (v, r) =>
-          if (acc.dnsQryName == null) v.putNull(r)
-          else putU8(v, r, org.apache.spark.unsafe.types.UTF8String
-            .fromString(acc.dnsQryName))
-        case 22 => (v, r) =>
-          if (acc.dnsQryType < 0) v.putNull(r) else { v.putInt(r, acc.dnsQryType); () }
-        case i if i >= 23 && i <= 27 => (v, r) => v.putNull(r) // http_*
-        case 28 => (v, r) =>
-          if (acc.ntpPrivReqcode < 0) v.putNull(r)
-          else { v.putShort(r, acc.ntpPrivReqcode.toShort); () }
-        case 29 => (v, r) =>
-          if (acc.dhipDevice == null) v.putNull(r)
-          else putU8(v, r, org.apache.spark.unsafe.types.UTF8String
-            .fromString(acc.dhipDevice))
-        case 30 => (v, r) => putU8(v, r, baseUtf8)
-        case other => throw new IllegalStateException(
-          s"pcap columnar reader: unexpected required ordinal $other " +
-            "(bytes-mode columns take the row reader)")
-      }
+  /** Source-schema ordinal of each REQUIRED column (column pruning =
+    * fewer fills, not a per-row projection). */
+  private val sourceOrds: Array[Int] =
+    required.fieldNames.map(PacketSchema.schema.fieldIndex)
+  sourceOrds.foreach(o => if (o > 30) throw new IllegalStateException(
+    s"pcap columnar reader: unexpected required ordinal $o " +
+      "(bytes-mode columns take the row reader)"))
+
+  /** Fill row `r` of `v` with source column `ord` from the accumulator.
+    * A switch, not an array of `(vector, row) => Unit` closures: Scala
+    * does not specialise a Function2 whose first parameter is a
+    * reference type, so every per-packet call boxed `r` and dispatched
+    * megamorphically.
+    */
+  private def fill(v: OnHeapColumnVector, ord: Int, r: Int): Unit = {
+    import graft.dissect.DissectAcc.{FlagU8, ProtoU8}
+    (ord: @switch) match {
+      case 0 => v.putLong(r, acc.frameTime)
+      case 1 => v.putLong(r, acc.frameLen)
+      case 2 => if (acc.ethType < 0) v.putNull(r) else v.putInt(r, acc.ethType)
+      case 3 | 18 => // ip_src, col_source
+        if (acc.ipSrcU8 == null) v.putNull(r) else putU8(v, r, acc.ipSrcU8)
+      case 4 | 19 => // ip_dst, col_destination
+        if (acc.ipDstU8 == null) v.putNull(r) else putU8(v, r, acc.ipDstU8)
+      case 5 => v.putShort(r, acc.ipProto)
+      case 6 => if (acc.ipTtl < 0) v.putNull(r) else v.putShort(r, acc.ipTtl.toShort)
+      case 7 => v.putInt(r, acc.ipFragOffset)
+      case 8 => v.putInt(r, acc.ipId)
+      case 9 => v.putBoolean(r, acc.ipMf)
+      case 10 =>
+        if (acc.icmpType < 0) v.putNull(r) else v.putShort(r, acc.icmpType.toShort)
+      case 11 => if (acc.udpLength < 0) v.putNull(r) else v.putInt(r, acc.udpLength)
+      case 12 => if (acc.udpSrcport < 0) v.putNull(r) else v.putInt(r, acc.udpSrcport)
+      case 13 => if (acc.udpDstport < 0) v.putNull(r) else v.putInt(r, acc.udpDstport)
+      case 14 =>
+        if (acc.tcpFlagsBits < 0) v.putNull(r)
+        else putU8(v, r, FlagU8(acc.tcpFlagsBits))
+      case 15 => if (acc.tcpSrcport < 0) v.putNull(r) else v.putInt(r, acc.tcpSrcport)
+      case 16 => if (acc.tcpDstport < 0) v.putNull(r) else v.putInt(r, acc.tcpDstport)
+      // col_info and http_*: declared, never populated
+      case 17 | 23 | 24 | 25 | 26 | 27 => v.putNull(r)
+      case 20 => if (acc.protoIdx < 0) v.putNull(r) else putU8(v, r, ProtoU8(acc.protoIdx))
+      case 21 =>
+        if (acc.dnsQryName == null) v.putNull(r)
+        else putU8(v, r, org.apache.spark.unsafe.types.UTF8String
+          .fromString(acc.dnsQryName))
+      case 22 => if (acc.dnsQryType < 0) v.putNull(r) else v.putInt(r, acc.dnsQryType)
+      case 28 =>
+        if (acc.ntpPrivReqcode < 0) v.putNull(r)
+        else v.putShort(r, acc.ntpPrivReqcode.toShort)
+      case 29 =>
+        if (acc.dhipDevice == null) v.putNull(r)
+        else putU8(v, r, org.apache.spark.unsafe.types.UTF8String
+          .fromString(acc.dhipDevice))
+      case 30 => putU8(v, r, baseUtf8)
     }
+  }
 
   override def next(): Boolean = {
     var i = 0
@@ -664,8 +667,8 @@ final class PcapColumnarReader(
         if (acc.errors > 0) nErrors += acc.errors.toLong
         if (emit) {
           var c = 0
-          while (c < writers.length) {
-            writers(c)(vectors(c), n)
+          while (c < sourceOrds.length) {
+            fill(vectors(c), sourceOrds(c), n)
             c += 1
           }
           n += 1

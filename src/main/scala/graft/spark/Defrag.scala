@@ -1,6 +1,8 @@
 package graft.spark
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 import graft.core.PacketSchema
@@ -256,10 +258,10 @@ object Defrag {
     * first-fragment-gated scan yields the convert's whole decision — the
     * fragmented percentage and, on the broadcast branch, the patch map:
     *
-    *   - (total, fragmented) are counted IN THE READERS (`statsPcap`'s
-    *     metrics must carry the `fragmented` accumulator —
-    *     [[PcapSource.statsMetrics]]), for every frame, so the
-    *     first-fragment filter pushes into the scan: the ~90% non-ff
+    *   - (total, fragmented) are counted IN THE READERS (`sm` must carry
+    *     the `fragmented` accumulator — [[PcapSource.statsMetrics]] — and
+    *     be the metrics of the scan `ffRows` reads), for every frame, so
+    *     the first-fragment filter runs inside the scan: the ~90% non-ff
     *     rows are vetoed at L3 BEFORE any column vector fills;
     *   - each task reduces its first fragments to a per-key argmin under
     *     [[firstFragments]]' order, and the driver merges those
@@ -270,6 +272,12 @@ object Defrag {
     *     caller takes the shuffle branch — pathological key spaces
     *     only), with driver memory bounded by the cap plus one fragment.
     *
+    * `ffRows` are the UDP first fragments only, shaped like
+    * [[graft.sources.DefragPatch.ArgminSchema]]. The convert passes its
+    * plan-free gated reader's rows
+    * ([[graft.sources.PcapDirectScan.firstFragmentRows]]: the reader
+    * applies the first-fragment predicate exactly, nothing is planned).
+    *
     * Counts equal [[fragStats]] over the ungated scan, and the map equals
     * `DefragPatch.build(firstFragments(ungated))` (PcapPipelineSpec,
     * DefragProps). Accumulator caveat: re-executed tasks on a real
@@ -277,17 +285,27 @@ object Defrag {
     * of drift and the decision is a plan choice, never a correctness
     * dependency.
     */
-  def statsAndBuild(statsPcap: DataFrame,
+  def statsAndBuild(ffRows: RDD[InternalRow],
       sm: PcapSource.Metrics, maxKeys: Long): FusedStats = {
     require(sm.fragmented != null,
       "statsAndBuild needs stats metrics with the fragmented counter " +
-        "armed (PcapSource.statsMetrics), registered on the statsPcap scan")
-    val (map, keys) = graft.sources.DefragPatch.buildArgmin(
-      statsPcap.filter(firstFragmentCond), maxKeys)
+        "armed (PcapSource.statsMetrics), registered on the scan it reads")
+    val (map, keys) = graft.sources.DefragPatch.buildArgmin(ffRows, maxKeys)
     val total: Long = sm.packets.value
     val frag: Long = sm.fragmented.value
     val pct =
       if (total == 0) 0.0 else math.round(100.0 * frag / total).toDouble
     FusedStats(pct, total, keys, map)
   }
+
+  /** [[statsAndBuild]] over a DataFrame scan: `statsPcap` is a
+    * first-fragment-gated pcap scan whose `metricsKey` registers `sm`;
+    * Catalyst filters it to first fragments (the filter pushes into the
+    * gated reader) and projects the argmin columns. Same core, same
+    * result as the convert's plan-free stats job (DefragProps).
+    */
+  def statsAndBuild(statsPcap: DataFrame,
+      sm: PcapSource.Metrics, maxKeys: Long): FusedStats =
+    statsAndBuild(graft.sources.DefragPatch.argminRows(
+      statsPcap.filter(firstFragmentCond)), sm, maxKeys)
 }

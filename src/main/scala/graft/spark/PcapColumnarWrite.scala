@@ -8,10 +8,13 @@ import org.apache.parquet.hadoop.{CodecFactory, ColumnChunkPageWriteStore, Parqu
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.util.{LongAccumulator, SerializableConfiguration}
 
 /** Vector-direct parquet writer for the pcap convert path: the DSv2
   * scan already emits `ColumnarBatch`es, but Spark's FileFormatWriter
@@ -31,11 +34,14 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * DuckDB) reads both as the same µs instant, and the µs long is what
   * the vector already holds.
   *
-  * Plan shapes (round 11): when the plan below the write is still
-  * columnar (the nodefrag / defrag-skip convert shapes) the vectors
-  * feed straight through. A row-shaped plan (the shuffle-fallback
-  * defrag join's output) REFUSES by
-  * default, but with `rebatch = true` it is wrapped in Spark's
+  * Two entry points over one core ([[writeBatches]]: an
+  * `RDD[ColumnarBatch]` + its schema). The convert's speculated, skip,
+  * patch and `-n` writes call it directly with the batches of its
+  * plan-free scan ([[graft.sources.PcapDirectScan]]) — nothing is
+  * planned. [[write]] is the DataFrame adapter: when the plan below the
+  * write is still columnar the plan's vectors feed straight through; a
+  * row-shaped plan (the shuffle-fallback defrag join's output) REFUSES
+  * by default, but with `rebatch = true` it is wrapped in Spark's
   * [[org.apache.spark.sql.execution.RowToColumnarExec]]: rows transpose
   * into fresh ColumnVectors once (cheap primitive-array appends), and
   * the write still skips ColumnarToRow + per-row record assembly
@@ -101,35 +107,16 @@ object PcapColumnarWrite {
     * the plan is not columnar end-to-end (caller falls back to the
     * standard writer) — unless `rebatch` is set, which re-batches a
     * row-shaped plan's output through [[RowToColumnarExec]] so the
-    * defrag-join shape rides the vector write too (see class doc).
-    * Row-group target mirrors Spark's 128 MiB.
-    * `singleFile` funnels every batch through ONE task via an RDD-level
-    * coalesce — no shuffle, batches stay columnar — so the CLI's default
-    * single-file output rides the vector path too (a DataFrame-level
-    * coalesce(1) would plan a row-shaped CoalesceExec instead).
-    */
-  /** `outputOrder` (round 13): write the parquet columns in this name
-    * order instead of the frame's — a WRITER-side permutation, so a
-    * column reorder (the defragged patched-at-end layout) costs nothing
-    * in the PLAN (a `select` reorder over the columnar scan would plan
-    * a Project → ColumnarToRow → the very rebatch the broadcast-patch
-    * path exists to avoid). Must be a permutation of the frame's
-    * columns.
-    */
-  /** `fragCounters` (round 13, the speculative single-pass convert):
-    * (total, fragmented) LongAccumulators the write tasks feed per
-    * batch from the ip_frag_offset/ip_mf vectors — the defrag stats
-    * ride the OUTPUT write instead of their own pass, so an
-    * unfragmented capture converts in one read. Requires both columns
-    * in the frame.
+    * defrag-join shape rides the vector write too (see class doc). The
+    * adapter over [[writeBatches]]: it resolves the plan, broadcasts the
+    * session's Hadoop configuration and hands the plan's batches on.
     */
   def write(df: DataFrame, out: String, compression: String,
       rowGroupBytes: Long = 128L * 1024 * 1024,
       singleFile: Boolean = false,
       rebatch: Boolean = false,
       outputOrder: Option[Seq[String]] = None,
-      fragCounters: Option[(org.apache.spark.util.LongAccumulator,
-        org.apache.spark.util.LongAccumulator)] = None): Boolean = {
+      fragCounters: Option[(LongAccumulator, LongAccumulator)] = None): Boolean = {
     val plan = columnarChild(df) match {
       case Some(p) => p
       case None if rebatch =>
@@ -137,7 +124,49 @@ object PcapColumnarWrite {
           df.queryExecution.executedPlan)
       case None => return false
     }
-    val frameSchema = df.schema
+    val spark = df.sparkSession
+    // broadcast, not captured: a closure copy would ride every task
+    val conf = spark.sparkContext.broadcast(
+      new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+    writeBatches(plan.executeColumnar(), df.schema, out, compression, conf,
+      rowGroupBytes, singleFile, outputOrder, fragCounters)
+    true
+  }
+
+  /** The vector write itself: `batches` (columns in `frameSchema` order)
+    * become parquet part files under `out`, one per partition, each
+    * committed by temp+rename, then `_SUCCESS`. `conf` is the broadcast
+    * Hadoop configuration the tasks open files with (the convert passes
+    * the one its scan broadcast). Row-group target mirrors Spark's
+    * 128 MiB.
+    *
+    * `singleFile` funnels every batch through ONE task via an RDD-level
+    * coalesce — no shuffle, batches stay columnar — so the CLI's default
+    * single-file output rides the vector path too (a DataFrame-level
+    * coalesce(1) would plan a row-shaped CoalesceExec instead).
+    *
+    * `outputOrder` (round 13): write the parquet columns in this name
+    * order instead of the frame's — a WRITER-side permutation, so a
+    * column reorder (the defragged patched-at-end layout) costs nothing
+    * in the PLAN (a `select` reorder over the columnar scan would plan
+    * a Project → ColumnarToRow → the very rebatch the broadcast-patch
+    * path exists to avoid). Must be a permutation of the frame's
+    * columns.
+    *
+    * `fragCounters` (round 13, the speculative single-pass convert):
+    * (total, fragmented) LongAccumulators the write tasks feed per
+    * batch from the ip_frag_offset/ip_mf vectors — the defrag stats
+    * ride the OUTPUT write instead of their own pass, so an
+    * unfragmented capture converts in one read. Requires both columns
+    * in the frame.
+    */
+  def writeBatches(batches: RDD[ColumnarBatch], frameSchema: StructType,
+      out: String, compression: String,
+      conf: Broadcast[SerializableConfiguration],
+      rowGroupBytes: Long = 128L * 1024 * 1024,
+      singleFile: Boolean = false,
+      outputOrder: Option[Seq[String]] = None,
+      fragCounters: Option[(LongAccumulator, LongAccumulator)] = None): Unit = {
     val (schema, perm) = outputOrder match {
       case None => (frameSchema, frameSchema.indices.toArray)
       case Some(order) =>
@@ -156,25 +185,17 @@ object PcapColumnarWrite {
       case other => throw new IllegalArgumentException(
         s"PcapColumnarWrite: unsupported codec $other")
     }
-    val spark = df.sparkSession
-    val hconf = spark.sessionState.newHadoopConf()
-    // broadcast, not captured: a closure copy would ride every task
-    val confB = spark.sparkContext.broadcast(
-      new org.apache.spark.util.SerializableConfiguration(hconf))
     val outDir = new Path(out)
-    val fs = outDir.getFileSystem(hconf)
+    val fs = outDir.getFileSystem(conf.value.value)
     if (fs.exists(outDir)) fs.delete(outDir, true) // overwrite semantics
     fs.mkdirs(outDir)
-    val schemaB = spark.sparkContext.broadcast(schema.json)
-    val rdd0 = plan.executeColumnar()
-    val rdd = if (singleFile) rdd0.coalesce(1) else rdd0
+    val rdd = if (singleFile) batches.coalesce(1) else batches
     // frag-stats ordinals resolved in the PERMUTED schema (what the
     // tasks see); fail fast if the columns were projected away
     val fragOrds = fragCounters.map { _ =>
       (schema.fieldIndex("ip_frag_offset"), schema.fieldIndex("ip_mf"))
     }
     rdd.foreachPartition { (it: Iterator[ColumnarBatch]) =>
-      val sc = DataType.fromJson(schemaB.value).asInstanceOf[StructType]
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val file = new Path(outDir,
         f"part-$pid%05d-vec.${codec.name.toLowerCase}.parquet")
@@ -198,12 +219,11 @@ object PcapColumnarWrite {
         }
         case _ => _ => ()
       }
-      writePartition(it, sc, perm, file, confB.value.value, codec, rowGroupBytes,
+      writePartition(it, schema, perm, file, conf.value.value, codec, rowGroupBytes,
         observer)
     }
     // SUCCESS marker for parity with the standard committer's layout
     fs.create(new Path(outDir, "_SUCCESS"), true).close()
-    true
   }
 
   private[graft] def writePartition(it: Iterator[ColumnarBatch], schema: StructType,
@@ -282,8 +302,8 @@ object PcapColumnarWrite {
     if (!fs.rename(tmp, file)) {
       if (fs.exists(file)) {
         // lost the race to a concurrent successful attempt of the same
-        // partition — its bytes are identical ONLY because write()
-        // clears the out dir before launching tasks (line ~144), so any
+        // partition — its bytes are identical ONLY because writeBatches
+        // clears the out dir before launching tasks, so any
         // occupant is a twin of this attempt. That invariant is
         // load-bearing: assert it (byte length match) so a future
         // caller reusing a dirty dir fails loudly instead of silently

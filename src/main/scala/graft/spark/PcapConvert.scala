@@ -1,11 +1,15 @@
 package graft.spark
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.util.LongAccumulator
 
+import graft.core.PacketSchema
 import graft.pcapio.PcapFramer
-import graft.sources.DefragPatch
+import graft.sources.{PcapDirectScan, PcapFileEnum}
 
 /** CLI parity with the reference converter
   * (`pcap-converter -f in.pcap -o out.parquet [-n] [-j N] [-v]`,
@@ -90,27 +94,47 @@ object PcapConvert {
     * only costs a wasted pass, never a wrong result.
     */
   def sampleFragPct(spark: SparkSession, fileOrGlob: String,
-      mode: PcapFramer.Mode, maxFrames: Int = 200000): Double = {
+      mode: PcapFramer.Mode, maxFrames: Int = SampleFrames): Double = {
     val hconf = spark.sessionState.newHadoopConf()
-    val files = graft.sources.PcapFileEnum.list(Seq(fileOrGlob), hconf)
-    if (files.isEmpty) return 0.0
-    val path = new Path(files.head)
-    val in = path.getFileSystem(hconf).open(path)
-    try {
-      val frames = PcapFramer.frames(in, mode)
-      val acc = new graft.dissect.DissectAcc
-      var total = 0L
-      var frag = 0L
-      while (frames.hasNext && total < maxFrames) {
-        graft.dissect.PacketDissector.dissectInto(acc, frames.next(),
-          walkV6 = mode != PcapFramer.ReferenceCompat,
-          level = graft.dissect.DissectLevel.L3)
-        val o = acc.ipFragOffset
-        if (o > 0 || (o == 0 && acc.ipMf)) frag += 1L
-        total += 1L
-      }
-      if (total == 0) 0.0 else 100.0 * frag / total
-    } finally in.close()
+    samplePct(PcapFileEnum.list(Seq(fileOrGlob), hconf).headOption, hconf,
+      mode, maxFrames)
+  }
+
+  private val SampleFrames = 200000
+
+  /** [[sampleFragPct]] over an already-listed first file. */
+  private def samplePct(file: Option[String], hconf: Configuration,
+      mode: PcapFramer.Mode, maxFrames: Int = SampleFrames): Double = file match {
+    case None => 0.0
+    case Some(f) =>
+      val path = new Path(f)
+      val in = path.getFileSystem(hconf).open(path)
+      try {
+        val frames = PcapFramer.frames(in, mode)
+        val acc = new graft.dissect.DissectAcc
+        var total = 0L
+        var frag = 0L
+        while (frames.hasNext && total < maxFrames) {
+          graft.dissect.PacketDissector.dissectInto(acc, frames.next(),
+            walkV6 = mode != PcapFramer.ReferenceCompat,
+            level = graft.dissect.DissectLevel.L3)
+          val o = acc.ipFragOffset
+          if (o > 0 || (o == 0 && acc.ipMf)) frag += 1L
+          total += 1L
+        }
+        if (total == 0) 0.0 else 100.0 * frag / total
+      } finally in.close()
+  }
+
+  /** Run `body` with the job description `name` (what listeners and the
+    * UI attribute its jobs to), then restore the caller's description.
+    */
+  private def phase[T](spark: SparkSession, name: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    val prev = sc.getLocalProperty(key)
+    sc.setJobDescription(name)
+    try body finally sc.setLocalProperty(key, prev)
   }
 
   /** The convert (reference src/main.rs:268-301), one topology:
@@ -120,7 +144,7 @@ object PcapConvert {
     *      accumulators; a mispredict (≥ 1% exact) drops the output,
     *      rolls the progress counters back and takes step 2;
     *   2. the FUSED stats pass ([[Defrag.statsAndBuild]]): one
-    *      map-only job over the first-fragment-gated scan counts
+    *      map-only job over the first-fragment-gated reader counts
     *      (total, fragmented) in the readers, reduces each task's first
     *      fragments to a per-key argmin, and merges those on the driver
     *      into the broadcast patch map;
@@ -133,7 +157,18 @@ object PcapConvert {
     *      [[Defrag.MaxBroadcastFirstFragments]] distinct keys: the ff
     *      aggregate spills beside the output and the shuffle-bypass join
     *      ([[Defrag.defragWith]]) feeds the same vector writer.
-    * Every write is [[PcapColumnarWrite]] (row-shaped plans re-batch).
+    *
+    * Plan-free: the speculated, skip, patch and `-n` branches run their
+    * jobs straight on the pcap scan's partitions and readers
+    * ([[graft.sources.PcapDirectScan]]: the input listed once, its
+    * partitions cut once, one Hadoop-conf broadcast) and hand the
+    * batches to [[PcapColumnarWrite.writeBatches]] — no DataFrame is
+    * analysed, optimised or planned between jobs. Only the shuffle
+    * fallback's ff aggregate and join, and the `-m` manifest, go through
+    * Catalyst. Every pass re-reads the capture (measured faster than
+    * caching the parsed table once parsing got cheap, round 8, and the
+    * only strategy a 100 TB capture can take). Each phase's jobs carry a
+    * `convert: …` job description.
     */
   def run(spark: SparkSession, a: Args): Unit = {
     if (a.debug) spark.sparkContext.setLogLevel("DEBUG")
@@ -145,23 +180,18 @@ object PcapConvert {
     // into OnHeapColumnVectors, and when there are fewer files than
     // cores each file is stride-sharded so dissection AND the parquet
     // encode parallelize to the full machine. `-j N` sets the total.
-    val nFiles = math.max(1,
-      graft.sources.PcapFileEnum.list(Seq(a.file), hconf).size)
+    val files = PcapFileEnum.list(Seq(a.file), hconf)
     val want = if (a.jobs > 0) a.jobs else spark.sparkContext.defaultParallelism
     val shards = math.max(1, math.min(1024,
-      math.ceil(want.toDouble / nFiles).toInt))
-    def scan(options: (String, String)*): DataFrame =
-      options.foldLeft(spark.read.format("pcap")
-        .option("mode", if (a.referenceCompat) "reference-compat" else "sane")
-        .option("decodePartitions", shards)) { case (r, (k, v)) => r.option(k, v) }
-        .load(a.file)
-    def write(df: DataFrame, order: Option[Seq[String]] = None,
-        fragCounters: Option[(LongAccumulator, LongAccumulator)] = None): Unit = {
-      PcapColumnarWrite.write(df, a.out, a.compression,
-        singleFile = a.singleFile, rebatch = true, outputOrder = order,
+      math.ceil(want.toDouble / math.max(1, files.size)).toInt))
+    val scan = new PcapDirectScan(spark, hconf, files, a.referenceCompat, shards)
+    val schema = PacketSchema.schema
+    def write(batches: RDD[ColumnarBatch], order: Option[Seq[String]] = None,
+        fragCounters: Option[(LongAccumulator, LongAccumulator)] = None): Unit =
+      PcapColumnarWrite.writeBatches(batches, schema, a.out, a.compression,
+        scan.conf, singleFile = a.singleFile, outputOrder = order,
         fragCounters = fragCounters)
-      ()
-    }
+    def plain: RDD[ColumnarBatch] = scan.batches(schema, Some(m))
     // live progress (reference parity, src/statswriter.rs:64-68): the
     // accumulators tick as tasks finish, so a long 100 TB conversion shows
     // a running count instead of one number at the end
@@ -181,80 +211,50 @@ object PcapConvert {
         th.start()
         th
       }
-    val metricsKey = java.util.UUID.randomUUID().toString
-    PcapSource.registerMetrics(metricsKey, m)
     try {
-      // every pass re-parses the capture: measured faster than caching
-      // the parsed table once parsing got cheap (round 8), and the only
-      // strategy a 100 TB capture can take
-      val pcap = scan("metricsKey" -> metricsKey)
       // 1. speculation: the 0.2% sample threshold is 5× under the
       // decision threshold, so only genuinely skewed captures
       // (unfragmented head, fragmented tail) ever mispredict
-      val speculated = !a.nodefrag && sampleFragPct(spark, a.file, mode) < 0.2 && {
-        val accTotal = spark.sparkContext.longAccumulator("spec_total")
-        val accFrag = spark.sparkContext.longAccumulator("spec_frag")
-        val errsBefore = m.errors.value
-        write(pcap, fragCounters = Some((accTotal, accFrag)))
-        val total = accTotal.value
-        val pctExact =
-          if (total == 0) 0.0 else math.round(100.0 * accFrag.value / total).toDouble
-        pctExact < 1.0 || {
-          // mispredicted: one number per convert (reference parity), so
-          // the rewrite below must count alone
-          val p = new Path(a.out)
-          p.getFileSystem(hconf).delete(p, true)
-          m.packets.add(-total)
-          m.errors.add(errsBefore - m.errors.value)
-          false
+      val speculated = !a.nodefrag &&
+        samplePct(files.headOption, hconf, mode) < 0.2 && {
+          val accTotal = spark.sparkContext.longAccumulator("spec_total")
+          val accFrag = spark.sparkContext.longAccumulator("spec_frag")
+          val errsBefore = m.errors.value
+          phase(spark, "convert: speculative write")(
+            write(plain, fragCounters = Some((accTotal, accFrag))))
+          val total = accTotal.value
+          val pctExact =
+            if (total == 0) 0.0 else math.round(100.0 * accFrag.value / total).toDouble
+          pctExact < 1.0 || {
+            // mispredicted: one number per convert (reference parity), so
+            // the rewrite below must count alone
+            val p = new Path(a.out)
+            p.getFileSystem(hconf).delete(p, true)
+            m.packets.add(-total)
+            m.errors.add(errsBefore - m.errors.value)
+            false
+          }
         }
-      }
-      if (a.nodefrag) write(pcap)
+      if (a.nodefrag) phase(spark, "convert: write")(write(plain))
       else if (!speculated) {
         // 2. the fused stats pass (separate accumulators: the progress
         // counters must count each packet once)
-        val statsKey = java.util.UUID.randomUUID().toString
         val sm = PcapSource.statsMetrics(spark)
-        PcapSource.registerMetrics(statsKey, sm)
-        val fused =
-          try Defrag.statsAndBuild(
-            scan("_internal.dissectGate" -> "first-fragment", "metricsKey" -> statsKey),
-            sm, Defrag.MaxBroadcastFirstFragments)
-          finally PcapSource.unregisterMetrics(statsKey)
-        if (fused.pct < 1.0) write(pcap) // 3. defrag skip (main.rs:277)
+        val fused = phase(spark, "convert: stats")(Defrag.statsAndBuild(
+          scan.firstFragmentRows(sm), sm, Defrag.MaxBroadcastFirstFragments))
+        if (fused.pct < 1.0) // 3. defrag skip (main.rs:277)
+          phase(spark, "convert: write")(write(plain))
         else fused.map match {
           case Some(map) => // 3. the columnar broadcast patch
             val bc = spark.sparkContext.broadcast(map)
-            val pk = java.util.UUID.randomUUID().toString
-            DefragPatch.register(pk, bc)
-            try {
-              val patched = scan("metricsKey" -> metricsKey, "defragPatchKey" -> pk)
-              write(patched, order = Some(Defrag.defraggedOrder(patched.columns.toSeq)))
-            } finally {
-              DefragPatch.unregister(pk)
-              bc.destroy()
-            }
-          case None =>
-            // 4. too many distinct keys to collect: spill the ff side (one
-            // more gated pass) and shuffle-join against it. The spill is
-            // a SIBLING of the output — the writer deletes the output
-            // directory before it runs the join that reads the spill.
-            val spill = new Path(a.out).suffix(".ffspill")
-            val fs = spill.getFileSystem(hconf)
-            try {
-              Defrag.firstFragments(scan("_internal.dissectGate" -> "first-fragment"))
-                .write.mode("overwrite").option("compression", "zstd")
-                .parquet(spill.toString)
-              write(Defrag.defragWith(pcap, spark.read.parquet(spill.toString),
-                broadcastFF = false))
-            } finally
-              try { fs.delete(spill, true); () } catch { case _: java.io.IOException => () }
+            try phase(spark, "convert: write")(write(
+              scan.batches(schema, Some(m), patch = Some(bc)),
+              order = Some(Defrag.defraggedOrder(schema.fieldNames.toSeq))))
+            finally bc.destroy()
+          case None => shuffleFallback(spark, a, m, shards, hconf)
         }
       }
-    } finally {
-      progress.foreach(_.interrupt())
-      PcapSource.unregisterMetrics(metricsKey)
-    }
+    } finally progress.foreach(_.interrupt())
     if (a.manifest) {
       val n = graft.sources.ConvertManifest.build(spark, a.out)
       if (a.verbose) System.err.println(s"Manifest: $n files indexed")
@@ -262,6 +262,39 @@ object PcapConvert {
     if (a.verbose)
       System.err.println(
         s"Packets: ${m.packets.value} Errors: ${m.errors.value}")
+  }
+
+  /** Step 4: too many distinct keys to collect. Spill the ff side (one
+    * more gated pass) and shuffle-join against it — the one branch that
+    * plans through Catalyst. The spill is a SIBLING of the output: the
+    * writer deletes the output directory before it runs the join that
+    * reads the spill.
+    */
+  private def shuffleFallback(spark: SparkSession, a: Args, m: PcapSource.Metrics,
+      shards: Int, hconf: Configuration): Unit = {
+    def scan(options: (String, String)*): DataFrame =
+      options.foldLeft(spark.read.format("pcap")
+        .option("mode", if (a.referenceCompat) "reference-compat" else "sane")
+        .option("decodePartitions", shards)) { case (r, (k, v)) => r.option(k, v) }
+        .load(a.file)
+    val metricsKey = java.util.UUID.randomUUID().toString
+    PcapSource.registerMetrics(metricsKey, m)
+    val spill = new Path(a.out).suffix(".ffspill")
+    val fs = spill.getFileSystem(hconf)
+    try {
+      phase(spark, "convert: ff spill")(
+        Defrag.firstFragments(scan("_internal.dissectGate" -> "first-fragment"))
+          .write.mode("overwrite").option("compression", "zstd")
+          .parquet(spill.toString))
+      phase(spark, "convert: shuffle write")(PcapColumnarWrite.write(
+        Defrag.defragWith(scan("metricsKey" -> metricsKey),
+          spark.read.parquet(spill.toString), broadcastFF = false),
+        a.out, a.compression, singleFile = a.singleFile, rebatch = true))
+      ()
+    } finally {
+      PcapSource.unregisterMetrics(metricsKey)
+      try { fs.delete(spill, true); () } catch { case _: java.io.IOException => () }
+    }
   }
 
   def main(argv: Array[String]): Unit = {

@@ -241,40 +241,43 @@ object DefragProps extends Properties("defrag") {
   private def fusedMap(df: org.apache.spark.sql.DataFrame) =
     Defrag.statsAndBuild(df, PcapSource.statsMetrics(spark), Long.MaxValue)
 
+  // a narrow key and second space: keys collide across files and
+  // frame_time ties, so the patched columns break ties, NULLs included
+  // (raw UDP: no DNS/NTP; a sub-8-byte payload: no UDP header at all)
+  private val genPayload: Gen[Array[Byte]] = Gen.oneOf(
+    for {
+      q <- Gen.oneOf("a.example.org", "b.example.org")
+      t <- Gen.oneOf(1, 28)
+      dp <- Gen.oneOf(1000, 2000)
+    } yield udp(53, dp, dnsQuery(q, t)),
+    for {
+      rc <- Gen.oneOf(7, 42)
+      dp <- Gen.oneOf(1000, 2000)
+    } yield udp(123, dp, Array[Byte](0x10, 0, 0, rc.toByte)),
+    Gen.oneOf(1000, 2000).map(dp => udp(40000, dp, Array.fill[Byte](8)(0x55))),
+    Gen.const(Array.fill[Byte](4)(0x66)))
+  private val ffSources = Seq("198.51.100.1", "198.51.100.2")
+  private val genFf = for {
+    src <- Gen.oneOf(ffSources)
+    id <- Gen.chooseNum(1, 3)
+    sec <- Gen.chooseNum(1, 3)
+    p <- genPayload
+  } yield (sec * 1000000L, -1,
+    ethernet(0x0800, ipv4(src, "192.0.2.9", 17, p, id = id, mf = true)))
+  private val noise = Seq(
+    (5000000L, -1, ethernet(0x0800, ipv4("198.51.100.1", "192.0.2.9", 17,
+      Array.fill[Byte](16)(0x42), id = 1, fragOffset = 5))),
+    (5000001L, -1, ethernet(0x0800,
+      ipv4("203.0.113.5", "192.0.2.9", 6, tcp(443, 9999, 0x02)))))
+  /** 1–3 files of 1–12 key-colliding first fragments each. */
+  private val genFiles = Gen.chooseNum(1, 3).flatMap(n =>
+    Gen.listOfN(n, Gen.chooseNum(1, 12).flatMap(k => Gen.listOfN(k, genFf))))
+
   property("fused stats map ≡ build(firstFragments) across files, tasks and ties") = {
     // the map-only argmin must pick firstFragments' row for every key
     // when a key's candidates sit in several files and, at
-    // decodePartitions 3, in several stride tasks of one file. A narrow
-    // key and second space makes keys collide and frame_time tie, so
-    // the patched columns break ties, NULLs included (raw UDP: no
-    // DNS/NTP; a sub-8-byte payload: no UDP header at all)
+    // decodePartitions 3, in several stride tasks of one file
     import graft.sources.DefragPatch
-    val genPayload: Gen[Array[Byte]] = Gen.oneOf(
-      for {
-        q <- Gen.oneOf("a.example.org", "b.example.org")
-        t <- Gen.oneOf(1, 28)
-        dp <- Gen.oneOf(1000, 2000)
-      } yield udp(53, dp, dnsQuery(q, t)),
-      for {
-        rc <- Gen.oneOf(7, 42)
-        dp <- Gen.oneOf(1000, 2000)
-      } yield udp(123, dp, Array[Byte](0x10, 0, 0, rc.toByte)),
-      Gen.oneOf(1000, 2000).map(dp => udp(40000, dp, Array.fill[Byte](8)(0x55))),
-      Gen.const(Array.fill[Byte](4)(0x66)))
-    val genFf = for {
-      src <- Gen.oneOf("198.51.100.1", "198.51.100.2")
-      id <- Gen.chooseNum(1, 3)
-      sec <- Gen.chooseNum(1, 3)
-      p <- genPayload
-    } yield (sec * 1000000L, -1,
-      ethernet(0x0800, ipv4(src, "192.0.2.9", 17, p, id = id, mf = true)))
-    val noise = Seq(
-      (5000000L, -1, ethernet(0x0800, ipv4("198.51.100.1", "192.0.2.9", 17,
-        Array.fill[Byte](16)(0x42), id = 1, fragOffset = 5))),
-      (5000001L, -1, ethernet(0x0800,
-        ipv4("203.0.113.5", "192.0.2.9", 6, tcp(443, 9999, 0x02)))))
-    val genFiles = Gen.chooseNum(1, 3).flatMap(n =>
-      Gen.listOfN(n, Gen.chooseNum(1, 12).flatMap(k => Gen.listOfN(k, genFf))))
     // no shrinking: each try is three Spark jobs, and shrinking a failing
     // file list took minutes before the report
     Prop.forAllNoShrink(genFiles) { files =>
@@ -291,6 +294,54 @@ object DefragProps extends Properties("defrag") {
           .load(dir.toString)).map.get)
       }
       Prop(got.forall(_ == want)) :| s"fused maps $got, want $want"
+    }
+  }
+
+  property("plan-free stats pass ≡ the DataFrame statsAndBuild: counts, keys, entries") = {
+    // the convert's stats job reads the gated reader's rows with no
+    // residual filter above it, so the reader's first-fragment predicate
+    // must be exact. Decoys share every first fragment's key and come
+    // EARLIER, so any one leaking into the argmin wins its key: a TCP row
+    // with MF set at offset 0, a UDP continuation fragment, and an
+    // unfragmented UDP DNS row.
+    val decoys = for {
+      src <- ffSources
+      id <- 1 to 3
+      p <- Seq(
+        ipv4(src, "192.0.2.9", 6, tcp(53, 1000, 0x02), id = id, mf = true),
+        ipv4(src, "192.0.2.9", 17, Array.fill[Byte](16)(0x42), id = id, mf = true,
+          fragOffset = 5),
+        ipv4(src, "192.0.2.9", 17, udp(53, 1000, dnsQuery("decoy.example.org", 1)),
+          id = id))
+    } yield (id.toLong, -1, ethernet(0x0800, p))
+    Prop.forAllNoShrink(genFiles) { files =>
+      val dir = java.nio.file.Files.createTempDirectory("defragprop6")
+      files.zipWithIndex.foreach { case (ffs, i) =>
+        java.nio.file.Files.write(dir.resolve(s"f$i.pcap"),
+          legacyPcap((if (i == 0) decoys else Nil) ++ ffs ++ noise))
+      }
+      val hconf = spark.sessionState.newHadoopConf()
+      val paths = graft.sources.PcapFileEnum.list(Seq(dir.toString), hconf)
+      def summary(f: Defrag.FusedStats) = (f.total, f.pct, f.ffKeys, entries(f.map.get))
+      val results = Seq(1, 3).map { parts =>
+        val sm = PcapSource.statsMetrics(spark)
+        val direct = Defrag.statsAndBuild(
+          new graft.sources.PcapDirectScan(spark, hconf, paths, refCompat = false, parts)
+            .firstFragmentRows(sm), sm, Long.MaxValue)
+        val sm2 = PcapSource.statsMetrics(spark)
+        val key = java.util.UUID.randomUUID().toString
+        PcapSource.registerMetrics(key, sm2)
+        val viaFrame =
+          try Defrag.statsAndBuild(spark.read.format("pcap")
+            .option("decodePartitions", parts)
+            .option("_internal.dissectGate", "first-fragment")
+            .option("metricsKey", key).load(dir.toString), sm2, Long.MaxValue)
+          finally PcapSource.unregisterMetrics(key)
+        (summary(direct), summary(viaFrame))
+      }
+      Prop(results.forall { case (d, f) => d == f }) :| s"direct ≠ DataFrame: $results" &&
+        Prop(results.head._1._1 == files.map(_.size + noise.size).sum + decoys.size) :|
+          s"total ${results.head._1._1}"
     }
   }
 

@@ -109,6 +109,25 @@ class PcapDataSourceSpec extends SparkFunSuite {
       .load(dir).filter(col("udp_dstport") === 53)
     assert(filtered.orderBy("frame_time", "pcap_file").collect().toSeq ==
       filteredRows.orderBy("frame_time", "pcap_file").collect().toSeq)
+    // a permuted projection with repeated-source columns (col_source
+    // and ip_src fill from the same accumulator field) over generated
+    // ddos and tcp corpora, sharded and not
+    val gen = Files.createTempDirectory("dsv2_gen")
+    graft.spark.PcapGen.write(gen.resolve("ddos.pcap").toString, 3000, mix = "ddos")
+    graft.spark.PcapGen.write(gen.resolve("tcp.pcap").toString, 3000, mix = "tcp")
+    val permuted = Seq("pcap_file", "col_source", "ip_src", "frame_time", "tcp_flags")
+    def sortedRows(d: org.apache.spark.sql.DataFrame): Seq[String] =
+      d.select(permuted.map(col): _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    val rowGen = sortedRows(spark.read.format("pcap").option("columnar", "false")
+      .load(gen.toString))
+    assert(rowGen.size == 6000 && rowGen.exists(_.contains("...A")))
+    Seq(1, 3).foreach { parts =>
+      val colGen = spark.read.format("pcap").option("decodePartitions", parts)
+        .load(gen.toString)
+      assert(colGen.select(permuted.map(col): _*).queryExecution.executedPlan
+        .toString.contains("ColumnarToRow"))
+      assert(sortedRows(colGen) == rowGen, s"decodePartitions $parts")
+    }
     // bytes mode keeps the row reader (frame_bytes has no vector writer)
     val bytes = spark.read.format("pcap").option("bytes", "true").load(dir)
     assert(!bytes.queryExecution.executedPlan.toString.contains("ColumnarToRow"))

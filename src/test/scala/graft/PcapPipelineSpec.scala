@@ -370,6 +370,148 @@ class PcapPipelineSpec extends SparkFunSuite {
     assert(canonFrag(got) == canonFrag(want))
   }
 
+  /** Run one convert under a listener and a no-op optimizer rule:
+    * the job descriptions in start order, SQL executions started,
+    * Catalyst optimizer runs, and per `pcap_packets` accumulator id
+    * the sum of its task-side updates and its last driver-side value
+    * (which includes a mispredict's driver-side rollback).
+    */
+  private def traced(a: PcapConvert.Args): PcapPipelineSpec.Traced = {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.catalyst.rules.Rule
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val sql = new AtomicInteger
+    val packets = scala.collection.concurrent.TrieMap.empty[Long, (Long, Long)]
+    val lsn = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        jobs.add(String.valueOf(Option(js.properties)
+          .map(_.getProperty("spark.job.description")).orNull)); ()
+      }
+      override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
+        if (te.taskInfo != null) te.taskInfo.accumulables.foreach { acc =>
+          if (acc.name.contains("pcap_packets")) acc.update.foreach { u =>
+            packets.synchronized {
+              val sum = packets.get(acc.id).fold(0L)(_._1) + u.toString.toLong
+              packets(acc.id) = (sum, acc.value.fold(-1L)(_.toString.toLong))
+            }
+          }
+        }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          sql.incrementAndGet(); ()
+        case _ => ()
+      }
+    }
+    val optimized = new AtomicInteger
+    val rule = new Rule[LogicalPlan] {
+      override def apply(plan: LogicalPlan): LogicalPlan = { optimized.incrementAndGet(); plan }
+    }
+    val exp = spark.experimental
+    exp.extraOptimizations = exp.extraOptimizations :+ rule
+    spark.sparkContext.addSparkListener(lsn)
+    try graft.tools.TaskRecords.measureWith(spark)(_ => ())(PcapConvert.run(spark, a))
+    finally {
+      spark.sparkContext.removeSparkListener(lsn)
+      exp.extraOptimizations = exp.extraOptimizations.filterNot(_ eq rule)
+    }
+    PcapPipelineSpec.Traced(jobs.toArray(Array.empty[String]).toSeq, sql.get, optimized.get,
+      packets.toMap)
+  }
+
+  test("every convert branch end to end: output ≡ reference, jobs per branch, no planning off the shuffle fallback") {
+    val dir = Files.createTempDirectory("branches")
+    val natural = graft.core.PacketSchema.schema.fieldNames.toSeq
+    val defragged = Defrag.defraggedOrder(natural)
+    def plainScan(f: String) = spark.read.format("pcap").load(f)
+    // sample ≥ 0.2% but exact < 1%: 997 TCP rows + one 3-fragment
+    // datagram (0.3%) — not speculated, stats rounds to 0%, plain write
+    val skipCap = dir.resolve("skip.pcap")
+    Files.write(skipCap, legacyPcap((1 to 997).map { i =>
+      (i * 1000L, -1, ethernet(0x0800, ipv4("192.0.2.5", "203.0.113.9", 6,
+        tcp(443, 1000 + i, 0x10))))
+    } ++ Seq(
+      (998000L, -1, ethernet(0x0800, ipv4("198.51.100.1", "203.0.113.9", 17,
+        udp(53, 40000, dnsQuery("s.example.com", 1)), id = 7, mf = true))),
+      (999000L, -1, ethernet(0x0800, ipv4("198.51.100.1", "203.0.113.9", 17,
+        Array.fill[Byte](24)(0x61), id = 7, mf = true, fragOffset = 6))),
+      (1000000L, -1, ethernet(0x0800, ipv4("198.51.100.1", "203.0.113.9", 17,
+        Array.fill[Byte](24)(0x61), id = 7, fragOffset = 12))))))
+    assert(PcapConvert.sampleFragPct(spark, skipCap.toString,
+      graft.pcapio.PcapFramer.Sane) >= 0.2)
+    val tcpCap = dir.resolve("tcp.pcap")
+    graft.spark.PcapGen.write(tcpCap.toString, 5000, mix = "tcp")
+    val fragCap = writeTemp("cap_branches.pcap", fragmentedCapture).toString
+    // the sample reads only the first file (unfragmented TCP), the exact
+    // count over both files is 6/57: speculated, then mispredicted
+    val mixedDir = Files.createDirectories(dir.resolve("mixed"))
+    Files.write(mixedDir.resolve("a.pcap"), legacyPcap((1 to 50).map { i =>
+      (i * 1000L, -1, ethernet(0x0800, ipv4("192.0.2.5", "203.0.113.9", 6,
+        tcp(443, 1000 + i, 0x10))))
+    }))
+    Files.write(mixedDir.resolve("b.pcap"), fragmentedCapture)
+    /** `reads`: how many write passes count each packet in the tasks
+      * (a mispredict's first pass is rolled back on the driver). */
+    final case class Branch(name: String, file: String, nodefrag: Boolean,
+        jobs: Seq[String], order: Seq[String], want: () => org.apache.spark.sql.DataFrame,
+        reads: Int = 1)
+    val branches = Seq(
+      Branch("speculated", tcpCap.toString, nodefrag = false,
+        Seq("convert: speculative write"), natural, () => plainScan(tcpCap.toString)),
+      Branch("-n", fragCap, nodefrag = true, Seq("convert: write"), natural,
+        () => plainScan(fragCap)),
+      Branch("skip", skipCap.toString, nodefrag = false,
+        Seq("convert: stats", "convert: write"), natural,
+        () => Defrag(plainScan(skipCap.toString))),
+      Branch("patch", fragCap, nodefrag = false,
+        Seq("convert: stats", "convert: write"), defragged,
+        () => Defrag.defrag(plainScan(fragCap))),
+      Branch("mispredict", mixedDir.toString, nodefrag = false,
+        Seq("convert: speculative write", "convert: stats", "convert: write"), defragged,
+        () => Defrag.defrag(plainScan(mixedDir.toString)), reads = 2))
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      branches.foreach { b =>
+        val out = s"$dir/${b.name}.parquet"
+        val t = traced(PcapConvert.Args(file = b.file, out = out,
+          nodefrag = b.nodefrag, singleFile = false))
+        assert(sc.getLocalProperty("spark.job.description") == "caller", b.name)
+        assert(t.jobs == b.jobs, s"${b.name}: $t")
+        assert(t.sqlExecutions == 0 && t.optimizerRuns == 0,
+          s"${b.name} planned through Catalyst: $t")
+        val got = spark.read.parquet(out)
+        val want = b.want()
+        assert(got.columns.toSeq == b.order, b.name)
+        assert(canon(got) == canon(want), b.name)
+        // one progress counter, ending at one count per packet
+        val n = want.count()
+        assert(t.packetCounters.size == 1 &&
+          t.packetCounters.values.head == (b.reads * n, n), s"${b.name}: $t")
+      }
+      // the shuffle fallback: the one branch that plans
+      sys.props("graft.defrag.maxBroadcastFF") = "0"
+      val out = s"$dir/shuffle.parquet"
+      val t =
+        try traced(PcapConvert.Args(file = fragCap, out = out, singleFile = false))
+        finally sys.props.remove("graft.defrag.maxBroadcastFF")
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      assert(t.jobs.head == "convert: stats" &&
+        t.jobs.contains("convert: ff spill") && t.jobs.last == "convert: shuffle write" &&
+        t.jobs.forall(Set("convert: stats", "convert: ff spill", "convert: shuffle write")),
+        t.toString)
+      assert(t.sqlExecutions > 0, t.toString)
+      val got = spark.read.parquet(out)
+      assert(got.columns.toSeq == defragged)
+      assert(canon(got) == canon(Defrag.defrag(plainScan(fragCap))))
+      // one progress counter pair here too (its count is not pinned: the
+      // bypass split's two scans of the capture both count every packet)
+      assert(t.packetCounters.size == 1, t.toString)
+    } finally sc.setJobDescription(null)
+  }
+
   test("IPv6 fragment chains defrag end-to-end (Sane walk feeds the v4 pipeline)") {
     // round 12: the Sane-mode v6 fragment gate populates ip_frag_offset/
     // ip_mf/ip_id (low 16 bits of the v6 identification), so v6 chains
@@ -455,4 +597,10 @@ class PcapPipelineSpec extends SparkFunSuite {
       r.getAs[java.sql.Timestamp]("frame_time").toInstant.toEpochMilli == 0L)
     assert(r.getAs[Short]("ntp_priv_reqcode") == 42)
   }
+}
+
+object PcapPipelineSpec {
+  /** What one convert did, read from the listener bus. */
+  final case class Traced(jobs: Seq[String], sqlExecutions: Int,
+      optimizerRuns: Int, packetCounters: Map[Long, (Long, Long)])
 }
