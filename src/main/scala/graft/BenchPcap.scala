@@ -96,8 +96,7 @@ object BenchPcap {
     // pipeline (pcap scan + state store + zstd sink) swings 26–137 s
     // for IDENTICAL code across sessions on this box, so the
     // stream-defrag row here is an end-to-end smoke/throughput sample,
-    // not a steady-state mark; `tools.BenchStreamDefrag --batch` is the
-    // resolvable instrument for state-op-level changes.
+    // not a steady-state mark.
     // streaming landing→convert (round-11 verdict #5): drain the same
     // 8-file corpus through the multi-root streaming pcap source under
     // Trigger.AvailableNow into the streaming parquet sink — the

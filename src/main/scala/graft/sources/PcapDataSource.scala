@@ -89,9 +89,9 @@ final class PcapScanBuilder(options: CaseInsensitiveStringMap)
     extends ScanBuilder
     with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-  private val withBytes = options.getBoolean("bytes", false)
   private var required: StructType =
-    if (withBytes) PacketSchema.bytesSchema else PacketSchema.schema
+    if (options.getBoolean("bytes", false)) PacketSchema.bytesSchema
+    else PacketSchema.schema
   private var pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty
 
   override def pruneColumns(requiredSchema: StructType): Unit =
@@ -155,11 +155,9 @@ final class PcapScanBuilder(options: CaseInsensitiveStringMap)
       s"pcap option _internal.dissectGate: only 'first-fragment' is supported, got ${gate.get}")
     new PcapScan(paths, required,
       options.getOrDefault("mode", "sane") == "reference-compat", pushed,
-      withBytes,
       Option(options.get("maxFilesPerTrigger")).map(_.toInt),
       decodeParts,
       options.getBoolean("strictLanding", false),
-      options.getBoolean("columnar", true),
       Option(options.get("metricsKey")),
       retired,
       ffGate = gate.isDefined,
@@ -173,11 +171,9 @@ final class PcapScan(
     required: StructType,
     refCompat: Boolean,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    withBytes: Boolean = false,
     maxFilesPerTrigger: Option[Int] = None,
     decodePartitions: Int = 1,
     strictLanding: Boolean = false,
-    columnar: Boolean = true,
     metricsKey: Option[String] = None,
     retiredRoots: Seq[String] = Seq.empty,
     ffGate: Boolean = false,
@@ -186,6 +182,10 @@ final class PcapScan(
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+  /** Every partition reads columnar batches ([[PcapColumnarReader]]),
+    * bytes mode and micro-batches included. */
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.SUPPORTED
   override def toMicroBatchStream(
       checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
     // decodePartitions streams too (round 12 — the rounds-9..11 refusal
@@ -196,12 +196,12 @@ final class PcapScan(
     // from the committed (start, end] file range, so exactly-once is
     // untouched. This closed the streaming-vs-batch convert gap: one
     // task per file left 24 of 32 cores idle on the 8-file bench corpus.
-    // withBytes/filters ride along: dropping them made every bytes-mode
-    // streaming task die on a schema-ordinal lookup. Multi-root paths
+    // filters ride along, and the required schema carries bytes mode's
+    // frame_bytes/linktype columns. Multi-root paths
     // stream natively since round 9: one watermark per root in a
     // composite offset (see PcapMicroBatchStream).
     new PcapMicroBatchStream(paths, required, refCompat, checkpointLocation,
-      maxFilesPerTrigger, filters, withBytes, strictLanding, retiredRoots,
+      maxFilesPerTrigger, filters, strictLanding, retiredRoots,
       decodePartitions, frameIndex)
   }
   override def description(): String =
@@ -240,8 +240,8 @@ final class PcapScan(
     val patch = patchKey.map(k => DefragPatch.forKey(k).getOrElse(
       throw new IllegalArgumentException(
         s"pcap option defragPatchKey: no patch registered under '$k'")))
-    PcapReaderFactory(conf, required, refCompat, filters, withBytes,
-      columnar, metricsKey.flatMap(graft.spark.PcapSource.metricsFor), ffGate,
+    PcapReaderFactory(conf, required, refCompat, filters,
+      metricsKey.flatMap(graft.spark.PcapSource.metricsFor), ffGate,
       patch, buildIndex = frameIndex)
   }
 }
@@ -331,42 +331,34 @@ private[sources] object PcapShardPlan {
   }
 }
 
-/** `conf` is a broadcast, as in Spark's own file scans: the ~1k-entry
-  * Hadoop configuration ships once per executor, not inside every task. */
+/** The one pcap partition reader's factory: every batch scan, bytes-mode
+  * scan, streaming micro-batch and the convert's [[PcapDirectScan]]
+  * read columnar batches from [[PcapColumnarReader]]. The dissector's
+  * unboxed accumulator fields go straight into `OnHeapColumnVector`s
+  * (no per-packet `GenericInternalRow` or boxed numerics), downstream
+  * operators consume whole batches (`ColumnarToRow` is codegen'd), and
+  * pushed filters evaluate per packet on the unboxed accumulator
+  * ([[PcapFilters.compileAcc]]) before the vector writes.
+  *
+  * `conf` is a broadcast, as in Spark's own file scans: the ~1k-entry
+  * Hadoop configuration ships once per executor, not inside every task.
+  */
 final case class PcapReaderFactory(
     conf: Broadcast[SerializableConfiguration],
     required: StructType,
     refCompat: Boolean,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    withBytes: Boolean = false,
-    columnar: Boolean = false,
     metrics: Option[graft.spark.PcapSource.Metrics] = None,
     ffGate: Boolean = false,
     patch: Option[org.apache.spark.broadcast.Broadcast[
       DefragPatch.PatchMap]] = None,
     buildIndex: Boolean = false)
     extends PartitionReaderFactory {
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val pp = p.asInstanceOf[PcapInputPartition]
-    new PcapPartitionReader(pp.file,
-      conf.value.value, required, refCompat, filters, withBytes, pp.shard, pp.nShards,
-      metrics, ffGate, patch, pp.rangeStart, pp.rangeEnd, buildIndex,
-      pp.ngState)
-  }
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException(
+      "pcap partitions read columnar batches only (createColumnarReader)")
 
-  /** COLUMNAR scan path (round-9 verdict #5): the dissector's unboxed
-    * accumulator fields go straight into `OnHeapColumnVector`s — no
-    * per-packet `Array[Any]` + `GenericInternalRow` + ~10 boxed numerics,
-    * and downstream operators consume whole batches (`ColumnarToRow` is
-    * codegen'd). Pushed filters evaluate per packet on the UNBOXED
-    * accumulator ([[PcapFilters.compileAcc]], value-parity with the row
-    * reader's getters property-pinned), BEFORE the vector writes — a
-    * filtered slice of a capture keeps the columnar speedup. Gated off
-    * only when the raw-bytes column rides along — that keeps the row
-    * reader.
-    */
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    columnar && !withBytes
+  override def supportColumnarReads(p: InputPartition): Boolean = true
 
   override def createColumnarReader(
       p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -377,7 +369,7 @@ final case class PcapReaderFactory(
   }
 }
 
-/** The shared open-a-pcap-stream logic for the two readers: whole-file
+/** The reader's open-a-pcap-stream logic: whole-file
   * framing (optionally building the [[graft.pcapio.FrameIndex]] sidecar
   * when this reader is stride shard 0 and none is valid yet), or a
   * range-mode seek when the planner assigned a frame-aligned byte range.
@@ -456,7 +448,7 @@ private[sources] object PcapReaderOpen {
   }
 }
 
-/** Shared staged-dissection planning for the two readers (round 13):
+/** The reader's staged-dissection plan (round 13):
   * derive the level the scan actually needs from the pruned schema plus
   * every pushed filter's referenced columns, split the pushed filters
   * into the L3-decidable conjuncts (evaluated BEFORE the transport/L7
@@ -493,11 +485,14 @@ private[sources] object DissectPlan {
     a.ipProto == 17 && a.ipMf && a.ipFragOffset == 0
 }
 
-/** Columnar pcap reader: frames → [[graft.dissect.DissectAcc]] →
+/** The pcap partition reader: frames → [[graft.dissect.DissectAcc]] →
   * column vectors, 4096 packets per batch. The required columns' source
-  * ordinals are resolved ONCE per reader and [[fill]] switches on them
-  * per packet; every string column reuses the accumulator's interned
-  * UTF8Strings' backing bytes.
+  * ordinals ([[PacketSchema.bytesSchema]], so bytes mode's `frame_bytes`
+  * and `linktype` too) are resolved ONCE per reader and [[fill]]
+  * switches on them per packet; every string column reuses the
+  * accumulator's interned UTF8Strings' backing bytes. A batch that
+  * carries `frame_bytes` also closes once those pass [[BatchBytes]], so
+  * jumbo or TSO-sized frames cannot make one batch buffer 4096 × 64 KiB.
   */
 final class PcapColumnarReader(
     file: String,
@@ -519,6 +514,9 @@ final class PcapColumnarReader(
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 
   private val BatchRows = 4096
+  /** Frame-byte budget of one bytes-mode batch: 4096 full-MTU Ethernet
+    * frames (≈ 6.2 MB) still fit, 64 KiB frames close it at 128 rows. */
+  private val BatchBytes = 8L << 20
   private val mode: PcapFramer.Mode =
     if (refCompat) PcapFramer.ReferenceCompat else PcapFramer.Sane
   private val opened = PcapReaderOpen(file, conf, mode, rangeStart, rangeEnd,
@@ -533,8 +531,8 @@ final class PcapColumnarReader(
   // schema + filters need; L3-decidable filters veto BEFORE the
   // transport/L7 stages run. The unboxed predicate forms evaluate on
   // the accumulator's fields directly — no per-packet Option-boxed
-  // PacketRow just to test a predicate (value parity with the row
-  // reader's getter is property-pinned).
+  // PacketRow just to test a predicate (value parity with
+  // PcapFilters.getter over toPacketRow is property-pinned).
   private val plan = DissectPlan.of(required, filters, ffGate)
   private val predL3 = PcapFilters.compileAcc(plan.l3Filters, base)
   private val predHigh = PcapFilters.compileAcc(plan.highFilters, base)
@@ -547,6 +545,7 @@ final class PcapColumnarReader(
   private val batch = new org.apache.spark.sql.vectorized.ColumnarBatch(
     vectors.asInstanceOf[Array[org.apache.spark.sql.vectorized.ColumnVector]])
   private val acc = new graft.dissect.DissectAcc
+  private var raw: graft.core.RawFrame = _
   private var frameIdx: Long = -1L
   private var nPackets = 0L
   private var nErrors = 0L
@@ -570,10 +569,9 @@ final class PcapColumnarReader(
   /** Source-schema ordinal of each REQUIRED column (column pruning =
     * fewer fills, not a per-row projection). */
   private val sourceOrds: Array[Int] =
-    required.fieldNames.map(PacketSchema.schema.fieldIndex)
-  sourceOrds.foreach(o => if (o > 30) throw new IllegalStateException(
-    s"pcap columnar reader: unexpected required ordinal $o " +
-      "(bytes-mode columns take the row reader)"))
+    required.fieldNames.map(PacketSchema.bytesSchema.fieldIndex)
+  private val FrameBytesOrd = PacketSchema.schema.length
+  private val withBytes = sourceOrds.contains(FrameBytesOrd)
 
   /** Fill row `r` of `v` with source column `ord` from the accumulator.
     * A switch, not an array of `(vector, row) => Unit` closures: Scala
@@ -622,6 +620,8 @@ final class PcapColumnarReader(
         else putU8(v, r, org.apache.spark.unsafe.types.UTF8String
           .fromString(acc.dhipDevice))
       case 30 => putU8(v, r, baseUtf8)
+      case 31 => v.putByteArray(r, raw.data); ()
+      case 32 => v.putInt(r, raw.linktype)
     }
   }
 
@@ -629,13 +629,14 @@ final class PcapColumnarReader(
     var i = 0
     while (i < vectors.length) { vectors(i).reset(); i += 1 }
     var n = 0
-    while (n < BatchRows && frames.hasNext) {
-      val raw = frames.next()
+    var bytes = 0L
+    while (n < BatchRows && bytes < BatchBytes && frames.hasNext) {
+      raw = frames.next()
       frameIdx += 1
       opened.record()
-      // decode-sharding stride, same as the row reader: foreign frames
-      // are framed (cheap) but never dissected or materialized. Range
-      // mode (frame-index sidecar) owns EVERY frame in its byte range.
+      // decode-sharding stride: foreign frames are framed (cheap) but
+      // never dissected or materialized. Range mode (frame-index
+      // sidecar) owns EVERY frame in its byte range.
       if (ranged || nShards <= 1 || frameIdx % nShards == shard) {
         PacketDissector.dissectInto(acc, raw, walkV6 = !refCompat,
           level = plan.baseLevel)
@@ -671,6 +672,7 @@ final class PcapColumnarReader(
             fill(vectors(c), sourceOrds(c), n)
             c += 1
           }
+          if (withBytes) bytes += raw.data.length
           n += 1
         }
       }
@@ -683,120 +685,12 @@ final class PcapColumnarReader(
       if (m.fragmented != null) { m.fragmented.add(nFrag); nFrag = 0L }
       nPackets = 0L; nErrors = 0L
     }
-    // a fully-framed file flushes the sidecar (no-op unless building);
-    // an early close (limit) never writes a partial index
+    // a fully-framed file flushes the sidecar (no-op unless building or
+    // frames remain); an early close (limit) never writes a partial index
     if (n < BatchRows) opened.finish()
     n > 0
   }
 
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
-  override def close(): Unit = in.close()
-}
-
-final class PcapPartitionReader(
-    file: String,
-    conf: Configuration,
-    required: StructType,
-    refCompat: Boolean,
-    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    withBytes: Boolean = false,
-    shard: Int = 0,
-    nShards: Int = 1,
-    metrics: Option[graft.spark.PcapSource.Metrics] = None,
-    ffGate: Boolean = false,
-    patch: Option[org.apache.spark.broadcast.Broadcast[
-      DefragPatch.PatchMap]] = None,
-    rangeStart: Long = -1L,
-    rangeEnd: Long = -1L,
-    buildIndex: Boolean = false,
-    ngState: PcapFramer.NgState = null)
-    extends PartitionReader[InternalRow] {
-
-  private val mode: PcapFramer.Mode =
-    if (refCompat) PcapFramer.ReferenceCompat else PcapFramer.Sane
-  private val opened = PcapReaderOpen(file, conf, mode, rangeStart, rangeEnd,
-    shard, nShards, buildIndex, ngState)
-  private val in = opened.in
-  private val frames = opened.frames
-  private val ranged = opened.ranged
-  private val base = PcapSource.basename(file)
-  private val baseUtf8 = org.apache.spark.unsafe.types.UTF8String.fromString(base)
-  // same staged plan + unboxed predicates as the columnar reader (the
-  // acc getters are property-pinned value-identical to the PacketRow
-  // getters, so the two readers share one filter semantics)
-  private val plan = DissectPlan.of(required, filters, ffGate)
-  private val predL3 = PcapFilters.compileAcc(plan.l3Filters, base)
-  private val predHigh = PcapFilters.compileAcc(plan.highFilters, base)
-  private val noL3 = plan.l3Filters.isEmpty
-  private val noHigh = plan.highFilters.isEmpty
-  private val stagedResume = plan.baseLevel < plan.levelRequired
-  private val patchMap = patch.map(_.value).orNull
-  private val sourceSchema =
-    if (withBytes) PacketSchema.bytesSchema else PacketSchema.schema
-  // projection map: required ordinal -> source-schema ordinal
-  private val ordinals: Array[Int] =
-    required.fieldNames.map(sourceSchema.fieldIndex)
-  private val identity = ordinals.sameElements(sourceSchema.indices)
-
-  private var current: InternalRow = _
-  private var frameIdx: Long = -1L
-  private val acc = new graft.dissect.DissectAcc
-
-  override def next(): Boolean = {
-    while (frames.hasNext) {
-      val raw = frames.next()
-      frameIdx += 1
-      opened.record()
-      // decode-sharding stride: frames outside this shard are framed
-      // (cheap, sequential-scan bound) but never dissected or
-      // materialized — see PcapScan.planInputPartitions. Range mode owns
-      // every frame in its byte range.
-      val mine = ranged || nShards <= 1 || frameIdx % nShards == shard
-      if (mine) {
-        PacketDissector.dissectInto(acc, raw, walkV6 = !refCompat,
-          level = plan.baseLevel)
-        var emit = noL3 || predL3(acc)
-        if (emit && stagedResume && (!ffGate || DissectPlan.gatePass(acc))) {
-          // same reset-re-evaluation contract as the columnar reader
-          if (PacketDissector.dissectResume(acc, raw.data, plan.levelRequired))
-            emit = noL3 || predL3(acc)
-        }
-        if (emit && patchMap != null) DefragPatch.apply(patchMap, acc)
-        if (emit && !noHigh) emit = predHigh(acc)
-        metrics.foreach { m =>
-          m.packets.add(1L)
-          if (acc.errors > 0) m.errors.add(acc.errors.toLong)
-          // same fused-stats classification as the columnar reader
-          if (m.fragmented != null &&
-              (acc.ipFragOffset > 0 || (acc.ipFragOffset == 0 && acc.ipMf)))
-            m.fragmented.add(1L)
-        }
-        if (emit) {
-          val dissected = acc.toInternalRow(baseUtf8)
-          val fullVals =
-            if (withBytes) dissected.values ++ Array[Any](raw.data, raw.linktype)
-            else dissected.values
-          current =
-            if (identity && !withBytes) dissected
-            else if (identity)
-              new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(fullVals)
-            else {
-              val vals = new Array[Any](ordinals.length)
-              var i = 0
-              while (i < ordinals.length) {
-                vals(i) = fullVals(ordinals(i))
-                i += 1
-              }
-              new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(vals)
-            }
-          return true
-        }
-      }
-    }
-    opened.finish() // fully framed: flush the sidecar (no-op otherwise)
-    false
-  }
-
-  override def get(): InternalRow = current
   override def close(): Unit = in.close()
 }

@@ -59,8 +59,7 @@ private[graft] final class PcapDirectScan(spark: SparkSession, hconf: Configurat
     if (parts == null || parts.exists(stride))
       parts = PcapShardPlan.cut(files, decodePartitions, frameIndex = true, hconf)
     val factory = PcapReaderFactory(conf, required, refCompat, filters,
-      columnar = true, metrics = metrics, ffGate = ffGate, patch = patch,
-      buildIndex = true)
+      metrics, ffGate, patch, buildIndex = true)
     // a columnar DataSourceRDD yields its batches typed as rows, as
     // BatchScanExec's columnar execution reads them
     new DataSourceRDD(sc, parts.toSeq.map(Seq(_)), factory,

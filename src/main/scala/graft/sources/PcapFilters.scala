@@ -3,15 +3,17 @@ package graft.sources
 import org.apache.spark.sql.sources._
 
 import graft.core.PacketRow
+import graft.dissect.DissectAcc
 
 /** Reader-side filter evaluation for the pcap DSv2 source: pushed filters
   * run against the dissected packet *before* materialization, skipping
-  * the row/vector-building cost for dropped packets (e.g. the
-  * fragment-gate `ip_frag_offset = 0` or a `col_protocol = 'DNS'` slice
-  * of a capture). Two value-identical forms of one compiled filter tree:
-  * [[compile]] over the Option-boxed [[PacketRow]] (the row reader) and
-  * [[compileAcc]] over the unboxed [[graft.dissect.DissectAcc]] (the
-  * columnar reader — no per-packet boxing just to test a predicate).
+  * the vector-building cost for dropped packets (e.g. the fragment-gate
+  * `ip_frag_offset = 0` or a `col_protocol = 'DNS'` slice of a
+  * capture). [[compileAcc]] compiles the filter tree over the unboxed
+  * [[graft.dissect.DissectAcc]] the reader fills (no per-packet boxing
+  * just to test a predicate). [[getter]] is the same value domain over
+  * the Option-boxed [[PacketRow]]: the reference the accumulator
+  * getters are property-checked against (DissectorProps).
   * Supported: =, <, <=, >, >=, IN, IsNull / IsNotNull, And/Or/Not over
   * the scalar packet columns.
   */
@@ -54,15 +56,14 @@ object PcapFilters {
   }
 
   /** The same value-domain getters over the UNBOXED dissection
-    * accumulator — the columnar reader's filter path evaluates here
-    * directly, skipping the per-packet Option-boxed PacketRow that
-    * `toPacketRow` materializes (the very allocation the columnar path
-    * exists to avoid). MUST stay value-identical to `getter` composed
+    * accumulator — the reader's filter path evaluates here directly,
+    * skipping the per-packet Option-boxed PacketRow that `toPacketRow`
+    * materializes. MUST stay value-identical to `getter` composed
     * with `DissectAcc.toPacketRow` — pinned per column on fuzzed frames
     * by DissectorProps.
     */
   private[graft] def accGetter(attr: String,
-      pcapFile: String = ""): Option[graft.dissect.DissectAcc => Option[Any]] = {
+      pcapFile: String = ""): Option[DissectAcc => Option[Any]] = {
     import graft.dissect.DissectAcc.{FlagStr, ProtoStr}
     attr match {
       case "frame_time" => None // timestamp comparison left to Spark
@@ -103,14 +104,14 @@ object PcapFilters {
   }
 
   def supported(f: Filter): Boolean = f match {
-    case EqualTo(a, _) => getter(a).isDefined
-    case GreaterThan(a, _) => getter(a).isDefined
-    case GreaterThanOrEqual(a, _) => getter(a).isDefined
-    case LessThan(a, _) => getter(a).isDefined
-    case LessThanOrEqual(a, _) => getter(a).isDefined
-    case In(a, _) => getter(a).isDefined
-    case IsNull(a) => getter(a).isDefined
-    case IsNotNull(a) => getter(a).isDefined
+    case EqualTo(a, _) => accGetter(a).isDefined
+    case GreaterThan(a, _) => accGetter(a).isDefined
+    case GreaterThanOrEqual(a, _) => accGetter(a).isDefined
+    case LessThan(a, _) => accGetter(a).isDefined
+    case LessThanOrEqual(a, _) => accGetter(a).isDefined
+    case In(a, _) => accGetter(a).isDefined
+    case IsNull(a) => accGetter(a).isDefined
+    case IsNotNull(a) => accGetter(a).isDefined
     case And(l, r) => supported(l) && supported(r)
     case Or(l, r) => supported(l) && supported(r)
     case Not(c) => supported(c)
@@ -125,22 +126,14 @@ object PcapFilters {
     case _ => None
   }
 
-  /** Compile to a predicate over the dissected row. Unknown shapes default
-    * to `true` (Spark re-applies all filters anyway — the pushdown is an
-    * optimization, never a correctness dependency).
+  /** Compile to a predicate over the dissection accumulator. Unknown
+    * shapes default to `true` (Spark re-applies all filters anyway — the
+    * pushdown is an optimization, never a correctness dependency; the
+    * convert's [[PcapDirectScan]] pushes only exact ones).
     */
-  def compile(filters: Array[Filter], pcapFile: String): PacketRow => Boolean =
-    compileWith(filters, getter(_, pcapFile))
-
-  /** The columnar reader's form: same filter tree compiled against the
-    * unboxed accumulator — no per-packet PacketRow allocation. */
-  def compileAcc(filters: Array[Filter],
-      pcapFile: String): graft.dissect.DissectAcc => Boolean =
-    compileWith(filters, accGetter(_, pcapFile))
-
-  private def compileWith[R](filters: Array[Filter],
-      getterOf: String => Option[R => Option[Any]]): R => Boolean = {
-    def one(f: Filter): R => Boolean = f match {
+  def compileAcc(filters: Array[Filter], pcapFile: String): DissectAcc => Boolean = {
+    def getterOf(attr: String) = accGetter(attr, pcapFile)
+    def one(f: Filter): DissectAcc => Boolean = f match {
       case EqualTo(a, v) => evalCmp(a, v, _ == 0)
       case GreaterThan(a, v) => evalCmp(a, v, _ > 0)
       case GreaterThanOrEqual(a, v) => evalCmp(a, v, _ >= 0)
@@ -166,7 +159,7 @@ object PcapFilters {
       case Not(c) => val fc = one(c); row => !fc(row)
       case _ => _ => true
     }
-    def evalCmp(attr: String, v: Any, ok: Int => Boolean): R => Boolean =
+    def evalCmp(attr: String, v: Any, ok: Int => Boolean): DissectAcc => Boolean =
       getterOf(attr) match {
         case Some(g) => r => g(r).flatMap(x => cmp(x, v)).exists(ok)
         case None => _ => true

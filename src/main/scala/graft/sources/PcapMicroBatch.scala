@@ -56,7 +56,6 @@ final class PcapMicroBatchStream(
     checkpointLocation: String,
     maxFilesPerTrigger: Option[Int] = None,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    withBytes: Boolean = false,
     strictLanding: Boolean = false,
     retiredRoots: Seq[String] = Seq.empty,
     /** Stride shards per admitted file (round 12): splits each file's
@@ -312,7 +311,7 @@ final class PcapMicroBatchStream(
   override def createReaderFactory(): PartitionReaderFactory =
     // buildIndex: stride shard 0 of a sidecar-less file writes one, so a
     // replay (or a later batch job over the same landing) range-shards
-    PcapReaderFactory(confB, required, refCompat, filters, withBytes,
+    PcapReaderFactory(confB, required, refCompat, filters,
       buildIndex = frameIndex)
 
   override def stop(): Unit = ()

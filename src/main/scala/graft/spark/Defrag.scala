@@ -157,9 +157,14 @@ object Defrag {
     * subtree (which re-parses the whole capture). `ff0` must be shaped
     * exactly like [[firstFragments]]' output (join keys + patched
     * columns).
+    *
+    * The shuffle branch reads the capture twice, once per side of its
+    * bypass split. `joinPcap` (default `pcap`) is the join side's scan:
+    * the same rows, e.g. a scan without the caller's packet counters,
+    * so each packet is counted once.
     */
   def defragWith(pcap: DataFrame, ff0: DataFrame,
-      broadcastFF: Boolean): DataFrame = {
+      broadcastFF: Boolean, joinPcap: Option[DataFrame] = None): DataFrame = {
     val ff = Patched.foldLeft(ff0) { (d, c) =>
       d.withColumnRenamed(c, "__ff_" + c)
     }
@@ -192,7 +197,7 @@ object Defrag {
         Patched.map(col(_).isNull).reduce(_ || _)
       val bypass = pcap.filter(!joinable)
         .select((keep ++ Patched).map(col): _*)
-      bypass.unionByName(enrich(pcap.filter(joinable), ff))
+      bypass.unionByName(enrich(joinPcap.getOrElse(pcap).filter(joinable), ff))
     }
   }
 

@@ -268,7 +268,9 @@ object PcapConvert {
     * more gated pass) and shuffle-join against it — the one branch that
     * plans through Catalyst. The spill is a SIBLING of the output: the
     * writer deletes the output directory before it runs the join that
-    * reads the spill.
+    * reads the spill. The bypass split reads the capture on both of its
+    * sides; only the bypass side's scan carries the progress counters,
+    * so each packet and error is counted once.
     */
   private def shuffleFallback(spark: SparkSession, a: Args, m: PcapSource.Metrics,
       shards: Int, hconf: Configuration): Unit = {
@@ -288,7 +290,8 @@ object PcapConvert {
           .parquet(spill.toString))
       phase(spark, "convert: shuffle write")(PcapColumnarWrite.write(
         Defrag.defragWith(scan("metricsKey" -> metricsKey),
-          spark.read.parquet(spill.toString), broadcastFF = false),
+          spark.read.parquet(spill.toString), broadcastFF = false,
+          joinPcap = Some(scan())),
         a.out, a.compression, singleFile = a.singleFile, rebatch = true))
       ()
     } finally {

@@ -41,31 +41,7 @@ object StreamingDefrag {
       ntp_priv_reqcode: Option[Short], dns_qry_type: Option[Int],
       dns_qry_name: Option[String], col_protocol: Option[String])
 
-  // ---- round 14 (verdict #1): SENTINEL-CODED state machine ------------------
-  // The Option-boxed FragRow encoder allocated up to 10 objects per row
-  // crossing the state shuffle (Some + boxed numerics on deserialize,
-  // again on the emit side). The shuffled row, the carried state, and
-  // the emitted row are now all primitives — -1 = NULL for the numeric
-  // columns (ports/reqcode/qry_type are unsigned on the wire, so -1 is
-  // unreachable), null for the two strings. A codegen'd projection
-  // restores the nullable schema AFTER the state op, where it's one
-  // columnar `when` per column instead of per-row boxing.
-  final case class FragRowS(
-      ip_src: String, ip_dst: String, ip_proto: Short, ip_id: Int,
-      tsu: Long, ip_mf: Boolean, ip_frag_offset: Int,
-      udp_srcport: Int, udp_dstport: Int, ntp_priv_reqcode: Int,
-      dns_qry_type: Int, dns_qry_name: String, col_protocol: String)
-  final case class PatchS(
-      udp_srcport: Int, udp_dstport: Int, ntp_priv_reqcode: Int,
-      dns_qry_type: Int, dns_qry_name: String, col_protocol: String)
-  final case class PatchedRowS(
-      ip_src: String, ip_dst: String, ip_proto: Short, ip_id: Int, tsu: Long,
-      udp_srcport: Int, udp_dstport: Int, ntp_priv_reqcode: Int,
-      dns_qry_type: Int, dns_qry_name: String, col_protocol: String)
-
   private def toPatch(r: FragRow) = Patch(r.udp_srcport, r.udp_dstport,
-    r.ntp_priv_reqcode, r.dns_qry_type, r.dns_qry_name, r.col_protocol)
-  private def toPatchS(r: FragRowS) = PatchS(r.udp_srcport, r.udp_dstport,
     r.ntp_priv_reqcode, r.dns_qry_type, r.dns_qry_name, r.col_protocol)
 
   /** The 13 columns the defrag state machine consumes, from any packet
@@ -76,21 +52,6 @@ object StreamingDefrag {
       col("udp_srcport"), col("udp_dstport"), col("ntp_priv_reqcode"),
       col("dns_qry_type"), col("dns_qry_name"), col("col_protocol"))
 
-  /** The stateful back-fill transform over a (streaming) projected packet
-    * frame — exposed so tests can drive multi-batch triggers around it.
-    *
-    * Round 13: the first-fragment pick is a single-pass MIN under the
-    * full sort key, not a group-wide sort — the old `toSeq.sortBy` over
-    * a 7-tuple of boxed Options allocated ~10 objects per ROW at 100M
-    * packets for an ordering whose only consumer was the min (emitted
-    * row ORDER is no contract: the parquet sink's order was already
-    * partition-arbitrary, and the s07 oracle compares sorted). The pick
-    * itself is unchanged: carried state outranks this batch, then the
-    * least first-fragment row by (tsu, patched… NULLS FIRST) — pinned
-    * ≡ the sortBy reference by StreamingDefragPickProps. `sortless =
-    * false` keeps the old path for the interleaved A/B
-    * (`tools.BenchStreamDefrag`).
-    */
   /** [[defragStateful]] with a BYPASS SPLIT (round-13 experiment, the
     * batch ShuffleBypass's streaming twin): rows that provably cannot
     * change under the back-fill skip the state shuffle entirely and
@@ -106,12 +67,10 @@ object StreamingDefrag {
     * --bypass` before turning it on for a deployment. Default stays
     * the single-scan plan.
     */
-  def defragStatefulSplit(projected: DataFrame,
-      sortless: Boolean = true, sentinel: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.col
+  def defragStatefulSplit(projected: DataFrame): DataFrame = {
     val joinable = col("ip_proto") === 17 &&
       col("ip_src").isNotNull && col("ip_dst").isNotNull
-    val stateful = defragStateful(projected.filter(joinable), sortless, sentinel)
+    val stateful = defragStateful(projected.filter(joinable))
     val bypass = projected.filter(!joinable).select(
       col("ip_src"), col("ip_dst"), col("ip_proto"), col("ip_id"), col("tsu"),
       col("udp_srcport"), col("udp_dstport"), col("ntp_priv_reqcode"),
@@ -119,29 +78,20 @@ object StreamingDefrag {
     stateful.unionByName(bypass)
   }
 
-  /** The stateful back-fill. Round 14 (verdict #1): `sentinel = true`
-    * selects the SENTINEL-CODED implementation — the row crossing the
-    * state shuffle, the carried state, and the emitted row are all
-    * primitives (-1/null = NULL), with a codegen'd `when` projection
-    * restoring the nullable schema after the state op. Output rows and
-    * schema are identical across paths (property-pinned), and the
-    * isolated state-op A/B (`tools.BenchStreamDefrag --batch`) measured
-    * PARITY (17.97/21.77 s vs 18.16/22.50 s at 100M) — the state
-    * shuffle + store dominate, not the encoder. The DEFAULT therefore
-    * stays the rounds-12/13 Option-boxed coding: the sentinel variant
-    * changes the flatMapGroupsWithState STATE SCHEMA (Option[Short] →
-    * Int etc.), and a deployed stream restarting from an existing
-    * checkpoint would die on StateSchemaNotCompatible — the same
-    * compatibility bar the pcap source's offsets honor (legacy forms
-    * still parse). Opt into `sentinel = true` on fresh checkpoints
-    * where allocation pressure matters more than restartability.
+  /** The stateful back-fill transform over a (streaming) projected packet
+    * frame — exposed so tests can drive multi-batch triggers around it.
+    *
+    * The first-fragment pick is a single-pass MIN under the full sort
+    * key ([[ffOrdering]]), not a group-wide sort: emitted row ORDER is
+    * no contract (the parquet sink's order is partition-arbitrary, and
+    * the s07 oracle compares sorted). Carried state outranks this
+    * batch, then the least first-fragment row by (tsu, patched… NULLS
+    * FIRST) — StreamingDefragPickProps pins the pick against a sortBy
+    * reference and the transform against the batch declarative defrag.
+    * State rows are the Option-boxed [[Patch]]: a deployed stream's
+    * checkpointed state schema.
     */
-  def defragStateful(projected: DataFrame, sortless: Boolean = true,
-      sentinel: Boolean = false): DataFrame = {
-    if (sentinel) {
-      require(sortless, "the sentinel path implements only the sortless pick")
-      return defragStatefulSentinel(projected)
-    }
+  def defragStateful(projected: DataFrame): DataFrame = {
     import projected.sparkSession.implicits._
     val fn: (FragKey, Iterator[FragRow], GroupState[Patch]) => Iterator[PatchedRow] =
       (_, rows, state) => {
@@ -152,29 +102,15 @@ object StreamingDefrag {
         // class doc's arrival-order caveat; s07's one-file fixture is
         // single-batch, so its oracle's global pick agrees)
         val carried = state.getOption
-        val (buf, ff) =
-          if (sortless) {
-            val b = new scala.collection.mutable.ArrayBuffer[FragRow]()
-            var best: FragRow = null
-            rows.foreach { r =>
-              b += r
-              if (r.ip_proto == 17 && r.ip_mf && r.ip_frag_offset == 0 &&
-                  (best == null || ffOrdering.compare(r, best) < 0))
-                best = r
-            }
-            (b, carried.orElse(Option(best).map(toPatch)))
-          } else {
-            // the round-12 reference path, kept for the interleaved A/B:
-            // FULL sort key (the batch Defrag.firstFragments tiebreak) —
-            // tsu alone ties for duplicated first fragments at the same
-            // µs; None sorts first, like SQL ASC NULLS FIRST
-            val sorted = rows.toSeq.sortBy(r => (r.tsu, r.udp_srcport,
-              r.udp_dstport, r.ntp_priv_reqcode, r.dns_qry_type,
-              r.dns_qry_name, r.col_protocol))
-            (sorted, carried.orElse(
-              sorted.find(r => r.ip_proto == 17 && r.ip_mf && r.ip_frag_offset == 0)
-                .map(toPatch)))
-          }
+        val buf = new scala.collection.mutable.ArrayBuffer[FragRow]()
+        var best: FragRow = null
+        rows.foreach { r =>
+          buf += r
+          if (r.ip_proto == 17 && r.ip_mf && r.ip_frag_offset == 0 &&
+              (best == null || ffOrdering.compare(r, best) < 0))
+            best = r
+        }
+        val ff = carried.orElse(Option(best).map(toPatch))
         // write state only when it changes — an unconditional update
         // re-serializes the identical patch every batch that touches the
         // key (pure changelog write amplification under RocksDB)
@@ -195,90 +131,11 @@ object StreamingDefrag {
       .toDF()
   }
 
-  /** The round-14 sentinel-coded implementation (see [[defragStateful]]).
-    * Same pick (carried state outranks the batch; least first-fragment
-    * row under [[ffOrderingS]] — the boxed [[ffOrdering]]'s total order
-    * with -1/null standing in for None), same state-update discipline,
-    * same output schema.
-    */
-  private def defragStatefulSentinel(projected: DataFrame): DataFrame = {
-    import projected.sparkSession.implicits._
-    import org.apache.spark.sql.functions.{coalesce, lit, when}
-    val fn: (FragKey, Iterator[FragRowS], GroupState[PatchS]) => Iterator[PatchedRowS] =
-      (_, rows, state) => {
-        val carried = state.getOption
-        val b = new scala.collection.mutable.ArrayBuffer[FragRowS]()
-        var best: FragRowS = null
-        rows.foreach { r =>
-          b += r
-          if (r.ip_proto == 17 && r.ip_mf && r.ip_frag_offset == 0 &&
-              (best == null || ffOrderingS.compare(r, best) < 0))
-            best = r
-        }
-        val ff = carried.orElse(Option(best).map(toPatchS))
-        // write state only when it changes (changelog write amplification)
-        if (carried.isEmpty) ff.foreach(state.update)
-        val p = ff.getOrElse(PatchS(-1, -1, -1, -1, null, null))
-        b.iterator.map { r =>
-          PatchedRowS(r.ip_src, r.ip_dst, r.ip_proto, r.ip_id, r.tsu,
-            if (r.udp_srcport >= 0) r.udp_srcport else p.udp_srcport,
-            if (r.udp_dstport >= 0) r.udp_dstport else p.udp_dstport,
-            if (r.ntp_priv_reqcode >= 0) r.ntp_priv_reqcode else p.ntp_priv_reqcode,
-            if (r.dns_qry_type >= 0) r.dns_qry_type else p.dns_qry_type,
-            if (r.dns_qry_name != null) r.dns_qry_name else p.dns_qry_name,
-            if (r.col_protocol != null) r.col_protocol else p.col_protocol)
-        }
-      }
-    import org.apache.spark.sql.functions.col
-    val coded = projected.select(
-      col("ip_src"), col("ip_dst"), col("ip_proto"), col("ip_id"),
-      col("tsu"), col("ip_mf"), col("ip_frag_offset"),
-      coalesce(col("udp_srcport"), lit(-1)).as("udp_srcport"),
-      coalesce(col("udp_dstport"), lit(-1)).as("udp_dstport"),
-      coalesce(col("ntp_priv_reqcode").cast("int"), lit(-1)).as("ntp_priv_reqcode"),
-      coalesce(col("dns_qry_type"), lit(-1)).as("dns_qry_type"),
-      col("dns_qry_name"), col("col_protocol"))
-    coded.as[FragRowS]
-      .groupByKey(r => FragKey(r.ip_src, r.ip_dst, r.ip_proto, r.ip_id))
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fn)
-      .toDF()
-      .select(
-        col("ip_src"), col("ip_dst"), col("ip_proto"), col("ip_id"), col("tsu"),
-        when(col("udp_srcport") >= 0, col("udp_srcport")).as("udp_srcport"),
-        when(col("udp_dstport") >= 0, col("udp_dstport")).as("udp_dstport"),
-        when(col("ntp_priv_reqcode") >= 0,
-          col("ntp_priv_reqcode").cast("smallint")).as("ntp_priv_reqcode"),
-        when(col("dns_qry_type") >= 0, col("dns_qry_type")).as("dns_qry_type"),
-        col("dns_qry_name"), col("col_protocol"))
-  }
-
-  /** [[ffOrdering]]'s total order over the sentinel coding: -1 / null
-    * sort first, exactly where None sorted. Ports/reqcode/qry_type are
-    * unsigned wire fields, so -1 < any real value by plain Int compare.
-    */
-  private[graft] val ffOrderingS: Ordering[FragRowS] = new Ordering[FragRowS] {
-    @inline private def cmpStr(a: String, b: String): Int =
-      if (a == null && b == null) 0
-      else if (a == null) -1
-      else if (b == null) 1
-      else a.compareTo(b)
-    def compare(a: FragRowS, b: FragRowS): Int = {
-      var c = java.lang.Long.compare(a.tsu, b.tsu)
-      if (c != 0) return c
-      c = Integer.compare(a.udp_srcport, b.udp_srcport); if (c != 0) return c
-      c = Integer.compare(a.udp_dstport, b.udp_dstport); if (c != 0) return c
-      c = Integer.compare(a.ntp_priv_reqcode, b.ntp_priv_reqcode); if (c != 0) return c
-      c = Integer.compare(a.dns_qry_type, b.dns_qry_type); if (c != 0) return c
-      c = cmpStr(a.dns_qry_name, b.dns_qry_name); if (c != 0) return c
-      cmpStr(a.col_protocol, b.col_protocol)
-    }
-  }
-
   /** The full first-fragment sort key as an allocation-free comparator:
     * (tsu, udp_srcport, udp_dstport, ntp_priv_reqcode, dns_qry_type,
-    * dns_qry_name, col_protocol), each Option ASC NULLS FIRST — exactly
-    * the old sortBy tuple's ordering (and Defrag.firstFragments'
-    * min(struct) order).
+    * dns_qry_name, col_protocol), each Option ASC NULLS FIRST — a sortBy
+    * over that tuple's ordering, and Defrag.firstFragments' min(struct)
+    * order.
     */
   private[graft] val ffOrdering: Ordering[FragRow] = new Ordering[FragRow] {
     @inline private def cmpOpt[T](a: Option[T], b: Option[T])(

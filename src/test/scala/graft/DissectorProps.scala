@@ -138,10 +138,10 @@ object DissectorProps extends Properties("dissector") {
   }
 
   property("accGetter \u2261 getter\u2218toPacketRow on every supported column") = forAll(
-    // round-9 review: the columnar reader's filter path evaluates on the
+    // round-9 review: the reader's filter path evaluates on the
     // UNBOXED accumulator (PcapFilters.accGetter); this pins its value
-    // parity with the row reader's PacketRow getters per column across
-    // protocol families, fragments, NTP, and junk bytes
+    // parity with the reference PacketRow getters (PcapFilters.getter)
+    // per column across protocol families, fragments, NTP, and junk bytes
     Gen.oneOf(
       Gen.zip(genPort, genPort, Gen.containerOf[Array, Byte](Gen.chooseNum(-128, 127).map(_.toByte)))
         .map { case (sp, dp, pay) =>

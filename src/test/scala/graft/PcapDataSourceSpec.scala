@@ -76,39 +76,30 @@ class PcapDataSourceSpec extends SparkFunSuite {
     }
   }
 
-  test("columnar scan ≡ row scan on all 31 columns; only bytes mode falls back to rows") {
-    // round-9 verdict #5: the columnar reader fills OnHeapColumnVectors
-    // straight from the dissection accumulator. It must be plan-visible
-    // (ColumnarToRow above the scan), bit-identical to the row reader,
-    // and ABSENT exactly where the row reader is required: bytes mode
-    // (frame_bytes has no vector writer). Pushed filters evaluate
-    // per packet inside the columnar reader too (same PacketRow veto as
-    // the row path), so a filtered slice keeps the columnar speedup.
+  test("columnar scan ≡ PcapSource.read: plain, pruned, filtered, sharded") {
+    // the DSv2 scan reads columnar batches everywhere (ColumnarToRow
+    // above the scan, bytes mode included); its rows must equal the
+    // independent binaryFiles + DissectAcc.toInternalRow path
+    def ref(path: String) = PcapSource.read(spark, path)
+    def sorted(d: org.apache.spark.sql.DataFrame): Seq[String] =
+      d.collect().map(_.toSeq.mkString("|")).toSeq.sorted
     val colDf = spark.read.format("pcap").load(dir)
-    val rowDf = spark.read.format("pcap").option("columnar", "false").load(dir)
     assert(colDf.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
       colDf.queryExecution.executedPlan.toString)
-    assert(!rowDf.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-    val a = colDf.orderBy("frame_time", "pcap_file").collect().toSeq
-    val b = rowDf.orderBy("frame_time", "pcap_file").collect().toSeq
-    assert(a == b && a.size == 6)
-    // sharded + pruned columnar projection agrees with the row path
+    val a = sorted(colDf)
+    assert(a == sorted(ref(dir)) && a.size == 6)
+    // sharded + pruned projection
+    val narrow = Seq("col_protocol", "udp_dstport", "pcap_file")
     val colNarrow = spark.read.format("pcap").option("decodePartitions", 2)
-      .load(dir).select("col_protocol", "udp_dstport", "pcap_file")
-    val rowNarrow = spark.read.format("pcap").option("columnar", "false")
-      .load(dir).select("col_protocol", "udp_dstport", "pcap_file")
-    assert(colNarrow.orderBy("pcap_file", "udp_dstport").collect().toSeq ==
-      rowNarrow.orderBy("pcap_file", "udp_dstport").collect().toSeq)
-    // a pushed filter STAYS columnar and agrees with the row path
+      .load(dir).select(narrow.map(col): _*)
+    assert(sorted(colNarrow) == sorted(ref(dir).select(narrow.map(col): _*)))
+    // a pushed filter stays columnar
     val filtered = spark.read.format("pcap").load(dir)
       .filter(col("udp_dstport") === 53)
     assert(filtered.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
       filtered.queryExecution.executedPlan.toString)
     assert(filtered.count() === 3L)
-    val filteredRows = spark.read.format("pcap").option("columnar", "false")
-      .load(dir).filter(col("udp_dstport") === 53)
-    assert(filtered.orderBy("frame_time", "pcap_file").collect().toSeq ==
-      filteredRows.orderBy("frame_time", "pcap_file").collect().toSeq)
+    assert(sorted(filtered) == sorted(ref(dir).filter(col("udp_dstport") === 53)))
     // a permuted projection with repeated-source columns (col_source
     // and ip_src fill from the same accumulator field) over generated
     // ddos and tcp corpora, sharded and not
@@ -116,22 +107,83 @@ class PcapDataSourceSpec extends SparkFunSuite {
     graft.spark.PcapGen.write(gen.resolve("ddos.pcap").toString, 3000, mix = "ddos")
     graft.spark.PcapGen.write(gen.resolve("tcp.pcap").toString, 3000, mix = "tcp")
     val permuted = Seq("pcap_file", "col_source", "ip_src", "frame_time", "tcp_flags")
-    def sortedRows(d: org.apache.spark.sql.DataFrame): Seq[String] =
-      d.select(permuted.map(col): _*).collect().map(_.toSeq.mkString("|")).toSeq.sorted
-    val rowGen = sortedRows(spark.read.format("pcap").option("columnar", "false")
-      .load(gen.toString))
-    assert(rowGen.size == 6000 && rowGen.exists(_.contains("...A")))
+    val refGen = sorted(ref(gen.toString).select(permuted.map(col): _*))
+    assert(refGen.size == 6000 && refGen.exists(_.contains("...A")))
     Seq(1, 3).foreach { parts =>
       val colGen = spark.read.format("pcap").option("decodePartitions", parts)
-        .load(gen.toString)
-      assert(colGen.select(permuted.map(col): _*).queryExecution.executedPlan
-        .toString.contains("ColumnarToRow"))
-      assert(sortedRows(colGen) == rowGen, s"decodePartitions $parts")
+        .load(gen.toString).select(permuted.map(col): _*)
+      assert(colGen.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+      assert(sorted(colGen) == refGen, s"decodePartitions $parts")
     }
-    // bytes mode keeps the row reader (frame_bytes has no vector writer)
-    val bytes = spark.read.format("pcap").option("bytes", "true").load(dir)
-    assert(!bytes.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-    assert(bytes.select("frame_bytes").collect().forall(_.getAs[Array[Byte]](0).length > 14))
+  }
+
+  test("bytes mode: frame_bytes and linktype ≡ the framer's raw frames") {
+    // legacy pcap and a mixed-linktype pcapng, unsharded, stride-sharded
+    // (no sidecar yet) and range-sharded (the stride read's sidecar)
+    val d = Files.createTempDirectory("dsv2_bytes")
+    val legacy = d.resolve("big.pcap")
+    graft.spark.PcapGen.write(legacy.toString, 30000, 1700000000000000L)
+    val ng = d.resolve("mixed.pcapng")
+    Files.write(ng, pcapngInterleaved(Seq(Left((1, 6)), Left((101, 6))) ++
+      (0 until 30000).map { i =>
+        val ip = ipv4("10.0.0.1", "10.0.0.2", 17,
+          udp(4000, 53, Array.fill[Byte](i % 7)(i.toByte)), id = i & 0xffff)
+        val pkt = if (i % 2 == 0) ethernet(0x0800, ip) else ip
+        Right((i % 2, 1000000L + i, pkt.length, pkt))
+      }))
+    def framed(f: java.nio.file.Path): Seq[String] = {
+      val in = Files.newInputStream(f)
+      try graft.pcapio.PcapFramer.frames(in, graft.pcapio.PcapFramer.Sane)
+        .map(r => s"${r.timeMicros}|${r.linktype}|${r.data.toSeq.mkString(",")}")
+        .toVector.sorted
+      finally in.close()
+    }
+    def scanned(f: java.nio.file.Path, parts: Int): Seq[String] = {
+      val df = spark.read.format("pcap").option("bytes", "true")
+        .option("decodePartitions", parts).load(f.toString)
+        .select(unix_micros(col("frame_time")), col("linktype"), col("frame_bytes"))
+      assert(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+        df.queryExecution.executedPlan.toString)
+      df.collect().map(r => s"${r.getLong(0)}|${r.getInt(1)}|" +
+        r.getAs[Array[Byte]](2).toSeq.mkString(",")).toSeq.sorted
+    }
+    // a boolean compare: 30000 frames would swamp a diffed failure
+    def same(got: Seq[String], want: Seq[String], what: String): Unit = {
+      val ok = got == want
+      assert(ok, s"$what: ${got.size} rows, first mismatch " +
+        got.zip(want).find(p => p._1 != p._2))
+    }
+    for (f <- Seq(legacy, ng)) {
+      val want = framed(f)
+      assert(want.size == 30000)
+      same(scanned(f, 1), want, s"$f unsharded")
+      same(scanned(f, 3), want, s"$f stride")
+      val parts = new graft.sources.PcapScan(Seq(f.toString),
+        graft.core.PacketSchema.bytesSchema, refCompat = false,
+        decodePartitions = 3).planInputPartitions()
+      assert(parts.length == 3 && parts.forall(
+        _.asInstanceOf[graft.sources.PcapInputPartition].rangeStart >= 0),
+        s"$f: the stride read should have written a sidecar that cuts 3 ranges")
+      same(scanned(f, 3), want, s"$f ranges")
+    }
+    assert(framed(ng).map(_.split('|')(1)).toSet == Set("1", "101"))
+    // 60 KB frames: a bytes-mode batch closes at its byte budget, long
+    // before 4096 rows; a pruned scan of the same file does not
+    val jumbo = d.resolve("jumbo.pcap")
+    Files.write(jumbo, legacyPcap((0 until 300).map(i =>
+      (i.toLong, -1, ethernet(0x0800, ipv4("10.0.0.1", "10.0.0.2", 17,
+        udp(1, 2, Array.fill[Byte](60000)(i.toByte))))))))
+    def batchRows(required: org.apache.spark.sql.types.StructType): Seq[Int] = {
+      val r = new graft.sources.PcapColumnarReader(jumbo.toString,
+        spark.sessionState.newHadoopConf(), required, false)
+      try Iterator.continually(r.next()).takeWhile(identity)
+        .map(_ => r.get().numRows()).toVector
+      finally r.close()
+    }
+    val bytesBatches = batchRows(graft.core.PacketSchema.bytesSchema)
+    assert(bytesBatches.sum == 300 && bytesBatches.size == 3 &&
+      bytesBatches.forall(_ <= 140), bytesBatches.toString)
+    assert(batchRows(graft.core.PacketSchema.schema) == Seq(300))
   }
 
   test("glob loads expand; hidden and tmp files are never read as data") {
@@ -251,68 +303,62 @@ class PcapDataSourceSpec extends SparkFunSuite {
     // pruned schema + pushed filters allow; every projected/filtered
     // result must equal the same operation over the full scan
     def fullRows = spark.read.format("pcap").load(stagedDir)
-    for (columnar <- Seq("true", "false")) {
-      def scan = spark.read.format("pcap")
-        .option("columnar", columnar).load(stagedDir)
-      // L3-only projection (defrag stats shape — no transport/L7 work)
-      val l3Cols = Seq("frame_time", "ip_src", "ip_dst", "ip_proto",
-        "ip_frag_offset", "ip_id", "ip_mf")
-      assert(scan.select(l3Cols.map(col): _*).collect().toSeq.sortBy(_.toString) ==
-        fullRows.select(l3Cols.map(col): _*).collect().toSeq.sortBy(_.toString))
-      // L3 filter veto + full projection (resume path)
-      assert(scan.filter(col("ip_proto") === 17).collect().toSeq.sortBy(_.toString) ==
-        fullRows.collect().toSeq.filter(_.getAs[Short]("ip_proto") == 17)
-          .sortBy(_.toString))
-      // transport filter + L7 projection (the DNS-slice shape)
-      val dns = scan.filter(col("udp_dstport") === 53)
-        .select("dns_qry_name", "col_protocol").collect().toSeq.sortBy(_.toString)
-      val dnsRef = fullRows.collect().toSeq
-        .filter(r => !r.isNullAt(r.fieldIndex("udp_dstport")) &&
-          r.getAs[Int]("udp_dstport") == 53)
-        .map(r => org.apache.spark.sql.Row(
-          r.getAs[String]("dns_qry_name"), r.getAs[String]("col_protocol")))
-        .sortBy(_.toString)
-      assert(dns == dnsRef)
-      // mixed L3 + transport filter: L3 conjunct vetoes at L3, the
-      // transport conjunct evaluates post-resume
-      assert(scan.filter(col("ip_proto") === 17 && col("udp_srcport") === 53)
-        .count() == 2) // ff fragment + v6 DNS
-    }
+    def scan = spark.read.format("pcap").load(stagedDir)
+    // L3-only projection (defrag stats shape — no transport/L7 work)
+    val l3Cols = Seq("frame_time", "ip_src", "ip_dst", "ip_proto",
+      "ip_frag_offset", "ip_id", "ip_mf")
+    assert(scan.select(l3Cols.map(col): _*).collect().toSeq.sortBy(_.toString) ==
+      fullRows.select(l3Cols.map(col): _*).collect().toSeq.sortBy(_.toString))
+    // L3 filter veto + full projection (resume path)
+    assert(scan.filter(col("ip_proto") === 17).collect().toSeq.sortBy(_.toString) ==
+      fullRows.collect().toSeq.filter(_.getAs[Short]("ip_proto") == 17)
+        .sortBy(_.toString))
+    // transport filter + L7 projection (the DNS-slice shape)
+    val dns = scan.filter(col("udp_dstport") === 53)
+      .select("dns_qry_name", "col_protocol").collect().toSeq.sortBy(_.toString)
+    val dnsRef = fullRows.collect().toSeq
+      .filter(r => !r.isNullAt(r.fieldIndex("udp_dstport")) &&
+        r.getAs[Int]("udp_dstport") == 53)
+      .map(r => org.apache.spark.sql.Row(
+        r.getAs[String]("dns_qry_name"), r.getAs[String]("col_protocol")))
+      .sortBy(_.toString)
+    assert(dns == dnsRef)
+    // mixed L3 + transport filter: L3 conjunct vetoes at L3, the
+    // transport conjunct evaluates post-resume
+    assert(scan.filter(col("ip_proto") === 17 && col("udp_srcport") === 53)
+      .count() == 2) // ff fragment + v6 DNS
   }
 
   test("dissectGate=first-fragment: ff rows full, others L3-exact with NULL transport/L7") {
-    def gated(columnar: String) = spark.read.format("pcap")
-      .option("_internal.dissectGate", "first-fragment")
-      .option("columnar", columnar).load(stagedDir)
+    def gated = spark.read.format("pcap")
+      .option("_internal.dissectGate", "first-fragment").load(stagedDir)
     val full = spark.read.format("pcap").load(stagedDir).collect()
       .map(r => r.getAs[Long]("frame_time") -> r).toMap
-    for (columnar <- Seq("true", "false")) {
-      val rows = gated(columnar).collect()
-      assert(rows.length == full.size) // the gate never drops rows
-      rows.foreach { r =>
-        val f = full(r.getAs[Long]("frame_time"))
-        val isFf = r.getAs[Short]("ip_proto") == 17 &&
-          r.getAs[Boolean]("ip_mf") && r.getAs[Int]("ip_frag_offset") == 0
-        if (isFf) assert(r == f, s"ff row diverged: $r vs $f")
-        else {
-          // L3 columns exact; transport/L7 columns NULL (or the
-          // non-null-vector defaults) regardless of what full has
-          for (c <- Seq("frame_time", "frame_len", "eth_type", "ip_src",
-            "ip_dst", "ip_proto", "ip_ttl", "ip_frag_offset", "ip_id", "ip_mf"))
-            assert(r.getAs[Any](c) == f.getAs[Any](c), s"L3 col $c diverged")
-          for (c <- Seq("udp_srcport", "udp_dstport", "udp_length",
-            "dns_qry_name", "dns_qry_type", "tcp_srcport", "icmp_type"))
-            assert(r.isNullAt(r.fieldIndex(c)), s"gated row leaked $c: $r")
-          assert(Set("IPv4", "IPv6").contains(r.getAs[String]("col_protocol")))
-        }
+    val rows = gated.collect()
+    assert(rows.length == full.size) // the gate never drops rows
+    rows.foreach { r =>
+      val f = full(r.getAs[Long]("frame_time"))
+      val isFf = r.getAs[Short]("ip_proto") == 17 &&
+        r.getAs[Boolean]("ip_mf") && r.getAs[Int]("ip_frag_offset") == 0
+      if (isFf) assert(r == f, s"ff row diverged: $r vs $f")
+      else {
+        // L3 columns exact; transport/L7 columns NULL (or the
+        // non-null-vector defaults) regardless of what full has
+        for (c <- Seq("frame_time", "frame_len", "eth_type", "ip_src",
+          "ip_dst", "ip_proto", "ip_ttl", "ip_frag_offset", "ip_id", "ip_mf"))
+          assert(r.getAs[Any](c) == f.getAs[Any](c), s"L3 col $c diverged")
+        for (c <- Seq("udp_srcport", "udp_dstport", "udp_length",
+          "dns_qry_name", "dns_qry_type", "tcp_srcport", "icmp_type"))
+          assert(r.isNullAt(r.fieldIndex(c)), s"gated row leaked $c: $r")
+        assert(Set("IPv4", "IPv6").contains(r.getAs[String]("col_protocol")))
       }
-      // the intended consumer shape: the ff aggregate over the gated
-      // scan equals the one over the full scan
-      import graft.spark.Defrag
-      assert(Defrag.firstFragments(gated(columnar)).collect().toSeq.sortBy(_.toString) ==
-        Defrag.firstFragments(spark.read.format("pcap").load(stagedDir))
-          .collect().toSeq.sortBy(_.toString))
     }
+    // the intended consumer shape: the ff aggregate over the gated
+    // scan equals the one over the full scan
+    import graft.spark.Defrag
+    assert(Defrag.firstFragments(gated).collect().toSeq.sortBy(_.toString) ==
+      Defrag.firstFragments(spark.read.format("pcap").load(stagedDir))
+        .collect().toSeq.sortBy(_.toString))
   }
 
   test("frame-index sidecar: range shards ≡ stride shards ≡ plain (round 14)") {
@@ -554,7 +600,7 @@ class PcapDataSourceSpec extends SparkFunSuite {
     // BEFORE dissectResume runs; if resume's never-panic catch resets
     // the accumulator to base fields, the decision must be re-made on
     // the reset row (direct full dissection resets before any filter
-    // evaluates). Drive the readers directly — above the scan Spark
+    // evaluates). Drive the reader directly — above the scan Spark
     // re-applies every residual filter, which would mask a leak.
     import org.apache.spark.sql.sources.EqualTo
     val conf = spark.sessionState.newHadoopConf()
@@ -564,15 +610,9 @@ class PcapDataSourceSpec extends SparkFunSuite {
     graft.dissect.PacketDissector.l7FaultHook =
       () => throw new IllegalStateException("injected L7 fault")
     try {
-      // sanity: staged plan engages (full schema + an L3-only filter)
-      val rr = new graft.sources.PcapPartitionReader(file, conf,
-        graft.core.PacketSchema.schema, false, filt)
-      var leaked = List.empty[Short]
-      while (rr.next()) leaked ::= rr.get().getShort(5)
-      rr.close()
-      // the DNS row resets to base fields (ip_proto 0) → must be dropped
+      // the staged plan engages (full schema + an L3-only filter); the
+      // DNS row resets to base fields (ip_proto 0) → must be dropped
       // like the direct path would; the TCP row fails the filter at L3
-      assert(leaked.isEmpty, s"row reader leaked reset rows: $leaked")
       val cr = new graft.sources.PcapColumnarReader(file, conf,
         graft.core.PacketSchema.schema, false, filt)
       var n = 0

@@ -223,9 +223,9 @@ class PcapNgRangeSpec extends SparkFunSuite {
     def readAll(parts: Array[org.apache.spark.sql.connector.read.InputPartition]): Seq[Long] = {
       val factory = stream.createReaderFactory()
       parts.flatMap { p =>
-        val r = factory.createReader(p)
+        val r = factory.createColumnarReader(p)
         val b = Seq.newBuilder[Long]
-        while (r.next()) b += r.get().getLong(0)
+        while (r.next()) r.get().rowIterator().forEachRemaining(row => b += row.getLong(0))
         r.close()
         b.result()
       }.toSeq.sorted

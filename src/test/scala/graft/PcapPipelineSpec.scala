@@ -384,7 +384,9 @@ class PcapPipelineSpec extends SparkFunSuite {
     import org.apache.spark.sql.catalyst.rules.Rule
     val jobs = new ConcurrentLinkedQueue[String]()
     val sql = new AtomicInteger
-    val packets = scala.collection.concurrent.TrieMap.empty[Long, (Long, Long)]
+    // per progress accumulator (packets, errors): (task-side sum, last value)
+    val counters = Map("pcap_packets" -> scala.collection.mutable.Map.empty[Long, (Long, Long)],
+      "pcap_dissect_errors" -> scala.collection.mutable.Map.empty[Long, (Long, Long)])
     val lsn = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         jobs.add(String.valueOf(Option(js.properties)
@@ -392,12 +394,12 @@ class PcapPipelineSpec extends SparkFunSuite {
       }
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
         if (te.taskInfo != null) te.taskInfo.accumulables.foreach { acc =>
-          if (acc.name.contains("pcap_packets")) acc.update.foreach { u =>
-            packets.synchronized {
-              val sum = packets.get(acc.id).fold(0L)(_._1) + u.toString.toLong
-              packets(acc.id) = (sum, acc.value.fold(-1L)(_.toString.toLong))
+          acc.name.flatMap(counters.get).foreach(byId => acc.update.foreach { u =>
+            byId.synchronized {
+              val sum = byId.get(acc.id).fold(0L)(_._1) + u.toString.toLong
+              byId(acc.id) = (sum, acc.value.fold(-1L)(_.toString.toLong))
             }
-          }
+          })
         }
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
         case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
@@ -418,7 +420,7 @@ class PcapPipelineSpec extends SparkFunSuite {
       exp.extraOptimizations = exp.extraOptimizations.filterNot(_ eq rule)
     }
     PcapPipelineSpec.Traced(jobs.toArray(Array.empty[String]).toSeq, sql.get, optimized.get,
-      packets.toMap)
+      counters("pcap_packets").toMap, counters("pcap_dissect_errors").toMap)
   }
 
   test("every convert branch end to end: output ≡ reference, jobs per branch, no planning off the shuffle fallback") {
@@ -491,24 +493,33 @@ class PcapPipelineSpec extends SparkFunSuite {
         assert(t.packetCounters.size == 1 &&
           t.packetCounters.values.head == (b.reads * n, n), s"${b.name}: $t")
       }
-      // the shuffle fallback: the one branch that plans
+      // the shuffle fallback: the one branch that plans. Its bypass split
+      // reads the capture twice; the progress counters must still count
+      // each packet and each dissect error once, so it also runs on the
+      // fragmented capture plus one malformed (10-byte) frame
+      val badCap = writeTemp("cap_branches_bad.pcap", fragmentedCapture ++
+        legacyPcap(Seq((8000L, -1, Array.fill[Byte](10)(0x42)))).drop(24))
+      assert(spark.read.format("pcap").load(badCap.toString).count() == 8)
       sys.props("graft.defrag.maxBroadcastFF") = "0"
-      val out = s"$dir/shuffle.parquet"
-      val t =
-        try traced(PcapConvert.Args(file = fragCap, out = out, singleFile = false))
-        finally sys.props.remove("graft.defrag.maxBroadcastFF")
-      assert(sc.getLocalProperty("spark.job.description") == "caller")
-      assert(t.jobs.head == "convert: stats" &&
-        t.jobs.contains("convert: ff spill") && t.jobs.last == "convert: shuffle write" &&
-        t.jobs.forall(Set("convert: stats", "convert: ff spill", "convert: shuffle write")),
-        t.toString)
-      assert(t.sqlExecutions > 0, t.toString)
-      val got = spark.read.parquet(out)
-      assert(got.columns.toSeq == defragged)
-      assert(canon(got) == canon(Defrag.defrag(plainScan(fragCap))))
-      // one progress counter pair here too (its count is not pinned: the
-      // bypass split's two scans of the capture both count every packet)
-      assert(t.packetCounters.size == 1, t.toString)
+      try for ((cap, errors) <- Seq(fragCap -> 0L, badCap.toString -> 1L)) {
+        val out = s"$dir/shuffle-$errors.parquet"
+        val t = traced(PcapConvert.Args(file = cap, out = out, singleFile = false))
+        assert(sc.getLocalProperty("spark.job.description") == "caller")
+        assert(t.jobs.head == "convert: stats" &&
+          t.jobs.contains("convert: ff spill") && t.jobs.last == "convert: shuffle write" &&
+          t.jobs.forall(Set("convert: stats", "convert: ff spill", "convert: shuffle write")),
+          t.toString)
+        assert(t.sqlExecutions > 0, t.toString)
+        val got = spark.read.parquet(out)
+        val want = Defrag.defrag(plainScan(cap))
+        assert(got.columns.toSeq == defragged)
+        assert(canon(got) == canon(want))
+        val n = want.count()
+        assert(t.packetCounters.size == 1 &&
+          t.packetCounters.values.head == (n, n), s"shuffle: $t")
+        assert(t.errorCounters.size == 1 &&
+          t.errorCounters.values.head == (errors, errors), s"shuffle: $t")
+      } finally sys.props.remove("graft.defrag.maxBroadcastFF")
     } finally sc.setJobDescription(null)
   }
 
@@ -602,5 +613,6 @@ class PcapPipelineSpec extends SparkFunSuite {
 object PcapPipelineSpec {
   /** What one convert did, read from the listener bus. */
   final case class Traced(jobs: Seq[String], sqlExecutions: Int,
-      optimizerRuns: Int, packetCounters: Map[Long, (Long, Long)])
+      optimizerRuns: Int, packetCounters: Map[Long, (Long, Long)],
+      errorCounters: Map[Long, (Long, Long)])
 }

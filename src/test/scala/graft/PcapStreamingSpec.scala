@@ -92,9 +92,9 @@ class PcapStreamingSpec extends SparkFunSuite {
     def readAll(parts: Array[org.apache.spark.sql.connector.read.InputPartition]): Seq[Long] = {
       val factory = stream.createReaderFactory()
       parts.flatMap { p =>
-        val r = factory.createReader(p)
+        val r = factory.createColumnarReader(p)
         val b = Seq.newBuilder[Long]
-        while (r.next()) b += r.get().getLong(0)
+        while (r.next()) r.get().rowIterator().forEachRemaining(row => b += row.getLong(0))
         r.close()
         b.result()
       }.toSeq.sorted
@@ -463,6 +463,28 @@ class PcapStreamingSpec extends SparkFunSuite {
     assert(rows.length == 2)
     assert(rows.forall(r => r.getAs[Array[Byte]]("frame_bytes").length > 14 &&
       r.getInt(2) == 1))
+  }
+
+  test("micro-batches read columnar batches: ColumnarToRow in lastExecution") {
+    // streaming runs the batch scan's one reader: plain and bytes mode
+    // both plan ColumnarToRow above the pcap micro-batch scan
+    val dir = Files.createTempDirectory("pcapstreamplan")
+    Files.write(dir.resolve("c1.pcap"), capture(1))
+    for (bytes <- Seq(false, true)) {
+      val name = s"pcap_plan_sink_$bytes"
+      val q = spark.readStream.format("pcap").option("bytes", bytes)
+        .load(dir.toString)
+        .writeStream.outputMode("append").format("memory").queryName(name)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination(60000) finally q.stop()
+      val plan = q.asInstanceOf[
+        org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan.toString
+      assert(plan.contains("ColumnarToRow") && plan.contains("PcapScan"),
+        s"bytes=$bytes\n$plan")
+      assert(spark.table(name).count() == 2)
+    }
   }
 
   test("streaming defrag: a continuation fragment in a LATER batch is patched from state") {

@@ -5,11 +5,11 @@ import org.scalacheck.{Gen, Prop, Properties, Test}
 import graft.streaming.StreamingDefrag
 import graft.streaming.StreamingDefrag.FragRow
 
-/** Round-13 pin: the sortless single-pass first-fragment pick equals
-  * the round-12 sortBy reference — and the whole stateful transform
-  * emits the same ROW MULTISET either way (order was never a contract:
-  * the parquet sink's order is partition-arbitrary and the s07 oracle
-  * compares sorted).
+/** The streaming defrag's single-pass first-fragment pick equals a
+  * sortBy reference, and the whole stateful transform (plain and
+  * bypass-split) emits the ROW MULTISET of the batch declarative defrag
+  * over the same rows (order was never a contract: the parquet sink's
+  * order is partition-arbitrary and the s07 oracle compares sorted).
   */
 object StreamingDefragPickProps extends Properties("streaming-defrag-pick") {
 
@@ -45,11 +45,12 @@ object StreamingDefragPickProps extends Properties("streaming-defrag-pick") {
       Prop(viaSort == viaMin) :| s"sort=$viaSort min=$viaMin"
     }
 
-  property("defragStateful sortless ≡ sorted: same row multiset (batch mode)") =
+  property("stateful ≡ batch defrag: same row multiset") =
     Prop.forAll(Gen.chooseNum(1, 4).flatMap(n =>
         Gen.listOfN(n, Gen.zip(Gen.chooseNum(0, 2), genGroup)))) { keyed =>
       val spark = SparkTestBase.spark
       import spark.implicits._
+      import org.apache.spark.sql.functions.col
       // distinct ip_id per generated group index so groups don't merge
       val rows = keyed.zipWithIndex.flatMap { case ((idv, rs), i) =>
         rs.map(_.copy(ip_id = idv * 100 + i))
@@ -57,23 +58,18 @@ object StreamingDefragPickProps extends Properties("streaming-defrag-pick") {
       val df = rows.toDF()
       def canon(d: org.apache.spark.sql.DataFrame): Seq[String] =
         d.collect().map(_.toSeq.map(String.valueOf).mkString("|")).toSeq.sorted
-      // round 14: the sentinel-coded path (opt-in — it changes the
-      // state schema, so the checkpoint-compatible boxed coding stays
-      // the default) vs boxed sortless vs boxed sorted — all three must
-      // emit the same row multiset AND the same schema (the sentinel
-      // path's when()-restore must reproduce the nullable types exactly)
-      val sentinelDf = StreamingDefrag.defragStateful(df, sortless = true,
-        sentinel = true)
-      val boxedDf = StreamingDefrag.defragStateful(df, sortless = true,
-        sentinel = false)
-      val sentinel = canon(sentinelDf)
-      val boxed = canon(boxedDf)
-      val sorted = canon(StreamingDefrag.defragStateful(df, sortless = false,
-        sentinel = false))
+      val stateful = StreamingDefrag.defragStateful(df)
+      // the batch reference: Defrag.firstFragments' min(struct) pick,
+      // then the left join + coalesce, with tsu in frame_time's place
+      val batch = graft.spark.Defrag.defrag(df.withColumnRenamed("tsu", "frame_time"))
+        .withColumnRenamed("frame_time", "tsu")
+        .select(stateful.columns.toSeq.map(col): _*)
+      val want = canon(batch)
       // the bypass split routes non-UDP rows around the state shuffle —
       // same multiset again (the split proof: no UDP row ever bypasses)
+      val got = canon(stateful)
       val split = canon(StreamingDefrag.defragStatefulSplit(df))
-      Prop(sentinel == boxed && sentinel == sorted && split == sentinel &&
-        sentinelDf.schema == boxedDf.schema) :| "multiset/schema diverged"
+      Prop(got == want && split == want) :|
+        s"stateful=$got split=$split batch=$want"
     }
 }
