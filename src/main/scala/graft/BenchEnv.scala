@@ -27,7 +27,7 @@ object BenchEnv {
       "/dev/shm/graft-pcap-bench"
     else "/tmp/graft-pcap-bench"
 
-  /** The ONE stride-shard formula the convert CLI plans (review finding:
+  /** The ONE shard-count formula the convert CLI plans (review finding:
     * four hand-copies had already started drifting — an instrument whose
     * arm reads at a different parallelism than the CLI measures the
     * scan, not the change under test). */
@@ -38,7 +38,7 @@ object BenchEnv {
       spark.sparkContext.defaultParallelism.toDouble / nFiles).toInt))
   }
 
-  /** Stride-sharded pcap read, exactly as the CLI plans it. */
+  /** Range-sharded pcap read, exactly as the CLI plans it. */
   def pcapRead(spark: org.apache.spark.sql.SparkSession,
       glob: String): org.apache.spark.sql.DataFrame =
     spark.read.format("pcap")

@@ -101,7 +101,7 @@ object BenchPcap {
     // 8-file corpus through the multi-root streaming pcap source under
     // Trigger.AvailableNow into the streaming parquet sink — the
     // round-over-round perf signal for the streaming read path
-    // (composite offsets, admission control; round 12: stride-sharded
+    // (composite offsets, admission control; round 12: sharded
     // per-file dissection, same knob as the batch scan — one task per
     // file left 24 of 32 cores idle here).
     val streamShards = math.max(1, math.min(1024,

@@ -5,15 +5,13 @@ import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 
-/** Frame-index SIDECAR for pcap files (round 14, verdict #3; pcapng
-  * round 15, verdict #4).
+/** Frame-index SIDECAR for pcap files (legacy pcap and pcapng).
   *
-  * Stride-sharded reads pay framing N times: pcap has no sync markers,
-  * so each of the N shards re-frames the whole file to find its
-  * `frameIdx % N` stride (~4× framing cost at the bench layout). The
-  * sidecar records the byte offset of every [[Stride]]-th frame, so a
-  * later sharded read can be planned as N CONTIGUOUS byte ranges — each
-  * shard seeks to its range and frames only its 1/N of the bytes.
+  * pcap has no sync markers, so a file can only be cut at byte offsets
+  * where a record is known to start. The index records the byte offset
+  * of every `stride`-th frame, so a sharded read is planned as N
+  * CONTIGUOUS byte ranges: each shard seeks to its range and frames
+  * only its 1/N of the bytes.
   *
   * Containers: legacy pcap is stateless past its 24-byte header, so an
   * offset alone is resumable. pcapng is STATEFUL (SHB resets,
@@ -25,47 +23,51 @@ import org.apache.hadoop.fs.Path
   * (interface state rarely changes), so the ng sidecar stays ~20 B per
   * recorded offset.
   *
-  * Lifecycle: built OPPORTUNISTICALLY by shard 0 of a stride-sharded
-  * scan (it frames the whole file anyway; recording an offset every 8Ki
-  * frames is free) and written atomically (temp + rename) next to the
-  * file under a hidden `.fidx/` dir ([[graft.sources.PcapFileEnum]]
-  * never reads hidden paths as data). A read-only source dir just skips
-  * the write — the stride path remains fully correct, the sidecar is
-  * purely a fast path. The convert's stats pass therefore builds the
-  * index that its own write pass (a second scan of the same files)
-  * consumes. The legacy pcap writer also emits an exact sidecar at
-  * commit ([[graft.sources.PcapWrite]]).
+  * Lifecycle: the sharded-read planner ([[graft.sources.PcapShardPlan]])
+  * reads the sidecar, or, when none is valid, frames the file once on
+  * the driver ([[build]]) and cuts its ranges from that in-memory index.
+  * The index is then written atomically (temp + rename) next to the file
+  * under a hidden `.fidx/` dir ([[graft.sources.PcapFileEnum]] never
+  * reads hidden paths as data); a read-only source dir just skips the
+  * write and the next sharded read frames the file again. Both pcap
+  * writers also emit an exact sidecar at commit
+  * ([[graft.sources.PcapWrite]]), so written output is range-shardable
+  * without that walk.
   *
-  * Validity: the sidecar stores the file length; a mismatch (appended /
-  * rewritten file) invalidates it and the planner falls back to stride.
-  * v2+ appends a CRC32 over the whole payload — a corrupted offset that
+  * Granularity: [[Builder]] records every frame's offset until it holds
+  * [[MaxOffsets]], then drops every other offset and doubles its
+  * stride. So any file with at least n frames cuts n ranges for every
+  * legal `decodePartitions` (≤ 1024), and the sidecar never exceeds
+  * 8192 offsets (~64 KiB).
+  *
+  * Validity: the sidecar stores the file's length and modification
+  * time; a mismatch on either (an appended, truncated or rewritten file,
+  * including a same-length rewrite) invalidates it and the planner
+  * builds it again. A rewrite that keeps both the length and the
+  * filesystem's mtime (within its granularity) is not detected. v2+
+  * appends a CRC32 over the whole payload — a corrupted offset that
   * stays monotone and in-range would otherwise pass the structural
   * checks and seek a range to a non-block boundary, where the Sane
   * framer stops quietly (silent frame loss). Older versions fail the
-  * version check → None → rebuilt on the next stride scan.
-  *
-  * Scale: at 1000 executors the planner reads one ~10 KiB sidecar per
-  * file (driver-side, same cost class as parquet footers) and range
-  * shards replace stride shards — the framing work for a P-way parallel
-  * read of one file drops from P full passes to 1.
+  * version check → None → rebuilt by the next sharded read.
   */
 object FrameIndex {
   private val Magic = 0x46494458 // "FIDX"
-  private val Version = 3
+  private val Version = 4
   private val ContainerLegacy = 0
   private val ContainerNg = 1
 
-  /** Frames per recorded offset: 8Ki frames ≈ 1 MiB of 128 B packets —
-    * fine enough that range skew is ≪1% on any file big enough to shard,
-    * small enough that a 12.5M-frame file's sidecar is ~12 KiB.
+  /** Offsets a [[Builder]] holds at most: at least 4096 after a halving,
+    * so four times the 1024 ranges a read may ask for.
     */
-  val Stride = 8192
+  private val MaxOffsets = 8192
 
   /** `states`/`stateIdx` are null for legacy; for pcapng,
     * `states(stateIdx(i))` is the section state at `offsets(i)`.
     */
   final case class Index(
-      fileLen: Long, frameCount: Long, stride: Int, offsets: Array[Long],
+      fileLen: Long, mtime: Long, frameCount: Long, stride: Int,
+      offsets: Array[Long],
       container: Int = ContainerLegacy,
       states: Array[PcapFramer.NgState] = null,
       stateIdx: Array[Int] = null) {
@@ -81,7 +83,8 @@ object FrameIndex {
     val bos = new ByteArrayOutputStream(16 + 8 * idx.offsets.length)
     val out = new DataOutputStream(bos)
     out.writeByte(idx.container)
-    out.writeLong(idx.fileLen); out.writeLong(idx.frameCount)
+    out.writeLong(idx.fileLen); out.writeLong(idx.mtime)
+    out.writeLong(idx.frameCount)
     out.writeInt(idx.stride); out.writeInt(idx.offsets.length)
     idx.offsets.foreach(out.writeLong)
     if (idx.isNg) {
@@ -109,9 +112,8 @@ object FrameIndex {
     crc.getValue
   }
 
-  /** Read + validate the sidecar; None when absent, stale (length
-    * mismatch), corrupted (CRC), or malformed — callers fall back to
-    * stride sharding.
+  /** Read + validate the sidecar; None when absent, stale (length or
+    * mtime mismatch), corrupted (CRC), or malformed.
     */
   def read(file: Path, conf: Configuration): Option[Index] = try {
     val fs = file.getFileSystem(conf)
@@ -133,11 +135,13 @@ object FrameIndex {
     val container = in.readByte().toInt
     if (container != ContainerLegacy && container != ContainerNg) return None
     val fileLen = in.readLong()
+    val mtime = in.readLong()
     val frameCount = in.readLong()
     val stride = in.readInt()
     val n = in.readInt()
     if (stride <= 0 || n <= 0 || n > frameCount / stride + 1) return None
-    if (fs.getFileStatus(file).getLen != fileLen) return None // stale
+    val st = fs.getFileStatus(file)
+    if (st.getLen != fileLen || st.getModificationTime != mtime) return None // stale
     val offsets = new Array[Long](n)
     var i = 0
     var mono =
@@ -150,7 +154,7 @@ object FrameIndex {
       i += 1
     }
     if (container == ContainerLegacy)
-      return Some(Index(fileLen, frameCount, stride, offsets))
+      return Some(Index(fileLen, mtime, frameCount, stride, offsets))
     val k = in.readInt()
     if (k <= 0 || k > n) return None
     val states = new Array[PcapFramer.NgState](k)
@@ -178,15 +182,17 @@ object FrameIndex {
       if (stateIdx(i) < 0 || stateIdx(i) >= k) return None
       i += 1
     }
-    Some(Index(fileLen, frameCount, stride, offsets, ContainerNg,
+    Some(Index(fileLen, mtime, frameCount, stride, offsets, ContainerNg,
       states, stateIdx))
   } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Atomic best-effort write (temp + rename); failures — read-only dir,
     * concurrent writer won the rename — are silently dropped, the
-    * sidecar is never required for correctness.
+    * sidecar is never required for correctness. An index that cannot
+    * cut two ranges (fewer than 2 frames) is not written.
     */
   def write(file: Path, idx: Index, conf: Configuration): Unit = try {
+    if (idx.offsets.length < 2) return
     val fs = file.getFileSystem(conf)
     val sp = sidecarPath(file)
     val tmp = new Path(sp.getParent,
@@ -201,17 +207,36 @@ object FrameIndex {
     } finally out.close()
     if (!fs.rename(tmp, sp)) {
       // local FS refuses rename onto an existing destination — a STALE
-      // sidecar (length mismatch) must still be replaceable; losing the
-      // race to a concurrent fresh writer just drops the temp
+      // sidecar (length or mtime mismatch) must still be replaceable;
+      // losing the race to a concurrent fresh writer just drops the temp
       fs.delete(sp, false)
       if (!fs.rename(tmp, sp)) fs.delete(tmp, false)
     }
     ()
   } catch { case scala.util.control.NonFatal(_) => () }
 
+  /** Frame `file` once, start to end, into an [[Index]] stamped with the
+    * length and mtime it had before the walk (a file rewritten during
+    * the walk then fails the next [[read]]).
+    */
+  def build(file: Path, conf: Configuration, mode: PcapFramer.Mode): Index = {
+    val fs = file.getFileSystem(conf)
+    val st = fs.getFileStatus(file)
+    val in = fs.open(file)
+    try {
+      val frames = PcapFramer.frames(in, mode)
+      val b = new Builder(ng = frames.hasNext && !frames.isLegacy)
+      while (frames.hasNext) {
+        frames.next()
+        b.record(frames.lastFrameStart, frames.ngState)
+      }
+      b.result(st.getLen, st.getModificationTime)
+    } finally in.close()
+  }
+
   /** Split the file into `n` contiguous frame-aligned byte ranges of
-    * ~equal frame counts. None when the index is too coarse to cut n
-    * real ranges (tiny file — stride sharding is cheap there anyway).
+    * ~equal frame counts. None when n < 2 or the index holds fewer than
+    * n offsets.
     * Range k starts at `offsets(cuts(k))`; for pcapng the matching
     * section state is `stateAt(cuts(k))`.
     */
@@ -243,16 +268,19 @@ object FrameIndex {
       }
     }
 
-  /** Incremental builder a whole-file framing loop feeds: record(off)
-    * per frame — with the section-state snapshot for pcapng — then
-    * [[result]] once EOF was reached. Consecutive identical ng states
-    * dedupe to one stored snapshot.
+  /** Incremental builder a whole-file framing loop (or a writer) feeds:
+    * [[record]] per frame, then [[result]] once EOF was reached. It
+    * keeps every `stride`-th offset, stride 1 until [[MaxOffsets]] are
+    * held; then every other offset is dropped and the stride doubles.
+    * Consecutive identical ng states dedupe to one stored snapshot.
     */
-  final class Builder(val fileLen: Long, ng: Boolean = false) {
-    private val offs = new scala.collection.mutable.ArrayBuffer[Long](64)
+  final class Builder(ng: Boolean) {
+    private val offs = new Array[Long](MaxOffsets)
+    private val stateIdx = if (ng) new Array[Int](MaxOffsets) else null
     private val states =
       new scala.collection.mutable.ArrayBuffer[PcapFramer.NgState](4)
-    private val stateIdx = new scala.collection.mutable.ArrayBuffer[Int](64)
+    private var n = 0
+    private var stride = 1
     private var count = 0L
 
     private def sameState(a: PcapFramer.NgState, b: PcapFramer.NgState): Boolean =
@@ -260,37 +288,57 @@ object FrameIndex {
         java.util.Arrays.equals(a.ifLinktypes, b.ifLinktypes) &&
         java.util.Arrays.equals(a.ifTsresols, b.ifTsresols)
 
-    @inline def record(frameStart: Long): Unit = {
-      require(!ng, "ng builder needs the state snapshot")
-      if (count % Stride == 0) offs += frameStart
-      count += 1
-    }
-
-    /** pcapng record: `state` is only evaluated on stride boundaries. */
-    @inline def recordNg(frameStart: Long, state: => PcapFramer.NgState): Unit = {
-      if (count % Stride == 0) {
-        offs += frameStart
-        val s = state
-        if (states.isEmpty || !sameState(states.last, s)) states += s
-        stateIdx += states.length - 1
+    /** One frame whose record starts at `frameStart`; `state` (pcapng
+      * only, the section state there) is evaluated only when the offset
+      * is kept.
+      */
+    @inline def record(frameStart: Long, state: => PcapFramer.NgState): Unit = {
+      if (count % stride == 0) {
+        if (n == MaxOffsets) halve()
+        offs(n) = frameStart
+        if (ng) {
+          val s = state
+          if (states.isEmpty || !sameState(states.last, s)) states += s
+          stateIdx(n) = states.length - 1
+        }
+        n += 1
       }
       count += 1
     }
 
-    def result(): Index = result(fileLen)
-
-    /** For writers, whose final file length exists only at commit (the
-      * constructor's `fileLen` is then a placeholder 0).
+    /** Keep offsets 0, 2, 4, …; a full builder holds frames 0, s, …,
+      * (MaxOffsets - 1)·s, so the next due frame, MaxOffsets·s, is a
+      * multiple of the doubled stride too.
       */
-    def result(finalLen: Long): Index =
+    private def halve(): Unit = {
+      var i = 0
+      while (2 * i < n) {
+        offs(i) = offs(2 * i)
+        if (ng) stateIdx(i) = stateIdx(2 * i)
+        i += 1
+      }
+      n = i
+      stride *= 2
+      if (ng) { // drop the snapshots no kept offset refers to
+        val kept = new scala.collection.mutable.ArrayBuffer[PcapFramer.NgState](4)
+        var last = -1
+        i = 0
+        while (i < n) {
+          if (stateIdx(i) != last) { last = stateIdx(i); kept += states(last) }
+          stateIdx(i) = kept.length - 1
+          i += 1
+        }
+        states.clear(); states ++= kept
+      }
+    }
+
+    /** `fileLen`/`mtime`: the indexed file's, as [[read]] validates them
+      * (writers know them only after their commit rename).
+      */
+    def result(fileLen: Long, mtime: Long): Index =
       if (ng)
-        Index(finalLen, count, Stride, offs.toArray, ContainerNg,
-          states.toArray, stateIdx.toArray)
-      else Index(finalLen, count, Stride, offs.toArray)
-
-    /** Recorded offsets so far (writers skip the sidecar below 2 — it
-      * cannot cut more than one range).
-      */
-    def offsetCount: Int = offs.length
+        Index(fileLen, mtime, count, stride, offs.take(n), ContainerNg,
+          states.toArray, stateIdx.take(n))
+      else Index(fileLen, mtime, count, stride, offs.take(n))
   }
 }

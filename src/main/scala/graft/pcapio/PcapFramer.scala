@@ -51,7 +51,7 @@ object PcapFramer {
   /** Pre-parsed legacy global header — the state a mid-file range framer
     * needs (legacy pcap is STATELESS past its 24-byte header; pcapng
     * carries SHB/IDB state, which ranges resume via [[NgState]]
-    * snapshots a [[FrameIndex]] sidecar recorded at stride boundaries).
+    * snapshots recorded in the file's [[FrameIndex]]).
     */
   final case class LegacyPreset(bigEndian: Boolean, linktype: Int)
 
@@ -68,8 +68,7 @@ object PcapFramer {
       ifTsresols: Array[Int], lastTsresol: Int) extends Serializable
 
   /** Parse a legacy global header from the file's first ≥24 bytes; None
-    * for pcapng or non-pcap magic (range framing then falls back to the
-    * stride path).
+    * for pcapng or non-pcap magic.
     */
   def legacyPreset(header: Array[Byte]): Option[LegacyPreset] = {
     if (header.length < 24) return None

@@ -25,9 +25,9 @@ import graft.spark.PcapSource
 /** DataSource V2 pcap/pcapng reader: `spark.read.format("pcap").load(path)`.
   *
   * Design (SURVEY §7 "optional DSv2 FileFormat"):
-  *   - one `InputPartition` per file — pcap has no sync markers, so a file
-  *     is the unit of parallelism (§4.3); a 1000-executor cluster reading
-  *     a million captures gets a million independent tasks;
+  *   - one `InputPartition` per file by default (§4.3); a 1000-executor
+  *     cluster reading a million captures gets a million independent
+  *     tasks;
   *   - the reader streams blocks through [[graft.pcapio.PcapFramer]] — no
   *     whole-file buffering, unlike `binaryFiles` (2 GiB ceiling);
   *   - column pruning is honored: pruned columns are dropped at row
@@ -35,10 +35,9 @@ import graft.spark.PcapSource
   *     analytics queries don't pay for DNS-name/UTF8 materialization.
   *
   * Options: `mode=reference-compat` reproduces the reference's EPB quirks
-  * (SURVEY §2.1); `decodePartitions=N` shards each file's DISSECTION
-  * across N partitions (the single-huge-file knob — see
-  * [[PcapScan.planInputPartitions]]; batch reads only, the streaming
-  * source parallelizes by file).
+  * (SURVEY §2.1); `decodePartitions=N` cuts each file into N contiguous
+  * frame-aligned byte ranges, one partition each (the single-huge-file
+  * knob — see [[PcapShardPlan]]; batch and streaming reads alike).
   */
 class PcapDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "pcap"
@@ -161,8 +160,7 @@ final class PcapScanBuilder(options: CaseInsensitiveStringMap)
       Option(options.get("metricsKey")),
       retired,
       ffGate = gate.isDefined,
-      patchKey = Option(options.get("defragPatchKey")),
-      frameIndex = options.getBoolean("frameIndex", true))
+      patchKey = Option(options.get("defragPatchKey")))
   }
 }
 
@@ -177,8 +175,7 @@ final class PcapScan(
     metricsKey: Option[String] = None,
     retiredRoots: Seq[String] = Seq.empty,
     ffGate: Boolean = false,
-    patchKey: Option[String] = None,
-    frameIndex: Boolean = true)
+    patchKey: Option[String] = None)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -191,10 +188,10 @@ final class PcapScan(
     // decodePartitions streams too (round 12 — the rounds-9..11 refusal
     // here was wrong-footed): the unit of ADMISSION CONTROL stays the
     // FILE (offsets, watermarks, maxFilesPerTrigger all unchanged), and
-    // a stride shard only splits one admitted file's DISSECTION within
-    // its planned batch — replay regenerates the identical shard set
-    // from the committed (start, end] file range, so exactly-once is
-    // untouched. This closed the streaming-vs-batch convert gap: one
+    // a range shard only splits one admitted file's framing and
+    // dissection within its planned batch — a replay reads the same
+    // frames from the committed (start, end] file range, so exactly-once
+    // is untouched. This closed the streaming-vs-batch convert gap: one
     // task per file left 24 of 32 cores idle on the 8-file bench corpus.
     // filters ride along, and the required schema carries bytes mode's
     // frame_bytes/linktype columns. Multi-root paths
@@ -202,7 +199,7 @@ final class PcapScan(
     // composite offset (see PcapMicroBatchStream).
     new PcapMicroBatchStream(paths, required, refCompat, checkpointLocation,
       maxFilesPerTrigger, filters, strictLanding, retiredRoots,
-      decodePartitions, frameIndex)
+      decodePartitions)
   }
   override def description(): String =
     s"PcapScan(${paths.mkString(",")}, cols=${required.fieldNames.mkString(",")}" +
@@ -214,20 +211,14 @@ final class PcapScan(
     val files = PcapFileEnum.list(paths, hconf)
     // decodePartitions > 1 = the SINGLE-HUGE-FILE parallelism knob (the
     // DSv2 twin of PcapSource's RDD-path repartition, round-7 verdict
-    // #7): pcap has no sync markers, so a file cannot be byte-split
-    // blindly — by default each of the N shard partitions re-frames the
-    // stream (framing runs ~6× faster than dissection) and DISSECTS only
-    // its `frameIdx % N` stride. Round 14: when a frame-index SIDECAR
-    // exists (built opportunistically by an earlier stride read — see
-    // [[graft.pcapio.FrameIndex]]), the shards become CONTIGUOUS byte
-    // ranges instead: each reader seeks to its range and frames only its
-    // 1/N of the bytes, cutting the N-fold framing cost. The decision is
-    // made HERE on the driver, once per scan — every reader of one file
-    // sees one consistent layout (a reader-side decision could race a
-    // sidecar appearing mid-scan and double- or drop-read frames). For
-    // many small files leave decodePartitions at 1 — per-file pipelining
-    // already saturates.
-    PcapShardPlan.cut(files, decodePartitions, frameIndex, hconf)
+    // #7): pcap has no sync markers, so a file is cut only where its
+    // frame index ([[graft.pcapio.FrameIndex]]) says a record starts —
+    // N contiguous byte ranges, each reader seeking to its range and
+    // framing only its 1/N of the bytes. The cut is made HERE on the
+    // driver, once per scan, so every reader of one file sees one
+    // layout. For many small files leave decodePartitions at 1 —
+    // per-file pipelining already saturates.
+    PcapShardPlan.cut(files, decodePartitions, refCompat, hconf)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -241,8 +232,7 @@ final class PcapScan(
       throw new IllegalArgumentException(
         s"pcap option defragPatchKey: no patch registered under '$k'")))
     PcapReaderFactory(conf, required, refCompat, filters,
-      metricsKey.flatMap(graft.spark.PcapSource.metricsFor), ffGate,
-      patch, buildIndex = frameIndex)
+      metricsKey.flatMap(graft.spark.PcapSource.metricsFor), ffGate, patch)
   }
 }
 
@@ -275,60 +265,84 @@ private[graft] object PcapFileEnum {
 }
 
 /** `rangeStart/rangeEnd >= 0` = a frame-aligned contiguous byte range
-  * from a [[graft.pcapio.FrameIndex]] sidecar (the reader seeks instead
-  * of striding); `-1` = classic `frameIdx % nShards` stride. For pcapng
-  * ranges, `ngState` carries the sidecar's section-state snapshot at
-  * `rangeStart` (round 15); null = legacy range or stride.
+  * cut from the file's [[graft.pcapio.FrameIndex]] (the reader seeks to
+  * it); `-1` = the whole file. For pcapng ranges, `ngState` carries the
+  * index's section-state snapshot at `rangeStart`; null = legacy range
+  * or whole file.
   */
 final case class PcapInputPartition(
-    file: String, shard: Int = 0, nShards: Int = 1,
+    file: String,
     rangeStart: Long = -1L, rangeEnd: Long = -1L,
     ngState: graft.pcapio.PcapFramer.NgState = null) extends InputPartition
 
-/** THE one shard-layout decision, shared by the batch planner and the
-  * streaming `planInputPartitions` (drifting hand copies here would let
-  * the two paths disagree on a file's decomposition): sidecar-planned
-  * contiguous byte ranges when a valid [[graft.pcapio.FrameIndex]]
-  * exists and can cut n real ranges, classic stride otherwise. Always
-  * driver-side — every reader of one file sees one consistent layout.
+/** THE one shard-layout decision, shared by the batch planner, the
+  * streaming `planInputPartitions` and the convert's [[PcapDirectScan]]
+  * (drifting hand copies here would let them disagree on a file's
+  * decomposition). With `decodePartitions` n > 1 each file gets
+  * min(n, frames) contiguous frame-aligned byte ranges, cut from its
+  * [[graft.pcapio.FrameIndex]] sidecar or, when none is valid, from an
+  * index built by framing the file once here on the driver (written
+  * back as the sidecar on a best-effort basis, so a read-only directory
+  * still gets ranges). A file with fewer than 2 frames is one whole-file
+  * partition. Always driver-side — every reader of one file sees one
+  * consistent layout.
   *
   * Streaming replay safety: the committed offset fixes the FILE set; the
   * shard decomposition is an execution detail BELOW the commit
-  * granularity, and both layouts read exactly the file's full frame
-  * multiset (spec-pinned), so a sidecar appearing between a batch's
-  * original attempt and its replay changes task boundaries, never rows —
-  * the file sink commits whole batches, so output stays exactly-once.
+  * granularity, and every cut reads exactly the file's full frame
+  * multiset (spec-pinned), so a replay whose cut differs from its
+  * original attempt's (another `decodePartitions`, a sidecar written in
+  * between) changes task boundaries, never rows — the file sink commits
+  * whole batches, so output stays exactly-once.
   */
 private[sources] object PcapShardPlan {
-  /** Every file's partitions, files in name order: the batch scan's
-    * partition list ([[PcapScan.planInputPartitions]] and the convert's
-    * [[PcapDirectScan]] both cut through here). */
-  def cut(files: Seq[String], decodePartitions: Int, frameIndex: Boolean,
-      hconf: Configuration): Array[InputPartition] =
-    files.sorted.flatMap(f => apply(f, decodePartitions, frameIndex, hconf)).toArray
+  import graft.pcapio.FrameIndex
 
-  def apply(file: String, decodePartitions: Int, frameIndex: Boolean,
+  /** Every file's partitions, in the order of `files`. Files without a
+    * valid sidecar are framed concurrently, on at most one thread per
+    * driver core.
+    */
+  def cut(files: Seq[String], decodePartitions: Int, refCompat: Boolean,
+      hconf: Configuration): Array[InputPartition] = {
+    val mode = if (refCompat) PcapFramer.ReferenceCompat else PcapFramer.Sane
+    if (decodePartitions <= 1) files.map(PcapInputPartition(_): InputPartition).toArray
+    else parmap(files)(ranges(_, decodePartitions, mode, hconf)).flatten.toArray
+  }
+
+  private def ranges(file: String, n: Int, mode: PcapFramer.Mode,
       hconf: Configuration): Seq[InputPartition] = {
-    val ranged =
-      if (decodePartitions > 1 && frameIndex)
-        graft.pcapio.FrameIndex.read(new Path(file), hconf).flatMap { idx =>
-          graft.pcapio.FrameIndex.cutIndices(idx, decodePartitions)
-            .map(cuts => (idx, cuts))
-        }
-      else None
-    ranged match {
-      case Some((idx, cuts)) =>
-        val n = cuts.length
-        (0 until n).map { k =>
-          val start = idx.offsets(cuts(k))
-          val end = if (k == n - 1) idx.fileLen else idx.offsets(cuts(k + 1))
-          val st = if (idx.isNg) idx.stateAt(cuts(k)) else null
-          PcapInputPartition(file, k, n, start, end, st): InputPartition
-        }
-      case None => (0 until decodePartitions).map(i =>
-        PcapInputPartition(file, i, decodePartitions): InputPartition)
+    val path = new Path(file)
+    val idx = FrameIndex.read(path, hconf).getOrElse {
+      val built = FrameIndex.build(path, hconf, mode)
+      FrameIndex.write(path, built, hconf)
+      built
+    }
+    FrameIndex.cutIndices(idx, math.min(n, idx.offsets.length)) match {
+      case None => Seq(PcapInputPartition(file))
+      case Some(cuts) => cuts.indices.map { k =>
+        val end = if (k == cuts.length - 1) idx.fileLen else idx.offsets(cuts(k + 1))
+        val st = if (idx.isNg) idx.stateAt(cuts(k)) else null
+        PcapInputPartition(file, idx.offsets(cuts(k)), end, st): InputPartition
+      }
     }
   }
+
+  /** `xs.map(f)`, concurrently past one element (as Spark's parallel
+    * file listing does); the first failure is rethrown as itself.
+    */
+  private def parmap[A, B](xs: Seq[A])(f: A => B): Seq[B] =
+    if (xs.size <= 1) xs.map(f)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.min(xs.size, Runtime.getRuntime.availableProcessors))
+      try {
+        val futures = xs.map(x => pool.submit(() => f(x)))
+        futures.map { fu =>
+          try fu.get()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        }
+      } finally pool.shutdownNow()
+    }
 }
 
 /** The one pcap partition reader's factory: every batch scan, bytes-mode
@@ -351,8 +365,7 @@ final case class PcapReaderFactory(
     metrics: Option[graft.spark.PcapSource.Metrics] = None,
     ffGate: Boolean = false,
     patch: Option[org.apache.spark.broadcast.Broadcast[
-      DefragPatch.PatchMap]] = None,
-    buildIndex: Boolean = false)
+      DefragPatch.PatchMap]] = None)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     throw new UnsupportedOperationException(
@@ -364,87 +377,7 @@ final case class PcapReaderFactory(
       p: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val pp = p.asInstanceOf[PcapInputPartition]
     new PcapColumnarReader(pp.file, conf.value.value, required, refCompat,
-      filters, pp.shard, pp.nShards, metrics, ffGate, patch,
-      pp.rangeStart, pp.rangeEnd, buildIndex, pp.ngState)
-  }
-}
-
-/** The reader's open-a-pcap-stream logic: whole-file
-  * framing (optionally building the [[graft.pcapio.FrameIndex]] sidecar
-  * when this reader is stride shard 0 and none is valid yet), or a
-  * range-mode seek when the planner assigned a frame-aligned byte range.
-  */
-private[sources] object PcapReaderOpen {
-  import graft.pcapio.{FrameIndex, PcapFramer}
-
-  final class Opened(
-      val in: org.apache.hadoop.fs.FSDataInputStream,
-      val frames: PcapFramer,
-      val ranged: Boolean,
-      var idxBuilder: FrameIndex.Builder,
-      val path: Path,
-      val conf: Configuration) {
-    private var containerChecked = false
-    private var ng = false
-    /** Call right after each frames.next(): feeds the sidecar builder
-      * (whole-file mode only). Legacy records bare offsets; pcapng
-      * (round 15) records offsets + section-state snapshots so ranges
-      * can resume mid-section.
-      */
-    @inline def record(): Unit = if (idxBuilder != null) {
-      if (!containerChecked) {
-        containerChecked = true
-        ng = !frames.isLegacy
-        if (ng) idxBuilder = new FrameIndex.Builder(idxBuilder.fileLen, ng = true)
-      }
-      if (ng) idxBuilder.recordNg(frames.lastFrameStart, frames.ngState)
-      else idxBuilder.record(frames.lastFrameStart)
-    }
-    /** Call when the framer is exhausted: writes the sidecar once. */
-    def finish(): Unit = if (idxBuilder != null && !frames.hasNext) {
-      FrameIndex.write(path, idxBuilder.result(), conf)
-      idxBuilder = null
-    }
-  }
-
-  def apply(file: String, conf: Configuration, mode: PcapFramer.Mode,
-      rangeStart: Long, rangeEnd: Long, shard: Int, nShards: Int,
-      buildIndex: Boolean, ngState: PcapFramer.NgState = null): Opened = {
-    val path = new Path(file)
-    val fs = path.getFileSystem(conf)
-    val in = fs.open(path)
-    if (rangeStart >= 0L && ngState != null) {
-      // pcapng range mode (round 15): seek to the sidecar-recorded block
-      // boundary and resume with its section-state snapshot
-      in.seek(rangeStart)
-      new Opened(in, PcapFramer.framesRangeNg(in, mode, ngState,
-        rangeEnd - rangeStart), ranged = true, null, path, conf)
-    } else if (rangeStart >= 0L) {
-      // range mode: parse the legacy global header, seek to the
-      // frame-aligned range start, frame exactly rangeEnd-rangeStart bytes
-      val hdr = new Array[Byte](PcapFramer.LegacyHeaderLen)
-      in.readFully(0L, hdr)
-      val preset = PcapFramer.legacyPreset(hdr).getOrElse {
-        in.close()
-        throw new IllegalStateException(
-          s"pcap frame-index range read on a non-legacy file: $file " +
-            "(stale sidecar should have been rejected by the length check)")
-      }
-      in.seek(rangeStart)
-      new Opened(in, PcapFramer.framesRange(in, mode, preset,
-        rangeEnd - rangeStart), ranged = true, null, path, conf)
-    } else {
-      // stride mode; shard 0 (which frames the whole file anyway)
-      // opportunistically builds the sidecar a later scan's planner can
-      // turn into ranges — absent or stale (read() validates) only
-      val builder =
-        if (buildIndex && nShards > 1 && shard == 0 &&
-            FrameIndex.read(path, conf).isEmpty)
-          new FrameIndex.Builder(fs.getFileStatus(path).getLen)
-        else null
-      new Opened(in, PcapFramer.frames(in, mode), ranged = false, builder,
-        path, conf)
-    }
+      filters, metrics, ffGate, patch, pp.rangeStart, pp.rangeEnd, pp.ngState)
   }
 }
 
@@ -500,15 +433,12 @@ final class PcapColumnarReader(
     required: StructType,
     refCompat: Boolean,
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
-    shard: Int = 0,
-    nShards: Int = 1,
     metrics: Option[graft.spark.PcapSource.Metrics] = None,
     ffGate: Boolean = false,
     patch: Option[org.apache.spark.broadcast.Broadcast[
       DefragPatch.PatchMap]] = None,
     rangeStart: Long = -1L,
     rangeEnd: Long = -1L,
-    buildIndex: Boolean = false,
     ngState: PcapFramer.NgState = null)
     extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
@@ -519,11 +449,27 @@ final class PcapColumnarReader(
   private val BatchBytes = 8L << 20
   private val mode: PcapFramer.Mode =
     if (refCompat) PcapFramer.ReferenceCompat else PcapFramer.Sane
-  private val opened = PcapReaderOpen(file, conf, mode, rangeStart, rangeEnd,
-    shard, nShards, buildIndex, ngState)
-  private val in = opened.in
-  private val frames = opened.frames
-  private val ranged = opened.ranged
+  private val in = { val p = new Path(file); p.getFileSystem(conf).open(p) }
+  /** The whole file, or the planner's frame-aligned byte range: pcapng
+    * resumes there with the range's section-state snapshot, legacy pcap
+    * with its parsed global header. */
+  private val frames: PcapFramer =
+    if (rangeStart < 0L) PcapFramer.frames(in, mode)
+    else if (ngState != null) {
+      in.seek(rangeStart)
+      PcapFramer.framesRangeNg(in, mode, ngState, rangeEnd - rangeStart)
+    } else {
+      val hdr = new Array[Byte](PcapFramer.LegacyHeaderLen)
+      in.readFully(0L, hdr)
+      val preset = PcapFramer.legacyPreset(hdr).getOrElse {
+        in.close()
+        throw new IllegalStateException(
+          s"pcap range read on a non-legacy file: $file " +
+            "(it changed after the planner indexed it)")
+      }
+      in.seek(rangeStart)
+      PcapFramer.framesRange(in, mode, preset, rangeEnd - rangeStart)
+    }
   private val base = PcapSource.basename(file)
   private val baseUtf8 = org.apache.spark.unsafe.types.UTF8String
     .fromString(base)
@@ -546,11 +492,10 @@ final class PcapColumnarReader(
     vectors.asInstanceOf[Array[org.apache.spark.sql.vectorized.ColumnVector]])
   private val acc = new graft.dissect.DissectAcc
   private var raw: graft.core.RawFrame = _
-  private var frameIdx: Long = -1L
   private var nPackets = 0L
   private var nErrors = 0L
   // fused-stats counting (round 16): when the scan's metrics carry a
-  // fragmented accumulator, every frame in this shard is classified by
+  // fragmented accumulator, every frame in this range is classified by
   // the reference's fragmented predicate (main.rs:274) regardless of
   // pushed-filter vetoes — evaluated on the same post-resume values the
   // old observe-barrier stats saw on emitted rows
@@ -632,49 +577,42 @@ final class PcapColumnarReader(
     var bytes = 0L
     while (n < BatchRows && bytes < BatchBytes && frames.hasNext) {
       raw = frames.next()
-      frameIdx += 1
-      opened.record()
-      // decode-sharding stride: foreign frames are framed (cheap) but
-      // never dissected or materialized. Range mode (frame-index
-      // sidecar) owns EVERY frame in its byte range.
-      if (ranged || nShards <= 1 || frameIdx % nShards == shard) {
-        PacketDissector.dissectInto(acc, raw, walkV6 = !refCompat,
-          level = plan.baseLevel)
-        // L3-decidable pushed filters veto before transport/L7 ever
-        // run; the ff gate holds non-first-fragment rows at L3 (their
-        // transport columns emit NULL — the gate's documented
-        // contract); unknown filter shapes default to true, Spark
-        // re-applies every filter above the scan
-        var emit = noL3 || predL3(acc)
-        if (emit && stagedResume && (!ffGate || DissectPlan.gatePass(acc))) {
-          // a resume whose never-panic catch RESET the accumulator must
-          // re-make the L3 emit decision on the reset row — direct full
-          // dissection resets before any filter evaluates (round-13
-          // ADVICE; pinned by the l7FaultHook scan spec)
-          if (PacketDissector.dissectResume(acc, raw.data, plan.levelRequired))
-            emit = noL3 || predL3(acc)
+      PacketDissector.dissectInto(acc, raw, walkV6 = !refCompat,
+        level = plan.baseLevel)
+      // L3-decidable pushed filters veto before transport/L7 ever
+      // run; the ff gate holds non-first-fragment rows at L3 (their
+      // transport columns emit NULL — the gate's documented
+      // contract); unknown filter shapes default to true, Spark
+      // re-applies every filter above the scan
+      var emit = noL3 || predL3(acc)
+      if (emit && stagedResume && (!ffGate || DissectPlan.gatePass(acc))) {
+        // a resume whose never-panic catch RESET the accumulator must
+        // re-make the L3 emit decision on the reset row — direct full
+        // dissection resets before any filter evaluates (round-13
+        // ADVICE; pinned by the l7FaultHook scan spec)
+        if (PacketDissector.dissectResume(acc, raw.data, plan.levelRequired))
+          emit = noL3 || predL3(acc)
+      }
+      // defrag broadcast-patch BEFORE any transport-level filter: a
+      // filter pushed against the patched scan must see the patched
+      // (defragged) values, like a filter above the join would; rows
+      // already vetoed by the L3 filters never probe (they are never
+      // written — round-13 ADVICE)
+      if (emit && patchMap != null) DefragPatch.apply(patchMap, acc)
+      if (emit && !noHigh) emit = predHigh(acc)
+      nPackets += 1
+      if (countFrag &&
+          (acc.ipFragOffset > 0 || (acc.ipFragOffset == 0 && acc.ipMf)))
+        nFrag += 1
+      if (acc.errors > 0) nErrors += acc.errors.toLong
+      if (emit) {
+        var c = 0
+        while (c < sourceOrds.length) {
+          fill(vectors(c), sourceOrds(c), n)
+          c += 1
         }
-        // defrag broadcast-patch BEFORE any transport-level filter: a
-        // filter pushed against the patched scan must see the patched
-        // (defragged) values, like a filter above the join would; rows
-        // already vetoed by the L3 filters never probe (they are never
-        // written — round-13 ADVICE)
-        if (emit && patchMap != null) DefragPatch.apply(patchMap, acc)
-        if (emit && !noHigh) emit = predHigh(acc)
-        nPackets += 1
-        if (countFrag &&
-            (acc.ipFragOffset > 0 || (acc.ipFragOffset == 0 && acc.ipMf)))
-          nFrag += 1
-        if (acc.errors > 0) nErrors += acc.errors.toLong
-        if (emit) {
-          var c = 0
-          while (c < sourceOrds.length) {
-            fill(vectors(c), sourceOrds(c), n)
-            c += 1
-          }
-          if (withBytes) bytes += raw.data.length
-          n += 1
-        }
+        if (withBytes) bytes += raw.data.length
+        n += 1
       }
     }
     batch.setNumRows(n)
@@ -685,9 +623,6 @@ final class PcapColumnarReader(
       if (m.fragmented != null) { m.fragmented.add(nFrag); nFrag = 0L }
       nPackets = 0L; nErrors = 0L
     }
-    // a fully-framed file flushes the sidecar (no-op unless building or
-    // frames remain); an early close (limit) never writes a partial index
-    if (n < BatchRows) opened.finish()
     n > 0
   }
 

@@ -20,21 +20,15 @@ import graft.spark.PcapSource
   * scan's own input partitions and readers, with no Catalyst analysis,
   * optimisation or physical planning in between. Built once per
   * convert, it takes the listed input files and the session's Hadoop
-  * configuration, cuts the files' partitions with
-  * [[PcapShardPlan]] (the layout [[PcapScan.planInputPartitions]] plans)
-  * and broadcasts one Hadoop configuration that every reader factory
-  * and the convert's writer share. Each [[batches]] call is one
-  * `DataSourceRDD` over a [[PcapReaderFactory]]: the same readers,
-  * metrics accumulators, ff gate, patch broadcast and frame-index
-  * building as a `spark.read.format("pcap")` scan with the same
-  * options, minus the pushed-filter residual (callers push only filters
-  * the reader evaluates exactly).
-  *
-  * Re-cut: a stride-sharded file's shard 0 writes its frame-index
-  * sidecar during the job that reads it, so while the cut holds stride
-  * shards the next [[batches]] call cuts again and a later pass reads
-  * contiguous ranges, as a freshly planned scan would. Once every
-  * multi-shard file is range-cut the cut is reused.
+  * configuration, cuts the files' partitions once with
+  * [[PcapShardPlan]] (the layout [[PcapScan.planInputPartitions]] plans;
+  * every pass of the convert reads the same byte ranges) and broadcasts
+  * one Hadoop configuration that every reader factory and the convert's
+  * writer share. Each [[batches]] call is one `DataSourceRDD` over a
+  * [[PcapReaderFactory]]: the same readers, metrics accumulators, ff
+  * gate and patch broadcast as a `spark.read.format("pcap")` scan with
+  * the same options, minus the pushed-filter residual (callers push
+  * only filters the reader evaluates exactly).
   */
 private[graft] final class PcapDirectScan(spark: SparkSession, hconf: Configuration,
     files: Seq[String], refCompat: Boolean, decodePartitions: Int) {
@@ -42,12 +36,8 @@ private[graft] final class PcapDirectScan(spark: SparkSession, hconf: Configurat
   /** `hconf`, broadcast once for the whole convert. */
   val conf: Broadcast[SerializableConfiguration] =
     sc.broadcast(new SerializableConfiguration(hconf))
-  private var parts: Array[InputPartition] = null
-
-  private def stride(p: InputPartition): Boolean = p match {
-    case pp: PcapInputPartition => pp.nShards > 1 && pp.rangeStart < 0
-    case _ => false
-  }
+  private lazy val parts: Array[InputPartition] =
+    PcapShardPlan.cut(files, decodePartitions, refCompat, hconf)
 
   /** One scan job's batches over `required` (any order of packet-schema
     * columns). `filters` must be exact on the reader's emitted rows: no
@@ -56,10 +46,8 @@ private[graft] final class PcapDirectScan(spark: SparkSession, hconf: Configurat
   def batches(required: StructType, metrics: Option[PcapSource.Metrics],
       filters: Array[Filter] = Array.empty, ffGate: Boolean = false,
       patch: Option[Broadcast[DefragPatch.PatchMap]] = None): RDD[ColumnarBatch] = {
-    if (parts == null || parts.exists(stride))
-      parts = PcapShardPlan.cut(files, decodePartitions, frameIndex = true, hconf)
     val factory = PcapReaderFactory(conf, required, refCompat, filters,
-      metrics, ffGate, patch, buildIndex = true)
+      metrics, ffGate, patch)
     // a columnar DataSourceRDD yields its batches typed as rows, as
     // BatchScanExec's columnar execution reads them
     new DataSourceRDD(sc, parts.toSeq.map(Seq(_)), factory,

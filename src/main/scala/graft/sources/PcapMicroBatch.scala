@@ -58,18 +58,16 @@ final class PcapMicroBatchStream(
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
     strictLanding: Boolean = false,
     retiredRoots: Seq[String] = Seq.empty,
-    /** Stride shards per admitted file (round 12): splits each file's
-      * dissection across N reader tasks WITHIN its planned batch. Pure
-      * execution parallelism — offsets, watermarks, and admission stay
-      * per-file. Round 14: when a frame-index sidecar exists the shards
-      * become contiguous byte ranges ([[PcapShardPlan]]); replay may
-      * therefore regenerate a DIFFERENT decomposition than the original
-      * attempt (a sidecar appeared in between), which is safe — the
-      * committed offset fixes the file set, both layouts read exactly
-      * the file's frame multiset (spec-pinned), and the file sink
-      * commits whole batches. */
-    decodePartitions: Int = 1,
-    frameIndex: Boolean = true)
+    /** Byte-range shards per admitted file ([[PcapShardPlan]]): splits
+      * each file's framing and dissection across N reader tasks WITHIN
+      * its planned batch. Pure execution parallelism — offsets,
+      * watermarks, and admission stay per-file. A replay may cut a
+      * file differently than its original attempt did (another
+      * `decodePartitions` after a restart), which is safe — the
+      * committed offset fixes the file set, every cut reads exactly the
+      * file's frame multiset (spec-pinned), and the file sink commits
+      * whole batches. */
+    decodePartitions: Int = 1)
     extends MicroBatchStream with SupportsTriggerAvailableNow with Logging {
 
   require(paths.nonEmpty, "pcap streaming needs at least one landing root")
@@ -289,7 +287,7 @@ final class PcapMicroBatchStream(
     val listing = listFiles(refresh = false)
     val s = resolve(start.asInstanceOf[PcapOffset], listing)
     val e = resolve(end.asInstanceOf[PcapOffset], listing)
-    paths.flatMap { r =>
+    val files = paths.flatMap { r =>
       val (sm, em) = (s(r), e(r))
       val files = listing(r).filter(n => n > sm.lastName && n <= em.lastName)
       // the count pins the committed range's content: a mismatch means a
@@ -303,16 +301,13 @@ final class PcapMicroBatchStream(
           s"resolves it to ${files.size} — the atomic-rename/monotonic-name " +
           "landing contract was violated; refusing to replay a different " +
           "batch than was committed")
-      files.flatMap(f =>
-        PcapShardPlan(f, decodePartitions, frameIndex, hconf))
-    }.toArray
+      files
+    }
+    PcapShardPlan.cut(files, decodePartitions, refCompat, hconf)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // buildIndex: stride shard 0 of a sidecar-less file writes one, so a
-    // replay (or a later batch job over the same landing) range-shards
-    PcapReaderFactory(confB, required, refCompat, filters,
-      buildIndex = frameIndex)
+    PcapReaderFactory(confB, required, refCompat, filters)
 
   override def stop(): Unit = ()
 }

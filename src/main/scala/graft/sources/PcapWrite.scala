@@ -138,11 +138,9 @@ final class PcapDataWriter(
   // frame-index sidecar, built for free as we write (round 14): the
   // writer knows every record offset exactly, so the output is
   // range-shardable on its very first sharded read (the pcapng writer
-  // emits its stateful twin since round 16 — see PcapNgDataWriter);
-  // skipped for files too small to ever cut ranges.
+  // emits its stateful twin since round 16 — see PcapNgDataWriter)
   private var pos = 24L // global header
-  private var nFrames = 0L
-  private val idxOffsets = new scala.collection.mutable.ArrayBuffer[Long](64)
+  private val idx = new graft.pcapio.FrameIndex.Builder(ng = false)
 
   private def le32(v: Int): Unit = {
     out.write(v & 0xff); out.write((v >>> 8) & 0xff)
@@ -167,8 +165,7 @@ final class PcapDataWriter(
     val orig =
       if (lenIdx >= 0 && !row.isNullAt(lenIdx)) row.getLong(lenIdx).toInt
       else bytes.length
-    if (nFrames % graft.pcapio.FrameIndex.Stride == 0) idxOffsets += pos
-    nFrames += 1
+    idx.record(pos, null)
     pos += 16L + bytes.length
     le32(Math.floorDiv(micros, 1000000L).toInt)
     le32(Math.floorMod(micros, 1000000L).toInt)
@@ -182,10 +179,9 @@ final class PcapDataWriter(
     out.close()
     if (!fs.rename(tmpPath, finalPath))
       throw new java.io.IOException(s"rename $tmpPath -> $finalPath failed")
-    // the sidecar only helps once it can cut >1 range — tiny outputs skip
-    if (idxOffsets.length >= 2)
-      graft.pcapio.FrameIndex.write(finalPath, graft.pcapio.FrameIndex.Index(
-        pos, nFrames, graft.pcapio.FrameIndex.Stride, idxOffsets.toArray), conf)
+    // pos is the exact file length; the mtime is the renamed file's
+    graft.pcapio.FrameIndex.write(finalPath,
+      idx.result(pos, fs.getFileStatus(finalPath).getModificationTime), conf)
     PcapCommitMessage(finalPath.toString)
   }
 
@@ -244,14 +240,14 @@ final class PcapNgDataWriter(
   // indexed): the writer knows every EPB offset AND its own section
   // state exactly (one SHB, lazily-added IDBs, µs tsresol throughout),
   // so written pcapng is range-shardable on its very first sharded read
-  // instead of paying one full stride scan to bootstrap the sidecar
+  // instead of paying the planner's whole-file walk to build the sidecar
   private var pos = 0L
-  private val idx = new graft.pcapio.FrameIndex.Builder(0L, ng = true)
+  private val idx = new graft.pcapio.FrameIndex.Builder(ng = true)
 
   /** Section state a whole-file parse would hold at the CURRENT offset:
     * LE, interfaces in emission order, all at the pcapng default µs
     * tsresol (the writer never emits if_tsresol), so last-IDB-wins is 6
-    * too. Evaluated only on stride boundaries (recordNg is lazy in it).
+    * too. Evaluated only for offsets the index keeps (record is lazy in it).
     */
   private def ngState: graft.pcapio.PcapFramer.NgState =
     graft.pcapio.PcapFramer.NgState(bigEndian = false,
@@ -295,7 +291,7 @@ final class PcapNgDataWriter(
     // so the frame-start offset (and the state snapshot a range resuming
     // here needs) is the position AFTER the IDB landed
     val iface = ifaceFor(lt)
-    idx.recordNg(pos, ngState)
+    idx.record(pos, ngState)
     val pad = (4 - (bytes.length & 3)) & 3
     val blockLen = 32 + bytes.length + pad
     pos += blockLen
@@ -317,10 +313,10 @@ final class PcapNgDataWriter(
     out.close()
     if (!fs.rename(tmpPath, finalPath))
       throw new java.io.IOException(s"rename $tmpPath -> $finalPath failed")
-    // same >1-range gate as the legacy writer; pos is the exact file
-    // length (every SHB/IDB/EPB byte is accounted above)
-    if (idx.offsetCount >= 2)
-      graft.pcapio.FrameIndex.write(finalPath, idx.result(pos), conf)
+    // pos is the exact file length (every SHB/IDB/EPB byte is accounted
+    // above); the mtime is the renamed file's
+    graft.pcapio.FrameIndex.write(finalPath,
+      idx.result(pos, fs.getFileStatus(finalPath).getModificationTime), conf)
     PcapCommitMessage(finalPath.toString)
   }
 

@@ -178,7 +178,7 @@ object PcapConvert {
     val m = PcapSource.metrics(spark)
     // The DSv2 columnar scan (round 9): accumulator fields go straight
     // into OnHeapColumnVectors, and when there are fewer files than
-    // cores each file is stride-sharded so dissection AND the parquet
+    // cores each file is range-sharded so dissection AND the parquet
     // encode parallelize to the full machine. `-j N` sets the total.
     val files = PcapFileEnum.list(Seq(a.file), hconf)
     val want = if (a.jobs > 0) a.jobs else spark.sparkContext.defaultParallelism

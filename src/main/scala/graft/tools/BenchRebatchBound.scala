@@ -2,7 +2,7 @@ package graft.tools
 
 /** Round-13 verdict #4: bound what a columnar broadcast-patch operator
   * could recover on the defrag-convert write. Interleaved arms over the
-  * SAME stride-sharded scan and vector-direct write:
+  * SAME range-sharded scan and vector-direct write:
   *
   *   - `join`: broadcast defrag join from a PRE-BUILT ff spill (built
   *     once, outside timing) — row-shaped plan, so the write re-batches
@@ -15,28 +15,20 @@ package graft.tools
   * remove (it would still pay the hash lookups). Decision rule from the
   * verdict: build the operator only if the gap is ≥15% of the join arm.
   *
-  * Usage: `runMain graft.tools.BenchRebatchBound [fileGlob] [rounds]
-  * [--stride]` — `--stride` disables frame-index sidecars on every arm
-  * (stride is what first reads and sidecar-less layouts actually run;
-  * round 16 used this pair to retire the round-14 probe memo: memo ≡
-  * no-memo within noise on both layouts once the open-addressing probe
-  * landed, so the memo was deleted).
+  * Usage: `runMain graft.tools.BenchRebatchBound [fileGlob] [rounds]`
+  * (round 16 used it to retire the round-14 probe memo: memo ≡ no-memo
+  * within noise once the open-addressing probe landed, so the memo was
+  * deleted).
   */
 object BenchRebatchBound {
   def main(args: Array[String]): Unit = {
     val dir = graft.BenchEnv.pcapCorpusDir()
-    val pos = args.filterNot(_.startsWith("--"))
-    val stride = args.contains("--stride")
-    val glob = pos.headOption.getOrElse(s"$dir/*.pcap")
-    val rounds = if (pos.length > 1) pos(1).toInt else 3
+    val glob = args.headOption.getOrElse(s"$dir/*.pcap")
+    val rounds = if (args.length > 1) args(1).toInt else 3
     val spark = graft.BenchEnv.abSession()
     val out = s"$dir/rebatch-ab.parquet"
     val spill = s"$dir/rebatch-ab.ffspill"
-    def read() = {
-      val r = spark.read.format("pcap")
-        .option("decodePartitions", graft.BenchEnv.pcapShards(spark, glob))
-      (if (stride) r.option("frameIndex", "false") else r).load(glob)
-    }
+    def read() = graft.BenchEnv.pcapRead(spark, glob)
     // ff spill built ONCE, untimed — both timed arms then cost exactly
     // one dissect pass plus their write, so the gap isolates the join +
     // rebatch machinery rather than the stats pass
@@ -75,11 +67,9 @@ object BenchRebatchBound {
           graft.sources.DefragPatch.register(pk, bc)
           try {
             val shards = graft.BenchEnv.pcapShards(spark, glob)
-            var rd = spark.read.format("pcap")
+            val patched = spark.read.format("pcap")
               .option("decodePartitions", shards)
-              .option("defragPatchKey", pk)
-            if (stride) rd = rd.option("frameIndex", "false")
-            val patched = rd.load(glob)
+              .option("defragPatchKey", pk).load(glob)
             require(graft.spark.PcapColumnarWrite.write(patched, out, "zstd",
               singleFile = false, rebatch = true,
               outputOrder = Some(graft.spark.Defrag
@@ -107,7 +97,7 @@ object BenchRebatchBound {
       f"median $pm%.2f s; " +
       f"patchEmpty best $eb%.2f s median $em%.2f s; " +
       f"join→nojoin gap $gapPct%.1f%%, join→patch $patchGapPct%.1f%%")
-    println(f"""{"metric":"rebatch_bound_ab","join_best_s":$jb%.3f,"join_median_s":$jm%.3f,"nojoin_best_s":$nb%.3f,"nojoin_median_s":$nm%.3f,"patch_best_s":$pb%.3f,"patch_median_s":$pm%.3f,"patch_empty_best_s":$eb%.3f,"patch_empty_median_s":$em%.3f,"median_gap_pct":$gapPct%.1f,"patch_gap_pct":$patchGapPct%.1f,"stride":$stride,"glob":"$glob"}""")
+    println(f"""{"metric":"rebatch_bound_ab","join_best_s":$jb%.3f,"join_median_s":$jm%.3f,"nojoin_best_s":$nb%.3f,"nojoin_median_s":$nm%.3f,"patch_best_s":$pb%.3f,"patch_median_s":$pm%.3f,"patch_empty_best_s":$eb%.3f,"patch_empty_median_s":$em%.3f,"median_gap_pct":$gapPct%.1f,"patch_gap_pct":$patchGapPct%.1f,"glob":"$glob"}""")
     graft.TempCleanup.rmrf(new java.io.File(out))
     graft.TempCleanup.rmrf(new java.io.File(spill))
     spark.stop()

@@ -2,7 +2,7 @@ package graft.tools
 
 /** Interleaved A/B over the streaming defrag — landing → stateful
   * back-fill ([[graft.streaming.StreamingDefrag.defragStateful]]) →
-  * parquet sink under AvailableNow, both arms the same stride-sharded
+  * parquet sink under AvailableNow, both arms the same range-sharded
   * read. Rounds MUST interleave (this box drifts ±2× sequentially).
   *
   * `--bypass` runs bypass-split vs plain: the split skips the state

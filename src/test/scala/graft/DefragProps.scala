@@ -276,7 +276,8 @@ object DefragProps extends Properties("defrag") {
   property("fused stats map ≡ build(firstFragments) across files, tasks and ties") = {
     // the map-only argmin must pick firstFragments' row for every key
     // when a key's candidates sit in several files and, at
-    // decodePartitions 3, in several stride tasks of one file
+    // decodePartitions 3, in several range tasks of one file (every
+    // file holds ≥ 3 frames, so each is cut into 3 partitions)
     import graft.sources.DefragPatch
     // no shrinking: each try is three Spark jobs, and shrinking a failing
     // file list took minutes before the report
@@ -288,12 +289,15 @@ object DefragProps extends Properties("defrag") {
       val want = entries(DefragPatch.build(
         Defrag.firstFragments(spark.read.format("pcap").load(dir.toString))))
       val got = Seq(1, 3).map { parts =>
-        entries(fusedMap(spark.read.format("pcap")
+        val df = spark.read.format("pcap")
           .option("decodePartitions", parts)
           .option("_internal.dissectGate", "first-fragment")
-          .load(dir.toString)).map.get)
+          .load(dir.toString)
+        (df.rdd.getNumPartitions, entries(fusedMap(df).map.get))
       }
-      Prop(got.forall(_ == want)) :| s"fused maps $got, want $want"
+      Prop(got.map(_._1) == Seq(files.size, 3 * files.size)) :|
+        s"partitions per (1, 3) shards: ${got.map(_._1)}" &&
+        Prop(got.forall(_._2 == want)) :| s"fused maps $got, want $want"
     }
   }
 
@@ -325,9 +329,11 @@ object DefragProps extends Properties("defrag") {
       def summary(f: Defrag.FusedStats) = (f.total, f.pct, f.ffKeys, entries(f.map.get))
       val results = Seq(1, 3).map { parts =>
         val sm = PcapSource.statsMetrics(spark)
-        val direct = Defrag.statsAndBuild(
-          new graft.sources.PcapDirectScan(spark, hconf, paths, refCompat = false, parts)
-            .firstFragmentRows(sm), sm, Long.MaxValue)
+        val rows = new graft.sources.PcapDirectScan(spark, hconf, paths,
+          refCompat = false, parts).firstFragmentRows(sm)
+        require(rows.getNumPartitions == parts * paths.size,
+          s"$parts shards: ${rows.getNumPartitions} partitions over ${paths.size} files")
+        val direct = Defrag.statsAndBuild(rows, sm, Long.MaxValue)
         val sm2 = PcapSource.statsMetrics(spark)
         val key = java.util.UUID.randomUUID().toString
         PcapSource.registerMetrics(key, sm2)

@@ -24,6 +24,7 @@ object FrameIndexProps extends Properties("frame-index") {
     val offs = gaps.scanLeft(graft.pcapio.PcapFramer.LegacyHeaderLen.toLong)(_ + _).toArray
     FrameIndex.Index(
       fileLen = offs.last + 1 + tailBytes,
+      mtime = 0L,
       frameCount = (nOffs - 1).toLong * stride + 1 + tailFrames,
       stride = stride,
       offsets = offs)
@@ -50,5 +51,31 @@ object FrameIndexProps extends Properties("frame-index") {
           Prop(rs.length == n && contiguous && bounds && monotone && aligned) :|
             s"bad ranges for n=$n offsets=${idx.offsets.length}: ${rs.take(4).mkString(",")}"
       }
+    }
+
+  property("builder keeps every stride-th frame: ≥ min(frames, 4096) offsets, states in step") =
+    Prop.forAll(Gen.chooseNum(0, 100000), Gen.listOf(Gen.chooseNum(0, 100000)),
+      Gen.oneOf(false, true)) { (frames, changes, ng) =>
+      // frame i starts at 24 + 10·i; its pcapng section state is the
+      // number of state changes at or before it, as a linktype
+      val changeAt = changes.toSet
+      val b = new FrameIndex.Builder(ng)
+      var state = 0
+      (0 until frames).foreach { i =>
+        if (changeAt(i)) state += 1
+        val s = state
+        b.record(24L + 10L * i, graft.pcapio.PcapFramer.NgState(false, Array(s), Array(6), 6))
+      }
+      val idx = b.result(24L + 10L * frames, 0L)
+      val n = idx.offsets.length
+      def stateOf(frame: Long) = changes.distinct.count(_ <= frame)
+      val offsetsOk = idx.offsets.indices.forall(k =>
+        idx.offsets(k) == 24L + 10L * k * idx.stride)
+      val statesOk = !ng || (idx.states.length <= n && idx.offsets.indices.forall(k =>
+        idx.stateAt(k).ifLinktypes.toSeq == Seq(stateOf(k.toLong * idx.stride))))
+      Prop(idx.frameCount == frames && idx.isNg == ng && offsetsOk && statesOk &&
+        n == (frames + idx.stride - 1) / idx.stride &&
+        n <= 8192 && n >= math.min(frames, 4096)) :|
+        s"frames=$frames stride=${idx.stride} offsets=$n ng=$ng states=${Option(idx.states).map(_.length)}"
     }
 }

@@ -26,6 +26,17 @@ class PcapDataSourceSpec extends SparkFunSuite {
     d.toString
   }
 
+  /** The scan's planned partitions for `f`, asserting every one is a
+    * byte range. */
+  private def rangeParts(f: String, n: Int,
+      refCompat: Boolean = false): Seq[graft.sources.PcapInputPartition] = {
+    val parts = new graft.sources.PcapScan(Seq(f), graft.core.PacketSchema.schema,
+      refCompat, decodePartitions = n).planInputPartitions()
+      .map(_.asInstanceOf[graft.sources.PcapInputPartition]).toSeq
+    assert(parts.forall(_.rangeStart >= 0), s"$f: not all ranges: $parts")
+    parts
+  }
+
   test("format(pcap): schema and content match the binaryFiles source") {
     val dsv2 = spark.read.format("pcap").load(dir)
     assert(dsv2.schema == graft.core.PacketSchema.schema)
@@ -42,10 +53,9 @@ class PcapDataSourceSpec extends SparkFunSuite {
   }
 
   test("decodePartitions shards one big file's dissection, same row multiset") {
-    // the single-huge-file knob (round-7 verdict #7): a lone capture
-    // cannot be byte-split (no sync markers), so each of the N shard
-    // partitions re-frames the stream and dissects only its stride —
-    // the DSv2 twin of PcapSource.read's decodePartitions repartition
+    // the single-huge-file knob (round-7 verdict #7): a lone capture is
+    // cut into N frame-aligned byte ranges from its frame index — the
+    // DSv2 twin of PcapSource.read's decodePartitions repartition
     val d = Files.createTempDirectory("dsv2_big")
     val frames = (0 until 999).map { i =>
       (10000L + i,
@@ -118,8 +128,9 @@ class PcapDataSourceSpec extends SparkFunSuite {
   }
 
   test("bytes mode: frame_bytes and linktype ≡ the framer's raw frames") {
-    // legacy pcap and a mixed-linktype pcapng, unsharded, stride-sharded
-    // (no sidecar yet) and range-sharded (the stride read's sidecar)
+    // legacy pcap and a mixed-linktype pcapng, unsharded, then range-
+    // sharded twice: the first sharded read cuts from the planner's own
+    // walk (no sidecar yet), the second from the sidecar it wrote
     val d = Files.createTempDirectory("dsv2_bytes")
     val legacy = d.resolve("big.pcap")
     graft.spark.PcapGen.write(legacy.toString, 30000, 1700000000000000L)
@@ -153,18 +164,18 @@ class PcapDataSourceSpec extends SparkFunSuite {
       assert(ok, s"$what: ${got.size} rows, first mismatch " +
         got.zip(want).find(p => p._1 != p._2))
     }
+    val hconf = spark.sessionState.newHadoopConf()
     for (f <- Seq(legacy, ng)) {
       val want = framed(f)
       assert(want.size == 30000)
       same(scanned(f, 1), want, s"$f unsharded")
-      same(scanned(f, 3), want, s"$f stride")
-      val parts = new graft.sources.PcapScan(Seq(f.toString),
-        graft.core.PacketSchema.bytesSchema, refCompat = false,
-        decodePartitions = 3).planInputPartitions()
-      assert(parts.length == 3 && parts.forall(
-        _.asInstanceOf[graft.sources.PcapInputPartition].rangeStart >= 0),
-        s"$f: the stride read should have written a sidecar that cuts 3 ranges")
-      same(scanned(f, 3), want, s"$f ranges")
+      val p = new org.apache.hadoop.fs.Path(f.toString)
+      assert(graft.pcapio.FrameIndex.read(p, hconf).isEmpty)
+      assert(rangeParts(f.toString, 3).length == 3, s"$f: cold plan")
+      same(scanned(f, 3), want, s"$f ranges, planner walk")
+      assert(graft.pcapio.FrameIndex.read(p, hconf).isDefined,
+        s"$f: the planner should have written the sidecar")
+      same(scanned(f, 3), want, s"$f ranges, sidecar")
     }
     assert(framed(ng).map(_.split('|')(1)).toSet == Set("1", "101"))
     // 60 KB frames: a bytes-mode batch closes at its byte budget, long
@@ -361,50 +372,32 @@ class PcapDataSourceSpec extends SparkFunSuite {
         .collect().toSeq.sortBy(_.toString))
   }
 
-  test("frame-index sidecar: range shards ≡ stride shards ≡ plain (round 14)") {
-    // a stride-sharded read of a legacy pcap re-frames the file N times;
-    // shard 0 opportunistically writes a .fidx sidecar, and the NEXT
-    // sharded scan is planned as contiguous frame-aligned byte ranges —
-    // same row multiset, 1/N the framing
+  test("frame-index: the first sharded read plans ranges and writes the sidecar; stale ones are rebuilt") {
+    // a sidecar-less legacy pcap is framed once by the planner, which
+    // cuts contiguous frame-aligned byte ranges from that index and
+    // writes it as a .fidx sidecar for the next read — same row multiset
+    // as the plain read, 1/N of the framing per task
     val d = Files.createTempDirectory("fidx")
     val f = d.resolve("big.pcap").toString
     graft.spark.PcapGen.write(f, 100000, 1700000000000000L)
-    val plain = spark.read.format("pcap").load(f)
-      .orderBy("frame_time", "ip_id", "ip_frag_offset").collect().toSeq
-    // 1st sharded read: stride mode (no sidecar yet), builds it
-    val sharded1 = spark.read.format("pcap").option("decodePartitions", 8)
-      .load(f).orderBy("frame_time", "ip_id", "ip_frag_offset").collect().toSeq
-    assert(sharded1 == plain)
     val hconf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(f)
+    val plain = spark.read.format("pcap").load(f)
+      .orderBy("frame_time", "ip_id", "ip_frag_offset").collect().toSeq
+    assert(graft.pcapio.FrameIndex.read(p, hconf).isEmpty)
+    // the FIRST sharded plan already cuts 8 ranges
+    assert(rangeParts(f, 8).length == 8)
     val idx = graft.pcapio.FrameIndex.read(p, hconf)
-    assert(idx.isDefined, "stride shard 0 should have written the sidecar")
+    assert(idx.isDefined, "the planner should have written the sidecar")
     assert(idx.get.frameCount == 100000L)
-    // the planner now assigns ranges (assert on the partitions directly)
-    val parts = new graft.sources.PcapScan(Seq(f),
-      graft.core.PacketSchema.schema, refCompat = false,
-      decodePartitions = 8).planInputPartitions()
-    assert(parts.length == 8)
-    assert(parts.forall(_.asInstanceOf[graft.sources.PcapInputPartition]
-      .rangeStart >= 0), "expected range-mode partitions with a sidecar")
-    // 2nd sharded read (range mode): identical multiset, real parallelism
-    val sharded2df = spark.read.format("pcap").option("decodePartitions", 8).load(f)
-    val perPart = sharded2df.rdd.mapPartitions(it => Iterator(it.size)).collect()
+    val sharded = spark.read.format("pcap").option("decodePartitions", 8).load(f)
+    val perPart = sharded.rdd.mapPartitions(it => Iterator(it.size)).collect()
     assert(perPart.length == 8 && perPart.forall(_ > 0), perPart.mkString(","))
     assert(perPart.sum == 100000)
-    assert(sharded2df.orderBy("frame_time", "ip_id", "ip_frag_offset")
+    assert(sharded.orderBy("frame_time", "ip_id", "ip_frag_offset")
       .collect().toSeq == plain)
-    // frameIndex=false forces the stride path even with a sidecar present
-    val strideParts = new graft.sources.PcapScan(Seq(f),
-      graft.core.PacketSchema.schema, refCompat = false,
-      decodePartitions = 8, frameIndex = false).planInputPartitions()
-    assert(strideParts.forall(_.asInstanceOf[graft.sources.PcapInputPartition]
-      .rangeStart < 0))
-    assert(spark.read.format("pcap").option("decodePartitions", 8)
-      .option("frameIndex", "false").load(f)
-      .orderBy("frame_time", "ip_id", "ip_frag_offset").collect().toSeq == plain)
-    // STALE sidecar (file grew): ignored, stride still correct, and the
-    // next sharded read REPLACES it
+    // STALE sidecar (file grew): ignored, the planner walks the new file,
+    // cuts it correctly and REPLACES the sidecar
     val grown = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(f))
     graft.spark.PcapGen.write(f, 120000, 1700000000000000L)
     assert(java.nio.file.Files.size(java.nio.file.Paths.get(f)) != grown.length)
@@ -426,64 +419,106 @@ class PcapDataSourceSpec extends SparkFunSuite {
     assert(dnsRange == dnsPlain && dnsPlain.nonEmpty)
   }
 
-  test("frame-index: tiny files and pcapng fall back to stride; read-only dirs just skip") {
-    // tiny legacy file: too few frames for 8 real ranges → builder may
-    // write a sidecar but the planner falls back to stride
+  test("frame-index: a same-length in-place rewrite invalidates the sidecar") {
+    // the sidecar once checked only the file's length: merging one
+    // record into the next in place keeps the length but moves a frame
+    // boundary, and a range cut at the stale offset re-read the
+    // swallowed record as a frame of its own (same count, wrong rows)
+    val d = Files.createTempDirectory("fidx_rewrite")
+    val f = d.resolve("tcp.pcap")
+    graft.spark.PcapGen.write(f.toString, 40000, mix = "tcp")
+    val hconf = spark.sessionState.newHadoopConf()
+    val p = new org.apache.hadoop.fs.Path(f.toString)
+    def stats(parts: Int) = spark.read.format("pcap")
+      .option("decodePartitions", parts).load(f.toString)
+      .agg(count(lit(1)), sum("frame_len")).head()
+    assert(stats(3) == stats(1)) // writes the sidecar
+    assert(graft.pcapio.FrameIndex.read(p, hconf).isDefined)
+    val len = Files.size(f)
+    Thread.sleep(1100) // past a whole-second mtime granularity
+    // merge record 16383 into 16384: its caplen and origlen grow by
+    // record 16384's header + data
+    val raf = new java.io.RandomAccessFile(f.toFile, "rw")
+    try {
+      def le32(at: Long): Int = {
+        val b = new Array[Byte](4)
+        raf.seek(at); raf.readFully(b)
+        java.nio.ByteBuffer.wrap(b).order(java.nio.ByteOrder.LITTLE_ENDIAN).getInt
+      }
+      var at = 24L
+      (0 until 16383).foreach(_ => at += 16 + le32(at + 8))
+      val merged = le32(at + 8) + 16 + le32(at + 16 + le32(at + 8) + 8)
+      val b = java.nio.ByteBuffer.allocate(8).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .putInt(merged).putInt(merged).array()
+      raf.seek(at + 8); raf.write(b)
+    } finally raf.close()
+    assert(Files.size(f) == len)
+    val whole = stats(1)
+    assert(whole.getLong(0) == 39999L)
+    assert(stats(3) == whole, "a range cut from the stale sidecar")
+    assert(graft.pcapio.FrameIndex.read(p, hconf).exists(_.frameCount == 39999L),
+      "the planner should have rebuilt the sidecar")
+  }
+
+  test("frame-index: files with fewer frames than shards cut one range per frame; read-only dirs get ranges and no sidecar") {
     val d = Files.createTempDirectory("fidx2")
+    val hconf = spark.sessionState.newHadoopConf()
+    def sidecar(f: String) =
+      graft.pcapio.FrameIndex.read(new org.apache.hadoop.fs.Path(f), hconf)
+    // 5 frames at 8 shards: 5 one-frame ranges, in both framer modes
     val tiny = d.resolve("tiny.pcap").toString
-    graft.spark.PcapGen.write(tiny, 500, 1700000000000000L)
-    val plainTiny = spark.read.format("pcap").load(tiny)
-      .orderBy("frame_time", "ip_id").collect().toSeq
-    (1 to 2).foreach { _ =>
-      assert(spark.read.format("pcap").option("decodePartitions", 8).load(tiny)
-        .orderBy("frame_time", "ip_id").collect().toSeq == plainTiny)
+    graft.spark.PcapGen.write(tiny, 5, 1700000000000000L)
+    for (mode <- Seq("sane", "reference-compat")) {
+      def read(parts: Int) = spark.read.format("pcap").option("mode", mode)
+        .option("decodePartitions", parts).load(tiny)
+        .orderBy("frame_time", "ip_id").collect().toSeq
+      assert(rangeParts(tiny, 8, refCompat = mode != "sane").length == 5)
+      assert(read(8) == read(1), mode)
     }
-    val partsTiny = new graft.sources.PcapScan(Seq(tiny),
-      graft.core.PacketSchema.schema, refCompat = false,
-      decodePartitions = 8).planInputPartitions()
-    assert(partsTiny.forall(_.asInstanceOf[graft.sources.PcapInputPartition]
-      .rangeStart < 0), "500 frames cannot cut 8 ranges")
-    // tiny pcapng (round 15: ng builds sidecars too — with section-state
-    // snapshots): the sidecar exists but can never cut >1 range, so the
-    // planner still strides
-    val ng = d.resolve("ng.pcapng")
+    // pcapng: 3 frames at 8 shards cut 3 stateful ranges; a 1-frame file
+    // cannot be cut and stays one whole-file partition, with no sidecar
     val ngPkt = ethernet(0x0800,
       ipv4("10.0.0.1", "10.0.0.2", 17, udp(1, 2, Array[Byte](0))))
-    Files.write(ng, pcapng(Seq((1, 6)),
+    val ng3 = d.resolve("ng3.pcapng").toString
+    Files.write(java.nio.file.Paths.get(ng3), pcapng(Seq((1, 6)),
+      (0 until 3).map(i => (0, 1000L + i, ngPkt.length, ngPkt))))
+    val ng3Parts = rangeParts(ng3, 8)
+    assert(ng3Parts.length == 3 && ng3Parts.forall(_.ngState != null))
+    assert(spark.read.format("pcap").option("decodePartitions", 8).load(ng3)
+      .collect().toSeq.sortBy(_.toString) ==
+      spark.read.format("pcap").load(ng3).collect().toSeq.sortBy(_.toString))
+    val ng1 = d.resolve("ng1.pcapng").toString
+    Files.write(java.nio.file.Paths.get(ng1), pcapng(Seq((1, 6)),
       Seq((0, 1000L, ngPkt.length, ngPkt))))
-    (1 to 2).foreach { _ =>
-      assert(spark.read.format("pcap").option("decodePartitions", 2)
-        .load(ng.toString).count() == 1L)
-    }
-    val ngIdx = graft.pcapio.FrameIndex.read(
-      new org.apache.hadoop.fs.Path(ng.toString),
-      spark.sessionState.newHadoopConf())
-    assert(ngIdx.isDefined && ngIdx.get.isNg && ngIdx.get.frameCount == 1L)
-    val ngParts = new graft.sources.PcapScan(Seq(ng.toString),
+    val ng1Parts = new graft.sources.PcapScan(Seq(ng1),
       graft.core.PacketSchema.schema, refCompat = false,
       decodePartitions = 2).planInputPartitions()
-    assert(ngParts.forall(_.asInstanceOf[graft.sources.PcapInputPartition]
-      .rangeStart < 0), "1 frame cannot cut 2 ranges")
-    // unwritable destination: the sidecar write must silently skip and
-    // the read succeed (tests run as root, which ignores permission
-    // bits — block the write by occupying .fidx with a plain FILE, so
-    // mkdirs fails for any uid)
+    assert(ng1Parts.length == 1 && ng1Parts.forall(
+      _.asInstanceOf[graft.sources.PcapInputPartition].rangeStart < 0))
+    assert(spark.read.format("pcap").option("decodePartitions", 2)
+      .load(ng1).count() == 1L)
+    assert(sidecar(ng1).isEmpty, "a 1-frame index is not worth a sidecar")
+    // unwritable destination: the sidecar write silently skips, the
+    // planner still cuts ranges from its in-memory index (tests run as
+    // root, which ignores permission bits — block the write by
+    // occupying .fidx with a plain FILE, so mkdirs fails for any uid)
     val ro = Files.createTempDirectory("fidx_ro")
     val rof = ro.resolve("ro.pcap").toString
     graft.spark.PcapGen.write(rof, 20000, 1700000000000000L)
     Files.write(ro.resolve(".fidx"), Array[Byte](1))
-    assert(spark.read.format("pcap").option("decodePartitions", 4)
-      .load(rof).count() == 20000L)
-    assert(graft.pcapio.FrameIndex.read(
-      new org.apache.hadoop.fs.Path(rof),
-      spark.sessionState.newHadoopConf()).isEmpty)
+    assert(rangeParts(rof, 4).length == 4)
+    val roRead = spark.read.format("pcap").option("decodePartitions", 4).load(rof)
+    assert(roRead.rdd.getNumPartitions == 4)
+    assert(roRead.orderBy("frame_time", "ip_id").collect().toSeq ==
+      spark.read.format("pcap").load(rof).orderBy("frame_time", "ip_id").collect().toSeq)
+    assert(sidecar(rof).isEmpty)
   }
 
-  test("corrupted/truncated sidecars are rejected and the stride path rebuilds them") {
+  test("corrupted/truncated sidecars are rejected and the planner rebuilds them") {
     // a torn or garbage .fidx must never reach the planner as ranges —
     // FrameIndex.read validates magic/version/monotonicity/bounds and
-    // any read error resolves to None (stride fallback), after which
-    // shard 0 REPLACES the bad sidecar
+    // any read error resolves to None, after which the planner frames
+    // the file again and REPLACES the bad sidecar
     val d = Files.createTempDirectory("fidx_corrupt")
     val f = d.resolve("c.pcap").toString
     graft.spark.PcapGen.write(f, 30000, 1700000000000000L)
@@ -495,7 +530,7 @@ class PcapDataSourceSpec extends SparkFunSuite {
     for (garbage <- Seq(
         Array[Byte](1, 2, 3), // truncated mid-header
         Array.fill[Byte](64)(0x5a), // wrong magic
-        // right magic+version, monotonicity violated in the offsets
+        // right magic, an old version, monotonicity violated in the offsets
         java.nio.ByteBuffer.allocate(48)
           .putInt(0x46494458).putInt(1).putLong(9999999L).putLong(30000L)
           .putInt(8192).putInt(2).putLong(24L).putLong(10L).array())) {
@@ -503,43 +538,47 @@ class PcapDataSourceSpec extends SparkFunSuite {
       Files.write(sidecar, garbage)
       assert(graft.pcapio.FrameIndex.read(p, hconf).isEmpty,
         s"garbage sidecar of ${garbage.length} bytes validated")
-      // the scan still reads correctly (stride) and rebuilds the sidecar
+      // the scan still plans ranges, reads correctly and rebuilds the sidecar
+      assert(rangeParts(f, 3).length == 3)
       assert(spark.read.format("pcap").option("decodePartitions", 3)
         .load(f).orderBy("frame_time", "ip_id").collect().toSeq == plain)
       val rebuilt = graft.pcapio.FrameIndex.read(p, hconf)
       assert(rebuilt.isDefined && rebuilt.get.frameCount == 30000L,
-        "bad sidecar should be replaced by the next stride read")
+        "bad sidecar should be replaced by the next sharded read")
       java.nio.file.Files.delete(sidecar)
     }
     // round-15 ADVICE: a corrupted offset that stays MONOTONE and
     // IN-RANGE passed v1's structural checks — a range seeking to a
     // non-frame boundary makes the Sane framer stop quietly (silent
-    // frame loss). v2's CRC catches it: bit-flip one offset of a valid
-    // sidecar (keeping monotonicity) and the read must reject.
+    // frame loss). The CRC catches it: bump one offset of a valid
+    // sidecar by 4 bytes (keeping monotonicity) and the read must reject.
     assert(spark.read.format("pcap").option("decodePartitions", 3)
-      .load(f).count() == 30000L) // (re)build a valid v2 sidecar
+      .load(f).count() == 30000L) // (re)build a valid sidecar
     val valid = Files.readAllBytes(sidecar)
     val tampered = valid.clone()
-    // layout: int magic, int version, long fileLen, long frameCount,
-    // int stride, int n, then n longs — nudge offsets[1]'s low byte
-    val off1Low = 4 + 4 + 8 + 8 + 4 + 4 + 8 + 7
+    // layout: int magic, int version, byte container, long fileLen,
+    // long mtime, long frameCount, int stride, int n, then n longs —
+    // nudge offsets[1]'s low byte
+    val off1Low = 4 + 4 + 1 + 8 + 8 + 8 + 4 + 4 + 8 + 7
+    val offs = java.nio.ByteBuffer.wrap(valid, off1Low - 15, 24)
+    val (o0, o1, o2) = (offs.getLong, offs.getLong, offs.getLong)
+    assert(o0 < o1 && o1 + 4 < o2 && (o1 & 0xff) < 0xfc, s"$o0 $o1 $o2")
     tampered(off1Low) = (tampered(off1Low) + 4).toByte
     Files.write(sidecar, tampered)
-    assert(tampered.toSeq != valid.toSeq &&
-      graft.pcapio.FrameIndex.read(p, hconf).isEmpty,
-      "monotone in-range corruption must fail the CRC")
-    // and the legacy v1 format (no CRC) is rejected by the version check
-    val v1 = valid.clone()
-    v1(7) = 1 // version int's low byte
-    Files.write(sidecar, java.util.Arrays.copyOf(v1, v1.length - 8))
     assert(graft.pcapio.FrameIndex.read(p, hconf).isEmpty,
-      "v1 sidecars must not validate")
+      "monotone in-range corruption must fail the CRC")
+    // and an older format version is rejected by the version check
+    val v3 = valid.clone()
+    v3(7) = 3 // version int's low byte
+    Files.write(sidecar, v3)
+    assert(graft.pcapio.FrameIndex.read(p, hconf).isEmpty,
+      "v3 sidecars must not validate")
   }
 
   test("pcap write emits an exact frame-index sidecar; the output range-shards on first read") {
     // the writer knows every record offset, so its sidecar is exact and
-    // free — a written landing is range-shardable without ever paying a
-    // stride pass
+    // free — a written landing is range-shardable without the planner
+    // framing it first
     val srcDir = Files.createTempDirectory("fidx_w_src")
     val src = srcDir.resolve("src.pcap").toString
     graft.spark.PcapGen.write(src, 20000, 1700000000000000L)
@@ -554,12 +593,7 @@ class PcapDataSourceSpec extends SparkFunSuite {
       new org.apache.hadoop.fs.Path(part.head), hconf)
     assert(idx.isDefined, "writer should emit the sidecar")
     assert(idx.get.frameCount == 20000L)
-    // 20000 frames / 8192 stride = 3 offsets → 2 ranges max
-    val parts = new graft.sources.PcapScan(Seq(part.head),
-      graft.core.PacketSchema.schema, refCompat = false,
-      decodePartitions = 2).planInputPartitions()
-    assert(parts.length == 2 && parts.forall(
-      _.asInstanceOf[graft.sources.PcapInputPartition].rangeStart >= 0))
+    assert(rangeParts(part.head, 2).length == 2)
     // range-sharded read of the written file ≡ plain read of the source
     val a = spark.read.format("pcap").option("decodePartitions", 2)
       .load(part.head).orderBy("frame_time", "ip_id")
@@ -567,10 +601,10 @@ class PcapDataSourceSpec extends SparkFunSuite {
     val b = spark.read.format("pcap").load(src)
       .orderBy("frame_time", "ip_id").drop("pcap_file").collect().toSeq
     assert(a == b)
-    // tiny outputs skip the sidecar (it could never cut >1 range)
+    // a 1-frame output skips the sidecar (it could never cut >1 range)
     val tinyOut = Files.createTempDirectory("fidx_w_tiny").toString + "/out"
     spark.read.format("pcap").option("bytes", "true").load(src)
-      .limit(100).coalesce(1).write.format("pcap").mode("append").save(tinyOut)
+      .limit(1).coalesce(1).write.format("pcap").mode("append").save(tinyOut)
     val tinyPart = graft.sources.PcapFileEnum.list(Seq(tinyOut), hconf)
     assert(graft.pcapio.FrameIndex.read(
       new org.apache.hadoop.fs.Path(tinyPart.head), hconf).isEmpty)

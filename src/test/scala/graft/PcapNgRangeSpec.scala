@@ -6,13 +6,13 @@ import org.apache.spark.sql.functions.col
 
 import PcapFixtures._
 
-/** pcapng frame-index range shards (round 15, verdict #4): stride shard
-  * 0 of a sharded pcapng scan records offsets + SECTION-STATE snapshots
-  * ([[graft.pcapio.PcapFramer.NgState]]) in the sidecar; the planner
-  * then cuts contiguous block-aligned byte ranges that resume
-  * mid-section with the snapshot. These specs mirror the legacy ones
-  * (build → range-plan → multiset equality → stale/disable fallbacks)
-  * and pin the STATEFUL parts ranges must not break: per-interface
+/** pcapng frame-index range shards (round 15, verdict #4): the planner
+  * of a sharded pcapng scan records offsets + SECTION-STATE snapshots
+  * ([[graft.pcapio.PcapFramer.NgState]]) in the file's index, then cuts
+  * contiguous block-aligned byte ranges that resume mid-section with
+  * the snapshot. These specs mirror the legacy ones (cold plan →
+  * multiset equality → sidecar reuse → stale rebuild) and pin the
+  * STATEFUL parts ranges must not break: per-interface
   * tsresol/linktype, a mid-section IDB, a mid-file SHB reset, and
   * ReferenceCompat's last-IDB-wins global tsresol across a range
   * boundary.
@@ -30,6 +30,17 @@ class PcapNgRangeSpec extends SparkFunSuite {
       Right((ifId, tsBase + i, pkt.length, pkt))
     }
 
+  /** The scan's planned partitions for `f`: all stateful byte ranges. */
+  private def ngRanges(f: String, n: Int,
+      refCompat: Boolean = false): Seq[graft.sources.PcapInputPartition] = {
+    val parts = new graft.sources.PcapScan(Seq(f), graft.core.PacketSchema.schema,
+      refCompat, decodePartitions = n).planInputPartitions()
+      .map(_.asInstanceOf[graft.sources.PcapInputPartition]).toSeq
+    assert(parts.forall(p => p.rangeStart >= 0 && p.ngState != null),
+      s"$f: not all stateful ranges: $parts")
+    parts
+  }
+
   private def canon(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
     df.select(df.columns.sorted.map(col): _*)
       .collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString("\u0000"))
@@ -37,7 +48,7 @@ class PcapNgRangeSpec extends SparkFunSuite {
   test("pcapng: sharded scan builds a stateful sidecar; ranges ≡ plain read") {
     // two interfaces with DIFFERENT tsresol (µs and ms): a range that
     // resumed without the per-interface state would mis-scale half the
-    // timestamps. 3 × 8192 < frames < 4 × 8192 → 4 offsets → cuttable.
+    // timestamps.
     val d = Files.createTempDirectory("ngfidx")
     val f = d.resolve("two-if.pcapng")
     val items =
@@ -50,23 +61,17 @@ class PcapNgRangeSpec extends SparkFunSuite {
         }
     Files.write(f, pcapngInterleaved(items))
     val plain = canon(spark.read.format("pcap").load(f.toString))
-    // 1st sharded read: stride (no sidecar yet), builds it
-    assert(canon(spark.read.format("pcap").option("decodePartitions", 3)
-      .load(f.toString)) == plain)
+    // the first sharded plan frames the file, cuts ranges, each carrying
+    // its section state, and writes the stateful sidecar
+    val parts = ngRanges(f.toString, 3)
+    assert(parts.length == 3)
     val idx = graft.pcapio.FrameIndex.read(
       new org.apache.hadoop.fs.Path(f.toString), hconf)
     assert(idx.isDefined && idx.get.isNg && idx.get.frameCount == 26000L)
-    // the planner now cuts ranges, each carrying its section state
-    val parts = new graft.sources.PcapScan(Seq(f.toString),
-      graft.core.PacketSchema.schema, refCompat = false,
-      decodePartitions = 3).planInputPartitions()
-      .map(_.asInstanceOf[graft.sources.PcapInputPartition])
-    assert(parts.length == 3 && parts.forall(_.rangeStart >= 0))
-    assert(parts.forall(_.ngState != null))
     // both interfaces' IDBs precede every recorded offset → snapshots
     // carry both (µs and ms resolution)
     assert(parts.forall(_.ngState.ifTsresols.toSeq == Seq(6, 3)))
-    // 2nd sharded read (range mode): identical multiset, real parallelism
+    // sharded read: identical multiset, real parallelism
     val ranged = spark.read.format("pcap").option("decodePartitions", 3)
       .load(f.toString)
     val perPart = ranged.rdd.mapPartitions(it => Iterator(it.size)).collect()
@@ -78,17 +83,12 @@ class PcapNgRangeSpec extends SparkFunSuite {
     val times = spark.read.format("pcap").option("decodePartitions", 3)
       .load(f.toString).select("frame_time").distinct().count()
     assert(times == 26000L)
-    // frameIndex=false forces stride even with a sidecar present
-    val strideParts = new graft.sources.PcapScan(Seq(f.toString),
-      graft.core.PacketSchema.schema, refCompat = false,
-      decodePartitions = 3, frameIndex = false).planInputPartitions()
-    assert(strideParts.forall(
-      _.asInstanceOf[graft.sources.PcapInputPartition].rangeStart < 0))
-    // stale (file grew): rejected, stride still correct, then rebuilt
+    // stale (file grew): rejected, the next plan rebuilds it
     Files.write(f, pcapngInterleaved(items ++ epbs(0, 100, 2000000L, 30000)))
     assert(graft.pcapio.FrameIndex.read(
       new org.apache.hadoop.fs.Path(f.toString), hconf).isEmpty,
       "stale ng sidecar must not validate")
+    assert(ngRanges(f.toString, 3).length == 3)
     assert(spark.read.format("pcap").option("decodePartitions", 3)
       .load(f.toString).count() == 26100L)
     val rebuilt = graft.pcapio.FrameIndex.read(
@@ -99,8 +99,8 @@ class PcapNgRangeSpec extends SparkFunSuite {
   test("pcapng ranges: SimplePacket blocks resume with the snapshot's first interface") {
     // SPB frames take ifLinktypes.head (pcapng: SPBs implicitly ride
     // interface 0) — a range resuming mid-section must see the same
-    // head the whole-file parse saw. Mix EPBs (to exceed one stride)
-    // with interleaved SPBs; multiset equality pins it.
+    // head the whole-file parse saw. EPBs, then SPBs; multiset equality
+    // pins it.
     val d = Files.createTempDirectory("ngfidx_spb")
     val f = d.resolve("spb.pcapng")
     val pkt = ethernet(0x0800, ipv4("10.0.0.1", "10.0.0.2", 17,
@@ -124,12 +124,12 @@ class PcapNgRangeSpec extends SparkFunSuite {
     (0 until 4000).foreach(_ => out.write(spb(pkt)))
     Files.write(f, out.toByteArray)
     val plain = canon(spark.read.format("pcap").load(f.toString))
+    // the second range resumes mid-section and holds every SPB
+    assert(ngRanges(f.toString, 2).length == 2)
     assert(canon(spark.read.format("pcap").option("decodePartitions", 2)
-      .load(f.toString)) == plain) // builds the sidecar
+      .load(f.toString)) == plain)
     assert(graft.pcapio.FrameIndex.read(
       new org.apache.hadoop.fs.Path(f.toString), hconf).exists(_.isNg))
-    assert(canon(spark.read.format("pcap").option("decodePartitions", 2)
-      .load(f.toString)) == plain) // range pass
     assert(spark.read.format("pcap").option("decodePartitions", 2)
       .load(f.toString).count() == 24000L)
   }
@@ -140,7 +140,7 @@ class PcapNgRangeSpec extends SparkFunSuite {
     // — full interface-registry reset) re-declares one interface with a
     // different tsresol. Offsets recorded after the mid-section IDB
     // must snapshot the grown registry; offsets in section 2 the reset
-    // one. ~27k frames → 4 offsets.
+    // one.
     val d = Files.createTempDirectory("ngfidx2")
     val f = d.resolve("stateful.pcapng")
     val sec1 = pcapngInterleaved(
@@ -151,8 +151,7 @@ class PcapNgRangeSpec extends SparkFunSuite {
       Seq(Left((1, 4))) ++ epbs(0, 9000, 1500000L, 18000))
     Files.write(f, sec1 ++ sec2)
     val plain = canon(spark.read.format("pcap").load(f.toString))
-    assert(canon(spark.read.format("pcap").option("decodePartitions", 4)
-      .load(f.toString)) == plain) // builds the sidecar
+    assert(ngRanges(f.toString, 4).length == 4)
     val idx = graft.pcapio.FrameIndex.read(
       new org.apache.hadoop.fs.Path(f.toString), hconf)
     assert(idx.isDefined && idx.get.isNg && idx.get.frameCount == 27000L)
@@ -183,18 +182,15 @@ class PcapNgRangeSpec extends SparkFunSuite {
       .option("decodePartitions", parts).load(f.toString)
     val plain = canon(spark.read.format("pcap")
       .option("mode", "reference-compat").load(f.toString))
-    assert(canon(refRead(3)) == plain) // stride pass, builds sidecar
+    // the ReferenceCompat planner's walk: every range past the second
+    // IDB resumes with lastTsresol = 3
+    val parts = ngRanges(f.toString, 3, refCompat = true)
+    assert(parts.length == 3 && parts.tail.forall(_.ngState.lastTsresol == 3))
     val idx = graft.pcapio.FrameIndex.read(
       new org.apache.hadoop.fs.Path(f.toString), hconf)
     assert(idx.isDefined && idx.get.isNg)
-    // every offset past the second IDB snapshots lastTsresol = 3
     assert(idx.get.stateAt(idx.get.offsets.length - 1).lastTsresol == 3)
-    val parts = new graft.sources.PcapScan(Seq(f.toString),
-      graft.core.PacketSchema.schema, refCompat = true,
-      decodePartitions = 3).planInputPartitions()
-      .map(_.asInstanceOf[graft.sources.PcapInputPartition])
-    assert(parts.forall(_.rangeStart >= 0))
-    assert(canon(refRead(3)) == plain) // range pass
+    assert(canon(refRead(3)) == plain)
     // and the Sane read of the same file also matches its own plain read
     // (per-interface scaling, unaffected by the last-IDB quirk)
     val sanePlain = canon(spark.read.format("pcap").load(f.toString))
@@ -203,10 +199,12 @@ class PcapNgRangeSpec extends SparkFunSuite {
   }
 
   test("pcapng streaming replay across a sidecar appearing mid-stream reads the same rows") {
-    // mirror of the legacy round-14 replay spec: the committed offset
-    // fixes the FILE set; a sidecar built after a batch's original
-    // (stride) attempt makes its replay plan RANGES — identical row
-    // multiset, or an uncommitted-batch replay would not be exactly-once.
+    // mirror of the legacy replay spec: the committed offset fixes the
+    // FILE set. The original attempt plans stateful ranges with its
+    // sidecar write blocked; the replay, restarted at another
+    // decodePartitions, writes the sidecar and cuts differently —
+    // identical row multiset, or an uncommitted-batch replay would not
+    // be exactly-once.
     val root = Files.createTempDirectory("ngfidx_stream")
     val f = root.resolve("c1.pcapng").toString
     Files.write(java.nio.file.Paths.get(f), pcapngInterleaved(
@@ -214,36 +212,41 @@ class PcapNgRangeSpec extends SparkFunSuite {
         (0 until 26000).flatMap(i => epbs(i % 2, 1, 1000000L + i, i))))
     val listed = graft.sources.PcapFileEnum.list(Seq(root.toString), hconf)
     assert(listed.size == 1)
-    val stream = new graft.sources.PcapMicroBatchStream(Seq(root.toString),
-      graft.core.PacketSchema.schema, refCompat = false,
-      checkpointLocation = root.resolve("ckpt").toString,
-      decodePartitions = 4)
     val start = graft.sources.PcapOffset(root.toString, 0, "")
     val end = graft.sources.PcapOffset(root.toString, 1, listed.head)
-    def readAll(parts: Array[org.apache.spark.sql.connector.read.InputPartition]): Seq[Long] = {
+    /** One attempt of the batch (start, end] at `shards`: its planned
+      * partitions and the frame_time multiset they read. */
+    def attempt(shards: Int)
+        : (Seq[graft.sources.PcapInputPartition], Seq[Long]) = {
+      val stream = new graft.sources.PcapMicroBatchStream(Seq(root.toString),
+        graft.core.PacketSchema.schema, refCompat = false,
+        checkpointLocation = root.resolve("ckpt").toString,
+        decodePartitions = shards)
+      val parts = stream.planInputPartitions(start, end)
       val factory = stream.createReaderFactory()
-      parts.flatMap { p =>
+      val rows = parts.flatMap { p =>
         val r = factory.createColumnarReader(p)
         val b = Seq.newBuilder[Long]
         while (r.next()) r.get().rowIterator().forEachRemaining(row => b += row.getLong(0))
         r.close()
         b.result()
       }.toSeq.sorted
+      (parts.map(_.asInstanceOf[graft.sources.PcapInputPartition]).toSeq, rows)
     }
-    val parts1 = stream.planInputPartitions(start, end)
-    assert(parts1.forall(_.asInstanceOf[graft.sources.PcapInputPartition]
-      .rangeStart < 0), "expected stride partitions before any sidecar")
-    val rows1 = readAll(parts1)
+    val blocker = root.resolve(".fidx")
+    Files.write(blocker, Array[Byte](1)) // the sidecar write cannot land
+    val (parts1, rows1) = attempt(4)
+    assert(parts1.length == 4 &&
+      parts1.forall(p => p.rangeStart >= 0 && p.ngState != null), parts1.toString)
     assert(rows1.size == 26000)
+    Files.delete(blocker)
+    val (parts2, rows2) = attempt(3)
+    assert(parts2.length == 3 &&
+      parts2.forall(p => p.rangeStart >= 0 && p.ngState != null), parts2.toString)
     assert(graft.pcapio.FrameIndex.read(
       new org.apache.hadoop.fs.Path(f), hconf).exists(_.isNg),
-      "streaming stride shard 0 should have built the ng sidecar")
-    val parts2 = stream.planInputPartitions(start, end)
-    assert(parts2.forall { p =>
-      val pp = p.asInstanceOf[graft.sources.PcapInputPartition]
-      pp.rangeStart >= 0 && pp.ngState != null
-    }, "expected stateful range partitions once the sidecar exists")
-    assert(readAll(parts2) == rows1, "replay multiset diverged across layouts")
+      "the replay's planner should have written the ng sidecar")
+    assert(rows2 == rows1, "replay multiset diverged across cuts")
   }
 
   test("pcapng sidecar round-trips states through the file format (CRC-guarded)") {
@@ -252,7 +255,8 @@ class PcapNgRangeSpec extends SparkFunSuite {
     val dummy = d.resolve("x.pcapng")
     Files.write(dummy, Array.fill[Byte](1000)(7)) // length only
     val p = new org.apache.hadoop.fs.Path(dummy.toString)
-    val idx = FrameIndex.Index(1000L, 20000L, 8192, Array(28L, 400L, 900L),
+    val mtime = p.getFileSystem(hconf).getFileStatus(p).getModificationTime
+    val idx = FrameIndex.Index(1000L, mtime, 20000L, 8192, Array(28L, 400L, 900L),
       container = 1,
       states = Array(
         PcapFramer.NgState(false, Array(1), Array(6), 6),
@@ -281,13 +285,13 @@ class PcapNgRangeSpec extends SparkFunSuite {
   }
 
   test("pcapng writer emits the stateful sidecar at commit — born range-shardable") {
-    // round 16 (verdict #2): written pcapng must NOT pay one full stride
-    // scan to bootstrap the sidecar — the writer knows every EPB offset
+    // round 16 (verdict #2): written pcapng must NOT make the planner
+    // frame it to build the sidecar — the writer knows every EPB offset
     // and its own section state. Mixed linktypes with the second one
-    // appearing AFTER the second stride boundary, so the recorded
-    // snapshots genuinely differ across offsets (1 interface → 2).
+    // appearing mid-file, so the recorded snapshots genuinely differ
+    // across offsets (1 interface → 2).
     val d = Files.createTempDirectory("ngwfidx")
-    val nEth = 12000 // past the 2nd stride boundary (8192), before the 3rd
+    val nEth = 12000
     val nRaw = 9000 // appended after the eth run → IDB 101 lands mid-file
     val ethFrames = (0 until nEth).map { i =>
       val pkt = ethernet(0x0800, ipv4("10.0.0.1", "10.0.0.2", 17,
@@ -313,20 +317,17 @@ class PcapNgRangeSpec extends SparkFunSuite {
     val idx = graft.pcapio.FrameIndex.read(p, hconf)
     assert(idx.isDefined && idx.get.isNg, "writer did not emit a valid ng sidecar")
     assert(idx.get.frameCount == (nEth + nRaw).toLong)
-    assert(idx.get.fileLen == part.length())
-    // snapshots evolve: offsets 0/8192 predate the raw-IP IDB, 16384 is
-    // past it (the writer adds IDBs lazily at first sight of a linktype)
-    assert(idx.get.stateAt(0).ifLinktypes.toSeq == Seq(1))
-    assert(idx.get.stateAt(2).ifLinktypes.toSeq == Seq(1, 101))
+    assert(idx.get.fileLen == part.length() && idx.get.mtime == part.lastModified())
+    // snapshots evolve: offsets of eth frames predate the raw-IP IDB,
+    // later ones are past it (the writer adds IDBs lazily at first sight
+    // of a linktype)
+    idx.get.offsets.indices.foreach { i =>
+      assert(idx.get.stateAt(i).ifLinktypes.toSeq ==
+        (if (i.toLong * idx.get.stride < nEth) Seq(1) else Seq(1, 101)), s"offset $i")
+    }
     assert(idx.get.states.forall(_.ifTsresols.forall(_ == 6)))
-    // the planner cuts ranges on the very first sharded read
-    val parts = new graft.sources.PcapScan(Seq(part.toString),
-      graft.core.PacketSchema.schema, refCompat = false,
-      decodePartitions = 3).planInputPartitions()
-      .map(_.asInstanceOf[graft.sources.PcapInputPartition])
-    assert(parts.length == 3 && parts.forall(_.rangeStart >= 0),
-      "writer-emitted sidecar did not yield range shards")
-    assert(parts.forall(_.ngState != null))
+    // the planner cuts ranges from the writer's sidecar
+    assert(ngRanges(part.toString, 3).length == 3)
     // ranged read ≡ plain read, real parallelism, and zero rebuild
     val ranged = spark.read.format("pcap").option("decodePartitions", 3)
       .load(part.toString)

@@ -382,7 +382,7 @@ class PcapPipelineSpec extends SparkFunSuite {
     import org.apache.spark.scheduler._
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     import org.apache.spark.sql.catalyst.rules.Rule
-    val jobs = new ConcurrentLinkedQueue[String]()
+    val jobs = new ConcurrentLinkedQueue[(String, Int)]()
     val sql = new AtomicInteger
     // per progress accumulator (packets, errors): (task-side sum, last value)
     val counters = Map("pcap_packets" -> scala.collection.mutable.Map.empty[Long, (Long, Long)],
@@ -390,7 +390,8 @@ class PcapPipelineSpec extends SparkFunSuite {
     val lsn = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         jobs.add(String.valueOf(Option(js.properties)
-          .map(_.getProperty("spark.job.description")).orNull)); ()
+          .map(_.getProperty("spark.job.description")).orNull) ->
+          js.stageInfos.map(_.numTasks).sum); ()
       }
       override def onTaskEnd(te: SparkListenerTaskEnd): Unit =
         if (te.taskInfo != null) te.taskInfo.accumulables.foreach { acc =>
@@ -419,7 +420,8 @@ class PcapPipelineSpec extends SparkFunSuite {
       spark.sparkContext.removeSparkListener(lsn)
       exp.extraOptimizations = exp.extraOptimizations.filterNot(_ eq rule)
     }
-    PcapPipelineSpec.Traced(jobs.toArray(Array.empty[String]).toSeq, sql.get, optimized.get,
+    val js = jobs.toArray(Array.empty[(String, Int)]).toSeq
+    PcapPipelineSpec.Traced(js.map(_._1), js.map(_._2), sql.get, optimized.get,
       counters("pcap_packets").toMap, counters("pcap_dissect_errors").toMap)
   }
 
@@ -482,6 +484,10 @@ class PcapPipelineSpec extends SparkFunSuite {
           nodefrag = b.nodefrag, singleFile = false))
         assert(sc.getLocalProperty("spark.job.description") == "caller", b.name)
         assert(t.jobs == b.jobs, s"${b.name}: $t")
+        // every job ran more than one range task per input file
+        val nFiles = graft.sources.PcapFileEnum
+          .list(Seq(b.file), spark.sessionState.newHadoopConf()).size
+        assert(t.jobTasks.forall(_ > nFiles), s"${b.name}: $nFiles files, $t")
         assert(t.sqlExecutions == 0 && t.optimizerRuns == 0,
           s"${b.name} planned through Catalyst: $t")
         val got = spark.read.parquet(out)
@@ -612,7 +618,7 @@ class PcapPipelineSpec extends SparkFunSuite {
 
 object PcapPipelineSpec {
   /** What one convert did, read from the listener bus. */
-  final case class Traced(jobs: Seq[String], sqlExecutions: Int,
+  final case class Traced(jobs: Seq[String], jobTasks: Seq[Int], sqlExecutions: Int,
       optimizerRuns: Int, packetCounters: Map[Long, (Long, Long)],
       errorCounters: Map[Long, (Long, Long)])
 }

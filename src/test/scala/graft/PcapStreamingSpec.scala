@@ -43,18 +43,18 @@ class PcapStreamingSpec extends SparkFunSuite {
     } finally q.stop()
   }
 
-  test("streaming decodePartitions: stride shards read exactly-once within each batch") {
-    // round 12: the rounds-9..11 refusal is lifted — a stride shard
-    // splits one admitted file's DISSECTION within its planned batch;
-    // offsets/watermarks/admission stay per-file, so replay regenerates
-    // the identical shard set. Pinned: sharded row multiset == unsharded,
-    // incl. across a new-file batch boundary.
+  test("streaming decodePartitions: range shards read exactly-once within each batch") {
+    // round 12: the rounds-9..11 refusal is lifted — a range shard
+    // splits one admitted file's framing and dissection within its
+    // planned batch; offsets/watermarks/admission stay per-file. Pinned:
+    // sharded row multiset == unsharded, incl. across a new-file batch
+    // boundary, with each 2-frame file cut into 2 one-frame ranges.
     val dir = Files.createTempDirectory("pcapstream_shard")
     Files.write(dir.resolve("c1.pcap"), capture(1))
     Files.write(dir.resolve("c2.pcap"), capture(2))
     val name = "pcap_stream_shard_sink"
     val q = spark.readStream.format("pcap")
-      .option("decodePartitions", 3) // deliberately > frames per shard
+      .option("decodePartitions", 3) // deliberately > frames per file
       .load(dir.toString)
       .groupBy("col_protocol").agg(count(lit(1)).as("n"))
       .writeStream.outputMode("complete").format("memory").queryName(name)
@@ -69,13 +69,23 @@ class PcapStreamingSpec extends SparkFunSuite {
       val r2 = spark.table(name).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(r2 == Map("DNS" -> 3L, "TCP" -> 3L), r2.toString)
     } finally q.stop()
+    val listed = graft.sources.PcapFileEnum.list(Seq(dir.toString),
+      spark.sessionState.newHadoopConf())
+    val parts = new graft.sources.PcapMicroBatchStream(Seq(dir.toString),
+      graft.core.PacketSchema.schema, refCompat = false,
+      checkpointLocation = dir.resolve("ckpt").toString, decodePartitions = 3)
+      .planInputPartitions(graft.sources.PcapOffset(dir.toString, 0, ""),
+        graft.sources.PcapOffset(dir.toString, 3, listed.last))
+      .map(_.asInstanceOf[graft.sources.PcapInputPartition])
+    assert(parts.length == 6 && parts.forall(_.rangeStart >= 0), parts.toSeq)
   }
 
   test("frame-index ranges in streaming: a sidecar appearing between plan and replay reads the same rows (round 14)") {
     // the committed offset fixes the FILE set; the shard decomposition
-    // is an execution detail below the commit granularity. A sidecar
-    // built after a batch's original (stride) attempt makes its replay
-    // plan RANGES — the row multiset must be identical, or an
+    // is an execution detail below the commit granularity. The original
+    // attempt plans ranges with its sidecar write blocked; the replay,
+    // restarted at another decodePartitions, writes the sidecar and cuts
+    // differently — the row multiset must be identical, or an
     // uncommitted-batch replay would not be exactly-once.
     val root = Files.createTempDirectory("pcapfidx_stream")
     val f = root.resolve("c1.pcap").toString
@@ -83,36 +93,39 @@ class PcapStreamingSpec extends SparkFunSuite {
     val hconf = spark.sessionState.newHadoopConf()
     val listed = graft.sources.PcapFileEnum.list(Seq(root.toString), hconf)
     assert(listed.size == 1)
-    val stream = new graft.sources.PcapMicroBatchStream(Seq(root.toString),
-      graft.core.PacketSchema.schema, refCompat = false,
-      checkpointLocation = root.resolve("ckpt").toString,
-      decodePartitions = 4)
     val start = graft.sources.PcapOffset(root.toString, 0, "")
     val end = graft.sources.PcapOffset(root.toString, 1, listed.head)
-    def readAll(parts: Array[org.apache.spark.sql.connector.read.InputPartition]): Seq[Long] = {
+    /** One attempt of the batch (start, end] at `shards`: its planned
+      * partitions and the frame_time multiset they read. */
+    def attempt(shards: Int)
+        : (Seq[graft.sources.PcapInputPartition], Seq[Long]) = {
+      val stream = new graft.sources.PcapMicroBatchStream(Seq(root.toString),
+        graft.core.PacketSchema.schema, refCompat = false,
+        checkpointLocation = root.resolve("ckpt").toString,
+        decodePartitions = shards)
+      val parts = stream.planInputPartitions(start, end)
       val factory = stream.createReaderFactory()
-      parts.flatMap { p =>
+      val rows = parts.flatMap { p =>
         val r = factory.createColumnarReader(p)
         val b = Seq.newBuilder[Long]
         while (r.next()) r.get().rowIterator().forEachRemaining(row => b += row.getLong(0))
         r.close()
         b.result()
       }.toSeq.sorted
+      (parts.map(_.asInstanceOf[graft.sources.PcapInputPartition]).toSeq, rows)
     }
-    // original attempt: no sidecar → stride (and shard 0 builds one)
-    val parts1 = stream.planInputPartitions(start, end)
-    assert(parts1.forall(_.asInstanceOf[graft.sources.PcapInputPartition]
-      .rangeStart < 0), "expected stride partitions before any sidecar")
-    val rows1 = readAll(parts1)
+    val blocker = root.resolve(".fidx")
+    Files.write(blocker, Array[Byte](1)) // the sidecar write cannot land
+    val (parts1, rows1) = attempt(4)
+    assert(parts1.length == 4 && parts1.forall(_.rangeStart >= 0), parts1.toString)
     assert(rows1.size == 50000)
+    Files.delete(blocker)
+    val (parts2, rows2) = attempt(3)
+    assert(parts2.length == 3 && parts2.forall(_.rangeStart >= 0), parts2.toString)
     assert(graft.pcapio.FrameIndex.read(
       new org.apache.hadoop.fs.Path(f), hconf).isDefined,
-      "streaming stride shard 0 should have built the sidecar")
-    // replay of the SAME committed range: now plans ranges — same rows
-    val parts2 = stream.planInputPartitions(start, end)
-    assert(parts2.forall(_.asInstanceOf[graft.sources.PcapInputPartition]
-      .rangeStart >= 0), "expected range partitions once the sidecar exists")
-    assert(readAll(parts2) == rows1, "replay multiset diverged across layouts")
+      "the replay's planner should have written the sidecar")
+    assert(rows2 == rows1, "replay multiset diverged across cuts")
   }
 
   test("AvailableNow honors admission control and survives an uncommitted-batch restart") {
