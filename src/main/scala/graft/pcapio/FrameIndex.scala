@@ -1,9 +1,12 @@
 package graft.pcapio
 
-import java.io.{ByteArrayOutputStream, DataInputStream, DataOutputStream}
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream,
+  DataOutputStream, InputStream, SequenceInputStream}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+
+import graft.core.OutputFiles
 
 /** Frame-index SIDECAR for pcap files (legacy pcap and pcapng).
   *
@@ -24,8 +27,9 @@ import org.apache.hadoop.fs.Path
   * recorded offset.
   *
   * Lifecycle: the sharded-read planner ([[graft.sources.PcapShardPlan]])
-  * reads the sidecar, or, when none is valid, frames the file once on
-  * the driver ([[build]]) and cuts its ranges from that in-memory index.
+  * reads the sidecar, or, when none is valid, walks the file once on
+  * the driver ([[build]]: record headers only for legacy pcap, the
+  * framer for pcapng) and cuts its ranges from that in-memory index.
   * The index is then written atomically (temp + rename) next to the file
   * under a hidden `.fidx/` dir ([[graft.sources.PcapFileEnum]] never
   * reads hidden paths as data); a read-only source dir just skips the
@@ -186,52 +190,117 @@ object FrameIndex {
       states, stateIdx))
   } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Atomic best-effort write (temp + rename); failures — read-only dir,
-    * concurrent writer won the rename — are silently dropped, the
-    * sidecar is never required for correctness. An index that cannot
-    * cut two ranges (fewer than 2 frames) is not written.
+  /** Atomic best-effort write (temp + rename, through
+    * [[graft.core.OutputFiles]]); failures — read-only dir, concurrent
+    * writer won the rename — are silently dropped, the sidecar is never
+    * required for correctness. A stale sidecar is replaced. An index
+    * that cannot cut two ranges (fewer than 2 frames) is not written.
     */
   def write(file: Path, idx: Index, conf: Configuration): Unit = try {
     if (idx.offsets.length < 2) return
-    val fs = file.getFileSystem(conf)
     val sp = sidecarPath(file)
+    val files = OutputFiles(sp, conf)
     val tmp = new Path(sp.getParent,
       s".${sp.getName}.tmp.${java.util.UUID.randomUUID}")
-    fs.mkdirs(sp.getParent)
-    val out = new DataOutputStream(fs.create(tmp, false))
+    val out = new DataOutputStream(files.create(tmp))
     try {
       val payload = encodePayload(idx)
       out.writeInt(Magic); out.writeInt(Version)
       out.write(payload)
       out.writeLong(crc32(payload))
     } finally out.close()
-    if (!fs.rename(tmp, sp)) {
-      // local FS refuses rename onto an existing destination — a STALE
-      // sidecar (length or mtime mismatch) must still be replaceable;
-      // losing the race to a concurrent fresh writer just drops the temp
-      fs.delete(sp, false)
-      if (!fs.rename(tmp, sp)) fs.delete(tmp, false)
-    }
-    ()
+    files.replace(tmp, sp)
   } catch { case scala.util.control.NonFatal(_) => () }
 
-  /** Frame `file` once, start to end, into an [[Index]] stamped with the
-    * length and mtime it had before the walk (a file rewritten during
-    * the walk then fails the next [[read]]).
+  /** Index `file` once, start to end ([[walk]]), stamped with the length
+    * and mtime it had before the walk (a file rewritten during the walk
+    * then fails the next [[read]]).
     */
   def build(file: Path, conf: Configuration, mode: PcapFramer.Mode): Index = {
     val fs = file.getFileSystem(conf)
     val st = fs.getFileStatus(file)
     val in = fs.open(file)
-    try {
-      val frames = PcapFramer.frames(in, mode)
-      val b = new Builder(ng = frames.hasNext && !frames.isLegacy)
-      while (frames.hasNext) {
-        frames.next()
-        b.record(frames.lastFrameStart, frames.ngState)
+    try walk(in, mode).result(st.getLen, st.getModificationTime)
+    finally in.close()
+  }
+
+  /** Feed every frame of the whole-file stream `in` to a [[Builder]].
+    * Legacy pcap reads only the 16-byte record headers and skips the
+    * payloads ([[legacyWalk]]); pcapng, and anything without a full
+    * legacy header, is framed by [[PcapFramer]].
+    */
+  private[graft] def walk(in: InputStream, mode: PcapFramer.Mode): Builder = {
+    val head = new Array[Byte](PcapFramer.LegacyHeaderLen)
+    val got = in.readNBytes(head, 0, head.length)
+    (if (got == head.length) PcapFramer.legacyPreset(head) else None) match {
+      case Some(preset) =>
+        val b = new Builder(ng = false)
+        legacyWalk(in, preset.bigEndian, b)
+        b
+      case None =>
+        val frames = PcapFramer.frames(new SequenceInputStream(
+          new ByteArrayInputStream(head, 0, got), in), mode)
+        val b = new Builder(ng = frames.hasNext && !frames.isLegacy)
+        while (frames.hasNext) {
+          frames.next()
+          b.record(frames.lastFrameStart, frames.ngState)
+        }
+        b
+    }
+  }
+
+  /** The legacy records after the global header `in` has consumed. It
+    * ends exactly where [[PcapFramer]] does: at EOF, at a caplen the
+    * framer refuses (above 0x0fffffff) and before a truncated tail
+    * record, which is not recorded.
+    */
+  private def legacyWalk(in: InputStream, bigEndian: Boolean, b: Builder): Unit = {
+    val buf = new Array[Byte](1 << 16)
+    var p = 0 // next unread byte of buf
+    var lim = 0 // end of buf's valid bytes
+    // at least n unread bytes in buf; false at EOF before that
+    def fill(n: Int): Boolean = {
+      if (lim - p < n) {
+        System.arraycopy(buf, p, buf, 0, lim - p)
+        lim -= p
+        p = 0
+        while (lim < n) {
+          val r = in.read(buf, lim, buf.length - lim)
+          if (r < 0) return false
+          lim += r
+        }
       }
-      b.result(st.getLen, st.getModificationTime)
-    } finally in.close()
+      true
+    }
+    // consume n bytes; false at EOF before that
+    def skip(n: Int): Boolean = {
+      var left = n
+      while (left > 0) {
+        if (p == lim && !fill(1)) return false
+        val k = math.min(left, lim - p)
+        p += k
+        left -= k
+      }
+      true
+    }
+    def u32(o: Int): Long =
+      if (bigEndian)
+        ((buf(o) & 0xffL) << 24) | ((buf(o + 1) & 0xffL) << 16) |
+          ((buf(o + 2) & 0xffL) << 8) | (buf(o + 3) & 0xffL)
+      else
+        ((buf(o + 3) & 0xffL) << 24) | ((buf(o + 2) & 0xffL) << 16) |
+          ((buf(o + 1) & 0xffL) << 8) | (buf(o) & 0xffL)
+    var off = PcapFramer.LegacyHeaderLen.toLong
+    var more = true
+    while (more && fill(16)) {
+      val caplen = u32(p + 8).toInt
+      p += 16
+      more = caplen >= 0 && caplen <= 0x0fffffff && skip(caplen)
+      if (more) {
+        b.record(off, null)
+        off += 16L + caplen
+      }
+    }
   }
 
   /** Split the file into `n` contiguous frame-aligned byte ranges of

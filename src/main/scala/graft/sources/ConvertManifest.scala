@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.OutputFiles
 import graft.functions.{BloomAgg, SizedBloomAgg}
 
 /** Downstream-query pruning index for a CONVERTED capture (round 15,
@@ -55,8 +56,9 @@ object ConvertManifest {
   final case class Entry(name: String, rows: Long, tsMin: Long, tsMax: Long,
       srcBloom: Array[Long], dstBloom: Array[Long])
 
-  /** Build + write the manifest for a convert output directory. Returns
-    * the number of part files indexed.
+  /** Build + write the manifest for a convert output directory (through
+    * [[OutputFiles]]). Returns the number of part files indexed, 0 when
+    * none was published.
     */
   def build(spark: SparkSession, dir: String): Int = {
     val df = spark.read.parquet(dir)
@@ -79,14 +81,13 @@ object ConvertManifest {
       w.foreach(bb.putLong)
       b64.encodeToString(bb.array())
     }
-    val hconf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(dir, FileName)
-    val fs = p.getFileSystem(hconf)
+    val files = OutputFiles(p, spark.sessionState.newHadoopConf())
     val tmp = new org.apache.hadoop.fs.Path(dir,
       s".$FileName.tmp.${java.util.UUID.randomUUID}")
     var n = 0
     val crc = new java.util.zip.CRC32
-    val raw = fs.create(tmp, true)
+    val raw = files.create(tmp)
     var ok = false
     try {
       val out = new java.io.BufferedOutputStream(
@@ -105,14 +106,10 @@ object ConvertManifest {
       line(s"end\t$n\t${crc.getValue}")
       out.close()
       ok = n > 0
-    } finally if (!ok) { try raw.close() catch { case _: Throwable => () }; fs.delete(tmp, false); () }
-    if (ok && !fs.rename(tmp, p)) {
-      // local FS refuses rename onto an existing destination (rebuild):
-      // replace, losing the race to a concurrent writer just drops tmp
-      fs.delete(p, false)
-      if (!fs.rename(tmp, p)) fs.delete(tmp, false)
-    }
-    if (ok) n else 0
+    } finally if (!ok) { try raw.close() catch { case _: Throwable => () }; files.delete(tmp) }
+    // replaces an earlier manifest; a rename that fails publishes nothing
+    if (ok) try { files.replace(tmp, p); n } catch { case _: java.io.IOException => 0 }
+    else 0
   }
 
   /** Parse the manifest; None when absent, unreadable, truncated (the

@@ -4,7 +4,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.column.ParquetProperties
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.{CodecFactory, ColumnChunkPageWriteStore, ParquetFileWriter}
+import org.apache.parquet.hadoop.{CodecFactory, ColumnChunkPageWriteStore, ParquetFileWriter,
+  ParquetWriter}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
@@ -15,6 +16,8 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.util.{LongAccumulator, SerializableConfiguration}
+
+import graft.core.OutputFiles
 
 /** Vector-direct parquet writer for the pcap convert path: the DSv2
   * scan already emits `ColumnarBatch`es, but Spark's FileFormatWriter
@@ -49,16 +52,32 @@ import org.apache.spark.util.{LongAccumulator, SerializableConfiguration}
   * the row writer on the 10M broadcast branch and ahead on the 100M
   * shuffle-bypass branch (round 11, interleaved).
   *
-  * Commit protocol: each task writes a dot-prefixed temp file (readers
-  * and `*.parquet` globs skip dot-files) and renames it into place only
-  * after the footer is written; on failure the stream is closed and
-  * only the temp file is deleted — a late-failing zombie attempt can
-  * never clobber a concurrent successful attempt's finished file, and
-  * a rename that loses the race to an identical speculative twin
-  * quietly drops its own temp. Still not a general-purpose committer
+  * Commit protocol: the driver resets the output directory (deletes it,
+  * then creates it empty) before any task starts. Each task writes a
+  * dot-prefixed temp file (readers and `*.parquet` globs skip dot-files),
+  * writes the footer only on success and then renames the temp file to
+  * its final name; on failure the stream is closed and only the temp
+  * file is deleted, so a late-failing zombie attempt can never clobber a
+  * concurrent successful attempt's finished file. After the job the
+  * driver writes `_SUCCESS`, last. Still not a general-purpose committer
   * (no job-level commit protocol); the convert CLI is a single-attempt
   * local batch job, which is exactly the contract the reference's own
-  * writer has (pcap-converter writes local files, main.rs:22-43).
+  * writer has (pcap-converter writes local files through a plain file
+  * handle, main.rs:22-43, statswriter.rs).
+  *
+  * Every one of those file operations goes through
+  * [[graft.core.OutputFiles]]. A `file:` path is written, renamed and
+  * marked through java.nio (parquet-mr's `LocalOutputFile`, an atomic
+  * `Files.move`): Hadoop's `LocalFileSystem` would start a `chmod` child
+  * process for the directory, for every part file and for every part's
+  * `.crc` checksum sidecar, since Spark ships no libhadoop. So local
+  * outputs carry no `.crc` files and their modes follow the umask. Any
+  * other scheme keeps Hadoop's calls, and there a rename that loses the
+  * race to an identical speculative twin quietly drops its own temp.
+  * Both arms build the file writer with the same row-group size,
+  * padding, truncate lengths and page checksums, so the chunk metadata
+  * is the same; only the Hadoop arm pads row groups to its block size
+  * (a local file reports none).
   */
 object PcapColumnarWrite {
 
@@ -186,9 +205,8 @@ object PcapColumnarWrite {
         s"PcapColumnarWrite: unsupported codec $other")
     }
     val outDir = new Path(out)
-    val fs = outDir.getFileSystem(conf.value.value)
-    if (fs.exists(outDir)) fs.delete(outDir, true) // overwrite semantics
-    fs.mkdirs(outDir)
+    val files = OutputFiles(outDir, conf.value.value)
+    files.resetDir(outDir) // overwrite semantics
     val rdd = if (singleFile) batches.coalesce(1) else batches
     // frag-stats ordinals resolved in the PERMUTED schema (what the
     // tasks see); fail fast if the columns were projected away
@@ -223,7 +241,7 @@ object PcapColumnarWrite {
         observer)
     }
     // SUCCESS marker for parity with the standard committer's layout
-    fs.create(new Path(outDir, "_SUCCESS"), true).close()
+    files.touch(new Path(outDir, "_SUCCESS"))
   }
 
   private[graft] def writePartition(it: Iterator[ColumnarBatch], schema: StructType,
@@ -233,15 +251,20 @@ object PcapColumnarWrite {
       observer: ColumnarBatch => Unit = _ => ()): Unit = {
     val msg = messageType(schema)
     val props = ParquetProperties.builder().build()
-    val fs = file.getFileSystem(conf)
+    val files = OutputFiles(file, conf)
     // temp+rename commit: the dot prefix hides the in-progress file from
     // parquet globs and the task-attempt id keeps a zombie/speculative
     // twin's temp from colliding with a live attempt's
     val attempt = Option(org.apache.spark.TaskContext.get())
       .map(_.taskAttemptId()).getOrElse(0L)
     val tmp = new Path(file.getParent, s".${file.getName}.a$attempt.inprogress")
-    val writer = new ParquetFileWriter(conf, msg, tmp,
-      ParquetFileWriter.Mode.OVERWRITE)
+    // the values ParquetFileWriter(conf, schema, path, mode) resolves
+    val writer = new ParquetFileWriter(files.parquetFile(tmp), msg,
+      ParquetFileWriter.Mode.OVERWRITE, ParquetWriter.DEFAULT_BLOCK_SIZE,
+      ParquetWriter.MAX_PADDING_SIZE_DEFAULT,
+      ParquetProperties.DEFAULT_COLUMN_INDEX_TRUNCATE_LENGTH,
+      ParquetProperties.DEFAULT_STATISTICS_TRUNCATE_LENGTH,
+      ParquetProperties.DEFAULT_PAGE_WRITE_CHECKSUM_ENABLED)
     val enc = new PageEncoder(schema, msg, props)
     var codecFactory: CodecFactory = null
     var ok = false
@@ -294,35 +317,11 @@ object PcapColumnarWrite {
         // delete ONLY the temp file — never anything at the final name;
         // swallow secondary errors so the ORIGINAL exception propagates
         try writer.close() catch { case _: Throwable => () }
-        try { fs.delete(tmp, false); () } catch { case _: Throwable => () }
+        try files.delete(tmp) catch { case _: Throwable => () }
       }
     }
     // commit: reached only on success (an exception above propagates
     // past this point after the finally's temp cleanup)
-    if (!fs.rename(tmp, file)) {
-      if (fs.exists(file)) {
-        // lost the race to a concurrent successful attempt of the same
-        // partition — its bytes are identical ONLY because writeBatches
-        // clears the out dir before launching tasks, so any
-        // occupant is a twin of this attempt. That invariant is
-        // load-bearing: assert it (byte length match) so a future
-        // caller reusing a dirty dir fails loudly instead of silently
-        // keeping stale data (review finding). Note RawLocalFileSystem's
-        // rename(2) OVERWRITES, so this branch is FS-dependent and may
-        // never run on local disks.
-        val kept = fs.getFileStatus(file).getLen
-        val ours = fs.getFileStatus(tmp).getLen
-        if (kept != ours)
-          throw new java.io.IOException(
-            s"PcapColumnarWrite: $file already exists with ${kept}B but " +
-              s"this attempt wrote ${ours}B — the occupant is NOT a twin " +
-              "of this partition (out dir reused without clearing?)")
-        try { fs.delete(tmp, false); () } catch { case _: Throwable => () }
-      } else {
-        try { fs.delete(tmp, false); () } catch { case _: Throwable => () }
-        throw new java.io.IOException(
-          s"PcapColumnarWrite: commit rename $tmp -> $file failed")
-      }
-    }
+    files.commit(tmp, file)
   }
 }

@@ -126,6 +126,24 @@ object PcapConvert {
       } finally in.close()
   }
 
+  /** Refuse an `-o` that is a listed input or a directory holding one:
+    * the write resets the output directory, which would delete the
+    * capture after the first pass listed it. Checked before any job
+    * runs or anything is deleted.
+    */
+  private def requireOutsideInputs(out: String, inputs: Seq[String],
+      hconf: Configuration): Unit = {
+    def qualified(s: String): Path = {
+      val p = new Path(s)
+      p.getFileSystem(hconf).makeQualified(p)
+    }
+    val o = qualified(out)
+    inputs.map(qualified).find(in =>
+      Iterator.iterate(in)(_.getParent).takeWhile(_ != null).contains(o))
+      .foreach(in => throw new IllegalArgumentException(
+        s"-o $o contains the input $in: the convert would delete it"))
+  }
+
   /** Run `body` with the job description `name` (what listeners and the
     * UI attribute its jobs to), then restore the caller's description.
     */
@@ -181,6 +199,7 @@ object PcapConvert {
     // cores each file is range-sharded so dissection AND the parquet
     // encode parallelize to the full machine. `-j N` sets the total.
     val files = PcapFileEnum.list(Seq(a.file), hconf)
+    requireOutsideInputs(a.out, files, hconf)
     val want = if (a.jobs > 0) a.jobs else spark.sparkContext.defaultParallelism
     val shards = math.max(1, math.min(1024,
       math.ceil(want.toDouble / math.max(1, files.size)).toInt))

@@ -2,7 +2,7 @@ package graft
 
 import org.scalacheck.{Gen, Prop, Properties}
 
-import graft.pcapio.FrameIndex
+import graft.pcapio.{FrameIndex, PcapFramer}
 
 /** Pure pins for the frame-index range math (round 14): the planner
   * trusts [[FrameIndex.ranges]] to PARTITION the file's frame bytes —
@@ -77,5 +77,60 @@ object FrameIndexProps extends Properties("frame-index") {
         n == (frames + idx.stride - 1) / idx.stride &&
         n <= 8192 && n >= math.min(frames, 4096)) :|
         s"frames=$frames stride=${idx.stride} offsets=$n ng=$ng states=${Option(idx.states).map(_.length)}"
+    }
+
+  /** A legacy capture in either byte order whose records end cleanly, in
+    * a truncated record header, inside a record's payload, or at a record
+    * whose caplen the framer refuses (more records follow it).
+    */
+  private val genLegacy: Gen[Array[Byte]] = for {
+    bigEndian <- Gen.oneOf(true, false)
+    magic <- Gen.oneOf(0xa1b2c3d4, 0xa1b23c4d)
+    n <- Gen.frequency(9 -> Gen.chooseNum(0, 300), 1 -> Gen.chooseNum(8000, 20000))
+    caplens <- Gen.listOfN(n, Gen.chooseNum(0, 100))
+    tail <- Gen.oneOf("none", "header", "payload", "bogus")
+    cut <- Gen.chooseNum(1, 15)
+    bogus <- Gen.oneOf(0x10000000L, 0x7fffffffL, 0x80000000L, 0xffffffffL)
+  } yield {
+    val bb = java.nio.ByteBuffer.allocate(64 + caplens.map(16 + _).sum + 3 * (16 + 100))
+      .order(if (bigEndian) java.nio.ByteOrder.BIG_ENDIAN else java.nio.ByteOrder.LITTLE_ENDIAN)
+    bb.putInt(magic).putShort(2.toShort).putShort(4.toShort).putInt(0).putInt(0)
+      .putInt(65535).putInt(1)
+    def rec(caplen: Long, payload: Int): Unit = {
+      bb.putInt(1700000000).putInt(7).putInt(caplen.toInt).putInt(caplen.toInt)
+      bb.put(Array.fill[Byte](payload)(0x5a))
+    }
+    caplens.foreach(c => rec(c, c))
+    tail match {
+      case "header" => bb.put(Array.fill[Byte](cut)(0x11))
+      case "payload" => rec(40 + cut, 40)
+      case "bogus" => rec(bogus, 0); rec(20, 20); rec(0, 0)
+      case _ => ()
+    }
+    java.util.Arrays.copyOf(bb.array(), bb.position())
+  }
+
+  /** `bytes` handed out at most `chunk` bytes per read. */
+  private def trickle(bytes: Array[Byte], chunk: Int): java.io.InputStream =
+    new java.io.ByteArrayInputStream(bytes) {
+      override def read(b: Array[Byte], off: Int, len: Int): Int =
+        super.read(b, off, math.min(len, chunk))
+    }
+
+  property("legacy walk reads record headers only and ends where the framer ends") =
+    Prop.forAll(genLegacy, Gen.oneOf(1, 7, 13, 1 << 20)) { (bytes, chunk) =>
+      val frames = PcapFramer.frames(bytes)
+      val framed = new FrameIndex.Builder(ng = false)
+      while (frames.hasNext) {
+        frames.next()
+        framed.record(frames.lastFrameStart, null)
+      }
+      val want = framed.result(bytes.length.toLong, 0L)
+      val got = FrameIndex.walk(trickle(bytes, chunk), PcapFramer.Sane)
+        .result(bytes.length.toLong, 0L)
+      Prop(!got.isNg && got.frameCount == want.frameCount && got.stride == want.stride &&
+        got.offsets.sameElements(want.offsets)) :|
+        s"frames ${got.frameCount} vs ${want.frameCount}, offsets " +
+          s"${got.offsets.take(4).mkString(",")}… vs ${want.offsets.take(4).mkString(",")}…"
     }
 }

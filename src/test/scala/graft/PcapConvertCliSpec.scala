@@ -70,4 +70,23 @@ class PcapConvertCliSpec extends SparkFunSuite {
         assert(codecs(out) == Set(codec), extra)
     }
   }
+
+  test("-o naming an input or a directory holding one is refused before anything is deleted") {
+    val dir = Files.createTempDirectory("convoverlap")
+    val caps = Files.createDirectories(dir.resolve("caps"))
+    val cap = caps.resolve("part-00.pcap")
+    graft.spark.PcapGen.write(cap.toString, 2000)
+    val bytes = Files.readAllBytes(cap)
+    for (in <- Seq(cap.toString, s"$caps/*.pcap");
+         out <- Seq(caps.toString, s"$caps/", dir.toString, cap.toString)) {
+      val msg = intercept[IllegalArgumentException](PcapConvert.run(spark,
+        PcapConvert.parse(Array("-f", in, "-o", out, "-v")))).getMessage
+      assert(msg.contains(s"-o file:${new Path(out).toUri.getPath} ") &&
+        msg.contains(s"input file:$cap"), s"$in -> $out: $msg")
+      assert(Files.readAllBytes(cap).sameElements(bytes), s"$in -> $out")
+    }
+    // a sibling of the capture's directory is not an overlap
+    PcapConvert.run(spark, PcapConvert.parse(Array("-f", cap.toString, "-o", s"$dir/out")))
+    assert(spark.read.parquet(s"$dir/out").count() == 2000L)
+  }
 }
