@@ -1,9 +1,11 @@
 package graft.dissect
 
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.core.PacketRow
+import graft.core.{PacketRow, StringDict}
 
 /** Mutable per-packet dissection accumulator — the allocation-lean core
   * behind [[PacketDissector.dissect]].
@@ -16,6 +18,19 @@ import graft.core.PacketRow
   * The accumulator holds unboxed sentinel fields, is reset per packet, and
   * emits the 31-column InternalRow directly with interned UTF8Strings for
   * every repeating value (protocol labels, tcp_flags, cached IPv4 text).
+  *
+  * Reader dictionaries: once [[boundDictionaries]] has run, every address
+  * and every DNS/DHIP name also carries an id into this accumulator's
+  * [[addrDict]] / [[nameDict]], so the pcap reader hands string columns
+  * on as dictionary ids and the page encoder hashes a value once per
+  * distinct id, not once per packet. Addresses get their id, looked up
+  * by value, when they fill an IPv4 cache slot (a refilled slot keeps its
+  * address's id) or, for IPv6, per packet. Names get theirs on first ask
+  * ([[dnsQryNameId]], [[dhipDeviceId]]; a defrag-patched name once per
+  * patch-map entry, [[setDnsQryName]]). Pointer-free DNS qnames are
+  * also interned by their wire bytes (direct-mapped, [[QnameSlots]]
+  * slots): a hit reuses the parsed String and its id, and no
+  * `StringBuilder` runs.
   *
   * NOT thread-safe: one instance per partition/thread
   * (see [[PacketDissector.acc]]).
@@ -50,6 +65,11 @@ final class DissectAcc {
   var ntpPrivReqcode: Int = -1
   var dhipDevice: String = null
   var errors: Int = 0
+  // reader-dictionary ids (-1 = none yet); see the class doc
+  var ipSrcId: Int = -1
+  var ipDstId: Int = -1
+  private var dnsQryId = -1
+  private var dhipId = -1
 
   // Staged-dissection resume state (round 13, [[DissectLevel]]): when
   // [[PacketDissector.dissectInto]] stops below Full, the continuation
@@ -76,6 +96,22 @@ final class DissectAcc {
   private val ipKeys = new Array[Int](IpCacheSlots)
   private val ipStrs = new Array[String](IpCacheSlots)
   private val ipU8s = new Array[UTF8String](IpCacheSlots)
+  private val ipIds = new Array[Int](IpCacheSlots)
+
+  // the reader dictionaries (null until boundDictionaries) and their
+  // by-value id lookups
+  private var addrs: StringDict = null
+  private var names: StringDict = null
+  private val v4Ids = new IntIds
+  private val v6Ids = new java.util.HashMap[String, Integer]
+  private val nameIds = new java.util.HashMap[String, Integer]
+
+  // the qname intern: wire bytes, hash, parsed name and its id per slot
+  private val qWire = new Array[Array[Byte]](QnameSlots)
+  private val qHash = new Array[Int](QnameSlots)
+  private val qStrs = new Array[String](QnameSlots)
+  private val qIds = new Array[Int](QnameSlots)
+  private var qSlot = 0 // the slot the last miss maps to
 
   def reset(): Unit = {
     frameTime = 0L; frameLen = 0L; ethType = -1
@@ -85,7 +121,114 @@ final class DissectAcc {
     tcpFlagsBits = -1; tcpSrcport = -1; tcpDstport = -1
     protoIdx = -1; dnsQryName = null; dnsQryType = -1
     ntpPrivReqcode = -1; dhipDevice = null; errors = 0
+    ipSrcId = -1; ipDstId = -1; dnsQryId = -1; dhipId = -1
     pendKind = 0
+  }
+
+  /** The dictionary the address ids index (null before [[boundDictionaries]]). */
+  def addrDict: StringDict = addrs
+  /** The dictionary the DNS qname and DHIP device ids index. */
+  def nameDict: StringDict = names
+
+  /** Install fresh reader dictionaries where none is installed yet or the
+    * installed one holds more than `maxBytes` ([[StringDict.bytes]]); the
+    * ids handed out before refer to the old dictionary only. Call it
+    * between batches, never while a batch's ids are being read.
+    */
+  def boundDictionaries(maxBytes: Long): Unit = {
+    if (addrs == null || addrs.bytes > maxBytes) {
+      addrs = new StringDict
+      v4Ids.clear(); v6Ids.clear()
+      java.util.Arrays.fill(ipIds, -1)
+    }
+    if (names == null || names.bytes > maxBytes) {
+      names = new StringDict
+      nameIds.clear()
+      java.util.Arrays.fill(qIds, -1)
+      if (tableIds != null) java.util.Arrays.fill(tableIds, -1)
+    }
+  }
+
+  private def v4Id(key: Int, u8: UTF8String): Int =
+    if (addrs == null) -1
+    else {
+      var id = v4Ids.get(key)
+      if (id < 0) { id = addrs.add(u8); v4Ids.put(key, id) }
+      id
+    }
+
+  private def nameId(s: String): Int =
+    if (names == null || s == null) -1
+    else {
+      val id = nameIds.get(s)
+      if (id != null) id.intValue
+      else { val n = names.add(s); nameIds.put(s, n); n }
+    }
+
+  // ids of a fixed table's strings (the defrag patch map's), by index
+  private var tableStrs: Array[String] = null
+  private var tableIds: Array[Int] = null
+
+  /** Set `dnsQryName` to `strs(i)`, an entry of a table that stays the
+    * same across calls (the defrag patch map's strings): its id is
+    * looked up once per entry, not once per packet.
+    */
+  def setDnsQryName(strs: Array[String], i: Int): Unit = {
+    dnsQryName = strs(i)
+    if (names != null) {
+      if (strs ne tableStrs) {
+        tableStrs = strs
+        tableIds = Array.fill(strs.length)(-1)
+      }
+      if (tableIds(i) < 0) tableIds(i) = nameId(strs(i))
+      dnsQryId = tableIds(i)
+    }
+  }
+
+  /** [[nameDict]] id of `dnsQryName` (-1 without dictionaries). */
+  def dnsQryNameId: Int = {
+    if (dnsQryId < 0) dnsQryId = nameId(dnsQryName)
+    dnsQryId
+  }
+
+  /** [[nameDict]] id of `dhipDevice` (-1 without dictionaries). */
+  def dhipDeviceId: Int = {
+    if (dhipId < 0) dhipId = nameId(dhipDevice)
+    dhipId
+  }
+
+  /** Look the pointer-free wire name `b[from, until)` up in the qname
+    * intern: on a hit set `dnsQryName` (and its id) and return true; on
+    * a miss return false, and [[qnameMiss]] stores the parsed name.
+    */
+  private[dissect] def qnameHit(b: Array[Byte], from: Int, until: Int): Boolean = {
+    val n = until - from
+    val h = Murmur3_x86_32.hashUnsafeBytes2(b, Platform.BYTE_ARRAY_OFFSET + from, n, 42)
+    val slot = (h * 0x9e3779b1) >>> (32 - QnameBits)
+    val w = qWire(slot)
+    if (w != null && qHash(slot) == h && w.length == n &&
+        java.util.Arrays.equals(w, 0, n, b, from, until)) {
+      dnsQryName = qStrs(slot)
+      if (names != null) {
+        if (qIds(slot) < 0) qIds(slot) = nameId(dnsQryName)
+        dnsQryId = qIds(slot)
+      }
+      true
+    } else {
+      qSlot = slot
+      qHash(slot) = h
+      false
+    }
+  }
+
+  /** After a [[qnameHit]] miss on the same bytes: intern `name` as their
+    * parse and set `dnsQryName`.
+    */
+  private[dissect] def qnameMiss(b: Array[Byte], from: Int, until: Int, name: String): Unit = {
+    qWire(qSlot) = java.util.Arrays.copyOfRange(b, from, until)
+    qStrs(qSlot) = name
+    qIds(qSlot) = -1
+    dnsQryName = name
   }
 
   /** Cached dotted-quad lookup; fills ipStrs/ipU8s on miss. Returns the
@@ -101,22 +244,37 @@ final class DissectAcc {
       ipKeys(slot) = key
       ipStrs(slot) = str
       ipU8s(slot) = UTF8String.fromString(str)
+      ipIds(slot) = -1
     }
+    if (ipIds(slot) < 0) ipIds(slot) = v4Id(key, ipU8s(slot))
     slot
   }
 
   def setIpv4Src(key: Int): Unit = {
-    val s = ipv4Slot(key); ipSrcStr = ipStrs(s); ipSrcU8 = ipU8s(s)
+    val s = ipv4Slot(key); ipSrcStr = ipStrs(s); ipSrcU8 = ipU8s(s); ipSrcId = ipIds(s)
   }
   def setIpv4Dst(key: Int): Unit = {
-    val s = ipv4Slot(key); ipDstStr = ipStrs(s); ipDstU8 = ipU8s(s)
+    val s = ipv4Slot(key); ipDstStr = ipStrs(s); ipDstU8 = ipU8s(s); ipDstId = ipIds(s)
   }
   def setIpv6Src(text: String): Unit = {
-    ipSrcStr = text; ipSrcU8 = UTF8String.fromString(text)
+    ipSrcStr = text; ipSrcId = v6Id(text)
+    ipSrcU8 = if (ipSrcId < 0) UTF8String.fromString(text)
+      else UTF8String.fromBytes(addrs.decodeToBinary(ipSrcId))
   }
   def setIpv6Dst(text: String): Unit = {
-    ipDstStr = text; ipDstU8 = UTF8String.fromString(text)
+    ipDstStr = text; ipDstId = v6Id(text)
+    ipDstU8 = if (ipDstId < 0) UTF8String.fromString(text)
+      else UTF8String.fromBytes(addrs.decodeToBinary(ipDstId))
   }
+
+  /** [[addrDict]] id of an IPv6 text, by value (-1 without dictionaries). */
+  private def v6Id(text: String): Int =
+    if (addrs == null) -1
+    else {
+      val id = v6Ids.get(text)
+      if (id != null) id.intValue
+      else { val n = addrs.add(text); v6Ids.put(text, n); n }
+    }
 
   /** The 31-column Catalyst row ([[graft.core.PacketSchema.schema]] order).
     * A fresh GenericInternalRow per call (rows escape downstream); all
@@ -187,11 +345,52 @@ final class DissectAcc {
 object DissectAcc {
   private val IpCacheBits = 12
   private val IpCacheSlots = 1 << IpCacheBits
+  private val QnameBits = 11
+  /** Slots of the direct-mapped qname intern. */
+  private[graft] val QnameSlots = 1 << QnameBits
+
+  /** Open-addressing Int → id map (ids >= 0; -1 = absent). */
+  private final class IntIds {
+    private var keys = new Array[Int](256)
+    private var vals = new Array[Int](256) // id + 1; 0 = empty
+    private var n = 0
+    private def slot(k: Int): Int = { val x = k * 0x9e3779b1; x ^ (x >>> 16) }
+    def get(k: Int): Int = {
+      val mask = keys.length - 1
+      var s = slot(k) & mask
+      while (vals(s) != 0) {
+        if (keys(s) == k) return vals(s) - 1
+        s = (s + 1) & mask
+      }
+      -1
+    }
+    def put(k: Int, id: Int): Unit = {
+      if (2 * (n + 1) > keys.length) {
+        val (ok, ov) = (keys, vals)
+        keys = new Array[Int](ok.length * 2); vals = new Array[Int](ok.length * 2)
+        n = 0
+        var i = 0
+        while (i < ok.length) { if (ov(i) != 0) put(ok(i), ov(i) - 1); i += 1 }
+      }
+      val mask = keys.length - 1
+      var s = slot(k) & mask
+      while (vals(s) != 0 && keys(s) != k) s = (s + 1) & mask
+      if (vals(s) == 0) n += 1
+      keys(s) = k; vals(s) = id + 1
+    }
+    def clear(): Unit = {
+      if (keys.length > 256) { keys = new Array[Int](256); vals = new Array[Int](256) }
+      else java.util.Arrays.fill(vals, 0)
+      n = 0
+    }
+  }
 
   /** Protocol-label table; [[PacketDissector]] writes indices into it. */
   val ProtoStr: Array[String] =
     Array("IPv4", "IPv6", "UDP", "TCP", "ICMP", "DNS", "NTP", "DHDiscover")
   val ProtoU8: Array[UTF8String] = ProtoStr.map(UTF8String.fromString)
+  /** [[ProtoU8]] as a dictionary: `protoIdx` is the id. */
+  val ProtoDict: StringDict = StringDict.of(ProtoU8)
   val PIpv4 = 0; val PIpv6 = 1; val PUdp = 2; val PTcp = 3
   val PIcmp = 4; val PDns = 5; val PNtp = 6; val PDhip = 7
 
@@ -209,4 +408,6 @@ object DissectAcc {
     new String(cs)
   }
   val FlagU8: Array[UTF8String] = FlagStr.map(UTF8String.fromString)
+  /** [[FlagU8]] as a dictionary: the flag bits are the id. */
+  val FlagDict: StringDict = StringDict.of(FlagU8)
 }

@@ -6,19 +6,54 @@ package graft.dissect
   * root dot), root name rendered `"<Root>"`, qtype as int. Compression
   * pointers are followed defensively (bounded jumps). Malformed / too-short
   * messages count one error and set nothing.
+  *
+  * A qname without compression pointers is looked up by its wire bytes
+  * in the accumulator's intern first ([[DissectAcc.qnameHit]]): without
+  * pointers the parse is a pure function of those bytes, so a hit reuses
+  * the String parsed before and [[parseName]] does not run.
   */
 object Dns {
   def dissectInto(b: Array[Byte], start: Int, end: Int, a: DissectAcc): Unit = {
     if (end - start < 12) { a.errors += 1; return }
     val qdcount = ((b(start + 4) & 0xff) << 8) | (b(start + 5) & 0xff)
     if (qdcount < 1) return // no question: nothing set, no error
-    parseName(b, start, end, start + 12) match {
-      case None => a.errors += 1
-      case Some((name, after)) =>
-        if (end - after < 4) { a.errors += 1; return }
-        a.dnsQryName = name
-        a.dnsQryType = ((b(after) & 0xff) << 8) | (b(after + 1) & 0xff)
+    val nameStart = start + 12
+    val wireEnd = plainNameEnd(b, nameStart, end)
+    val after =
+      if (wireEnd >= 0) {
+        if (end - wireEnd < 4) { a.errors += 1; return }
+        if (!a.qnameHit(b, nameStart, wireEnd)) parseName(b, start, end, nameStart) match {
+          case Some((name, _)) => a.qnameMiss(b, nameStart, wireEnd, name)
+          case None => a.errors += 1; return // unreachable: plainNameEnd accepted it
+        }
+        wireEnd
+      } else parseName(b, start, end, nameStart) match {
+        case None => a.errors += 1; return
+        case Some((name, after)) =>
+          if (end - after < 4) { a.errors += 1; return }
+          a.dnsQryName = name
+          after
+      }
+    a.dnsQryType = ((b(after) & 0xff) << 8) | (b(after + 1) & 0xff)
+  }
+
+  /** The end (just past the root label) of the name at `from` when it
+    * has no compression pointer and [[parseName]] accepts it: every
+    * label inside `end`, no reserved label type, at most 128 labels.
+    * Otherwise -1.
+    */
+  private def plainNameEnd(b: Array[Byte], from: Int, end: Int): Int = {
+    var pos = from
+    var labels = 0
+    while (pos < end) {
+      val len = b(pos) & 0xff
+      if (len == 0) return pos + 1
+      if ((len & 0xc0) != 0 || pos + 1 + len > end) return -1
+      labels += 1
+      if (labels > 128) return -1
+      pos += 1 + len
     }
+    -1
   }
 
   /** Returns (display name, offset just past the name at its original

@@ -430,7 +430,7 @@ object DefragPatch {
         if (a.dnsQryType < 0 && m.dnsQryType(i) >= 0)
           a.dnsQryType = m.dnsQryType(i)
         if (a.dnsQryName == null && m.dnsNameIdx(i) >= 0)
-          a.dnsQryName = m.strings(m.dnsNameIdx(i))
+          a.setDnsQryName(m.strings, m.dnsNameIdx(i))
         if (a.protoIdx < 0 && m.protoIdx(i) >= 0)
           a.protoIdx = m.protoIdx(i)
       }

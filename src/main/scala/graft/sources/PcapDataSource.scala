@@ -7,6 +7,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.column.ParquetProperties
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -15,10 +16,11 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnVector
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.core.PacketSchema
-import graft.dissect.PacketDissector
+import graft.core.{DictVector, PacketSchema, StringDict}
+import graft.dissect.{DissectAcc, PacketDissector}
 import graft.pcapio.PcapFramer
 import graft.spark.PcapSource
 
@@ -422,10 +424,21 @@ private[sources] object DissectPlan {
   * column vectors, 4096 packets per batch. The required columns' source
   * ordinals ([[PacketSchema.bytesSchema]], so bytes mode's `frame_bytes`
   * and `linktype` too) are resolved ONCE per reader and [[fill]]
-  * switches on them per packet; every string column reuses the
-  * accumulator's interned UTF8Strings' backing bytes. A batch that
-  * carries `frame_bytes` also closes once those pass [[BatchBytes]], so
-  * jumbo or TSO-sized frames cannot make one batch buffer 4096 × 64 KiB.
+  * switches on them per packet. A batch that carries `frame_bytes` also
+  * closes once those pass [[BatchBytes]], so jumbo or TSO-sized frames
+  * cannot make one batch buffer 4096 × 64 KiB.
+  *
+  * Every populated string column leaves as dictionary ids
+  * ([[graft.core.DictVector]]), the shape Spark's vectorized Parquet
+  * reader emits, so `getUTF8String` readers see the same strings and the
+  * page encoder hashes a value once per distinct id: addresses and
+  * DNS/DHIP names index the accumulator's reader dictionaries,
+  * `col_protocol` and `tcp_flags` the static [[DissectAcc.ProtoDict]] /
+  * [[DissectAcc.FlagDict]], `pcap_file` a one-entry dictionary. A reader
+  * dictionary past the writer's dictionary-page threshold (1 MiB) is
+  * replaced at the next batch, so a flood of distinct names costs one
+  * dictionary's worth of memory per reader. `col_info` and `http_*`,
+  * declared but never populated, are nulled once per batch.
   */
 final class PcapColumnarReader(
     file: String,
@@ -471,8 +484,6 @@ final class PcapColumnarReader(
       PcapFramer.framesRange(in, mode, preset, rangeEnd - rangeStart)
     }
   private val base = PcapSource.basename(file)
-  private val baseUtf8 = org.apache.spark.unsafe.types.UTF8String
-    .fromString(base)
   // staged dissection (round 13): dissect to the level the pruned
   // schema + filters need; L3-decidable filters veto BEFORE the
   // transport/L7 stages run. The unboxed predicate forms evaluate on
@@ -487,10 +498,29 @@ final class PcapColumnarReader(
   private val stagedResume = plan.baseLevel < plan.levelRequired
   // defrag broadcast-patch map (null = no patching) — see DefragPatch
   private val patchMap = patch.map(_.value).orNull
-  private val vectors = OnHeapColumnVector.allocateColumns(BatchRows, required)
-  private val batch = new org.apache.spark.sql.vectorized.ColumnarBatch(
-    vectors.asInstanceOf[Array[org.apache.spark.sql.vectorized.ColumnVector]])
+  /** Source-schema ordinal of each REQUIRED column (column pruning =
+    * fewer fills, not a per-row projection). */
+  private val sourceOrds: Array[Int] =
+    required.fieldNames.map(PacketSchema.bytesSchema.fieldIndex)
+  private val vectors: Array[ColumnVector] = sourceOrds.indices.map { c =>
+    val dt = required(c).dataType
+    if (PcapColumnarReader.DictOrds(sourceOrds(c))) new DictVector(BatchRows, dt)
+    else new OnHeapColumnVector(BatchRows, dt)
+  }.toArray
+  /** What [[fill]] writes per column: a dictionary column's ids, else
+    * the column itself. */
+  private val writables: Array[OnHeapColumnVector] = vectors.map {
+    case d: DictVector => d.ids
+    case v: OnHeapColumnVector => v
+  }
+  private val dictCols: Array[Int] = vectors.indices.filter(vectors(_).isInstanceOf[DictVector]).toArray
+  /** Columns filled per packet, and the never-populated ones. */
+  private val (filled, nulled) = sourceOrds.indices.toArray
+    .partition(c => !PcapColumnarReader.NullOrds(sourceOrds(c)))
+  private val batch = new org.apache.spark.sql.vectorized.ColumnarBatch(vectors)
   private val acc = new graft.dissect.DissectAcc
+  private val fileDict = StringDict.of(
+    Array(org.apache.spark.unsafe.types.UTF8String.fromString(base)))
   private var raw: graft.core.RawFrame = _
   private var nPackets = 0L
   private var nErrors = 0L
@@ -502,38 +532,25 @@ final class PcapColumnarReader(
   private val countFrag = metrics.exists(_.fragmented != null)
   private var nFrag = 0L
 
-  private def putU8(v: OnHeapColumnVector, row: Int,
-      s: org.apache.spark.unsafe.types.UTF8String): Unit = {
-    // getBytes copies only when the UTF8String isn't array-backed at
-    // offset 0 — interned labels and cached IPv4 texts are
-    val b = s.getBytes
-    v.putByteArray(row, b, 0, b.length)
-    ()
-  }
-
-  /** Source-schema ordinal of each REQUIRED column (column pruning =
-    * fewer fills, not a per-row projection). */
-  private val sourceOrds: Array[Int] =
-    required.fieldNames.map(PacketSchema.bytesSchema.fieldIndex)
   private val FrameBytesOrd = PacketSchema.schema.length
   private val withBytes = sourceOrds.contains(FrameBytesOrd)
 
-  /** Fill row `r` of `v` with source column `ord` from the accumulator.
+  /** Fill row `r` of `v` with source column `ord` from the accumulator;
+    * a string column's `v` takes the value's dictionary id.
     * A switch, not an array of `(vector, row) => Unit` closures: Scala
     * does not specialise a Function2 whose first parameter is a
     * reference type, so every per-packet call boxed `r` and dispatched
     * megamorphically.
     */
   private def fill(v: OnHeapColumnVector, ord: Int, r: Int): Unit = {
-    import graft.dissect.DissectAcc.{FlagU8, ProtoU8}
     (ord: @switch) match {
       case 0 => v.putLong(r, acc.frameTime)
       case 1 => v.putLong(r, acc.frameLen)
       case 2 => if (acc.ethType < 0) v.putNull(r) else v.putInt(r, acc.ethType)
       case 3 | 18 => // ip_src, col_source
-        if (acc.ipSrcU8 == null) v.putNull(r) else putU8(v, r, acc.ipSrcU8)
+        if (acc.ipSrcU8 == null) v.putNull(r) else v.putInt(r, acc.ipSrcId)
       case 4 | 19 => // ip_dst, col_destination
-        if (acc.ipDstU8 == null) v.putNull(r) else putU8(v, r, acc.ipDstU8)
+        if (acc.ipDstU8 == null) v.putNull(r) else v.putInt(r, acc.ipDstId)
       case 5 => v.putShort(r, acc.ipProto)
       case 6 => if (acc.ipTtl < 0) v.putNull(r) else v.putShort(r, acc.ipTtl.toShort)
       case 7 => v.putInt(r, acc.ipFragOffset)
@@ -545,34 +562,38 @@ final class PcapColumnarReader(
       case 12 => if (acc.udpSrcport < 0) v.putNull(r) else v.putInt(r, acc.udpSrcport)
       case 13 => if (acc.udpDstport < 0) v.putNull(r) else v.putInt(r, acc.udpDstport)
       case 14 =>
-        if (acc.tcpFlagsBits < 0) v.putNull(r)
-        else putU8(v, r, FlagU8(acc.tcpFlagsBits))
+        if (acc.tcpFlagsBits < 0) v.putNull(r) else v.putInt(r, acc.tcpFlagsBits)
       case 15 => if (acc.tcpSrcport < 0) v.putNull(r) else v.putInt(r, acc.tcpSrcport)
       case 16 => if (acc.tcpDstport < 0) v.putNull(r) else v.putInt(r, acc.tcpDstport)
-      // col_info and http_*: declared, never populated
-      case 17 | 23 | 24 | 25 | 26 | 27 => v.putNull(r)
-      case 20 => if (acc.protoIdx < 0) v.putNull(r) else putU8(v, r, ProtoU8(acc.protoIdx))
+      case 20 => if (acc.protoIdx < 0) v.putNull(r) else v.putInt(r, acc.protoIdx)
       case 21 =>
-        if (acc.dnsQryName == null) v.putNull(r)
-        else putU8(v, r, org.apache.spark.unsafe.types.UTF8String
-          .fromString(acc.dnsQryName))
+        if (acc.dnsQryName == null) v.putNull(r) else v.putInt(r, acc.dnsQryNameId)
       case 22 => if (acc.dnsQryType < 0) v.putNull(r) else v.putInt(r, acc.dnsQryType)
       case 28 =>
         if (acc.ntpPrivReqcode < 0) v.putNull(r)
         else v.putShort(r, acc.ntpPrivReqcode.toShort)
       case 29 =>
-        if (acc.dhipDevice == null) v.putNull(r)
-        else putU8(v, r, org.apache.spark.unsafe.types.UTF8String
-          .fromString(acc.dhipDevice))
-      case 30 => putU8(v, r, baseUtf8)
+        if (acc.dhipDevice == null) v.putNull(r) else v.putInt(r, acc.dhipDeviceId)
+      case 30 => v.putInt(r, 0)
       case 31 => v.putByteArray(r, raw.data); ()
       case 32 => v.putInt(r, raw.linktype)
     }
   }
 
+  /** The dictionary behind source column `ord`'s ids. */
+  private def dictOf(ord: Int): StringDict = ord match {
+    case 3 | 4 | 18 | 19 => acc.addrDict
+    case 14 => DissectAcc.FlagDict
+    case 20 => DissectAcc.ProtoDict
+    case 21 | 29 => acc.nameDict
+    case 30 => fileDict
+  }
+
   override def next(): Boolean = {
     var i = 0
-    while (i < vectors.length) { vectors(i).reset(); i += 1 }
+    while (i < writables.length) { writables(i).reset(); i += 1 }
+    acc.boundDictionaries(PcapColumnarReader.DictBytes)
+    dictCols.foreach(c => vectors(c).asInstanceOf[DictVector].dict = dictOf(sourceOrds(c)))
     var n = 0
     var bytes = 0L
     while (n < BatchRows && bytes < BatchBytes && frames.hasNext) {
@@ -606,15 +627,17 @@ final class PcapColumnarReader(
         nFrag += 1
       if (acc.errors > 0) nErrors += acc.errors.toLong
       if (emit) {
-        var c = 0
-        while (c < sourceOrds.length) {
-          fill(vectors(c), sourceOrds(c), n)
-          c += 1
+        var k = 0
+        while (k < filled.length) {
+          val c = filled(k)
+          fill(writables(c), sourceOrds(c), n)
+          k += 1
         }
         if (withBytes) bytes += raw.data.length
         n += 1
       }
     }
+    nulled.foreach(c => writables(c).putNulls(0, n))
     batch.setNumRows(n)
     // flush per BATCH, not per packet: cheap, and executor heartbeats
     // still surface live progress (`-v`) from the partial sums
@@ -628,4 +651,16 @@ final class PcapColumnarReader(
 
   override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = batch
   override def close(): Unit = in.close()
+}
+
+private object PcapColumnarReader {
+  /** Source ordinals of the string columns read as dictionary ids. */
+  val DictOrds: Set[Int] = Set(3, 4, 14, 18, 19, 20, 21, 29, 30)
+  /** `col_info` and `http_*`: declared, never populated. */
+  val NullOrds: Set[Int] = Set(17, 23, 24, 25, 26, 27)
+  /** A reader dictionary's bound: the writer's dictionary-page
+    * threshold, past which its column chunk falls back to PLAIN anyway.
+    */
+  val DictBytes: Long =
+    ParquetProperties.builder().build().getDictionaryPageSizeThreshold.toLong
 }

@@ -16,6 +16,8 @@ import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.array.ByteArrayMethods
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
+import graft.core.{DictVector, StringDict}
+
 /** Page-at-a-time parquet V1 encoder for a flat schema of optional
   * columns: each batch column is read in one loop specialised by type,
   * and finished data pages go to the `ColumnChunkPageWriteStore` page
@@ -40,8 +42,14 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   *    entries while dictionary-encoded), null counts, and the unencoded
   *    byte-array size.
   *
-  * Strings are read in place from the vector's byte storage (on- or
-  * off-heap); each distinct value is copied once, into the dictionary.
+  * Strings from a [[graft.core.DictVector]] (what the pcap reader emits)
+  * arrive as ids into the vector's dictionary: each column maps a reader
+  * id to its chunk-dictionary id through an int array, so a value's bytes
+  * are hashed and compared only the first time its id appears in the
+  * chunk. Any other string vector is read in place from its byte storage
+  * (on- or off-heap). Either way each distinct value is copied once, into
+  * the chunk dictionary, and entries keep first-seen order, so the pages,
+  * dictionaries and statistics do not depend on the vector kind.
   * Buffers live for the encoder (one per write task) and are reused
   * across pages and row groups.
   */
@@ -546,9 +554,10 @@ private object PageEncoder {
       st.asInstanceOf[LongStatistics].setMinMax(min, max)
   }
 
-  /** BYTE_ARRAY values, read in place: a `WritableColumnVector`'s
-    * offsets/lengths over its child's byte storage, else the vector's
-    * own getters. Entries live in one arena.
+  /** BYTE_ARRAY values: ids of a [[DictVector]] through `remap`, else
+    * read in place (a `WritableColumnVector`'s offsets/lengths over its
+    * child's byte storage, else the vector's own getters). Entries live
+    * in one arena.
     */
   final class BinCol(desc: ColumnDescriptor, props: ParquetProperties, string: Boolean)
       extends DictCol(desc, props) {
@@ -575,6 +584,11 @@ private object PageEncoder {
     private var off = 0L
     private var len = 0
     private val arenaBase = Platform.BYTE_ARRAY_OFFSET.toLong
+    // reader id → chunk id + 1 (0 = not seen yet) for the ids of `src`;
+    // entries below `remapTop` may be set
+    private var remap = new Array[Int](1 << 10)
+    private var remapTop = 0
+    private var src: StringDict = _
 
     private def entryEquals(id: Int): Boolean =
       lens(id) == len && ByteArrayMethods.arrayEquals(
@@ -637,7 +651,71 @@ private object PageEncoder {
       }
     }
 
-    def append(v: ColumnVector, from: Int, until: Int): Unit = {
+    private def clearRemap(): Unit = {
+      java.util.Arrays.fill(remap, 0, remapTop, 0)
+      remapTop = 0
+    }
+
+    def append(v: ColumnVector, from: Int, until: Int): Unit = v match {
+      case d: DictVector if d.dict != null => appendIds(d, from, until)
+      case _ => appendBytes(v, from, until)
+    }
+
+    /** Rows of a dictionary vector: while the chunk is dictionary-encoded
+      * a reader id seen before in the chunk costs one array read; once
+      * fallen back to PLAIN, values are read through the dictionary.
+      */
+    private def appendIds(d: DictVector, from: Int, until: Int): Unit = {
+      val dict = d.dict
+      if (dict ne src) { clearRemap(); src = dict }
+      if (levels(d, from, until) > 0) {
+        val rids = d.ids
+        val defs = this.defs
+        val ids = this.ids
+        var dictMode = !fellBack
+        var n = nv
+        val n0 = n
+        var bytes = 0L
+        var r = from
+        var p = pageRows
+        while (r < until) {
+          if (defs(p) != 0) {
+            val rid = rids.getInt(r)
+            if (dictMode) {
+              if (rid >= remap.length)
+                remap = java.util.Arrays.copyOf(remap, math.max(remap.length * 2, rid + 1))
+              var id = remap(rid) - 1
+              if (id < 0) {
+                val b = dict.decodeToBinary(rid)
+                base = b; off = arenaBase; len = b.length
+                id = idOf()
+                remap(rid) = id + 1
+                if (rid >= remapTop) remapTop = rid + 1
+              }
+              ids(n) = id
+              if (seen(id) != page) { seen(id) = page; pageIds(distinct) = id; distinct += 1 }
+              bytes += lens(id)
+            } else {
+              val b = dict.decodeToBinary(rid)
+              base = b; off = arenaBase; len = b.length
+              bytes += len
+              plainValue(n == 0)
+            }
+            n += 1
+            if (dictMode && dictFull) { nv = n; fallBack(); dictMode = false }
+          }
+          r += 1
+          p += 1
+        }
+        raw += 4L * (n - n0) + bytes
+        unencoded += bytes
+        nv = n
+      }
+      pageRows += until - from
+      base = null
+    }
+
+    private def appendBytes(v: ColumnVector, from: Int, until: Int): Unit = {
       // the byte storage behind a plain writable vector's offsets
       val (w, data, dataOff): (WritableColumnVector, AnyRef, Long) = v match {
         case w: WritableColumnVector if !w.hasDictionary => w.arrayData() match {
@@ -695,6 +773,7 @@ private object PageEncoder {
     }
     protected def clearDict(): Unit = {
       table.clear(); size = 0; arena.len = 0; lastId = -1
+      clearRemap()
     }
     override protected def unencodedBytes: Long = unencoded
 

@@ -87,11 +87,16 @@ object PcapConvert {
   /** Driver-side fragmentation probe (round 13, the speculative
     * single-pass convert): frame + L3-dissect up to `maxFrames` of the
     * FIRST capture file and return the fragmented percentage of the
-    * sample. ~60 ms at the 200k default — cheap enough to run before
-    * every convert. A prefix sample can of course misread a capture
-    * whose fragments come later; the speculation it feeds is validated
-    * against EXACT whole-corpus counts after the write, so a misread
-    * only costs a wasted pass, never a wrong result.
+    * sampled prefix. The walk stops early once the prefix holds
+    * `maxFrames / 500` fragments: the whole sample's percentage can then
+    * no longer fall below the convert's 0.2 decision threshold, so the
+    * returned value is the shorter prefix's percentage once that
+    * percentage reaches ≥ 0.2, and the decision (`< 0.2`) is the one the
+    * full sample would give. ~60 ms for 200k unfragmented frames — cheap
+    * enough to run before every convert. A prefix sample can of course
+    * misread a capture whose fragments come later; the speculation it
+    * feeds is validated against EXACT whole-corpus counts after the
+    * write, so a misread only costs a wasted pass, never a wrong result.
     */
   def sampleFragPct(spark: SparkSession, fileOrGlob: String,
       mode: PcapFramer.Mode, maxFrames: Int = SampleFrames): Double = {
@@ -114,7 +119,8 @@ object PcapConvert {
         val acc = new graft.dissect.DissectAcc
         var total = 0L
         var frag = 0L
-        while (frames.hasNext && total < maxFrames) {
+        // frag * 500 >= maxFrames >= total: 100 * frag / total >= 0.2
+        while (frames.hasNext && total < maxFrames && frag * 500 < maxFrames) {
           graft.dissect.PacketDissector.dissectInto(acc, frames.next(),
             walkV6 = mode != PcapFramer.ReferenceCompat,
             level = graft.dissect.DissectLevel.L3)

@@ -92,6 +92,80 @@ object DissectorProps extends Properties("dissector") {
     r.dnsQryName.contains(name)
   }
 
+  /** One DNS message (from its header on) whose first question name
+    * mixes the shapes `Dns.parseName` distinguishes: printable labels
+    * with `.`/`\` and non-printable bytes (`\DDD`), the root name,
+    * 127-130 labels around the 128 limit, compression pointers (back
+    * into the name, into the header, forward to a second name, or into
+    * a loop), reserved label types, and truncation anywhere.
+    */
+  private def dnsMessage(rnd: scala.util.Random): Array[Byte] = {
+    val b = new java.io.ByteArrayOutputStream()
+    b.write(Array[Byte](0x12, 0x34, 0x01, 0x00, 0, Seq(0, 1, 1, 1, 2)(rnd.nextInt(5)).toByte,
+      0, 0, 0, 0, 0, 0))
+    def label(): Unit = {
+      val n = if (rnd.nextInt(10) == 0) 1 + rnd.nextInt(63) else 1 + rnd.nextInt(4)
+      b.write(n)
+      (0 until n).foreach { _ =>
+        b.write(rnd.nextInt(20) match {
+          case 0 => '.'
+          case 1 => '\\'
+          case 2 => rnd.nextInt(0x21) // controls and space
+          case 3 => 0x7f + rnd.nextInt(0x81)
+          case _ => 'a' + rnd.nextInt(3)
+        })
+      }
+    }
+    def pointer(to: Int): Unit = { b.write(0xc0 | (to >> 8)); b.write(to & 0xff) }
+    val nameAt = 12
+    rnd.nextInt(10) match {
+      case 0 => b.write(0) // the root name
+      case 1 => (0 until 127 + rnd.nextInt(4)).foreach { _ => b.write(1); b.write('x') }; b.write(0)
+      case 2 => // pointer: into the header, back to the name (a loop) or forward
+        (0 until rnd.nextInt(3)).foreach(_ => label())
+        val forward = b.size + 6
+        pointer(Seq(rnd.nextInt(12), nameAt, forward)(rnd.nextInt(3)))
+      case 3 => label(); b.write(0x40 | rnd.nextInt(0x40)) // reserved label type
+      case _ => (0 until 1 + rnd.nextInt(3)).foreach(_ => label()); b.write(0)
+    }
+    b.write(Array[Byte](0, (1 + rnd.nextInt(3)).toByte, 0, 1))
+    label(); label(); b.write(0) // a pointer target
+    val m = b.toByteArray
+    if (rnd.nextInt(4) == 0) m.take(rnd.nextInt(m.length + 1)) else m
+  }
+
+  property("wire-interned qname ≡ Dns.parseName, past the intern's size") = forAll(
+    Gen.choose(0L, Long.MaxValue)
+  ) { seed =>
+    // the intern is direct-mapped: three times its slots in distinct
+    // messages, drawn with repeats, make hits, collisions and evictions;
+    // the expected row is the parse without any intern
+    val rnd = new scala.util.Random(seed)
+    val pool = Array.fill(3 * graft.dissect.DissectAcc.QnameSlots)(dnsMessage(rnd))
+    val a = new graft.dissect.DissectAcc
+    (0 until 4 * pool.length).forall { i =>
+      // small reader dictionaries, so they are replaced every few messages
+      if (i % 64 == 0) a.boundDictionaries(256L)
+      val m = pool(rnd.nextInt(pool.length))
+      a.reset()
+      graft.dissect.Dns.dissectInto(m, 0, m.length, a)
+      val want: (String, Int, Int) =
+        if (m.length < 12) (null, -1, 1)
+        else if (((m(4) & 0xff) << 8 | (m(5) & 0xff)) < 1) (null, -1, 0)
+        else graft.dissect.Dns.parseName(m, 0, m.length, 12) match {
+          case None => (null, -1, 1)
+          case Some((_, after)) if m.length - after < 4 => (null, -1, 1)
+          case Some((name, after)) => (name, (m(after) & 0xff) << 8 | (m(after + 1) & 0xff), 0)
+        }
+      val ok = (a.dnsQryName, a.dnsQryType, a.errors) == want &&
+        (want._1 == null || java.util.Arrays.equals(
+          a.nameDict.decodeToBinary(a.dnsQryNameId), want._1.getBytes("UTF-8")))
+      if (!ok) println(s"qname intern: ${m.map(x => f"$x%02x").mkString} gave " +
+        s"${(a.dnsQryName, a.dnsQryType, a.errors)}, want $want")
+      ok
+    }
+  }
+
   property("framer round-trip: every written frame comes back with its timestamp") = forAll(
     Gen.chooseNum(1, 20).flatMap(n => Gen.listOfN(n,
       Gen.zip(Gen.chooseNum(0L, 4000000000000000L), Gen.chooseNum(0, 64))))

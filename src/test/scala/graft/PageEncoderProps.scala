@@ -17,6 +17,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.scalacheck.{Gen, Prop, Properties, Test}
 
+import graft.core.{DictVector, StringDict}
 import graft.spark.PcapColumnarWrite
 
 /** The convert's page encoder over synthetic batches of all five
@@ -29,7 +30,12 @@ import graft.spark.PcapColumnarWrite
   *    (encodings, min/max, null and value counts): wrong min/max would
   *    silently drop rows under pushed-down filters;
   *  - read back equal to the input through Spark's vectorized reader and
-  *    through parquet-mr's record reader.
+  *    through parquet-mr's record reader;
+  *  - produce the same file bytes when its strings arrive as dictionary
+  *    ids ([[graft.core.DictVector]], what the pcap reader emits), from
+  *    reader dictionaries with shuffled ids and duplicate values: one
+  *    dictionary for the whole chunk, a fresh one every batch, or two
+  *    taking turns.
   */
 object PageEncoderProps extends Properties("page-encoder") {
 
@@ -136,6 +142,82 @@ object PageEncoderProps extends Properties("page-encoder") {
     out.result()
   }
 
+  /** How a dictionary arm's string columns get their dictionaries. */
+  private val dictLayouts = Seq("shared", "swapped", "alternating")
+
+  /** `batches(cols, k, offHeap = false)`'s rows and batch boundaries,
+    * with every string column as dictionary ids. Each reader dictionary
+    * holds its values twice, at shuffled ids, and a row picks one of its
+    * value's ids at random; `layout` "shared" uses one dictionary per
+    * column, "swapped" a fresh one per batch (over that batch's values),
+    * "alternating" two that take turns batch by batch.
+    */
+  private def dictBatches(cols: Array[Array[Any]], k: Case, layout: String): Seq[ColumnarBatch] = {
+    val rnd = new Random(k.seed ^ 0x5eed)
+    val pick = new Random(k.seed ^ 0xd1c7)
+    def dict(values: Seq[String]): (StringDict, Map[String, Seq[Int]]) = {
+      val d = new StringDict
+      val ids = pick.shuffle(values ++ values).map(v => v -> d.add(v.getBytes("UTF-8")))
+      (d, ids.groupMap(_._1)(_._2))
+    }
+    def values(c: Int, from: Int, until: Int) =
+      cols(c).slice(from, until).collect { case x: String => x }.distinct.toSeq
+    val whole = schema.fields.indices.map(c =>
+      if (schema(c).dataType == StringType) Seq(dict(values(c, 0, k.rows)), dict(values(c, 0, k.rows)))
+      else Seq.empty)
+    val out = Seq.newBuilder[ColumnarBatch]
+    var from = 0
+    var b = 0
+    while (from < k.rows) {
+      val n = math.min(k.rows - from, 1 + rnd.nextInt(k.maxBatch))
+      val vs: Array[ColumnVector] = schema.fields.indices.map { c =>
+        schema(c).dataType match {
+          case StringType =>
+            val (d, ids) = layout match {
+              case "shared" => whole(c).head
+              case "swapped" => dict(values(c, from, from + n))
+              case "alternating" => whole(c)(b % 2)
+            }
+            val v = new DictVector(n, StringType)
+            v.dict = d
+            (0 until n).foreach { r =>
+              cols(c)(from + r) match {
+                case null => v.ids.putNull(r)
+                case x: String => val xs = ids(x); v.ids.putInt(r, xs(pick.nextInt(xs.size)))
+              }
+            }
+            v: ColumnVector
+          case _ =>
+            val v = new OnHeapColumnVector(n, schema(c).dataType)
+            (0 until n).foreach { r =>
+              cols(c)(from + r) match {
+                case null => v.putNull(r)
+                case x: Int => v.putInt(r, x)
+                case x: Short => v.putShort(r, x)
+                case x: Long => v.putLong(r, x)
+                case x: Boolean => v.putBoolean(r, x)
+                case x => throw new IllegalStateException(s"unexpected $x")
+              }
+            }
+            v: ColumnVector
+        }
+      }.toArray
+      out += new ColumnarBatch(vs, n)
+      from += n
+      b += 1
+    }
+    out.result()
+  }
+
+  /** Write `bs` with our encoder (uncompressed) and return the file's bytes. */
+  private def encoded(bs: Seq[ColumnarBatch], file: String, rowGroupBytes: Long): Array[Byte] = {
+    try PcapColumnarWrite.writePartition(bs.iterator, schema, schema.indices.toArray,
+      new Path(file), spark.sessionState.newHadoopConf(), CompressionCodecName.UNCOMPRESSED,
+      rowGroupBytes)
+    finally bs.foreach(_.close())
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file))
+  }
+
   private def rowsOf(cols: Array[Array[Any]], k: Case): Seq[Row] =
     (0 until k.rows).map { r =>
       Row.fromSeq(schema.fields.indices.map { c =>
@@ -240,8 +322,11 @@ object PageEncoderProps extends Properties("page-encoder") {
       }
     val ours = chunks(files.head)
     val theirs = chunks(sparkFile)
+    val layout = dictLayouts((k.seed % dictLayouts.size).toInt)
+    val viaIds = encoded(dictBatches(cols, k, layout), s"$dir/ids/part.parquet", 128L << 20)
     val checks = Seq(
       "on-heap ≡ off-heap bytes" -> java.util.Arrays.equals(bytes(files(0)), bytes(files(1))),
+      s"on-heap ≡ dictionary ids ($layout) bytes" -> java.util.Arrays.equals(bytes(files(0)), viaIds),
       "≡ ColumnWriteStoreV1 bytes" -> java.util.Arrays.equals(bytes(files(0)), bytes(s"$dir/mr.parquet")),
       "chunks ≡ Spark's writer" -> (ours == theirs),
       "vectorized read-back" -> (read(vectorized = true) == want),
@@ -294,5 +379,45 @@ object PageEncoderProps extends Properties("page-encoder") {
       chunk(3, "i16").forall(c => !c.contains("PLAIN_DICTIONARY") && c.contains(" - ")) &&
       chunk(3, "i16").nonEmpty
     if (got.forall(_.isDefined) && layouts) Prop.proved else Prop.falsified
+  }
+
+  property("dictionary ids ≡ byte vectors: swapped, alternating, fallback, all-null, rollover") = {
+    // the edge layouts' hardest shapes fed as dictionary ids: a
+    // dictionary replaced every batch and two taking turns inside one
+    // chunk, s1's PLAIN fallback after a dictionary-encoded first page,
+    // all-null columns, and 256 KiB row groups that roll over mid-file
+    val cases = Seq(
+      Case(4L, 45000, 5000, Seq("none", "all", "head", "none", "mixed", "none", "sparse"),
+        Seq("unique", "few", "few", "unique", "few", "phased", "long")),
+      Case(6L, 30000, 3000, Seq("none", "none", "none", "none", "none", "mixed", "all"),
+        Seq("few", "few", "few", "few", "few", "few", "few")),
+      Case(7L, 41234, 2048, Seq("mixed", "none", "none", "head", "all", "none", "mixed"),
+        Seq("extreme", "extreme", "extreme", "few", "few", "extreme", "unique")))
+    val dir = java.nio.file.Files.createTempDirectory("pageenc-ids").toString
+    def groups(f: String) = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f),
+        spark.sessionState.newHadoopConf()))
+      try r.getFooter.getBlocks.size finally r.close()
+    }
+    val results = for {
+      (k, i) <- cases.zipWithIndex
+      rowGroup <- Seq(128L << 20, 256L << 10)
+      layout <- dictLayouts
+    } yield {
+      val cols = columns(k)
+      val base = s"$dir/$i-$rowGroup-$layout"
+      val want = encoded(batches(cols, k, offHeap = false), s"$base-bytes.parquet", rowGroup)
+      val got = encoded(dictBatches(cols, k, layout), s"$base-ids.parquet", rowGroup)
+      val same = java.util.Arrays.equals(want, got)
+      if (!same) println(s"PageEncoderProps ids: $k $layout rowGroup=$rowGroup: file bytes differ")
+      // the shapes really happened: several row groups under the small
+      // target, and case 4's s1 fell back to PLAIN after a dictionary page
+      val shaped = (rowGroup > (1L << 20) || groups(s"$base-ids.parquet") > 1) &&
+        (i != 0 || rowGroup < (1L << 20) || chunks(s"$base-ids.parquet")
+          .exists(c => c.startsWith("[s1]") && c.contains("PLAIN,") && c.contains("PLAIN_DICTIONARY")))
+      same && shaped
+    }
+    graft.TempCleanup.rmrf(new java.io.File(dir))
+    if (results.forall(identity)) Prop.proved else Prop.falsified
   }
 }

@@ -370,6 +370,36 @@ class PcapPipelineSpec extends SparkFunSuite {
     assert(canonFrag(got) == canonFrag(want))
   }
 
+  test("the speculation sample stops once its answer is certain: 399 fragments in the 200k-frame prefix speculate, 400 do not") {
+    val dir = Files.createTempDirectory("samplebound")
+    val plain = ethernet(0x0800, ipv4("192.0.2.1", "192.0.2.2", 6, tcp(443, 5555, 0x10)))
+    val frag = ethernet(0x0800, ipv4("192.0.2.1", "192.0.2.2", 17,
+      Array.fill[Byte](16)(1), id = 9, mf = true, fragOffset = 4))
+    // a 200,000-frame prefix (the sample) fragmented at `fragAt`, then
+    // 100 more fragments the sample must not see
+    def capture(name: String, fragAt: Set[Int]): String = {
+      val p = dir.resolve(name)
+      Files.write(p, legacyPcap((0 until 200100).map(i =>
+        (1000L + i, -1, if (i >= 200000 || fragAt(i)) frag else plain))))
+      p.toString
+    }
+    val spread = (0 until 399).map(_ * 500).toSet
+    val under = capture("under.pcap", spread)
+    // the 400th fragment is the prefix's last frame
+    val at = capture("at.pcap", spread + 199999)
+    val early = capture("early.pcap", (0 until 400).toSet)
+    def sample(f: String) = PcapConvert.sampleFragPct(spark, f, graft.pcapio.PcapFramer.Sane)
+    assert(sample(under) == 100.0 * 399 / 200000)
+    assert(sample(at) == 0.2)
+    // 400 fragments in the first 400 frames: the walk stops there
+    assert(sample(early) == 100.0)
+    def jobs(f: String) = traced(PcapConvert.Args(file = f,
+      out = dir.resolve(s"${new java.io.File(f).getName}.parquet").toString,
+      singleFile = false)).jobs
+    assert(jobs(under) == Seq("convert: speculative write"))
+    assert(jobs(at) == Seq("convert: stats", "convert: write"))
+  }
+
   /** Run one convert under a listener and a no-op optimizer rule:
     * the job descriptions in start order, SQL executions started,
     * Catalyst optimizer runs, and per `pcap_packets` accumulator id
